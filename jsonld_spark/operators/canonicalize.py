@@ -46,7 +46,7 @@ from ..core.normalize import (_hash_paths, _hash_quads, canonical_namer,
                               rename_quads)
 from ..core.nquads import quad_to_nquad
 from ..core.rdf import Quad
-from ..session import cut_lineage
+from ..session import cut_lineage, observed_cut
 from .linking import connected_components
 
 QUAD_COLS = ["doc_id", "graph", "subj", "pred", "obj_kind", "obj_value",
@@ -589,12 +589,13 @@ def _canonicalize_reference(triples: DataFrame, max_iter: int) -> DataFrame:
 
     binfo_full = (with_counts.join(phase1, "bnode", "left")
                   .select("component", "bnode", "fd_hash", "num"))
-    events = cut_lineage(
+    events, n_coupled = observed_cut(
         keyed.groupby("component")
              .cogroup(binfo_full.groupby("component"))
              .applyInPandas(lambda left, right: _phase2_kernel(left, right),
-                            _EVENT_SCHEMA))
-    if events.where(F.col("coupled")).limit(1).count():
+                            _EVENT_SCHEMA),
+        F.count_if(F.col("coupled")))
+    if n_coupled:
         bad = [r.component for r in
                events.where(F.col("coupled"))
                      .select("component").distinct().limit(5).collect()]

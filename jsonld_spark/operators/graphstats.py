@@ -77,7 +77,7 @@ def top_hubs(triples: DataFrame, k: int = 10, **kwargs) -> DataFrame:
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              damping: float = 0.85, max_iter: int = 20,
-             tol: float | None = 1e-6, checkpoint_every: int = 5) -> DataFrame:
+             tol: float | None = 1e-6) -> DataFrame:
     """PageRank over an edge list → (node, rank), Σrank = 1.
 
     Entity importance for a KG (which IRIs matter most) — the classic
@@ -88,24 +88,21 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     * dangling nodes (no out-edges) redistribute their mass uniformly —
       computed as total minus non-dangling mass (one tiny agg), never a
       per-node join;
-    * each round's rank table is materialized (lineage cut — reliable
-      checkpoint when the session has a checkpoint dir, same policy as
-      connected components): the round's plan reads ``ranks`` twice
-      (contributions + dangling mass), so a lazy accumulation would
-      recompute exponentially between cuts;
-    * ``tol``: stop when the L1 delta between rounds drops below it,
-      checked every ``checkpoint_every`` rounds (the delta is an extra
-      join+agg, not worth paying every round).
+    * each round is one ``session.fixpoint`` lineage cut: the round's
+      plan reads ``ranks`` twice (contributions + dangling mass), so a
+      lazy accumulation would recompute exponentially between cuts;
+    * ``tol``: stop when the L1 delta between rounds drops below it —
+      observed on the round's own job, as the new ranks are joined onto
+      the old table; ``tol=None`` runs exactly ``max_iter`` rounds.
     """
-    from ..session import cut_lineage
+    from ..session import cut_lineage, fixpoint, observed_cut
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")) \
              .where(F.col("src").isNotNull() & F.col("dst").isNotNull()) \
              .dropDuplicates()
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node")))
              .distinct())
-    nodes = cut_lineage(nodes)
-    n = nodes.count()
+    nodes, n = observed_cut(nodes, F.count(F.lit(1)))
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
@@ -113,10 +110,10 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     weighted = cut_lineage(e.join(out_deg, "src")
                            .select("src", "dst",
                                    (F.lit(1.0) / F.col("_deg")).alias("_w")))
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for i in range(max_iter):
-        contribs = (weighted.join(ranks.withColumnRenamed("node", "src"),
-                                  "src")
+
+    def power_step(ranks):
+        contribs = (weighted.join(ranks.select(F.col("node").alias("src"),
+                                               "rank"), "src")
                     .groupBy("dst")
                     .agg(F.sum(F.col("rank") * F.col("_w")).alias("_c")))
         # dangling mass = 1 − Σ contributions: per-src edge weights sum
@@ -129,26 +126,25 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         dang = contribs.agg(
             (F.lit(1.0) - F.coalesce(F.sum("_c"), F.lit(0.0)))
             .alias("_dang"))
-        ranks_new = (nodes.join(contribs.withColumnRenamed("dst", "node"),
-                                "node", "left")
-                     .crossJoin(F.broadcast(dang))
-                     .select("node",
-                             (F.lit((1.0 - damping) / n)
-                              + F.lit(damping)
-                              * (F.coalesce("_c", F.lit(0.0))
-                                 + F.col("_dang") / n))
-                             .alias("rank")))
-        ranks_new = cut_lineage(ranks_new)
-        if ((i + 1) % checkpoint_every == 0 or i == max_iter - 1) \
-                and tol is not None:
-            delta = (ranks_new.join(
-                ranks.withColumnRenamed("rank", "_old"), "node")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("_old"))))
-                .first()[0])
-            if delta is not None and delta < tol:
-                return ranks_new
-        ranks = ranks_new
-    return ranks
+        # ranks holds every node: it keeps sinks and carries the old rank
+        return (ranks.select("node", F.col("rank").alias("_old"))
+                .join(contribs.withColumnRenamed("dst", "node"),
+                      "node", "left")
+                .crossJoin(F.broadcast(dang))
+                .select("node",
+                        (F.lit((1.0 - damping) / n)
+                         + F.lit(damping)
+                         * (F.coalesce("_c", F.lit(0.0))
+                            + F.col("_dang") / n))
+                        .alias("rank"),
+                        "_old"))
+
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    ranks, _ = fixpoint(ranks, power_step,
+                        F.sum(F.abs(F.col("rank") - F.col("_old"))),
+                        lambda _, delta: tol is not None and delta < tol,
+                        max_iter)
+    return ranks.select("node", "rank")
 
 
 def predicate_histogram(triples: DataFrame) -> DataFrame:

@@ -1909,6 +1909,18 @@ def property_path(triples: DataFrame, pred: str,
     return _path_closure(edges, max_rounds)
 
 
+def _compose(a: DataFrame, b: DataFrame,
+             extra: tuple[str, ...] = ()) -> DataFrame:
+    """Relation composition: (x, z) for every a(x, y), b(y, z) — one
+    equi-join on the midpoint, within each ``extra`` group."""
+    cond = F.col("a.dst") == F.col("b.src")
+    for g in extra:
+        cond &= F.col(f"a.{g}") == F.col(f"b.{g}")
+    return (a.alias("a").join(b.alias("b"), cond)
+            .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"),
+                    *[F.col(f"a.{g}").alias(g) for g in extra]))
+
+
 def _path_closure(edges: DataFrame, max_rounds: int = 20,
                   extra: tuple[str, ...] = ()) -> DataFrame:
     """Transitive closure of an arbitrary (src, dst) edge relation by
@@ -1920,33 +1932,25 @@ def _path_closure(edges: DataFrame, max_rounds: int = 20,
     independently WITHIN each group — every group in one distributed
     job, no per-group loop. This is what makes ``GRAPH ?g { ?s p+ ?o }``
     a single fixpoint over all named graphs at once."""
-    from ..session import cut_lineage
+    from ..session import fixpoint, observed_cut
     cols = ["src", "dst", *extra]
     # NOT spread_partitions'd: unlike the LSH band joins (output ≫
     # input), a closure round's join output is ~the path table's size,
     # so forcing extra exchanges per round costs more than the added
     # parallelism buys (measured: owl_entail 9.0 s → 11.9 s with a
     # spread here)
-    paths = cut_lineage(edges.select(*cols).distinct())
-    n = paths.count()
-    for _ in range(max_rounds):
-        cond = F.col("a.dst") == F.col("b.src")
-        for g in extra:
-            cond &= F.col(f"a.{g}") == F.col(f"b.{g}")
-        hop = (paths.alias("a")
-               .join(paths.alias("b"), cond)
-               .select(F.col("a.src").alias("src"),
-                       F.col("b.dst").alias("dst"),
-                       *[F.col(f"a.{g}").alias(g) for g in extra]))
-        grown = cut_lineage(paths.unionByName(hop).distinct())
-        m = grown.count()
-        if m == n:
-            return grown
-        paths, n = grown, m
-    raise RuntimeError(
-        f"property_path: no fixpoint after {max_rounds} doubling rounds "
-        f"(paths of 2^{max_rounds} hops) — relation too deep or growing "
-        "pathologically; raise max_rounds only if that is expected")
+    n_rows = F.count(F.lit(1))
+    paths, n = observed_cut(edges.select(*cols).distinct(), n_rows)
+    paths, converged = fixpoint(
+        paths,
+        lambda p: p.unionByName(_compose(p, p, extra)).distinct(),
+        n_rows, lambda prev, m: m == prev, max_rounds, stat=n)
+    if not converged:
+        raise RuntimeError(
+            f"property_path: no fixpoint after {max_rounds} doubling rounds "
+            f"(paths of 2^{max_rounds} hops) — relation too deep or growing "
+            "pathologically; raise max_rounds only if that is expected")
+    return paths
 
 
 # ---------------------------------------------------------------------------
@@ -2137,15 +2141,7 @@ def kg_path(triples: DataFrame, path: str,
                 F.col("dst").alias("src"), F.col("src").alias("dst"),
                 *[F.col(g) for g in extra])
         if op == "seq":
-            a, b = ev(node[1]).alias("a"), ev(node[2]).alias("b")
-            cond = F.col("a.dst") == F.col("b.src")
-            for g in extra:
-                cond &= F.col(f"a.{g}") == F.col(f"b.{g}")
-            return (a.join(b, cond)
-                    .select(F.col("a.src").alias("src"),
-                            F.col("b.dst").alias("dst"),
-                            *[F.col(f"a.{g}").alias(g) for g in extra])
-                    .distinct())
+            return _compose(ev(node[1]), ev(node[2]), extra).distinct()
         if op == "alt":
             return ev(node[1]).unionByName(ev(node[2])).distinct()
         if op == "plus":

@@ -3,8 +3,9 @@
 No reference analogue (SURVEY.md §2.3 "Joins"): merges coreferent
 IRIs/blank nodes (e.g. ``owl:sameAs`` edges, media_ref↔doc links) by
 computing connected components with iterative min-label propagation —
-a driver fixpoint loop of joins/aggregations, each round a shuffle,
-with ``localCheckpoint`` to cut lineage (SURVEY.md §4 item 2).
+a driver fixpoint loop of joins/aggregations (``session.fixpoint``):
+every round is materialized once by a lineage cut, and the count of
+changed labels is observed on that same job (SURVEY.md §4 item 2).
 
 Scale notes: plain min-label propagation converges in O(diameter)
 rounds — fine for the short equivalence chains real KG data produces
@@ -12,7 +13,7 @@ rounds — fine for the short equivalence chains real KG data produces
 the large-star/small-star scheme (Kiveris et al. 2014, "Connected
 Components in MapReduce and Beyond") converges in O(log² n) rounds at
 the cost of two shuffles per round — worth swapping in only if label
-propagation fails to converge within ``max_iter``.
+propagation fails to converge within ``max_iter`` (which raises).
 """
 
 from __future__ import annotations
@@ -22,12 +23,12 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import cut_lineage
+from ..session import cut_lineage, fixpoint, observed_cut
 
 # Driver-CC threshold (distinct edges). An edge row is two longs (16 B),
 # so 32 M edges is ~0.5 GB of driver arrays; the vectorized numpy
 # fixpoint below handles that in seconds, where the distributed fixpoint
-# pays 3 shuffles + one action PER ROUND. STRING-node graphs (IRIs,
+# pays 3 shuffles + one job PER ROUND. STRING-node graphs (IRIs,
 # 40–120 B per term) are capped lower — the same edge count costs an
 # order of magnitude more driver memory as Python objects. Both bounds
 # are memory budgets, env-parameterised for other driver sizes; beyond
@@ -83,7 +84,6 @@ def _driver_union_find(rows, spark, schema):
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iter: int = 50,
-                         checkpoint_every: int = 5,
                          small_graph_edges: int | None = None,
                          assume_distinct: bool = False) -> DataFrame:
     """edges(src,dst) → (node, component) where component = min node id
@@ -94,7 +94,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     vectorized union-find (one Arrow collect) instead of the
     distributed fixpoint — the same scale-adaptivity Catalyst applies
     when it broadcasts a small join side. Set to 0 to force the
-    distributed path."""
+    distributed path, which raises ``RuntimeError`` if labels are still
+    changing after ``max_iter`` rounds."""
     if small_graph_edges is None:
         from pyspark.sql.types import LongType, IntegerType
         numeric = isinstance(edges.schema[src].dataType,
@@ -109,26 +110,17 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         # duplicate edges either way
         e = e.dropDuplicates()
     if small_graph_edges:
-        e = e.persist()
-        try:
-            n_edges = e.limit(small_graph_edges + 1).count()
-            if n_edges <= small_graph_edges:
-                rows = e.toPandas()
-                schema = e.select(F.col("src").alias("node"),
-                                  F.col("src").alias("component")).schema
-                return _driver_union_find(rows, e.sparkSession, schema)
-            # undirected: keep both directions once
-            sym = e.unionByName(e.select(F.col("dst").alias("src"),
-                                         F.col("src").alias("dst"))) \
-                   .dropDuplicates()
-            sym = cut_lineage(sym)
-        finally:
-            e.unpersist()
-    else:
-        sym = e.unionByName(e.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst"))) \
-               .dropDuplicates()
-        sym = cut_lineage(sym)
+        # the size probe is an exact count observed on the job that
+        # materializes the edges both paths then read
+        e, n_edges = observed_cut(e, F.count(F.lit(1)))
+        if n_edges <= small_graph_edges:
+            schema = e.select(F.col("src").alias("node"),
+                              F.col("src").alias("component")).schema
+            return _driver_union_find(e.toPandas(), e.sparkSession, schema)
+    # undirected: keep both directions once
+    sym = cut_lineage(e.unionByName(e.select(F.col("dst").alias("src"),
+                                             F.col("src").alias("dst")))
+                      .dropDuplicates())
     # init fuses the first relaxation round: label(node) = min(node,
     # neighbors) from ONE groupBy over the symmetric edges (the same
     # rows the old distinct scanned) — one fewer 3-join round through
@@ -136,42 +128,32 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     labels = (sym.groupBy(F.col("src").alias("node"))
               .agg(F.least(F.min("dst"), F.col("src")).alias("component"))
               .persist())
-    for i in range(max_iter):
+
+    def relax(labels):
         # message passing: each node offers its label to its neighbors
         msgs = (sym.join(labels, sym.src == labels.node)
                 .select(F.col("dst").alias("node"),
                         F.col("component").alias("cand")))
         mins = msgs.groupBy("node").agg(F.min("cand").alias("cand"))
         stepped = (labels.join(mins, "node", "left")
-                   .select("node",
-                           F.least("component",
-                                   F.coalesce("cand", "component"))
-                            .alias("component"),
-                           (F.col("cand") < F.col("component"))
-                           .alias("_changed")))
+                   .select("node", F.col("component").alias("_old"),
+                           F.least("component", "cand").alias("component")))
         # pointer jumping (path halving): also adopt the label OF my
         # label — rounds drop from O(diameter) to O(log diameter)
         ptr = stepped.select(F.col("node").alias("component"),
                              F.col("component").alias("_jump"))
-        new_labels = (stepped.join(ptr, "component", "left")
-                      .select("node",
-                              F.least(F.col("component"),
-                                      F.coalesce("_jump", "component"))
-                               .alias("component"),
-                              (F.col("_changed")
-                               | (F.col("_jump") < F.col("component")))
-                              .alias("_changed")))
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = cut_lineage(new_labels)
-        else:
-            # cache each round: the convergence check populates the
-            # cache, the next round (or the caller) reads it
-            new_labels = new_labels.persist()
-        changed = new_labels.where("_changed").limit(1).count()
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
+        return (stepped.join(ptr, "component", "left")
+                .select("node", "_old",
+                        F.least("component", "_jump").alias("component")))
+
+    # labels only ever decrease (least skips a null cand/_jump), so a
+    # node changed this round iff its label dropped below the old one
+    changed = F.count_if(F.col("component") < F.col("_old"))
+    labels, converged = fixpoint(labels, relax, changed,
+                                 lambda _, n: n == 0, max_iter)
+    if not converged:
+        raise RuntimeError(f"connected_components: labels still changing "
+                           f"after max_iter={max_iter} rounds")
     return labels.select("node", "component")
 
 
@@ -202,13 +184,13 @@ def link_triples(triples: DataFrame, components: DataFrame,
                  rewrite_kinds: tuple[str, ...] = ("iri",),
                  prefer_iri_reps: bool = True) -> DataFrame:
     """Rewrite subj/obj IRIs to their component-canonical IRI.
-    ``components``: (node, component) — broadcast when small (probed with
-    a bounded count, same scale-adaptivity as ``connected_components``),
+    ``components``: (node, component) — broadcast when small (counted on
+    its lineage cut, same scale-adaptivity as ``connected_components``),
     else two shuffled left joins on subj and obj (AQE picks the physical
     strategy). At 10^12 docs the component map has billions of rows —
     an unconditional broadcast would OOM the driver; set
     ``broadcast_max_rows=0`` to force the shuffled path (skips the
-    probe materialization entirely and lets AQE pick).
+    materialization entirely and lets AQE pick).
 
     ``rewrite_kinds`` — object kinds eligible for rewriting (subjects
     always rewrite). Default ('iri',) preserves the original contract;
@@ -225,13 +207,11 @@ def link_triples(triples: DataFrame, components: DataFrame,
     map, skipped entirely when no node is a bnode)."""
     small = False
     if broadcast_max_rows:
-        # materialize once so the bounded probe and the two joins share
-        # a single computation of the (possibly expensive, possibly
-        # uncached) upstream lineage — e.g. a CC fixpoint would
-        # otherwise run once for the probe and again per join
-        components = cut_lineage(components)
-        small = (components.limit(broadcast_max_rows + 1).count()
-                 <= broadcast_max_rows)
+        # materialize once (counting on the same job) so the two joins
+        # share one computation of the possibly expensive upstream
+        # lineage — e.g. a CC fixpoint would otherwise run per join
+        components, n = observed_cut(components, F.count(F.lit(1)))
+        small = n <= broadcast_max_rows
     if prefer_iri_reps and components.where(
             F.col("node").startswith("_:")).limit(1).take(1):
         reps = (components.groupBy("component")

@@ -353,7 +353,7 @@ def upsert_documents(new_triples: DataFrame, out_dir: str,
     buckets are simply rewritten to the same content.
     """
     spark = new_triples.sparkSession
-    from ..session import cut_lineage
+    from ..session import cut_lineage, observed_cut
     cfgs = (read_manifests(spark, out_dir)
             .select("n_buckets").where(F.col("n_buckets").isNotNull())
             .distinct().collect())
@@ -370,8 +370,8 @@ def upsert_documents(new_triples: DataFrame, out_dir: str,
     if deleted_doc_ids is not None:
         changed = changed.unionByName(deleted_doc_ids.select("doc_id")) \
                          .distinct()
-    changed = cut_lineage(changed)  # read by the index probe AND the anti-join
-    n_changed = changed.count()
+    # read by the index probe AND the anti-join
+    changed, n_changed = observed_cut(changed, F.count(F.lit(1)))
 
     # affected = buckets receiving new rows ∪ buckets holding old rows of
     # changed docs (index lookup, not a triple-table scan)

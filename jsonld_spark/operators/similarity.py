@@ -16,7 +16,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import cut_lineage
+from ..session import cut_lineage, observed_cut
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -619,7 +619,7 @@ def embedding_neardup_incremental(spark, index_dir: str,
     (list-collision → exact ≥ threshold) set, reproducible in SQL.
 
     The probed index side joins the (typically small) new batch with a
-    size-adaptive broadcast: bounded-count probe under
+    size-adaptive broadcast: the row count observed on its cut under
     ``broadcast_max_rows``, shuffled join above it (note the join key
     ``list_id`` has only k distinct values — a huge batch should be
     split into broadcastable chunks rather than shuffled through k
@@ -647,8 +647,8 @@ def embedding_neardup_incremental(spark, index_dir: str,
         # Scale the bound to a 64-dim baseline so the byte budget,
         # not the row count, stays constant across vector widths.
         eff_rows = max(1, int(broadcast_max_rows * 64 / max(dim, 64)))
-        n_l = cut_lineage(n_l)
-        small = (n_l.limit(eff_rows + 1).count() <= eff_rows)
+        n_l, n = observed_cut(n_l, F.count(F.lit(1)))
+        small = n <= eff_rows
     hint = F.broadcast if small else (lambda df: df)
     probed = sorted({r["list_id"] for r in
                      n_l.select("list_id").distinct().collect()})

@@ -359,21 +359,20 @@ def strip_boilerplate(docs: DataFrame, text_col: str = "text",
 
     The anti-join against the boilerplate table is size-adaptive (the
     ``link_triples`` pattern): the table is lineage-cut once (so the
-    probe and the join share one computation of the corpus-wide
-    aggregate), then a bounded count decides — broadcast under
+    join reuses that computation of the corpus-wide aggregate), and the
+    row count observed on the cut decides — broadcast under
     ``broadcast_max_rows``, plain shuffled left-anti above it (AQE picks
     the physical join). Web boilerplate is heavy-tailed: at 100 TB the
     >``max_docs`` line set is NOT reliably tiny, and an unconditional
     broadcast would OOM the driver. ``broadcast_max_rows=0`` forces the
-    shuffled path (skips the probe materialization entirely)."""
-    from ..session import cut_lineage
+    shuffled path (skips the materialization entirely)."""
+    from ..session import observed_cut
     freq = line_frequencies(docs, text_col, min_len, id_col)
     boiler = freq.where(F.col("n_docs") > max_docs).select("line_hash")
     small = False
     if broadcast_max_rows:
-        boiler = cut_lineage(boiler)
-        small = (boiler.limit(broadcast_max_rows + 1).count()
-                 <= broadcast_max_rows)
+        boiler, n = observed_cut(boiler, F.count(F.lit(1)))
+        small = n <= broadcast_max_rows
     hint = F.broadcast if small else (lambda df: df)
     lines = docs.select(
         F.col(id_col),

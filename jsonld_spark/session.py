@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 
 def spread_partitions(df, min_factor: int = 1):
@@ -35,6 +35,31 @@ def cut_lineage(df, eager: bool = True):
     if sc._jsc.sc().getCheckpointDir().isDefined():
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def observed_cut(df, metric):
+    """``cut_lineage(df)`` plus one aggregate ``metric`` over ``df``,
+    observed on the job that materializes it: ``(df, value)``."""
+    obs = Observation()
+    df = cut_lineage(df.observe(obs, metric.alias("stat")))
+    return df, obs.get["stat"]
+
+
+def fixpoint(state, step, metric, done, max_rounds: int, stat=None):
+    """The data-side fixpoint loop (SURVEY.md §4 item 2): each round
+    materializes ``step(state)`` once via ``observed_cut(.., metric)``
+    and stops when ``done(previous stat, stat)`` holds (``stat`` seeds
+    the previous value). A persisted initial state is released after
+    round 1. Returns ``(state, converged)``; the caller decides whether
+    running out of ``max_rounds`` is an error."""
+    for _ in range(max_rounds):
+        new_state, new_stat = observed_cut(step(state), metric)
+        if state.is_cached:
+            state.unpersist()
+        state, prev, stat = new_state, stat, new_stat
+        if done(prev, stat):
+            return state, True
+    return state, False
 
 
 def get_spark(app_name: str = "jsonld_spark", master: str | None = None,

@@ -14,3 +14,12 @@ def spark():
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
+
+
+def pytest_terminal_summary(terminalreporter):
+    # the W3C conformance suites skip silently without their fixtures;
+    # say so in the summary so a green run is not mistaken for a checked one
+    from .fixture_utils import fixtures_available
+    if not fixtures_available():
+        terminalreporter.write_line(
+            "W3C fixtures: absent — conformance suites skipped")

@@ -97,6 +97,5 @@ def test_pagerank_tol_early_stop_and_empty(spark):
     # tol stops well before max_iter and the result is exact
     df = spark.createDataFrame([(0, 1), (1, 0)], "src long, dst long")
     got = {r.node: r.rank for r in
-           pagerank(df, max_iter=50, tol=1e-12,
-                    checkpoint_every=2).collect()}
+           pagerank(df, max_iter=50, tol=1e-12).collect()}
     assert abs(got[0] - 0.5) < 1e-12 and abs(got[1] - 0.5) < 1e-12

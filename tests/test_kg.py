@@ -393,8 +393,17 @@ def test_property_path_deep_chain_log_rounds(spark):
         [(f"n{i}", "p", f"n{i+1}") for i in range(n)],
         "subj string, pred string, obj_value string")
     # depth 200 needs only ceil(log2(200)) = 8 doubling rounds
-    out = property_path(t, "p", max_rounds=9)
-    assert out.count() == n * (n + 1) // 2
+    sc = spark.sparkContext
+    sc.setJobGroup("path_chain", "property_path, 200-chain")
+    try:
+        out = property_path(t, "p", max_rounds=9)
+        assert out.count() == n * (n + 1) // 2
+        jobs = sc.statusTracker().getJobIdsForGroup("path_chain")
+    finally:
+        sc.setJobGroup(None, None)
+    # each round is one observed lineage cut, with no second count()
+    # per round (that loop ran 69 jobs here)
+    assert len(jobs) <= 49
     # and an undersized round budget raises instead of truncating
     import pytest
     with pytest.raises(RuntimeError, match="fixpoint"):

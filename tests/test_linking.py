@@ -103,3 +103,48 @@ def test_driver_cc_numpy_chains_strings_and_dups(spark):
         spark.createDataFrame(s_edges, "src string, dst string"))
     got2 = {r["node"]: r["component"] for r in cc2.collect()}
     assert got2 == {"a": "a", "b": "a", "c": "a", "z": "z", "zz": "z"}
+
+
+def _chain(spark, n):
+    return spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                 "src long, dst long")
+
+
+def test_distributed_cc_raises_when_max_iter_exhausted(spark):
+    """A forced-distributed chain that cannot converge in ``max_iter``
+    rounds raises instead of returning partial labels."""
+    with pytest.raises(RuntimeError, match="max_iter"):
+        connected_components(_chain(spark, 64), small_graph_edges=0,
+                             max_iter=2)
+
+
+def test_distributed_cc_job_count(spark):
+    """Every round is one observed lineage cut: no per-round convergence
+    action, and no re-planning of lazily cached rounds. The previous
+    loop (cut every 5 rounds, persist + limit(1).count() in between)
+    ran 71 jobs on this chain."""
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_job_count", "forced-distributed CC, 64-chain")
+    try:
+        got = connected_components(_chain(spark, 64),
+                                   small_graph_edges=0).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("cc_job_count")
+    finally:
+        sc.setJobGroup(None, None)
+    assert {r.component for r in got} == {0} and len(got) == 64
+    assert len(jobs) <= 59
+
+
+def test_distributed_cc_reliable_checkpoint(spark, tmp_path):
+    """With a checkpoint dir the rounds are reliable checkpoints; the
+    observed convergence count and the labels are unchanged."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        got = {r.node: r.component for r in connected_components(
+            _edges(spark), small_graph_edges=0).collect()}
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None))
+    assert all(got[i] == 7 * (i // 7) for i in range(41))
+    assert got[300] == 300 and got[301] == 300
