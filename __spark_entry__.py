@@ -1207,8 +1207,8 @@ def q_sparql_double_neg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested negation (the forall idiom): docs that have no
     UNREVIEWED media — ``FILTER NOT EXISTS { ?d :associatedMedia ?m
     FILTER NOT EXISTS { ?d :reviewedBy ?r } }``. The inner NOT EXISTS
-    compiles through a recursive bgp_match on the outer body's
-    solutions (operators/kg.py:_prep_group), so the whole test stays
+    compiles by the same group compiler over the outer body's
+    solutions (operators/kg.py:_group), so the whole test stays
     two anti-join trees — no correlated subplan, no row
     multiplication."""
     from jsonld_spark.operators.sparql import sparql_query

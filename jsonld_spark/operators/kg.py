@@ -11,6 +11,14 @@ re-expressed Spark-first here:
   pushed-down parquet filters (partition pruning when the table is
   partitioned by predicate, the standard warehouse layout), join order
   and broadcast-vs-shuffle are AQE's call per pattern selectivity.
+  A SPARQL group compiles through ONE group compiler (``_compile``):
+  the pattern-join loop with its constant gates, solution joins,
+  OPTIONAL, VALUES, BIND, [NOT] EXISTS, MINUS and FILTER. Every nested
+  group body (OPTIONAL / [NOT] EXISTS / MINUS / expression-EXISTS, in
+  any entry form) is normalised by ``_group`` and compiled by the same
+  code, then joined by one of three joins: the null-mask compatibility
+  join (left / semi / anti / minus, with correlated filters as its
+  residual), the marker join (EXISTS as a value), or the VALUES join.
 * ``rdfs_closure`` — the ontology (schema) is corpus-INDEPENDENT and
   small (10^3-10^5 rows for real ontologies), so its transitive
   closure is computed once driver-side and applied to the 100 TB fact
@@ -404,1173 +412,652 @@ def bgp_match(triples: DataFrame, patterns: list[tuple[str, str, str]],
               solution_joins: list | None = None,
               meta_vars: set | None = None,
               filter_exists: list[dict] | None = None) -> DataFrame:
-    """Match a SPARQL-style basic graph pattern: ``patterns`` is a list
-    of (subject, predicate, object) terms where a term starting with
-    ``?`` is a variable and anything else a constant. A 4-tuple
-    pattern (s, p, o, g) additionally matches the named-graph column —
-    the SPARQL GRAPH clause (``g_col`` is only touched by 4-tuples, so
-    graph-less triple frames work with 3-tuples). Returns one column
-    per variable (first-appearance order), one row per binding.
-    ``optional`` patterns are SPARQL OPTIONAL clauses: each left-joins
-    on its shared variables, binding its new variables where it
-    matches and null where it doesn't (rows are never dropped). An
-    entry that is itself a LIST of patterns is a multi-pattern
-    OPTIONAL group — SPARQL evaluates the group as a unit (patterns
-    inner-join among themselves, and must connect), then left-joins
-    the joined group, so a partial group match binds nothing. An
-    entry that is a DICT ``{'patterns': [...], 'filters': [...]}``
-    additionally applies group-scoped FILTER expressions — SPARQL
-    leftjoin's expr argument. A filter referencing only group
-    variables pre-filters the group's solutions (equivalent per the
-    leftjoin definition); a filter referencing OUTER variables
-    conditions the join itself (``LeftJoin(Ω1, Ω2, expr)``): it
-    compiles to the left join's residual condition with equi keys on
-    the shared variables, so a group row failing the filter is
-    as-if absent for that outer solution only, and an erroring
-    (null) filter follows SPARQL's error-is-false rule. Correlated
-    filters over NULLABLE shared variables, or combined with
-    term-metadata columns on the optional side, raise. A dict entry
-    ``{'union': [branch, ...], 'filters': [...]}`` is
-    ``OPTIONAL { { A } UNION { B } }`` — algebra LeftJoin(rest,
-    Union(A, B)): the branches' solution union (missing variables
-    null-padded) left-joins on the shared variables; a shared
-    variable not bound by EVERY branch raises (an unbound optional-
-    side join key would silently never match). A dict entry with an
-    ``'optional'`` key — ``{'patterns': [...], 'optional': [...],
-    'filters': [...]}`` — is a NESTED OPTIONAL: the group's solution
-    set is a recursive ``bgp_match`` over its patterns and inner
-    optionals (LeftJoin inside the optional side, nesting to any
-    depth), group filters apply to those solutions, then the whole
-    group left-joins the outer solutions. A variable bound only by
-    an inner optional is nullable in the group's solutions; using it
-    as the outer left-join key raises (same null-key rule as union
-    bodies). Any dict entry may also carry a ``'binds'`` key — an
-    ordered ``[(var, spark_sql_expr)]`` list applied to the group's
-    solutions BEFORE the group filters (SPARQL Extend inside the
-    optional group); a bind variable is nullable on the optional side
-    (its expression may evaluate to null), so using it as the outer
-    join key raises the same typed error. A dict entry may further
-    carry ``'not_exists'`` / ``'exists'`` / ``'minus'`` (group entries
-    in this parameter's own forms), ``'values'``, and
-    ``'solution_joins'`` (pre-compiled subquery entries in the
-    top-level parameter's form) keys — the full group body compiles
-    through a recursive ``bgp_match`` on the optional side; a negation
-    member referencing an OUTER-only variable raises (correlation with
-    the outer solutions would need a conditional left join).
-    Sequential OPTIONALs follow SPARQL's unbound-is-compatible rule:
-    when a later OPTIONAL shares a variable that an EARLIER
-    non-matching OPTIONAL left unbound (null), that solution is
-    compatible with ANY binding of the variable, and a match binds it
-    (per-solution bind-once). Internally the solution set splits by
-    the null-mask of the nullable shared variables — each branch is
-    still a plain equi-join on its non-null keys (the all-null branch
-    is the SPARQL-mandated unconstrained match) and the branches union
-    back; with no nullable shared variable (every shared var comes
-    from a required pattern — the overwhelmingly common case) the plan
-    is a single left join, unchanged. More than 4 nullable shared
-    variables in one clause (16 branches) raises rather than exploding
-    the plan.
-    ``not_exists`` groups are SPARQL ``FILTER NOT EXISTS`` clauses:
-    each group (a pattern list) drops every solution for which the
-    group matches under the solution's bindings — an anti-join on the
-    variables the group shares with the outer query. A group may also
-    be a dict ``{'patterns': [...], 'filters': [...]}``: filters
-    referencing only group variables pre-filter the group's
-    solutions; filters referencing outer variables follow SPARQL's
-    substitution semantics (the classic temporal
-    ``FILTER NOT EXISTS { ?x :date ?d2 FILTER(?d2 > ?d) }``) and
-    become the residual condition of the anti/semi join — the equi
-    keys on shared variables keep it hash/sort-merge plannable. In a
-    ``minus`` group a correlated filter references a variable UNBOUND
-    inside the group (MINUS does not substitute, SPARQL §8.3.3), so
-    the expression errors, the group is empty, and the MINUS is
-    faithfully a no-op. A group may also be a dict ``{'union':
-    [branch, ...], 'filters': [...]}`` — the body is ``{ A } UNION
-    { B }``. NOT EXISTS and MINUS distribute over UNION (NOT
-    EXISTS{A∪B} ≡ NOT EXISTS{A} AND NOT EXISTS{B}; MINUS removals
-    union), so each branch becomes its own group through the
-    unchanged compat/substitution machinery. EXISTS over UNION is an
-    OR — not expressible as chained semi joins — and plans as one
-    left join per branch against the branch's DISTINCT shared-key
-    set with a marker column (unique keys: no row multiplication),
-    keeping solutions with any marker set; correlated filters or
-    nullable shared variables there raise typed errors. A union-dict
-    filter must reference only variables bound by EVERY branch (or
-    outer variables): distributed into a branch that does not bind
-    its variable it would be a type error → false, silently emptying
-    just that branch. A shared variable
-    the solution left unbound (null, from a non-matching OPTIONAL)
-    follows SPARQL's substitution semantics: it stays a FREE variable
-    inside the group, so the group constrains only the solution's
-    BOUND shared variables (anti-join key = non-null shared vars,
-    per null-mask branch; a solution with ALL shared vars unbound is
-    dropped iff the group matches at all). Group patterns must connect
-    to each other and the group must share at least one variable with
-    the outer query (else it is not a per-solution test).
-    ``filters`` are SPARQL FILTER expressions as Spark SQL boolean
-    strings over the variable names (e.g. ``"cast(n as int) >= 300"``),
-    applied after all patterns. Like SPARQL's error-drops-the-solution
-    rule, a comparison against an unbound (null) optional variable is
-    null and the row is dropped — test for boundness explicitly with
-    ``"x IS NULL"`` / ``"x IS NOT NULL"``. Filters referencing only
-    required variables are pushed down through the joins by Catalyst.
+    """Match a SPARQL group graph pattern over the triples frame.
+    Returns one column per variable (first-appearance order), one row
+    per solution.
+
+    ``patterns`` — (subject, predicate, object) terms; a term starting
+    with ``?`` is a variable, anything else a constant. A 4-tuple
+    (s, p, o, g) also matches ``g_col`` (the GRAPH clause; graph-less
+    frames work with 3-tuples). A predicate containing ``<`` is a
+    property-path expression (see ``kg_path``). Patterns must connect
+    through shared variables — a cartesian product raises — except an
+    all-constant pattern, which is an existence gate binding nothing.
+    ``patterns`` may be empty when ``solution_joins`` seed the
+    solutions.
+
+    Group entries. ``optional``, ``not_exists``, ``exists`` and
+    ``minus`` take lists of group entries, each one of:
+
+    * a pattern tuple, or a list of pattern tuples (a group evaluated
+      as a unit: its patterns inner-join, then the group joins);
+    * a body dict ``{'patterns': [...], 'filters': [...], 'binds':
+      [...], 'optional': [...], 'not_exists': [...], 'exists': [...],
+      'minus': [...], 'values': [...], 'solution_joins': [...]}`` —
+      the same parameters as this function, nesting to any depth
+      (only ``'patterns'`` is required);
+    * a union dict ``{'union': [branch, ...], 'branch_filters':
+      [...], 'filters': [...], 'binds': [...]}`` — ``{ A } UNION
+      { B }`` as the body.
+
+    Any other key raises. A group filter referencing only group
+    variables filters the group's solutions; one referencing OUTER
+    variables is correlated (SPARQL substitution for [NOT] EXISTS,
+    LeftJoin's expression for OPTIONAL) and becomes the join's
+    residual condition. Nested members (BINDs, negations, inner
+    OPTIONAL filters) may not reference outer variables.
+
+    * ``optional`` — SPARQL OPTIONAL: each entry left-joins on its
+      shared variables; a solution without a match keeps its new
+      variables null. A shared variable an earlier OPTIONAL left
+      unbound is compatible with any binding (SPARQL's unbound-
+      compatibility rule). An entry binding no variable is a no-op.
+      A shared variable the group itself may leave unbound (not bound
+      by every UNION branch, only by an inner OPTIONAL or a BIND)
+      raises.
+    * ``not_exists`` / ``exists`` — FILTER [NOT] EXISTS: drop / keep a
+      solution iff the group matches under its bindings. The group must
+      share a variable with the outer solutions. A shared variable the
+      solution left unbound stays free inside the group.
+    * ``minus`` — SPARQL MINUS (§8.3.3): like NOT EXISTS, but a group
+      sharing no variable removes nothing, an unbound shared variable is
+      compatible with anything, and a correlated group filter sees the
+      outer variables as unbound.
+    * ``values`` — a VALUES block: rows of ``{var: constant}``
+      (``None`` = UNDEF). Shared variables constrain, new ones extend.
+    * ``binds`` — ordered ``[(var, spark_sql_expr)]`` BIND clauses,
+      applied after VALUES; rebinding an in-scope variable raises.
+    * ``solution_joins`` — pre-computed solution sets (subqueries):
+      DataFrames whose columns are variables, or dicts ``{'df':
+      DataFrame, 'nullable': set, 'allow_disjoint': bool}``, joined on
+      the shared variables right after the patterns. A disjoint entry
+      needs ``allow_disjoint`` (it broadcasts); nullable shared
+      variables raise.
+    * ``filters`` — FILTER expressions as Spark SQL boolean strings
+      over the variable names, applied last. A comparison against an
+      unbound (null) variable drops the row, like SPARQL's error rule.
+    * ``filter_exists`` — FILTERs whose expression embeds [NOT] EXISTS:
+      ``{'expr': sql, 'markers': [(name, group_entry, negated), ...]}``
+      where ``expr`` reads each ``name`` as a boolean column.
+    * ``meta_vars`` — variables whose term metadata
+      (``{var}__kind`` / ``__lang`` / ``__datatype``) the first pattern
+      binding them emits, for LANG() / DATATYPE() / isIRI() in filters
+      and binds; the columns stay in the output and make solution
+      distinctness RDF term identity.
+    * ``distinct_solutions`` — deduplicate the required bindings
+      (SELECT DISTINCT, the default); ``False`` keeps bag semantics
+      for pre-deduplicated warehouse tables.
+
+    More than 4 nullable shared variables in one join raise (2^k
+    null-mask branches).
 
     DEVIATION — lexical join identity: patterns join on the VALUE
-    columns, so a literal whose lexical form equals an IRI (e.g. a
-    URL-valued string literal) unifies with that IRI where SPARQL's
-    term semantics would not. Web-data queries where this matters
-    should add an explicit kind filter (``filters=["x__kind =
-    'iri'"]`` with ``meta_vars``) or pre-filter ``obj_kind`` on the
-    triples frame; making every join key a (value, kind) struct would
-    double the shuffled key width for a case that clean warehouse
-    data does not hit, so it is deliberately not the default.
-
-    Plan shape: each pattern is a filtered projection of the triples
-    scan — constants become pushed-down filters (``PushedFilters`` on
-    the parquet scan; predicate partition pruning when the table is
-    laid out that way) — and patterns sharing a variable join on it.
-    Join ORDER is left to Catalyst/AQE: selective patterns produce
-    small sides that AQE converts to broadcast joins at runtime.
-    Patterns (required or optional) that share no variable with what
-    came before would be a cartesian product; that is almost always a
-    query bug at scale, so it raises instead of silently exploding.
-    Two exceptions: an ALL-CONSTANT required pattern is a legal SPARQL
-    existence test — it gates the whole result (cross join with a
-    ``limit(1)`` probe: one row keeps everything, zero rows empties
-    the result) and binds nothing; and an OPTIONAL entry that binds NO
-    variable in any form (constant pattern, group, union, negation /
-    filter members) is a no-op per the algebra — LeftJoin(Ω, {μ0}) =
-    LeftJoin(Ω, ∅) = Ω — and is skipped entirely.
-
-    ``values`` is a SPARQL VALUES block: a list of binding dicts
-    ({var: constant}, ``None`` = UNDEF) joined to the solution set
-    after patterns and OPTIONALs. Shared variables constrain
-    (inner-join on them; an UNDEF in a row makes that variable
-    unconstrained for that row, per SPARQL's compatible-bindings
-    rule); variables new to the query extend the solutions. A VALUES
-    block is a literal inline table — always tiny — so it is planned
-    as a broadcast join (or a cross join when it shares no variable,
-    which SPARQL permits for VALUES).
-    ``filter_exists`` entries are FILTERs whose expression EMBEDS
-    [NOT] EXISTS tests (``FILTER(?x = 1 || EXISTS { ... })``): each is
-    ``{'expr': sql, 'markers': [(name, group_entry, negated), ...]}``
-    where ``expr`` references each ``name`` as a boolean column. A
-    marker joins the group's DISTINCT shared-key set with a flag (no
-    row multiplication) — EXISTS as a VALUE in a boolean expression
-    cannot become a semi/anti join. Nullable shared variables and
-    correlated group filters raise (use a standalone FILTER EXISTS).
-    ``binds`` are SPARQL BIND clauses: an ordered list of
-    (new_var, spark_sql_expr) computed over the bindings after
-    VALUES, before NOT EXISTS and FILTERs — e.g.
-    ``[("label", "upper(name)")]``. Later binds may reference earlier
-    ones. Pure projections — zero shuffle.
-    ``exists`` groups are positive ``FILTER EXISTS`` clauses — the
-    semi-join mirror of ``not_exists``: a solution survives iff the
-    group matches under its bindings (must share ≥1 variable).
-    ``solution_joins`` are pre-computed solution sets (the algebra
-    form of a SPARQL 1.1 subquery): each entry is a DataFrame whose
-    columns are variable names — or a dict ``{'df': DataFrame,
-    'nullable': set, 'allow_disjoint': bool}`` — inner-joined to the
-    solutions on the shared variables right after the required
-    patterns (so OPTIONAL / VALUES / BIND / FILTER can reference the
-    variables a subquery binds). ``patterns`` may be empty when a
-    solution join seeds the solutions. Disjoint (no shared variable)
-    entries require ``allow_disjoint`` and broadcast — the scalar
-    aggregate-subquery idiom; nullable shared variables raise.
-    ``meta_vars`` requests TERM METADATA for the named variables: the
-    first pattern binding such a variable also emits
-    ``{var}__kind`` / ``{var}__lang`` / ``{var}__datatype`` columns
-    (object positions read the frame's obj_kind/obj_lang/obj_datatype
-    columns — required to exist; subject/graph/path positions derive
-    kind from the ``_:`` prefix; predicates are IRIs). These feed
-    SPARQL's LANG() / DATATYPE() / isIRI() / isLiteral() / isBlank()
-    in ``filters``/``binds``, ride along every join, and participate
-    in the solution dedup (distinctness becomes RDF *term* identity
-    for those variables — literals differing only in language stay
-    distinct). The metadata columns remain in the output for the
-    caller to consume or drop.
-    ``minus`` groups are SPARQL MINUS: like NOT EXISTS an anti-join on
-    the shared variables, EXCEPT that a group sharing NO variable with
-    the outer query removes nothing (SPARQL §8.3.3: disjoint domains
-    are never compatible) — where NOT EXISTS would raise, MINUS is a
-    legal no-op. A shared variable the solution left unbound (null) is
-    compatible with any group binding, so per §8.3.3 the anti-join key
-    is the solution's BOUND shared variables only; a solution whose
-    shared variables are ALL unbound has a disjoint bound domain and
-    survives. (Same null-mask branching as OPTIONAL; single anti-join
-    when no shared variable is nullable.)
+    columns, so a literal whose lexical form equals an IRI unifies with
+    that IRI. Add a kind filter (``x__kind = 'iri'`` with
+    ``meta_vars``) where that matters.
     """
-    sjoins = []
-    for entry in solution_joins or []:
-        if isinstance(entry, DataFrame):
-            entry = {"df": entry}
-        sjoins.append({
-            "df": entry["df"],
-            "nullable": set(entry.get("nullable") or ()),
-            "allow_disjoint": bool(entry.get("allow_disjoint", False)),
-        })
-    if not patterns and not sjoins:
-        raise ValueError("empty pattern list")
-    pos_cols = (s_col, p_col, o_col, g_col)
+    out, *_ = _compile(
+        triples, {"patterns": patterns, "optional": optional,
+                  "not_exists": not_exists, "exists": exists,
+                  "minus": minus, "filters": filters, "values": values,
+                  "binds": binds, "solution_joins": solution_joins,
+                  "filter_exists": filter_exists},
+        (s_col, p_col, o_col, g_col), set(), "query",
+        set(meta_vars or ()), top=True, distinct=distinct_solutions)
+    return out
+
+
+#: body keys that make a group more than patterns + BINDs + FILTERs
+_BODY_KEYS = ("optional", "not_exists", "exists", "minus", "values",
+              "solution_joins")
+
+
+def _join_patterns(triples: DataFrame, patterns: list, pos_cols: tuple,
+                   where: str, meta: set):
+    """The pattern loop every group shares: each pattern is a filtered
+    scan equi-joined to the earlier ones on their shared variables. An
+    all-constant pattern binds nothing and becomes an existence gate:
+    a ``limit(1)`` probe the caller cross-joins in. The first pattern
+    binding a variable in ``meta`` emits its term-metadata columns and
+    removes it from ``meta``. Returns (solutions or None, variables,
+    metadata columns, gates)."""
+    mc = {"kind": "obj_kind", "lang": "obj_lang",
+          "datatype": "obj_datatype"}
+    meta_cols = mc if all(c in triples.columns
+                          for c in mc.values()) else None
     out: DataFrame | None = None
     bound: list[str] = []
-    # vars that may be unbound (null) in some solutions: introduced by
-    # an OPTIONAL, an UNDEF VALUES cell, or a BIND expression. Joining
-    # on one of these later needs the unbound-compatibility branches.
-    nullable: set[str] = set()
+    mcols: list[str] = []
     gates: list[DataFrame] = []
-    # term-metadata plumbing: the FIRST pattern binding a requested
-    # variable also emits its {var}__kind/__lang/__datatype columns
-    # (mv_pending shrinks as vars are served, so no later duplicate)
-    mv_pending: set[str] = set(meta_vars or ())
-    meta_bound: list[str] = []
-    _mcols = {"kind": "obj_kind", "lang": "obj_lang",
-              "datatype": "obj_datatype"}
-    meta_cols = _mcols if all(c in triples.columns
-                              for c in _mcols.values()) else None
-
-    def _note_meta(step_vars: list[str]) -> None:
-        for v in step_vars:
-            if v in mv_pending:
-                mv_pending.discard(v)
-                meta_bound.extend(f"{v}{s}" for s in META_SUFFIXES)
-
     for i, pat in enumerate(patterns):
         step, step_vars = _pattern_step(
             triples, pat, i, pos_cols,
-            meta_vars=frozenset(mv_pending), meta_cols=meta_cols)
+            meta_vars=frozenset(meta), meta_cols=meta_cols)
         if not step_vars:
-            # all-constant pattern: existence gate, binds nothing.
-            # limit(1) short-circuits the scan at the first match.
             gates.append(step.limit(1).select(F.lit(1).alias(f"_g{i}")))
             continue
+        served = [v for v in step_vars if v in meta]
+        meta.difference_update(served)
+        mcols += [f"{v}{s}" for v in served for s in META_SUFFIXES]
         if out is None:
-            out, bound = step, step_vars
-            _note_meta(step_vars)
+            out, bound = step, list(step_vars)
             continue
         shared = [v for v in step_vars if v in bound]
         if not shared:
             raise ValueError(
-                f"pattern {i} shares no variable with earlier patterns "
-                "— a cartesian product; reorder or constrain the query")
+                f"{where}: pattern {i} shares no variable with earlier "
+                "patterns — a cartesian product; reorder or constrain "
+                "the query")
         out = out.join(step, shared)
         bound += [v for v in step_vars if v not in bound]
-        _note_meta(step_vars)
-    if out is None and not sjoins:
-        raise ValueError(
-            "all patterns are constant — use ask() for a pure "
-            "existence test; bgp_match needs at least one variable")
-    # required bindings are set-distinct BEFORE optionals so an input
-    # with duplicate triples cannot multiply optional matches.
-    # distinct_solutions=False skips the exchange for warehouse tables
-    # already deduplicated at materialization (materialize_graph
-    # guarantees this) — SPARQL SELECT bag semantics; on deduped input
-    # both modes agree. The default (True) is SELECT DISTINCT — a
-    # documented deviation the property tests rely on.
-    if out is not None:
-        # meta columns ride along the dedup: distinct over
-        # value+kind+lang+datatype is RDF TERM distinctness for the
-        # metadata-requested vars (two literals differing only in
-        # language stay distinct solutions, per SPARQL)
-        out = out.select(*bound, *meta_bound)
-        if distinct_solutions:
-            out = out.distinct()
-    # solution joins (SPARQL 1.1 subqueries / pre-computed solution
-    # sets): each entry is a DataFrame whose columns ARE variable
-    # names — the algebra Join of the group's BGP with the subquery's
-    # (already-projected) solutions. Joined on the shared variables;
-    # new variables extend the solutions. A disjoint entry (no shared
-    # variable) is a cartesian product — legal SPARQL but a scale
-    # hazard, so it requires allow_disjoint=True (the front-end sets
-    # it for scalar-aggregate subqueries, which produce exactly one
-    # row and broadcast). Shared variables must be non-nullable on
-    # BOTH sides — SPARQL's unbound-compatibility branching for
-    # subquery joins is out of scope (bind the variable in a required
-    # pattern instead); violating entries raise.
-    for si, sj in enumerate(sjoins):
-        sdf = sj["df"]
-        svars = list(sdf.columns)
+    return out, bound, mcols, gates
+
+
+def _compile(triples: DataFrame, body: dict, pos_cols: tuple,
+             outer: set, where: str, meta: set, top: bool = False,
+             distinct: bool = False):
+    """Compile one group body (the keys ``bgp_match`` documents) to
+    (solutions, variables, nullable variables, metadata columns,
+    correlated filters). The same code compiles the top-level query
+    (``top``) and, recursively through ``_group``, every OPTIONAL /
+    [NOT] EXISTS / MINUS / expression-EXISTS body. ``outer`` holds the
+    enclosing solutions' variables: a filter referencing one is
+    correlated and returned unapplied. ``meta`` holds the pending
+    term-metadata requests; patterns serving one remove it."""
+    nullable: set[str] = set()
+    gates: list[DataFrame] = []
+    settle = top or any(body.get(k) for k in _BODY_KEYS)
+    if "union" in body:
+        per = [_pattern_tuple_vars(b) for b in body["union"]]
+        uvars = set.union(*per)
+        served = meta & uvars
+        meta.difference_update(served)
+        out = bgp_union(triples, body["union"], *pos_cols, distinct=False,
+                        branch_filters=body.get("branch_filters"),
+                        meta_vars=served or None)
+        bound = [c for c in out.columns if c in uvars]
+        mcols = [c for c in out.columns if c not in uvars]
+        nullable = uvars - set.intersection(*per)
+    else:
+        sjoins = [{"df": e} if isinstance(e, DataFrame) else e
+                  for e in body.get("solution_joins") or []]
+        if not body.get("patterns") and not sjoins:
+            raise ValueError(f"{where}: empty pattern list")
+        out, bound, mcols, gates = _join_patterns(
+            triples, body.get("patterns") or [], pos_cols, where, meta)
+        if out is None and not sjoins and top:
+            raise ValueError(
+                "all patterns are constant — use ask() for a pure "
+                "existence test; bgp_match needs at least one variable")
+        if out is not None and settle:
+            # required bindings are set-distinct BEFORE optionals, so
+            # duplicate input triples cannot multiply optional matches
+            out = out.select(*bound, *mcols)
+            if distinct:
+                out = out.distinct()
+        for si, sj in enumerate(sjoins):
+            sdf, snul = sj["df"], set(sj.get("nullable") or ())
+            svars = list(sdf.columns)
+            if out is None:
+                out, bound = sdf, svars
+                nullable |= snul
+                continue
+            shared = [v for v in svars if v in bound]
+            new = [v for v in svars if v not in bound]
+            bad = [v for v in shared if v in nullable or v in snul]
+            if bad:
+                raise ValueError(
+                    f"solution join {si}: shared variables {bad} may be "
+                    "unbound (null) — joining a subquery on a nullable "
+                    "variable is not supported; bind it in a required "
+                    "pattern")
+            if shared:
+                out = out.join(sdf, shared)
+            elif sj.get("allow_disjoint"):
+                # scalar-subquery idiom (e.g. SELECT (MAX(?d) AS ?m)):
+                # exactly-one-row side, broadcast to every solution
+                out = out.crossJoin(F.broadcast(sdf))
+            else:
+                raise ValueError(
+                    f"solution join {si} shares no variable with the "
+                    "outer query — a cartesian product; pass "
+                    "allow_disjoint=True only for provably tiny sides")
+            bound += new
+            nullable |= {v for v in new if v in snul}
         if out is None:
-            out, bound = sdf, svars
-            nullable |= sj["nullable"]
-            continue
-        shared = [v for v in svars if v in bound]
-        new = [v for v in svars if v not in bound]
-        bad = [v for v in shared
-               if v in nullable or v in sj["nullable"]]
-        if bad:
-            raise ValueError(
-                f"solution join {si}: shared variables {bad} may be "
-                "unbound (null) — joining a subquery on a nullable "
-                "variable is not supported; bind it in a required "
-                "pattern")
-        if shared:
-            out = out.join(sdf, shared)
-        elif sj["allow_disjoint"]:
-            # scalar-subquery idiom (e.g. SELECT (MAX(?d) AS ?m)):
-            # exactly-one-row side, broadcast to every solution
-            out = out.crossJoin(F.broadcast(sdf))
-        else:
-            raise ValueError(
-                f"solution join {si} shares no variable with the "
-                "outer query — a cartesian product; pass "
-                "allow_disjoint=True only for provably tiny sides")
-        bound += new
-        nullable |= {v for v in new if v in sj["nullable"]}
+            # every pattern constant: the gates' cross product binds
+            # nothing — callers decide what a variable-free group means
+            out, gates = gates[0], gates[1:]
+            for g in gates:
+                out = out.crossJoin(g)
+            gates = []
     for g in gates:
         out = out.crossJoin(g).drop(g.columns[0])
 
-    def _group_solutions(group: list, gi: int,
-                         kind: str) -> tuple[DataFrame, list[str]]:
-        if not group:
-            raise ValueError(f"{kind} group {gi} is empty")
-        inner: DataFrame | None = None
-        gbound: list[str] = []
-        ggates: list[DataFrame] = []
-        for i, pat in enumerate(group):
-            step, step_vars = _pattern_step(triples, pat, i, pos_cols)
-            if not step_vars:
-                # all-constant pattern inside the group: a legal
-                # SPARQL existence gate — same limit(1) probe shape
-                # as the required-pattern loop
-                ggates.append(step.limit(1).select(
-                    F.lit(1).alias(f"_gg{gi}_{i}")))
-                continue
-            if inner is None:
-                inner, gbound = step, step_vars
-                continue
-            shared = [v for v in step_vars if v in gbound]
-            if not shared:
-                raise ValueError(
-                    f"{kind} group {gi} pattern {i} shares no "
-                    "variable with earlier group patterns — a cartesian "
-                    "product; reorder or constrain the group")
-            inner = inner.join(step, shared)
-            gbound += [v for v in step_vars if v not in gbound]
-        if inner is None:
-            # every pattern constant: a zero-variable group. The
-            # per-kind callers decide — MINUS over a disjoint domain
-            # removes nothing (§8.3.3), EXISTS/NOT EXISTS raise their
-            # shares-no-variable error. Return the probe frame
-            # (contents irrelevant: gbound is empty).
-            inner = ggates[0]
-            for gg in ggates[1:]:
-                inner = inner.crossJoin(gg)
-            return inner, gbound
-        for gg in ggates:
-            inner = inner.crossJoin(gg).drop(gg.columns[0])
-        return inner, gbound
-
-    for i, pat in enumerate(optional or []):
-        _check_entry_keys(pat, f"optional entry {i}")
-        if not _optional_entry_vars(pat):
-            # an OPTIONAL entry binding NO variable (all-constant
-            # pattern / group / union, in any entry form) is a legal
-            # SPARQL no-op: the group's solutions are {μ0} or ∅, and
-            # LeftJoin(Ω, {μ0}) = LeftJoin(Ω, ∅) = Ω — skip before
-            # planning anything
+    for i, entry in enumerate(body.get("optional") or []):
+        w = f"optional group {i}"
+        _check_entry_keys(entry, w)
+        if not _optional_entry_vars(entry):
+            # LeftJoin(Ω, {μ0}) = LeftJoin(Ω, ∅) = Ω
             continue
-        union_nullable: set[str] = set()
-        group_filters: list[str] = []
-        group_binds: list[tuple[str, str]] = []
-        if isinstance(pat, dict) and "union" in pat:
-            # OPTIONAL { { A } UNION { B } }: SPARQL algebra
-            # LeftJoin(rest, Union(A, B)). The union's solution set
-            # (each branch an independent join tree, missing vars
-            # null-padded) becomes the optional side. A variable not
-            # bound by EVERY branch is unbound (null) in some rows —
-            # legal as a NEW variable, but as the left-join KEY it
-            # would need right-side unbound-compatibility branching,
-            # which is out of scope: raise instead of mis-joining.
-            step = bgp_union(triples, pat["union"], s_col=s_col,
-                             p_col=p_col, o_col=o_col, g_col=g_col,
-                             distinct=False,
-                             branch_filters=pat.get("branch_filters"))
-            step_vars = list(step.columns)
-            per_branch = [{t[1:] for p3 in branch for t in p3
-                           if isinstance(t, str) and t.startswith("?")}
-                          for branch in pat["union"]]
-            union_nullable = set.union(*per_branch) \
-                - set.intersection(*per_branch)
-            group_filters = pat.get("filters", [])
-            group_binds = pat.get("binds", [])
-        elif isinstance(pat, dict) and any(
-                k in pat for k in ("optional", "not_exists", "exists",
-                                   "minus", "values",
-                                   "solution_joins")):
-            # a full group body on the optional side: nested OPTIONALs,
-            # [NOT] EXISTS / MINUS negation, and in-group VALUES all
-            # compile through a recursive bgp_match (LeftJoin / anti /
-            # semi / compat joins inside the optional side — any
-            # nesting depth), then the group left-joins the outer
-            # solutions as a unit. A var bound only by an inner
-            # optional / UNDEF-able VALUES is nullable in the group's
-            # solutions, so as the outer join key it would silently
-            # never match — flagged nullable and checked below exactly
-            # like a not-every-branch union var. Negation-group /
-            # VALUES members referencing an OUTER-only variable would
-            # need correlation with the outer solutions (a conditional
-            # left join) — typed refusal, checked before recursing so
-            # the error names the variables instead of surfacing as an
-            # unresolved-column AnalysisException.
-            group_vs = _optional_entry_vars(pat)
-            for kind in ("not_exists", "exists", "minus"):
-                for gentry in pat.get(kind, []):
-                    ev = _group_entry_vars(gentry)
-                    outer_vs = ev & set(bound) - group_vs
-                    if outer_vs:
-                        raise ValueError(
-                            f"optional group {i} {kind.upper()} "
-                            f"references outer variables "
-                            f"{sorted(outer_vs)} — only group "
-                            "variables are supported inside OPTIONAL "
-                            "group bodies (outer references would "
-                            "need a conditional left join)")
-
-            # INNER-optional filters get the same typed pre-check:
-            # inside the recursion the top query's vars are not in
-            # scope, so an outer reference there would otherwise die
-            # in analysis as an opaque unresolved-column error (the
-            # conditional-left-join compilation only applies at THIS
-            # level's group filters, not inside the recursion)
-            def _walk_inner_opt(entries, depth_label):
-                for ie in entries:
-                    if not isinstance(ie, dict):
-                        continue
-                    for fexpr in ie.get("filters", []):
-                        outer_vs = {x for x in _expr_identifiers(fexpr)
-                                    if x in bound and x not in group_vs}
-                        if outer_vs:
-                            raise ValueError(
-                                f"optional group {i} {depth_label} "
-                                f"filter {fexpr!r} references outer "
-                                f"variables {sorted(outer_vs)} — a "
-                                "nested OPTIONAL's filter sees only "
-                                "the group's own variables")
-                    _walk_inner_opt(ie.get("optional", []),
-                                    "nested-OPTIONAL")
-            _walk_inner_opt(pat.get("optional", []), "inner-OPTIONAL")
-            # group BINDs go INTO the recursion: bgp_match applies
-            # binds before its negation joins, so a [NOT] EXISTS /
-            # MINUS member referencing a bind variable correlates on
-            # the BOUND value (SPARQL evaluates the group's filters
-            # over the Extended group). Outer references still raise
-            # here, typed, before the recursion can die on an
-            # unresolved column
-            for _bv, bexpr in pat.get("binds", []):
-                outer_vs = {x for x in _expr_identifiers(bexpr)
-                            if x in bound and x not in group_vs}
-                if outer_vs:
-                    raise ValueError(
-                        f"optional group {i} BIND {bexpr!r} references "
-                        f"outer variables {sorted(outer_vs)} — only "
-                        "group variables are supported in OPTIONAL "
-                        "group BINDs (outer references would need a "
-                        "conditional left join)")
-            # distinct_solutions=False: the outer loop dropDuplicates
-            # the group's solutions just below (the dedup the left
-            # join requires) — the recursive call's own final distinct
-            # would be a second, redundant exchange
-            step = bgp_match(triples, pat["patterns"],
-                             optional=pat.get("optional"),
-                             not_exists=pat.get("not_exists"),
-                             exists=pat.get("exists"),
-                             minus=pat.get("minus"),
-                             values=pat.get("values"),
-                             binds=pat.get("binds"),
-                             solution_joins=pat.get("solution_joins"),
-                             distinct_solutions=False,
-                             s_col=s_col, p_col=p_col, o_col=o_col,
-                             g_col=g_col)
-            step_vars = list(step.columns)
-            reqset = _pattern_tuple_vars(pat["patterns"])
-            union_nullable = set(step_vars) - reqset
-            # vars other nullable sources (inner optionals, group
-            # binds) can produce stay conservatively nullable below
-            other = {v for inner in pat.get("optional", [])
-                     for v in _optional_entry_vars(inner)}
-            other |= {v for v, _ in pat.get("binds", [])}
-            # a VALUES var with no UNDEF cell (present and non-null in
-            # EVERY row) is provably non-null in the group's solutions
-            # — safe as the outer join key
-            vals = pat.get("values") or []
-            if vals:
-                safe = {v for v in set().union(*[set(r) for r in vals])
-                        if all(row.get(v) is not None for row in vals)}
-                union_nullable -= (safe - other)
-            # likewise a subquery-bound var outside the subquery's own
-            # nullable set is non-null in the group's solutions
-            for sj in pat.get("solution_joins") or []:
-                sjdf = sj["df"] if isinstance(sj, dict) else sj
-                sjnul = set(sj.get("nullable") or ()) \
-                    if isinstance(sj, dict) else set()
-                union_nullable -= (set(sjdf.columns) - sjnul - other)
-            group_filters = pat.get("filters", [])
-            # binds already applied inside the recursion above
-        elif isinstance(pat, dict):
-            # {'patterns': [...], 'filters': [...]}: an OPTIONAL group
-            # with group-scoped FILTERs. Per SPARQL leftjoin(Ω1, Ω2,
-            # expr) the filter conditions the join; when expr
-            # references only group-side variables (enforced here)
-            # that is equivalent to pre-filtering the group's
-            # solutions — outer-variable references would need a
-            # conditional left join and are rejected.
-            step, step_vars = _group_solutions(
-                pat["patterns"], i, "optional")
-            group_filters = pat.get("filters", [])
-            group_binds = pat.get("binds", [])
-        elif isinstance(pat, list):
-            # a multi-pattern OPTIONAL group: SPARQL evaluates the
-            # group as a unit (its patterns inner-join among
-            # themselves), THEN left-joins it — a partial group match
-            # binds nothing
-            step, step_vars = _group_solutions(pat, i, "optional")
-        else:
-            step, step_vars = _pattern_step(
-                triples, pat, i, pos_cols,
-                meta_vars=frozenset(mv_pending), meta_cols=meta_cols)
-        # group-scoped BIND (SPARQL §18.2.2.6 Extend over the group's
-        # solutions) — applied BEFORE group filters, which may
-        # reference the bound var. A BIND expression can evaluate to
-        # null, so the var is nullable on the optional side: as the
-        # outer join key it joins through union_nullable's typed check.
-        svset = set(step_vars)
-        for bvar, bexpr in group_binds:
-            if bvar in svset:
-                raise ValueError(
-                    f"optional group {i} BIND would rebind {bvar!r} — "
-                    "SPARQL forbids rebinding an in-scope variable")
-            outer = {x for x in _expr_identifiers(bexpr)
-                     if x in bound and x not in svset}
-            if outer:
-                raise ValueError(
-                    f"optional group {i} BIND {bexpr!r} references "
-                    f"outer variables {sorted(outer)} — only group "
-                    "variables are supported in OPTIONAL group BINDs "
-                    "(outer references would need a conditional left "
-                    "join)")
-            step = step.withColumn(bvar, F.expr(bexpr))
-            step_vars.append(bvar)
-            svset.add(bvar)
-            union_nullable.add(bvar)
-        cond_filters: list[str] = []
-        for fexpr in group_filters:
-            outer = {x for x in _expr_identifiers(fexpr)
-                     if x in bound and x not in svset}
-            if outer:
-                # SPARQL LeftJoin(Ω1, Ω2, expr) with expr referencing
-                # OUTER bindings: the filter conditions the join itself
-                # (a group row failing it is as-if absent for THAT
-                # outer solution only) — compiled below as the left
-                # join's residual condition, exactly the
-                # _theta_group_join shape EXISTS/NOT EXISTS use
-                cond_filters.append(fexpr)
-            else:
-                # references only group vars: pre-filtering the
-                # group's solutions is equivalent per the leftjoin
-                # definition (and keeps the join residual-free)
-                step = step.where(F.expr(fexpr))
-        step_meta = [c for c in step.columns if c not in step_vars]
-        shared = [v for v in step_vars if v in bound]
-        new = [v for v in step_vars if v not in bound]
+        step, gvars, gnull, gmeta, corr = _group(
+            triples, entry, pos_cols, set(bound), w, meta)
+        shared = [v for v in gvars if v in bound]
         if not shared:
             raise ValueError(
-                f"optional pattern {i} shares no variable with the "
-                "required patterns — a cartesian product")
-        bad_union_keys = sorted(set(shared) & union_nullable)
-        if bad_union_keys:
+                f"{w} shares no variable with the required patterns — "
+                "a cartesian product")
+        bad = sorted(set(shared) & gnull)
+        if bad:
             raise ValueError(
-                f"optional group {i}: shared variable(s) "
-                f"{bad_union_keys} are not bound by every UNION "
-                "branch / only bound by an inner OPTIONAL or a group "
-                "BIND — an unbound join key on the optional side "
-                "would silently never match (Spark null != null); "
-                "bind them in every branch or in a required pattern")
-        # dedup the optional side unconditionally: duplicate input rows
-        # (or an all-shared-vars pattern) must not multiply solutions
-        # (metadata columns participate: RDF term distinctness)
-        step = step.dropDuplicates(step_vars + step_meta)
-        nshared = [v for v in shared if v in nullable]
-        if cond_filters:
-            # correlated group filter → conditional left join: equi
-            # keys on the shared vars keep the join hash/sort-merge
-            # plannable, the filter (group-variable references renamed
-            # to the right side) is the residual condition. A filter
-            # that errors (NULL) fails the condition, so the solution
-            # keeps unbound optional vars — SPARQL's error-is-false
-            # leftjoin contract. Nullable shared vars would need the
-            # compat branching TIMES the residual — typed refusal,
-            # same rule as _theta_group_join.
-            if nshared:
-                raise ValueError(
-                    f"optional group {i}: a filter referencing outer "
-                    f"variables over nullable shared variables "
-                    f"{nshared} is not supported — bind them in a "
-                    "required pattern")
-            if step_meta:
-                raise ValueError(
-                    f"optional group {i}: LANG()/DATATYPE()/isIRI() "
-                    "metadata cannot combine with a filter "
-                    "referencing outer variables")
-            right = step.select(
-                *[F.col(v).alias(f"_o_{v}") for v in step_vars])
-            cond = F.lit(True)
-            for v in shared:
-                cond = cond & (F.col(v) == F.col(f"_o_{v}"))
-            ren = {v: f"_o_{v}" for v in step_vars}
-            for fexpr in cond_filters:
-                cond = cond & F.expr(_rewrite_refs(fexpr, ren))
-            out = out.join(right, cond, "left").select(
-                *[F.col(v) for v in bound],
-                *[F.col(f"_o_{v}").alias(v) for v in new],
-                *[F.col(c) for c in meta_bound])
-        elif not nshared:
-            out = out.join(step, shared, "left")
-            _note_meta(step_vars)
-        elif step_meta:
+                f"{w}: shared variable(s) {bad} are not bound by every "
+                "UNION branch / only bound by an inner OPTIONAL or a "
+                "group BIND — an unbound join key on the optional side "
+                "would silently never match (Spark null != null); bind "
+                "them in every branch or in a required pattern")
+        if gmeta and (corr or any(v in nullable for v in shared)):
             raise ValueError(
-                f"optional pattern {i}: LANG()/DATATYPE()/isIRI() "
-                "metadata on an OPTIONAL sharing a nullable variable "
-                "is not supported — bind the variable in a required "
+                f"{w}: LANG()/DATATYPE()/isIRI() metadata cannot combine "
+                "with a filter referencing outer variables or a nullable "
+                "shared variable — bind the variable in a required "
                 "pattern")
-        else:
-            # SPARQL leftjoin compatibility: a shared var the solution
-            # left unbound matches any optional binding and takes it.
-            # Branch by null-mask; each branch equi-joins on its
-            # non-null keys, the all-null branch matches every row.
-            # Every branch filters the SAME solution set — materialize
-            # it once (lineage cut) so the upstream plan (extraction,
-            # earlier joins) doesn't re-run per branch. Masks first:
-            # the >4-nullable guard must raise before paying the cut.
-            masks = _null_masks(nshared, f"optional pattern {i}")
-            from ..session import cut_lineage
-            out = cut_lineage(out)
-            right = step.select(
-                *[F.col(v).alias(f"_o_{v}") for v in step_vars])
-            branches = []
-            for mask in masks:
-                left_m = out.filter(_mask_filter(mask, nshared))
-                key = [v for v in shared if v not in mask]
-                if key:
-                    jc = F.lit(True)
-                    for v in key:
-                        jc = jc & (F.col(v) == F.col(f"_o_{v}"))
-                    j = left_m.join(right, jc, "left")
-                else:
-                    j = left_m.join(right, F.lit(True), "left")
-                sel = [F.coalesce(F.col(v), F.col(f"_o_{v}")).alias(v)
-                       if v in mask else F.col(v) for v in bound]
-                sel += [F.col(f"_o_{v}").alias(v) for v in new]
-                # previously bound term-metadata columns ride along
-                # (the left side carries them; the final select
-                # expects them)
-                sel += [F.col(c) for c in meta_bound]
-                branches.append(j.select(*sel))
-            out = branches[0]
-            for b in branches[1:]:
-                out = out.unionByName(b)
+        # duplicate group rows must not multiply solutions (metadata
+        # columns take part: RDF term distinctness)
+        step = step.dropDuplicates(gvars + gmeta)
+        out = _compat_join(out, bound, mcols, nullable, step, gvars,
+                           "left", w, corr)
+        new = [v for v in gvars if v not in bound]
         bound += new
         nullable |= set(new)
-    if values:
-        vvars: list[str] = []
-        for row in values:
-            vvars += [v for v in row if v not in vvars]
-        spark = triples.sparkSession
-        vdf = spark.createDataFrame(
-            [tuple(row.get(v) for v in vvars) for row in values],
-            ", ".join(f"`{v}` string" for v in vvars))
-        shared = [v for v in vvars if v in bound]
-        new_vars = [v for v in vvars if v not in bound]
-        nshared = [v for v in shared if v in nullable]
-        if nshared or any(row.get(v) is None
-                          for row in values for v in shared):
-            # SPARQL compatibility on either side: an UNDEF VALUES
-            # cell matches any solution binding, and a shared variable
-            # the SOLUTION left unbound matches any VALUES cell (and
-            # takes its value). The equi-join key is wrong for those
-            # rows — join on an explicit null-tolerant condition
-            # instead (VALUES tables are tiny, so the broadcast
-            # nested-loop this plans is fine)
-            cond = None
-            vdf2 = vdf.select(*[F.col(v).alias(f"_v_{v}") for v in vvars])
-            for v in shared:
-                c = (F.col(f"_v_{v}").isNull()
-                     | (F.col(f"_v_{v}") == F.col(v)))
-                if v in nullable:
-                    c = c | F.col(v).isNull()
-                cond = c if cond is None else (cond & c)
-            out = out.join(F.broadcast(vdf2), cond)
-            for v in nshared:
-                out = out.withColumn(
-                    v, F.coalesce(F.col(v), F.col(f"_v_{v}")))
-            for v in new_vars:
-                out = out.withColumnRenamed(f"_v_{v}", v)
-            out = out.drop(*[f"_v_{v}" for v in shared])
-        elif shared:
-            out = out.join(F.broadcast(vdf), shared)
-        else:
-            out = out.crossJoin(F.broadcast(vdf))
-        bound += new_vars
-        nullable |= {v for v in new_vars
-                     if any(row.get(v) is None for row in values)}
-    for var, expr in binds or []:
+        mcols += gmeta
+    if body.get("values"):
+        rows = body["values"]
+        out = _values_join(out, rows, nullable)
+        new = [v for v in dict.fromkeys(v for r in rows for v in r)
+               if v not in bound]
+        bound += new
+        nullable |= {v for v in new
+                     if any(r.get(v) is None for r in rows)}
+    for var, expr in body.get("binds") or []:
         if var in bound:
-            raise ValueError(f"BIND would rebind {var!r} — SPARQL "
-                             "forbids rebinding an in-scope variable")
+            raise ValueError(
+                f"{where}: BIND would rebind {var!r} — SPARQL forbids "
+                "rebinding an in-scope variable")
         out = out.withColumn(var, F.expr(expr))
         bound.append(var)
-        # a BIND whose expression errors leaves the var unbound per
-        # SPARQL (null here) — conservatively nullable
+        # an erroring BIND leaves the variable unbound (null)
         nullable.add(var)
-    def _compat_join(out_df: DataFrame, inner: DataFrame,
-                     shared: list[str], kind: str, gi: int,
-                     how: str) -> DataFrame:
-        """Anti/semi join under SPARQL unbound-compatibility: a shared
-        variable the solution left unbound (null) is a free variable
-        inside the group (NOT EXISTS/EXISTS substitution semantics) or
-        compatible-with-anything (MINUS §8.3.3), so the join key per
-        null-mask branch is the solution's BOUND shared vars only.
-        With no nullable shared variable this is a single plain join
-        — the overwhelmingly common case."""
-        nshared_g = [v for v in shared if v in nullable]
-        if not nshared_g:
-            return out_df.join(inner.select(*shared).distinct(),
-                               shared, how)
-        # as in the OPTIONAL branch path: branches filter the same
-        # solution set — materialize once instead of re-running the
-        # upstream plan per branch (masks first so the guard raises
-        # before paying the cut)
-        masks = _null_masks(nshared_g, f"{kind} group {gi}")
-        from ..session import cut_lineage
-        out_df = cut_lineage(out_df)
-        branches = []
-        for mask in masks:
-            left_m = out_df.filter(_mask_filter(mask, nshared_g))
-            key = [v for v in shared if v not in mask]
-            if key:
-                branches.append(
-                    left_m.join(inner.select(*key).distinct(), key, how))
-            elif kind == "minus":
-                # every shared var unbound: bound domains are disjoint,
-                # MINUS removes nothing (§8.3.3)
-                branches.append(left_m)
-            else:
-                # NOT EXISTS/EXISTS with every shared var unbound: the
-                # group is a pure existence test — drop (anti) / keep
-                # (semi) these solutions iff the group matches at all
-                probe = inner.limit(1).select(F.lit(1).alias("_probe"))
-                branches.append(left_m.join(probe, F.lit(True), how))
-        res = branches[0]
-        for b in branches[1:]:
-            res = res.unionByName(b)
-        return res
 
-    def _prep_group(group, gi: int, kind: str):
-        """Normalize a group entry (pattern list, or dict with
-        'patterns' + 'filters') → (inner solutions, group vars,
-        correlated filters). Uncorrelated filters (referencing only
-        group variables — analysis succeeds on the group frame) apply
-        to the group's solutions right here; the rest are returned
-        for the caller's per-kind correlation semantics."""
-        nested: dict = {}
-        _check_entry_keys(group, f"{kind} group {gi}")
-        if isinstance(group, dict):
-            pats, gfilters = group["patterns"], group.get("filters", [])
-            nested = {k: group[k] for k in
-                      ("optional", "not_exists", "exists", "minus",
-                       "values", "binds", "solution_joins")
-                      if group.get(k)}
-        else:
-            pats, gfilters = group, []
-        # term-metadata builtins in body FILTERs (LANG/DATATYPE/
-        # isIRI over a body-bound var) reference {var}__kind/... —
-        # the body must be compiled with meta_vars so those columns
-        # exist. Detected from the filter text; a meta reference to
-        # a var the body does NOT bind stays unresolved and raises
-        # the usual typed never-bound error downstream.
-        meta_needed = set()
-        for fexpr in gfilters:
-            for ident in _expr_identifiers(fexpr):
-                for sfx in META_SUFFIXES:
-                    if ident.endswith(sfx):
-                        meta_needed.add(ident[: -len(sfx)])
-        meta_needed &= _pattern_tuple_vars(pats)
-        if meta_needed and not nested:
-            # route the plain pattern list through bgp_match — the
-            # only compiler that emits metadata columns
-            nested = {}
-            inner = bgp_match(triples, pats,
-                              distinct_solutions=False,
-                              meta_vars=meta_needed,
-                              s_col=s_col, p_col=p_col,
-                              o_col=o_col, g_col=g_col)
-            gbound = list(inner.columns)
-            gset = set(gbound)
-            correlated: list[str] = []
-            for fexpr in gfilters:
-                if any(x in bound and x not in gset
-                       for x in _expr_identifiers(fexpr)):
-                    correlated.append(fexpr)
-                else:
-                    inner = inner.where(F.expr(fexpr))
-            return inner, gbound, correlated
-        if nested:
-            # a FULL group body inside [NOT] EXISTS / MINUS (nested
-            # negation, BIND, VALUES, inner OPTIONAL): compile it
-            # through a recursive bgp_match — the body is evaluated
-            # as a unit with exact group semantics, then the caller's
-            # per-kind join applies. Members may not reference OUTER
-            # variables (correlation through nesting would need a
-            # conditional join) — typed refusal before the recursion
-            # dies on an unresolved column.
-            gvs = _optional_entry_vars(group)
-            for k in ("not_exists", "exists", "minus"):
-                for gentry in nested.get(k, []):
-                    outer_vs = (_group_entry_vars(gentry)
-                                & set(bound)) - gvs
-                    if outer_vs:
-                        raise ValueError(
-                            f"{kind} group {gi} nested {k.upper()} "
-                            f"references outer variables "
-                            f"{sorted(outer_vs)} — only group "
-                            "variables are supported inside nested "
-                            "group bodies")
-            for _bv, bexpr in nested.get("binds", []):
-                outer_vs = {x for x in _expr_identifiers(bexpr)
-                            if x in bound and x not in gvs}
-                if outer_vs:
+    for kind, how in (("not_exists", "anti"), ("exists", "semi"),
+                      ("minus", "minus")):
+        for gi, entry in enumerate(body.get(kind) or []):
+            w = f"{kind} group {gi}"
+            entries = [entry]
+            if isinstance(entry, dict) and "union" in entry:
+                # NOT EXISTS and MINUS distribute over UNION; EXISTS
+                # over UNION is an OR of the branches: a marker join
+                entries = _expand_union_group(entry, set(bound), w)
+                if kind == "exists":
+                    flags = [f"_ex_{gi}_{bi}" for bi in range(len(entries))]
+                    out, cond = _marker_join(triples, pos_cols, out, bound,
+                                             nullable, entries, flags, w)
+                    out = out.filter(cond).drop(*flags)
+                    continue
+            for bi, e in enumerate(entries):
+                wb = f"{w} (UNION branch {bi})" if len(entries) > 1 else w
+                inner, gvars, _, _, corr = _group(
+                    triples, e, pos_cols, set(bound), wb, None)
+                on = [v for v in gvars if v in bound]
+                if kind == "minus":
+                    inner = _minus_filters(inner, corr,
+                                           set(bound) - set(gvars), wb)
+                    if not on:
+                        continue    # disjoint domains: removes nothing
+                    corr = []
+                elif not on:
                     raise ValueError(
-                        f"{kind} group {gi} BIND {bexpr!r} references "
-                        f"outer variables {sorted(outer_vs)} — only "
-                        "group variables are supported in nested "
-                        "group BINDs")
-            # SPARQL evaluates [NOT] EXISTS/MINUS bodies under
-            # SUBSTITUTION: an outer-bound variable is a constant
-            # inside the body. Our plan joins on the shared vars
-            # instead — equivalent ONLY when the body binds them
-            # non-null in a required pattern. A shared var the body
-            # binds through an inner OPTIONAL or an UNDEF-able VALUES
-            # cell (nullable), or re-binds via BIND, would make the
-            # equality join silently diverge from substitution —
-            # typed refusal.
-            req_vs = _pattern_tuple_vars(pats)
-            soft: set[str] = set()
-            for oentry in nested.get("optional", []):
-                soft |= _optional_entry_vars(oentry)
-            for row in nested.get("values", []):
-                soft |= {v for v, val in row.items() if val is None}
-            import re as _re
-            for bv, bexpr in nested.get("binds", []):
-                m = _re.fullmatch(r"`(\w+)`", bexpr.strip())
-                if m is None or m.group(1) not in req_vs:
-                    # a pure rename of a required-pattern var is
-                    # provably non-null — the shared-var equality
-                    # join stays exact; anything else may be null
-                    soft.add(bv)
-            bad = sorted((soft - req_vs) & set(bound))
-            if bad:
-                raise ValueError(
-                    f"{kind} group {gi}: variable(s) {bad} are shared "
-                    "with the outer solutions but bound inside the "
-                    "body only by OPTIONAL / BIND / an UNDEF-able "
-                    "VALUES — substitution semantics would need a "
-                    "conditional join; bind them in a required body "
-                    "pattern or rename them")
-            # a subquery-bound var the body does NOT also bind in a
-            # required pattern must not be shared with the outer
-            # solutions: SPARQL substitution does not descend into
-            # subqueries (§18.6 / errata), so the outer binding
-            # imposes NO constraint on it — our shared-var equality
-            # join would wrongly constrain it. Refuse, typed.
-            for sj in nested.get("solution_joins", []):
-                sjdf = sj["df"] if isinstance(sj, dict) else sj
-                sub_bad = sorted(
-                    (set(sjdf.columns) - req_vs) & set(bound))
-                if sub_bad:
-                    raise ValueError(
-                        f"{kind} group {gi}: variable(s) {sub_bad} "
-                        "are shared with the outer solutions but "
-                        "bound inside the body only by a subquery — "
-                        "substitution does not descend into "
-                        "subqueries, so the outer binding would not "
-                        "constrain them; bind them in a required "
-                        "body pattern or rename them")
-            # distinct_solutions=False: the per-kind callers
-            # distinct/semi-join the group's solutions themselves
-            inner = bgp_match(triples, pats,
-                              distinct_solutions=False,
-                              meta_vars=meta_needed or None,
-                              s_col=s_col, p_col=p_col,
-                              o_col=o_col, g_col=g_col, **nested)
-            gbound = list(inner.columns)
-        else:
-            inner, gbound = _group_solutions(pats, gi, kind)
-        gset = set(gbound)
-        correlated: list[str] = []
-        for fexpr in gfilters:
-            if any(x in bound and x not in gset
-                   for x in _expr_identifiers(fexpr)):
-                correlated.append(fexpr)
-            else:
-                # references only group vars (a typo'd name raises the
-                # normal unresolved-column error right here)
-                inner = inner.where(F.expr(fexpr))
-        return inner, gbound, correlated
-
-    def _theta_group_join(out_df: DataFrame, inner: DataFrame,
-                          gbound: list[str], shared: list[str],
-                          cfilters: list[str], kind: str, gi: int,
-                          how: str) -> DataFrame:
-        """EXISTS/NOT EXISTS with correlated filters (SPARQL
-        substitution semantics: the group's filter sees the outer
-        solution's bindings — e.g. the classic temporal
-        ``FILTER NOT EXISTS { ?x :date ?d2 FILTER(?d2 > ?d) }``).
-        Planned as a semi/anti join whose condition is the equi keys
-        on the shared vars plus the filter with group-variable
-        references renamed to the right side — the equi conjuncts
-        keep the join hash/sort-merge plannable; the filter becomes
-        the join's residual condition."""
-        nshared_g = [v for v in shared if v in nullable]
-        if nshared_g:
-            raise ValueError(
-                f"{kind} group {gi}: correlated group filters over "
-                f"nullable shared variables {nshared_g} are not "
-                "supported — bind them in a required pattern")
-        right = inner.select(
-            *[F.col(v).alias(f"_g_{v}") for v in gbound]).distinct()
-        cond = F.lit(True)
-        for v in shared:
-            cond = cond & (F.col(v) == F.col(f"_g_{v}"))
-        ren = {v: f"_g_{v}" for v in gbound}
-        for fexpr in cfilters:
-            cond = cond & F.expr(_rewrite_refs(fexpr, ren))
-        return out_df.join(right, cond, how)
-
-    def _expand_union_group(group, gi: int, kind: str) -> list:
-        """{'union': [...], 'filters': [...]} → per-branch group
-        entries. NOT EXISTS and MINUS distribute over UNION (NOT
-        EXISTS{A∪B} ≡ NOT EXISTS{A} AND NOT EXISTS{B}; MINUS
-        removals union), so each branch runs through the unchanged
-        compat/substitution machinery; EXISTS consumes the entries
-        in its marker-join path. Filters must reference only
-        variables bound by every branch (or outer variables) —
-        distributed into a branch that does not bind the variable
-        the filter would be a type error → false, silently emptying
-        just that branch."""
-        _check_entry_keys(group, f"{kind} group {gi}")
-        branches = group["union"]
-        fs = group.get("filters", [])
-        per = [{t[1:] for p3 in b for t in p3
-                if isinstance(t, str) and t.startswith("?")}
-               for b in branches]
-        allv, common = set.union(*per), set.intersection(*per)
-        for fexpr in fs:
-            bad = sorted(x for x in _expr_identifiers(fexpr)
-                         if x in allv and x not in common
-                         and x not in bound)
-            if bad:
-                raise ValueError(
-                    f"{kind} group {gi}: filter {fexpr!r} references "
-                    f"variable(s) {bad} not bound by every UNION "
-                    "branch — bind them in every branch")
-        bfs = group.get("branch_filters") or [[] for _ in branches]
-        bnds = group.get("binds") or []
-        out_entries = []
-        for bi, b in enumerate(branches):
-            if fs or bfs[bi] or bnds:
-                e: dict = {"patterns": b, "filters": fs + bfs[bi]}
-                if bnds:
-                    # Extend distributes over Union: each branch
-                    # carries the group's BINDs (applied before the
-                    # group filters by the recursive bgp_match)
-                    e["binds"] = bnds
-                out_entries.append(e)
-            else:
-                out_entries.append(b)
-        return out_entries
-
-    def _exists_union(out_df: DataFrame, group, gi: int) -> DataFrame:
-        """EXISTS { {A} UNION {B} } ≡ EXISTS{A} OR EXISTS{B} — not
-        expressible as chained semi joins (those AND). Bag-correct
-        plan: one left join per branch against the branch's DISTINCT
-        shared-key set carrying a marker column (unique keys: no row
-        multiplication), then keep solutions with any marker set."""
-        markers: list[str] = []
-        cur = out_df
-        for bi, entry in enumerate(_expand_union_group(group, gi,
-                                                       "exists")):
-            inner, gbound, cfil = _prep_group(entry, gi, "exists")
-            if cfil:
-                raise ValueError(
-                    f"exists group {gi} (UNION branch {bi}): "
-                    "correlated filters over a UNION body are not "
-                    "supported — split the EXISTS per branch")
-            semi_on = [v for v in gbound if v in bound]
-            if not semi_on:
-                raise ValueError(
-                    f"exists group {gi} (UNION branch {bi}) shares "
-                    "no variable with the required patterns — it is "
-                    "not a per-solution test")
-            nsh = [v for v in semi_on if v in nullable]
-            if nsh:
-                raise ValueError(
-                    f"exists group {gi} (UNION branch {bi}): "
-                    f"nullable shared variable(s) {nsh} over a UNION "
-                    "body are not supported — bind them in a "
-                    "required pattern")
-            m = f"_ex_{gi}_{bi}"
-            right = inner.select(*semi_on).distinct() \
-                .withColumn(m, F.lit(1))
-            cur = cur.join(right, semi_on, "left")
-            markers.append(m)
-        cond = F.col(markers[0]).isNotNull()
-        for m in markers[1:]:
-            cond = cond | F.col(m).isNotNull()
-        return cur.filter(cond).drop(*markers)
-
-    ne_groups: list = []
-    for gi, group in enumerate(not_exists or []):
-        if isinstance(group, dict) and "union" in group:
-            ne_groups += _expand_union_group(group, gi, "not_exists")
-        else:
-            ne_groups.append(group)
-    for gi, group in enumerate(ne_groups):
-        inner, gbound, cfil = _prep_group(group, gi, "not_exists")
-        anti_on = [v for v in gbound if v in bound]
-        if not anti_on:
-            raise ValueError(
-                f"not_exists group {gi} shares no variable with the "
-                "required patterns — it is not a per-solution test")
-        if cfil:
-            out = _theta_group_join(out, inner, gbound, anti_on, cfil,
-                                    "not_exists", gi, "anti")
-        else:
-            out = _compat_join(out, inner, anti_on, "not_exists", gi,
-                               "anti")
-    for gi, group in enumerate(exists or []):
-        if isinstance(group, dict) and "union" in group:
-            out = _exists_union(out, group, gi)
-            continue
-        inner, gbound, cfil = _prep_group(group, gi, "exists")
-        semi_on = [v for v in gbound if v in bound]
-        if not semi_on:
-            raise ValueError(
-                f"exists group {gi} shares no variable with the "
-                "required patterns — it is not a per-solution test")
-        if cfil:
-            out = _theta_group_join(out, inner, gbound, semi_on, cfil,
-                                    "exists", gi, "semi")
-        else:
-            out = _compat_join(out, inner, semi_on, "exists", gi, "semi")
-    mn_groups: list = []
-    for gi, group in enumerate(minus or []):
-        if isinstance(group, dict) and "union" in group:
-            mn_groups += _expand_union_group(group, gi, "minus")
-        else:
-            mn_groups.append(group)
-    for gi, group in enumerate(mn_groups):
-        inner, gbound, cfil = _prep_group(group, gi, "minus")
-        for fexpr in cfil:
-            # SPARQL MINUS does NOT substitute outer bindings
-            # (§8.3.3): the referenced variables are simply UNBOUND
-            # inside the group. Evaluate the filter with those
-            # references replaced by NULL — SQL's 3-valued logic
-            # mirrors SPARQL's error algebra (error||true=true,
-            # error&&x never true, COALESCE skips the error, BOUND
-            # is false), so error-absorbing expressions keep their
-            # non-erroring branches: FILTER(?outer > 5 || ?y > 0)
-            # still removes the ?y>0 rows (the earlier blanket
-            # empty-group no-op silently skipped those removals).
-            # For a plain comparison the NULL makes every row false
-            # — the famous spec example distinguishing MINUS from
-            # NOT EXISTS stays a no-op. IF()/CASE diverge (SPARQL:
-            # erroring condition = error; SQL: else branch), so
-            # those refuse rather than mis-execute.
-            outer_refs = {x for x in _expr_identifiers(fexpr)
-                          if x in bound and x not in set(gbound)}
-            import re as _re2
-            # search only CODE segments — an if/case inside a string
-            # literal (e.g. ?g = 'case study') must not trip the
-            # refusal (advice finding)
-            _code = "".join(_re2.split(
-                r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")",
-                fexpr)[0::2])
-            if _re2.search(r"(?i)(?<!\w)(?:if\s*\(|case\b)", _code):
-                raise ValueError(
-                    f"minus group {gi}: filter {fexpr!r} references "
-                    f"outer variables {sorted(outer_refs)} inside an "
-                    "IF()/CASE — SQL's null-condition semantics "
-                    "diverge from SPARQL's error propagation there; "
-                    "rewrite with &&/||/COALESCE")
-            inner = inner.where(F.expr(_null_refs(fexpr, outer_refs)))
-        anti_on = [v for v in gbound if v in bound]
-        if anti_on:
-            out = _compat_join(out, inner, anti_on, "minus", gi, "anti")
-        # disjoint-domain MINUS removes nothing (SPARQL §8.3.3)
-    if mv_pending:
-        # before the filter loop: a filter referencing the missing
-        # {var}__kind column would otherwise die in analysis with an
-        # opaque unresolved-column error instead of this one
-        missing = sorted(mv_pending)
+                        f"{wb} shares no variable with the required "
+                        "patterns — it is not a per-solution test")
+                out = _compat_join(out, bound, mcols, nullable, inner,
+                                   gvars, how, wb, corr)
+    if top and meta:
         raise ValueError(
-            f"meta_vars {missing} were never bound by a pattern — "
+            f"meta_vars {sorted(meta)} were never bound by a pattern — "
             "LANG()/DATATYPE()/isIRI() need the variable bound in a "
             "required or OPTIONAL triple pattern")
-    out = out.select(*bound, *meta_bound)
-    # expression-level EXISTS: each entry is {'expr': sql_string,
-    # 'markers': [(name, group_entry, negated), ...]} — the expr
-    # references `name` as a boolean column. Each marker materializes
-    # as a left join against the group's DISTINCT shared-key set
-    # carrying a flag (unique keys: no row multiplication; same plan
-    # shape as EXISTS-over-UNION). EXISTS here is a value inside an
-    # arbitrary boolean expression, so it cannot become a semi/anti
-    # join — the marker column is the faithful compilation.
-    for fi, fe in enumerate(filter_exists or []):
-        mcols: list[str] = []
+    if settle:
+        out = out.select(*bound, *mcols)
+    for fe in body.get("filter_exists") or []:
+        names: list[str] = []
         for name, gentry, neg in fe["markers"]:
             if name in bound:
                 raise ValueError(
                     f"EXISTS marker column {name!r} collides with a "
                     "query variable — rename the variable")
-            entries = _expand_union_group(gentry, fi, "exists") \
+            w = f"EXISTS inside FILTER expression {fe['expr']!r}"
+            entries = _expand_union_group(gentry, set(bound), w) \
                 if isinstance(gentry, dict) and "union" in gentry \
                 else [gentry]
-            bms: list[str] = []
-            for bi, entry in enumerate(entries):
-                inner, gbound, cfil = _prep_group(entry, fi, "exists")
-                if cfil:
-                    raise ValueError(
-                        f"EXISTS inside a FILTER expression with "
-                        f"correlated group filters {cfil} is not "
-                        "supported — use a standalone FILTER EXISTS")
-                join_on = [v for v in gbound if v in bound]
-                if not join_on:
-                    raise ValueError(
-                        f"EXISTS inside FILTER expression {fe['expr']!r}"
-                        " shares no variable with the required patterns"
-                        " — it is not a per-solution test")
-                nsh = [v for v in join_on if v in nullable]
-                if nsh:
-                    raise ValueError(
-                        "EXISTS inside a FILTER expression over "
-                        f"nullable shared variable(s) {nsh} is not "
-                        "supported — bind them in a required pattern")
-                m = f"{name}_b{bi}"
-                right = inner.select(*join_on).distinct() \
-                    .withColumn(m, F.lit(1))
-                out = out.join(right, join_on, "left")
-                bms.append(m)
-            cond = F.col(bms[0]).isNotNull()
-            for m in bms[1:]:
-                cond = cond | F.col(m).isNotNull()
-            if neg:
-                cond = ~cond
-            out = out.withColumn(name, cond).drop(*bms)
-            mcols.append(name)
-        out = out.where(F.expr(fe["expr"])).drop(*mcols)
-    for expr in filters or []:
-        out = out.where(F.expr(expr))
-    return out
+            flags = [f"{name}_b{bi}" for bi in range(len(entries))]
+            out, cond = _marker_join(triples, pos_cols, out, bound,
+                                     nullable, entries, flags, w)
+            out = out.withColumn(name, ~cond if neg else cond).drop(*flags)
+            names.append(name)
+        out = out.where(F.expr(fe["expr"])).drop(*names)
+    correlated: list[str] = []
+    for fexpr in body.get("filters") or []:
+        if any(x in outer and x not in bound
+               for x in _expr_identifiers(fexpr)):
+            correlated.append(fexpr)
+        else:
+            out = out.where(F.expr(fexpr))
+    return out, bound, nullable, mcols, correlated
+
+
+def _group(triples: DataFrame, entry, pos_cols: tuple, outer: set,
+           where: str, meta: set | None):
+    """Normalise a group entry — a pattern tuple, a pattern list, a
+    body dict or a union dict — and compile it with ``_compile``.
+    ``meta`` is the caller's pending metadata requests for an OPTIONAL
+    body, whose variables flow out. ``None`` marks a [NOT] EXISTS /
+    MINUS / expression-EXISTS body: it binds nothing outward, so it
+    serves the metadata its own filters read, and under SPARQL's
+    substitution a variable shared with the outer solutions must be
+    bound by a required body pattern."""
+    _check_entry_keys(entry, where)
+    if not isinstance(entry, dict):
+        entry = {"patterns": entry if not entry or isinstance(
+            entry[0], (list, tuple)) else [entry]}
+    _refuse_outer_refs(entry, outer, where)
+    if meta is None:
+        _refuse_unsubstituted(entry, outer, where)
+        meta = {x[: -len(sfx)] for f in entry.get("filters", [])
+                for x in _expr_identifiers(f)
+                for sfx in META_SUFFIXES if x.endswith(sfx)}
+    return _compile(triples, entry, pos_cols, outer, where, meta)
+
+
+def _refuse_outer_refs(entry: dict, outer: set, where: str) -> None:
+    """A group body's nested members — BINDs, [NOT] EXISTS / MINUS
+    members, inner-OPTIONAL filters at any depth — see only the
+    group's own variables: an outer reference there would need a
+    conditional join. Refuse it typed, before compiling would die on
+    an unresolved column."""
+    gvars = _optional_entry_vars(entry)
+    refs = [(f"BIND {e!r}", _expr_identifiers(e))
+            for _v, e in entry.get("binds", [])]
+    refs += [(k.upper(), _group_entry_vars(m))
+             for k in ("not_exists", "exists", "minus")
+             for m in entry.get(k, [])]
+    inner = list(entry.get("optional", []))
+    while inner:
+        ie = inner.pop()
+        if isinstance(ie, dict):
+            refs += [(f"inner-OPTIONAL filter {f!r}", _expr_identifiers(f))
+                     for f in ie.get("filters", [])]
+            inner += ie.get("optional", [])
+    for what, names in refs:
+        bad = sorted((names & outer) - gvars)
+        if bad:
+            raise ValueError(
+                f"{where}: {what} references outer variables {bad} — "
+                "only group variables are supported inside nested "
+                "group members (outer references would need a "
+                "conditional join)")
+
+
+def _refuse_unsubstituted(entry: dict, outer: set, where: str) -> None:
+    """[NOT] EXISTS / MINUS bodies are evaluated under SUBSTITUTION: an
+    outer-bound variable is a constant inside the body. The plan joins
+    on the shared variables instead, which is equivalent only when the
+    body binds them in a required pattern. A shared variable the body
+    binds only through an inner OPTIONAL, a non-rename BIND, an
+    UNDEF-able VALUES cell or a subquery (substitution does not descend
+    into subqueries) would diverge — refuse it typed."""
+    req = _pattern_tuple_vars(entry.get("patterns", []))
+    soft: set[str] = set()
+    for oentry in entry.get("optional", []):
+        soft |= _optional_entry_vars(oentry)
+    for row in entry.get("values", []):
+        soft |= {v for v, val in row.items() if val is None}
+    import re as _re
+    for bv, bexpr in entry.get("binds", []):
+        m = _re.fullmatch(r"`(\w+)`", bexpr.strip())
+        if m is None or m.group(1) not in req:
+            soft.add(bv)
+    bad = sorted((soft - req) & outer)
+    if bad:
+        raise ValueError(
+            f"{where}: variable(s) {bad} are shared with the outer "
+            "solutions but bound inside the body only by OPTIONAL / "
+            "BIND / an UNDEF-able VALUES — substitution semantics would "
+            "need a conditional join; bind them in a required body "
+            "pattern or rename them")
+    for sj in entry.get("solution_joins", []):
+        sjdf = sj["df"] if isinstance(sj, dict) else sj
+        bad = sorted((set(sjdf.columns) - req) & outer)
+        if bad:
+            raise ValueError(
+                f"{where}: variable(s) {bad} are shared with the outer "
+                "solutions but bound inside the body only by a subquery "
+                "— substitution does not descend into subqueries, so the "
+                "outer binding would not constrain them; bind them in a "
+                "required body pattern or rename them")
+
+
+def _minus_filters(inner: DataFrame, correlated: list[str],
+                   outer_only: set, where: str) -> DataFrame:
+    """Apply a MINUS body's filters that reference outer variables.
+    MINUS does not substitute (§8.3.3): those variables are UNBOUND in
+    the body, so they evaluate as SQL NULL — 3-valued logic mirrors
+    SPARQL's error algebra (``error || true = true``, COALESCE skips
+    the error, BOUND is false). IF()/CASE diverge (an erroring
+    condition is an error in SPARQL, the else branch in SQL) and
+    refuse."""
+    import re as _re
+    for fexpr in correlated:
+        refs = {x for x in _expr_identifiers(fexpr) if x in outer_only}
+        code = "".join(_re.split(
+            r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")", fexpr)[0::2])
+        if _re.search(r"(?i)(?<!\w)(?:if\s*\(|case\b)", code):
+            raise ValueError(
+                f"{where}: filter {fexpr!r} references outer variables "
+                f"{sorted(refs)} inside an IF()/CASE — SQL's "
+                "null-condition semantics diverge from SPARQL's error "
+                "propagation there; rewrite with &&/||/COALESCE")
+        inner = inner.where(F.expr(_null_refs(fexpr, refs)))
+    return inner
+
+
+def _compat_join(out: DataFrame, bound: list[str], mcols: list[str],
+                 nullable: set[str], right: DataFrame, rvars: list[str],
+                 how: str, where: str, residual: list[str] = ()
+                 ) -> DataFrame:
+    """Join the solutions ``out`` (variables ``bound``, metadata
+    ``mcols``) to a group's solutions ``right`` on their shared
+    variables: ``how`` is "left" (OPTIONAL; new variables extend each
+    solution), "semi" (EXISTS), "anti" (NOT EXISTS) or "minus".
+
+    ``residual`` — correlated group filters — join as the residual
+    condition beside the equi keys, group-variable references renamed
+    to the right side; an erroring (null) filter fails the condition.
+
+    SPARQL unbound-compatibility: a shared variable the solution left
+    unbound (null) matches any binding. The solutions split by the
+    null-mask of their nullable shared variables, each branch an
+    equi-join on its bound keys, and the branches union back. In the
+    all-unbound branch OPTIONAL matches every group row, [NOT] EXISTS
+    tests whether the group matches at all, and MINUS removes nothing
+    (disjoint domains). Without a nullable shared variable — the
+    common case — this is one plain join."""
+    shared = [v for v in rvars if v in bound]
+    new = [v for v in rvars if v not in bound]
+    nsh = [v for v in shared if v in nullable]
+    left = how == "left"
+    jhow = "anti" if how == "minus" else how
+    if residual:
+        if nsh:
+            raise ValueError(
+                f"{where}: correlated group filters over nullable shared "
+                f"variables {nsh} are not supported — bind them in a "
+                "required pattern")
+        pfx = "_o_" if left else "_g_"
+        r = right.select(*[F.col(v).alias(pfx + v) for v in rvars])
+        if not left:
+            r = r.distinct()
+        cond = F.lit(True)
+        for v in shared:
+            cond = cond & (F.col(v) == F.col(pfx + v))
+        ren = {v: pfx + v for v in rvars}
+        for fexpr in residual:
+            cond = cond & F.expr(_rewrite_refs(fexpr, ren))
+        j = out.join(r, cond, jhow)
+        if not left:
+            return j
+        return j.select(*bound, *[F.col(pfx + v).alias(v) for v in new],
+                        *mcols)
+    if not nsh:
+        if left:
+            return out.join(right, shared, "left")
+        return out.join(right.select(*shared).distinct(), shared, jhow)
+    # every branch filters the same solutions: materialize them once
+    # (masks first, so the >4-nullable guard raises before the cut)
+    masks = _null_masks(nsh, where)
+    from ..session import cut_lineage
+    out = cut_lineage(out)
+    r = right.select(*[F.col(v).alias(f"_o_{v}") for v in rvars]) \
+        if left else None
+    branches = []
+    for mask in masks:
+        left_m = out.filter(_mask_filter(mask, nsh))
+        key = [v for v in shared if v not in mask]
+        if left:
+            jc = F.lit(True)
+            for v in key:
+                jc = jc & (F.col(v) == F.col(f"_o_{v}"))
+            sel = [F.coalesce(F.col(v), F.col(f"_o_{v}")).alias(v)
+                   if v in mask else F.col(v) for v in bound]
+            sel += [F.col(f"_o_{v}").alias(v) for v in new]
+            branches.append(left_m.join(r, jc, "left")
+                            .select(*sel, *mcols))
+        elif key:
+            branches.append(left_m.join(right.select(*key).distinct(),
+                                        key, jhow))
+        elif how == "minus":
+            branches.append(left_m)
+        else:
+            probe = right.limit(1).select(F.lit(1).alias("_probe"))
+            branches.append(left_m.join(probe, F.lit(True), jhow))
+    res = branches[0]
+    for b in branches[1:]:
+        res = res.unionByName(b)
+    return res
+
+
+def _marker_join(triples: DataFrame, pos_cols: tuple, out: DataFrame,
+                 bound: list[str], nullable: set[str], entries: list,
+                 flags: list[str], where: str):
+    """EXISTS as a VALUE (over a UNION body, or inside a FILTER
+    expression), which no semi/anti join can express: per entry, left-
+    join its DISTINCT shared-key set carrying a flag column (unique
+    keys: no row multiplication). Returns (joined solutions, "some
+    entry matched" condition)."""
+    cond = None
+    for entry, flag in zip(entries, flags):
+        inner, gvars, _, _, corr = _group(
+            triples, entry, pos_cols, set(bound), where, None)
+        if corr:
+            raise ValueError(
+                f"{where}: correlated group filters {corr} are not "
+                "supported here — use a standalone FILTER EXISTS per "
+                "branch")
+        on = [v for v in gvars if v in bound]
+        if not on:
+            raise ValueError(
+                f"{where} shares no variable with the required patterns "
+                "— it is not a per-solution test")
+        nsh = [v for v in on if v in nullable]
+        if nsh:
+            raise ValueError(
+                f"{where}: nullable shared variable(s) {nsh} are not "
+                "supported here — bind them in a required pattern")
+        out = out.join(inner.select(*on).distinct()
+                       .withColumn(flag, F.lit(1)), on, "left")
+        c = F.col(flag).isNotNull()
+        cond = c if cond is None else cond | c
+    return out, cond
+
+
+def _values_join(out: DataFrame, rows: list[dict],
+                 nullable: set[str]) -> DataFrame:
+    """Join a VALUES table (``{var: constant}`` rows, ``None`` = UNDEF)
+    to the solutions: shared variables constrain, new ones extend
+    (appended after ``out``'s columns). An UNDEF cell, or a shared
+    variable the solution left unbound (``nullable``), is compatible
+    with anything and takes the other side's value, so those joins use
+    a null-tolerant condition instead of the equi key. VALUES tables
+    are literal and tiny: always broadcast."""
+    vvars = list(dict.fromkeys(v for row in rows for v in row))
+    vdf = out.sparkSession.createDataFrame(
+        [tuple(row.get(v) for v in vvars) for row in rows],
+        ", ".join(f"`{v}` string" for v in vvars))
+    shared = [v for v in vvars if v in out.columns]
+    order = list(out.columns) + [v for v in vvars if v not in shared]
+    if not shared:
+        return out.crossJoin(F.broadcast(vdf)).select(*order)
+    nsh = [v for v in shared if v in nullable]
+    if not nsh and not any(row.get(v) is None
+                           for row in rows for v in shared):
+        return out.join(F.broadcast(vdf), shared).select(*order)
+    vdf2 = vdf.select(*[F.col(v).alias(f"_v_{v}") for v in vvars])
+    cond = None
+    for v in shared:
+        c = F.col(f"_v_{v}").isNull() | (F.col(f"_v_{v}") == F.col(v))
+        if v in nullable:
+            c = c | F.col(v).isNull()
+        cond = c if cond is None else (cond & c)
+    j = out.join(F.broadcast(vdf2), cond)
+    for v in nsh:
+        j = j.withColumn(v, F.coalesce(F.col(v), F.col(f"_v_{v}")))
+    for v in vvars:
+        if v not in shared:
+            j = j.withColumnRenamed(f"_v_{v}", v)
+    return j.drop(*[f"_v_{v}" for v in shared]).select(*order)
+
+
+def _expand_union_group(group: dict, outer: set, where: str) -> list:
+    """{'union': [...], 'filters': [...], ...} → one group entry per
+    branch (NOT EXISTS and MINUS distribute over UNION; EXISTS ORs the
+    branches). Filters must reference only variables bound by every
+    branch (or outer variables): distributed into a branch that does
+    not bind the variable, the filter would be a type error → false,
+    silently emptying just that branch. BINDs distribute too (Extend
+    over Union)."""
+    _check_entry_keys(group, where)
+    branches = group["union"]
+    fs = group.get("filters", [])
+    per = [_pattern_tuple_vars(b) for b in branches]
+    allv, common = set.union(*per), set.intersection(*per)
+    for fexpr in fs:
+        bad = sorted(x for x in _expr_identifiers(fexpr)
+                     if x in allv and x not in common and x not in outer)
+        if bad:
+            raise ValueError(
+                f"{where}: filter {fexpr!r} references variable(s) "
+                f"{bad} not bound by every UNION branch — bind them in "
+                "every branch")
+    bfs = group.get("branch_filters") or [[] for _ in branches]
+    bnds = group.get("binds") or []
+    out_entries = []
+    for bi, b in enumerate(branches):
+        if fs or bfs[bi] or bnds:
+            e: dict = {"patterns": b, "filters": fs + bfs[bi]}
+            if bnds:
+                e["binds"] = bnds
+            out_entries.append(e)
+        else:
+            out_entries.append(b)
+    return out_entries
 
 
 def bgp_union(triples: DataFrame,
@@ -1690,14 +1177,21 @@ def construct(triples: DataFrame, patterns: list[tuple[str, str, str]],
     template fan-out is zero-shuffle; the final distinct is the only
     added exchange.
     """
-    if not template:
-        raise ValueError("empty template")
     sol = bgp_match(triples, patterns, optional=optional,
                     not_exists=not_exists, exists=exists, minus=minus,
                     filters=filters, values=values, binds=binds,
                     s_col=s_col, p_col=p_col, o_col=o_col, g_col=g_col,
                     solution_joins=solution_joins, meta_vars=meta_vars,
                     filter_exists=filter_exists)
+    return _template_rows(sol, template, mint_vars)
+
+
+def _template_rows(sol: DataFrame, template: list[tuple[str, str, str]],
+                   mint_vars: set[str] | None = None) -> DataFrame:
+    """The template half of ``construct``: instantiate each template
+    triple once per row of the solutions ``sol``."""
+    if not template:
+        raise ValueError("empty template")
     if len(template) > 1:
         # each template triple projects the solution set with its own
         # null filters, so a k-triple template re-plans (and re-joins)

@@ -8,8 +8,15 @@ user-facing layer: parse SPARQL *query text* and compile it onto those
 operators, so a user can run the same query string here that they
 would hand to any SPARQL endpoint over the reference's output.
 
-Supported subset (each construct maps 1:1 onto an existing operator,
-so the compiled plan is identical to the hand-written call):
+One group compiler (``_compile_group``) turns every WHERE clause into
+its solutions, whatever the query form: SELECT (and each subquery,
+bottom-up), ASK, CONSTRUCT and DESCRIBE all read from it. The group
+itself compiles to one ``kg.bgp_match`` call — or ``bgp_union`` for a
+whole-group UNION — and bgp_match compiles every nested OPTIONAL /
+[NOT] EXISTS / MINUS / UNION / VALUES body the same way as the top
+level, then applies that body's join.
+
+Supported subset:
 
 * ``PREFIX`` / ``BASE`` prologue, ``a`` == ``rdf:type``
 * ``SELECT [DISTINCT] ?v ... | * | (expr AS ?alias)`` with
@@ -34,25 +41,24 @@ so the compiled plan is identical to the hand-written call):
   variables conditions the left join itself (compiled as the
   join's residual condition; over nullable shared variables it
   raises); an OPTIONAL body
-  that is a ``{ A } UNION { B }`` block compiles to
+  that is a ``{ A } UNION { B }`` block is
   LeftJoin(rest, Union(A, B)) — a shared join variable must be
   bound by every branch (else a typed error); nested
   ``OPTIONAL { ... }`` members inside an OPTIONAL body (any depth,
-  UNION bodies allowed inside) compile to a recursive left-join
-  tree evaluated as a unit — a variable bound only by an inner
-  OPTIONAL is nullable in the group's solutions, so using it as
-  the outer join key raises the same typed error, and a body that
-  is ONLY a nested OPTIONAL (no required part) raises;
+  UNION bodies allowed inside) evaluate as a unit — a variable
+  bound only by an inner OPTIONAL is nullable in the group's
+  solutions, so using it as the outer join key raises the same
+  typed error, and a body that is ONLY a nested OPTIONAL (no
+  required part) raises;
   ``BIND (expr AS ?v)`` members inside an OPTIONAL body (SPARQL
   Extend over the group's solutions, applied before the group's
   FILTERs, UNION bodies allowed) — a bind variable may evaluate
   to null, so using it as the outer join key raises too;
   ``FILTER [NOT] EXISTS`` / ``MINUS`` / ``VALUES`` members inside
-  an OPTIONAL body (the full group compiles through a recursive
-  ``bgp_match`` on the optional side — a rejected group row leaves
-  the optional variables null instead of dropping the outer
-  solution; a negation member referencing an OUTER-only variable
-  raises, as correlation would need a conditional left join);
+  an OPTIONAL body (a rejected group row leaves the optional
+  variables null instead of dropping the outer solution; a
+  negation member referencing an OUTER-only variable raises, as
+  correlation would need a conditional left join);
   subqueries as OPTIONAL-body members, including a subquery as the
   ONLY member (the attach-an-aggregate idiom: the subquery's
   solution set seeds the group) — a subquery-bound variable outside
@@ -71,9 +77,9 @@ so the compiled plan is identical to the hand-written call):
   ``{ A } UNION { B }`` block: NOT EXISTS and MINUS distribute over
   UNION (per-branch anti joins — exact); EXISTS is an OR, planned as
   marker left joins against each branch's distinct key set
-* a WHERE clause that is entirely ``{ BGP } UNION { BGP } ...``
-  compiles to ``bgp_union``; ``CONSTRUCT`` over such a UNION
-  instantiates the template per branch and unions the graphs;
+* a WHERE clause that is entirely ``{ BGP } UNION { BGP } ...``;
+  ``CONSTRUCT`` over such a UNION instantiates the template per
+  branch and unions the graphs;
   UNION branches accept group-scoped ``FILTER`` members (applied to
   the branch's solutions BEFORE the null-padding union — a filter
   referencing a variable the branch does not bind raises typed, as
@@ -94,9 +100,9 @@ so the compiled plan is identical to the hand-written call):
   nested ``FILTER [NOT] EXISTS`` / ``MINUS`` (the double-negation /
   forall idiom), ``BIND``, ``VALUES``, inner ``OPTIONAL``, and
   UNION bodies WITH per-branch filters and BINDs (Extend
-  distributes over Union) — compiled through a recursive
-  ``bgp_match``; a nested member referencing an OUTER variable
-  raises typed (correlation through nesting), and a variable shared
+  distributes over Union); a nested member referencing an OUTER
+  variable raises typed (correlation through nesting), and a
+  variable shared
   with the outer solutions that the body binds only through an
   inner OPTIONAL / non-rename BIND / UNDEF-able VALUES raises typed
   (the equality join would diverge from substitution semantics)
@@ -122,10 +128,10 @@ so the compiled plan is identical to the hand-written call):
   does not project them); template blank nodes raise
 * term-test builtins LANG / DATATYPE / isIRI / isLiteral / isBlank /
   LANGMATCHES / sameTerm over the quad frame's kind/lang/datatype
-  columns
-  (``bgp_match(meta_vars=...)``), plus STRBEFORE / STRAFTER /
-  ENCODE_FOR_URI / MD5 / SHA1 / SHA256/384/512 and IRI()/URI()
-  (identity on the stored lexical IRI — enables skolem templates)
+  columns (``bgp_match(meta_vars=...)``; the variable may be bound
+  by a required pattern, an OPTIONAL group or a whole-group UNION),
+  plus STRBEFORE / STRAFTER / ENCODE_FOR_URI / MD5 / SHA1 /
+  SHA256/384/512 and IRI()/URI() (identity on the stored lexical IRI — enables skolem templates)
 * dateTime accessors YEAR / MONTH / DAY / HOURS / MINUTES / SECONDS
   (§17.4.5) over the stored lexical form via ``try_cast`` — a
   malformed lexical value is a SPARQL type error → NULL, never a
@@ -147,9 +153,9 @@ are not supported. A UNION block mixed
 with other group members compiles to Join(Union(branches), rest) via
 a solution join (a variable not bound by every branch is nullable;
 using one as the join key, or in a term-metadata builtin, raises).
-ASK over any group shape — including OPTIONAL / BIND / subqueries /
-inline UNION — compiles through the SELECT machinery under
-``limit(1)``. Expression
+ASK probes the group's solutions under ``limit(1)``; only an ASK whose
+group is all-constant triple patterns uses ``kg.ask``'s per-pattern
+probe scans. Expression
 translation casts a variable compared against a numeric literal to
 ``double``, and ``xsd:integer(?v)``-style constructors cast
 explicitly (SPARQL compares typed values; the triples frame stores
@@ -178,8 +184,8 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from .kg import META_SUFFIXES, RDF_TYPE, _expr_identifiers, \
-    _optional_entry_vars as _kg_optional_entry_vars, ask as _ask, \
-    bgp_match, bgp_union, construct, describe, describe_nodes
+    _optional_entry_vars as _kg_optional_entry_vars, _template_rows, \
+    _values_join, ask, bgp_match, bgp_union, describe, describe_nodes
 
 _META_SUFFIXES = tuple(META_SUFFIXES)
 
@@ -1030,7 +1036,6 @@ class _Parser:
                 # group-scoped FILTERs → dict form; a UNION body →
                 # union-dict form (LeftJoin(rest, Union(A, B)));
                 # nested OPTIONALs → dict with an 'optional' key
-                # (recursive bgp_match on the optional side)
                 g.optional.append(self._optional_entry())
             elif self._eat_kw("filter"):
                 if self._at_kw("exists"):
@@ -2106,59 +2111,15 @@ def _compile_body_entries(triples: DataFrame, entries: list | None,
     return out
 
 
-def _post_values_join(df: DataFrame, rows: list[dict],
-                      nullable: set[str]) -> DataFrame:
-    """Trailing VALUES clause (SPARQL 18.2.4.3): joined BEFORE
-    projection and the solution modifiers — the caller applies it to
-    the pre-projection solution frame (non-aggregate queries) or the
-    grouped frame after HAVING (aggregate queries). Same
-    compatible-bindings semantics as bgp_match's in-group VALUES
-    branch (kg.py — kept in sync by hand; a semantics change there
-    must be mirrored here): UNDEF cells and possibly-unbound result
-    variables are compatible with anything; variables new to the
-    result extend it. Always a broadcast — VALUES tables are literal
-    and tiny."""
-    vvars: list[str] = []
-    for row in rows:
-        vvars += [v for v in row if v not in vvars]
-    spark = df.sparkSession
-    vdf = spark.createDataFrame(
-        [tuple(row.get(v) for v in vvars) for row in rows],
-        ", ".join(f"`{v}` string" for v in vvars))
-    shared = [v for v in vvars if v in df.columns]
-    order = list(df.columns) + [v for v in vvars if v not in df.columns]
-    if not shared:
-        return df.crossJoin(F.broadcast(vdf)).select(*order)
-    undef = any(row.get(v) is None for row in rows for v in shared)
-    if not undef and not (set(shared) & nullable):
-        return df.join(F.broadcast(vdf), shared).select(*order)
-    vdf2 = vdf.select(*[F.col(v).alias(f"_v_{v}") for v in vvars])
-    cond = None
-    for v in shared:
-        c = F.col(f"_v_{v}").isNull() | (F.col(f"_v_{v}") == F.col(v))
-        if v in nullable:
-            c = c | F.col(v).isNull()
-        cond = c if cond is None else (cond & c)
-    out = df.join(F.broadcast(vdf2), cond)
-    for v in shared:
-        if v in nullable:
-            out = out.withColumn(
-                v, F.coalesce(F.col(v), F.col(f"_v_{v}")))
-    for v in vvars:
-        if v not in shared:
-            out = out.withColumnRenamed(f"_v_{v}", v)
-    return out.drop(*[f"_v_{v}" for v in shared]).select(*order)
-
-
-def _compile_select(triples: DataFrame, q: _Query, cols: dict,
-                    distinct_solutions: bool,
-                    meta_vars: frozenset = frozenset()
-                    ) -> tuple[DataFrame, set[str], bool]:
-    """Compile a (sub)SELECT to (solutions DataFrame, nullable
-    projected variables, is_scalar) — is_scalar marks an aggregate
-    query with no GROUP BY, which produces exactly one row (the
-    scalar-subquery idiom; joined disjoint via broadcast)."""
-    g = q.where
+def _compile_group(triples: DataFrame, g: _Group, cols: dict,
+                   distinct_solutions: bool,
+                   meta_vars: frozenset = frozenset()
+                   ) -> tuple[DataFrame, set[str]]:
+    """The WHERE group → (solutions, variables that may be unbound).
+    Every query form (SELECT and subqueries, ASK, CONSTRUCT, DESCRIBE)
+    reads its solutions from here: a whole-group UNION compiles to
+    ``bgp_union``, any other group to one ``bgp_match`` call with its
+    body entries and subqueries compiled bottom-up."""
     sj, sub_nul = _compile_subqueries(triples, g, cols,
                                       distinct_solutions, meta_vars)
     if g.union_branches is not None:
@@ -2170,22 +2131,20 @@ def _compile_select(triples: DataFrame, q: _Query, cols: dict,
         uvars = set().union(*[_pattern_var_names(b)
                               for b in g.union_branches])
         df = bgp_union(triples, g.union_branches,
+                       distinct=distinct_solutions,
                        branch_filters=g.union_branch_filters,
                        meta_vars=(set(meta_vars) & uvars) or None,
                        **cols)
     else:
         gvars = _pattern_var_names(g.patterns) | _group_nullable(g)
+
+        def body(entries, meta=frozenset()):
+            return _compile_body_entries(triples, entries, cols,
+                                         distinct_solutions, meta)
         df = bgp_match(triples, g.patterns,
-                       optional=_compile_body_entries(
-                           triples, g.optional, cols,
-                           distinct_solutions, meta_vars),
-                       not_exists=_compile_body_entries(
-                           triples, g.not_exists, cols,
-                           distinct_solutions),
-                       exists=_compile_body_entries(
-                           triples, g.exists, cols, distinct_solutions),
-                       minus=_compile_body_entries(
-                           triples, g.minus, cols, distinct_solutions),
+                       optional=body(g.optional, meta_vars),
+                       not_exists=body(g.not_exists),
+                       exists=body(g.exists), minus=body(g.minus),
                        filters=g.filters or None, values=g.values or None,
                        binds=g.binds or None,
                        filter_exists=g.filter_exists or None,
@@ -2193,7 +2152,19 @@ def _compile_select(triples: DataFrame, q: _Query, cols: dict,
                        solution_joins=sj,
                        meta_vars=(set(meta_vars) & gvars) or None,
                        **cols)
-    nullable = (_group_nullable(g) | sub_nul)
+    return df, _group_nullable(g) | sub_nul
+
+
+def _compile_select(triples: DataFrame, q: _Query, cols: dict,
+                    distinct_solutions: bool,
+                    meta_vars: frozenset = frozenset()
+                    ) -> tuple[DataFrame, set[str], bool]:
+    """Compile a (sub)SELECT to (solutions DataFrame, nullable
+    projected variables, is_scalar) — is_scalar marks an aggregate
+    query with no GROUP BY, which produces exactly one row (the
+    scalar-subquery idiom; joined disjoint via broadcast)."""
+    df, nullable = _compile_group(triples, q.where, cols,
+                                  distinct_solutions, meta_vars)
     out_nul: set[str] = set()
     scalar = False
     has_agg = any(item[0] == "agg" for item in (q.select or []))
@@ -2203,7 +2174,7 @@ def _compile_select(triples: DataFrame, q: _Query, cols: dict,
     # full solution frame here; aggregate queries join the grouped
     # frame after HAVING below.
     if q.post_values and not (q.group_by or has_agg):
-        df = _post_values_join(df, q.post_values, nullable)
+        df = _values_join(df, q.post_values, nullable)
         nullable |= {v for row in q.post_values for v in row
                      if any(r.get(v) is None for r in q.post_values)}
     agg_out_order: list[str] | None = None
@@ -2307,7 +2278,7 @@ def _compile_select(triples: DataFrame, q: _Query, cols: dict,
         # aggregate path: VALUES joins the grouped frame after HAVING,
         # then the spec's Project re-applies (new VALUES variables do
         # not survive an explicit select list)
-        df = _post_values_join(df, q.post_values, out_nul)
+        df = _values_join(df, q.post_values, out_nul)
         df = df.select(*agg_out_order)
     if q.order_by:
         df = df.orderBy(*[F.expr(e).desc() if d else F.expr(e).asc()
@@ -2328,11 +2299,11 @@ def sparql_query(triples: DataFrame, query: str,
     SELECT / CONSTRUCT / DESCRIBE return a DataFrame (one column per
     projected variable); ASK returns a bool (same contract as
     ``kg.ask``). See the module docstring for the supported subset.
-    The compiled plan is exactly what the equivalent hand-written
-    ``bgp_match`` / ``construct`` / ``bgp_union`` call produces — the
-    front-end adds no operators, so all the algebra's scale behavior
-    (pushed-down constants, broadcast VALUES, null-mask OPTIONAL
-    branches, Catalyst join ordering) carries over verbatim.
+    Every form reads the WHERE solutions from the one group compiler
+    (a ``bgp_match`` / ``bgp_union`` call), then adds only its own
+    operators: SELECT's projection and solution modifiers, ASK's
+    ``limit(1)`` probe, CONSTRUCT's template projections, DESCRIBE's
+    node semi-joins.
     """
     from pyspark.errors import AnalysisException
     try:
@@ -2377,142 +2348,68 @@ def _sparql_dispatch(triples: DataFrame, query: str,
     if q.from_graphs or q.from_named:
         triples = _apply_dataset_clause(triples, q, g_col)
     if q.form == "describe":
-        if q.describe_var is not None:
-            # one group compiler for every WHERE shape (union,
-            # subqueries, body entries, filter_exists, meta): wrap
-            # the group in a select-star query exactly like the ASK
-            # path — a hand copy of _compile_select's bgp_match call
-            # here drifted behind it repeatedly (review finding)
-            sq = _Query(form="select", where=q.where,
-                        select_star=True, distinct=False)
-            sol, _, _ = _compile_select(triples, sq, cols,
-                                        distinct_solutions,
-                                        meta_vars=meta_vars)
-            if q.describe_var not in sol.columns:
-                raise SparqlSyntaxError(
-                    f"DESCRIBE ?{q.describe_var}: variable is not "
-                    "bound by the WHERE clause")
-            return describe_nodes(
-                triples, sol.select(q.describe_var).where(
-                    F.col(q.describe_var).isNotNull()),
-                node_col=q.describe_var,
-                s_col=s_col, p_col=p_col, o_col=o_col)
         if q.describe_nodes is not None:
             ndf = triples.sparkSession.createDataFrame(
                 [(n,) for n in q.describe_nodes], "node string")
             return describe_nodes(triples, ndf, s_col=s_col,
                                   p_col=p_col, o_col=o_col)
-        return describe(triples, q.describe_node,
-                        s_col=s_col, p_col=p_col, o_col=o_col)
+        if q.describe_var is None:
+            return describe(triples, q.describe_node,
+                            s_col=s_col, p_col=p_col, o_col=o_col)
     g = q.where
+    if q.form == "ask" and g == _Group(patterns=g.patterns) and all(
+            not t.startswith("?") for pat in g.patterns for t in pat):
+        # ASK { <s> <p> <o> }: one pushed-filter probe per pattern
+        return ask(triples, g.patterns, **cols)
+    if q.form == "select":
+        return _compile_select(triples, q, cols, distinct_solutions,
+                               meta_vars=meta_vars)[0]
     if q.form == "ask":
-        if g.binds or g.optional or g.subqueries or g.inline_unions \
-                or g.filter_exists:
-            # General group shapes (BIND / OPTIONAL / subqueries /
-            # inline UNION blocks / expression-embedded EXISTS)
-            # compile through the SELECT
-            # machinery and probe emptiness. OPTIONAL or BIND alone
-            # cannot change an existence answer, but a group FILTER
-            # or join over their variables can, so the full group
-            # semantics must run; distinct is skipped (existence
-            # needs no dedup exchange) and limit(1) short-circuits
-            # the scan via Catalyst's LocalLimit pushdown.
-            sq = _Query(form="select", where=g, select_star=True,
-                        distinct=False, limit=1)
-            df, _, _ = _compile_select(triples, sq, cols,
-                                       distinct_solutions=False,
-                                       meta_vars=meta_vars)
-            return bool(df.take(1))
-        if g.union_branches is not None:
-            # ASK over a UNION: true iff any branch matches
-            # (short-circuits branch by branch)
-            bfs = g.union_branch_filters \
-                or [[] for _ in g.union_branches]
-            return any(
-                _ask(triples, b, filters=bf or None,
-                     meta_vars=(set(meta_vars)
-                                & _pattern_var_names(b)) or None,
-                     **cols)
-                for b, bf in zip(g.union_branches, bfs))
-        return _ask(triples, g.patterns,
-                    not_exists=_compile_body_entries(
-                        triples, g.not_exists, cols, distinct_solutions),
-                    exists=_compile_body_entries(
-                        triples, g.exists, cols, distinct_solutions),
-                    minus=_compile_body_entries(
-                        triples, g.minus, cols, distinct_solutions),
-                    filters=g.filters or None, values=g.values or None,
-                    # intersect with the outer group's own vars: a
-                    # meta var referenced only inside a negation BODY
-                    # is served by the body's compile, and passing it
-                    # here would raise never-bound (same rule as the
-                    # SELECT path)
-                    meta_vars=(set(meta_vars)
-                               & (_pattern_var_names(g.patterns)
-                                  | _group_nullable(g))) or None,
-                    **cols)
-    if q.form == "construct":
-        # blank-node labels in the template (SPARQL §16.2): minted as
-        # a fresh deterministic node per solution by construct().
-        # Template labels are scoped to the template (§19.6) — one
-        # that also appears in the WHERE clause shadows that
-        # (independent) non-distinguished variable rather than
-        # joining with it
-        tmpl_mint = {term[1:] for tri in q.template for term in tri
-                     if term.startswith("?" + _BNODE_VAR_PREFIX)}
-        if g.union_branches:
-            # CONSTRUCT over UNION: instantiate the template once per
-            # branch and union the constructed graphs (a graph is a
-            # triple SET — the final distinct dedups across branches).
-            # Template variables need not be bound by every branch;
-            # per SPARQL an unbound template slot skips that triple.
-            outs = []
-            cbfs = g.union_branch_filters \
-                or [[] for _ in g.union_branches]
-            for branch, bf in zip(g.union_branches, cbfs):
-                bvars = _pattern_var_names(branch) | tmpl_mint
-                tmpl = [t for t in q.template
-                        if all(not term.startswith("?")
-                               or term[1:] in bvars for term in t)]
-                if tmpl:
-                    outs.append(construct(
-                        triples, branch, tmpl,
-                        mint_vars=tmpl_mint or None,
-                        filters=bf or None,
-                        meta_vars=(set(meta_vars)
-                                   & _pattern_var_names(branch)) or None,
-                        **cols))
-            if not outs:
-                raise SparqlSyntaxError(
-                    "CONSTRUCT over UNION: no template triple is fully "
-                    "bound by any branch")
-            df = outs[0]
-            for o in outs[1:]:
-                df = df.unionByName(o)
-            return df.distinct()
-        csj, _ = _compile_subqueries(triples, g, cols,
-                                     distinct_solutions, meta_vars)
-        cvars = _pattern_var_names(g.patterns) | _group_nullable(g)
-        return construct(triples, g.patterns, q.template,
-                         optional=_compile_body_entries(
-                             triples, g.optional, cols,
-                             distinct_solutions, meta_vars),
-                         not_exists=_compile_body_entries(
-                             triples, g.not_exists, cols,
-                             distinct_solutions),
-                         exists=_compile_body_entries(
-                             triples, g.exists, cols,
-                             distinct_solutions),
-                         minus=_compile_body_entries(
-                             triples, g.minus, cols,
-                             distinct_solutions),
-                         filters=g.filters or None,
-                         values=g.values or None, binds=g.binds or None,
-                         filter_exists=g.filter_exists or None,
-                         solution_joins=csj,
-                         meta_vars=(set(meta_vars) & cvars) or None,
-                         mint_vars=tmpl_mint or None, **cols)
-    # SELECT
-    df, _, _ = _compile_select(triples, q, cols, distinct_solutions,
-                               meta_vars=meta_vars)
-    return df
+        # existence needs no dedup; limit(1) stops at the first row
+        return bool(_compile_group(triples, g, cols, False,
+                                   meta_vars)[0].limit(1).take(1))
+    if q.form == "describe":
+        sol, _ = _compile_group(triples, g, cols, distinct_solutions,
+                                meta_vars)
+        if q.describe_var not in sol.columns:
+            raise SparqlSyntaxError(
+                f"DESCRIBE ?{q.describe_var}: variable is not "
+                "bound by the WHERE clause")
+        return describe_nodes(
+            triples, sol.select(q.describe_var).where(
+                F.col(q.describe_var).isNotNull()),
+            node_col=q.describe_var,
+            s_col=s_col, p_col=p_col, o_col=o_col)
+    # CONSTRUCT. Blank-node labels in the template (SPARQL §16.2) are
+    # minted as a fresh deterministic node per solution; template
+    # labels are scoped to the template (§19.6), so one that also
+    # appears in the WHERE clause shadows that variable
+    mint = {term[1:] for tri in q.template for term in tri
+            if term.startswith("?" + _BNODE_VAR_PREFIX)} or None
+    if not g.union_branches:
+        sol, _ = _compile_group(triples, g, cols, distinct_solutions,
+                                meta_vars)
+        return _template_rows(sol, q.template, mint)
+    # over a whole-group UNION the template instantiates per branch
+    # (each branch's solutions mint their own ids) and the graphs
+    # union; a template triple a branch cannot bind is skipped there
+    outs = []
+    for branch, bf in zip(g.union_branches, g.union_branch_filters
+                          or [[] for _ in g.union_branches]):
+        bvars = _pattern_var_names(branch) | (mint or set())
+        tmpl = [t for t in q.template
+                if all(not term.startswith("?") or term[1:] in bvars
+                       for term in t)]
+        if tmpl:
+            sol, _ = _compile_group(
+                triples, _Group(patterns=branch, filters=bf), cols,
+                distinct_solutions, meta_vars)
+            outs.append(_template_rows(sol, tmpl, mint))
+    if not outs:
+        raise SparqlSyntaxError(
+            "CONSTRUCT over UNION: no template triple is fully "
+            "bound by any branch")
+    df = outs[0]
+    for o in outs[1:]:
+        df = df.unionByName(o)
+    return df.distinct()

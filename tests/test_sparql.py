@@ -2345,3 +2345,66 @@ def test_double_with_empty_fraction_and_exponent_lexes(spark):
             FILTER (xsd:double(?v) >= 1.e3) }
     """)
     assert [r["s"] for r in out.collect()] == ["http://s"]
+
+
+@pytest.mark.parametrize("query, want", [
+    # single pattern + FILTER
+    ("SELECT ?s ?l WHERE { ?s ex:name ?x "
+     "OPTIONAL { ?s ex:name ?l FILTER(LANG(?l) = 'fr') } }",
+     [("_:b1", None), ("d1", "chat")]),
+    # multi-pattern group, metadata read outside the group
+    ("SELECT ?s ?v (DATATYPE(?v) AS ?dt) WHERE { ?s ex:name ?x "
+     "OPTIONAL { ?s ex:n ?v . ?s ex:link ?t } }",
+     [("_:b1", None, None), ("d1", "5", XSD + "integer")]),
+    # multi-pattern group + FILTER
+    ("SELECT ?s ?t WHERE { ?s ex:name ?x "
+     "OPTIONAL { ?s ?p ?t . ?s ex:n ?v FILTER(isIRI(?t)) } }",
+     [("_:b1", None), ("d1", "http://x/d2")]),
+], ids=["filtered_pattern", "group", "filtered_group"])
+def test_term_metadata_of_optional_group_vars(typed_triples, query, want):
+    """LANG() / DATATYPE() / isIRI() over a variable an OPTIONAL group
+    binds: the group serves the metadata columns like a required
+    pattern does."""
+    got = sparql_query(typed_triples, PFX + query)
+    assert sorted(set(_rows(got)), key=repr) == sorted(want, key=repr)
+
+
+_FORM_SHAPES = {
+    "optional_unbound": "?s ex:author ?o OPTIONAL { ?s ex:reviewer ?r } "
+                        "FILTER(!BOUND(?r))",
+    "not_exists": "?s ex:author ?o FILTER NOT EXISTS { ?s ex:cites ?c }",
+    "minus": "?s ex:lang ?o MINUS { ?s ex:author 'bob' }",
+    "values_undef": "?s ex:lang ?o VALUES (?s ?o) { ('d1' UNDEF) "
+                    "(UNDEF 'de') }",
+    "inline_union": "?s ex:author ?a "
+                    "{ ?s ex:cites ?o } UNION { ?s ex:reviewer ?o }",
+    "whole_union": "{ ?s ex:cites ?o } UNION { ?s ex:reviewer ?o }",
+    "group_by_subquery": "?s ex:author ?o { SELECT ?o (COUNT(?d) AS ?n) "
+                         "WHERE { ?d ex:author ?o } GROUP BY ?o } "
+                         "FILTER(?n > 1)",
+    "filter_or_exists": "?s ex:lang ?o "
+                        "FILTER(?o = 'de' || EXISTS { ?s ex:reviewer ?r })",
+    "bind": "?s ex:author ?a BIND(UCASE(?a) AS ?o)",
+    "empty": "?s ex:author ?o FILTER(?o = 'nobody')",
+}
+
+
+@pytest.mark.parametrize("where", list(_FORM_SHAPES.values()),
+                         ids=list(_FORM_SHAPES))
+def test_query_forms_agree_on_where_solutions(triples, where):
+    """SELECT, ASK, CONSTRUCT and DESCRIBE read the same WHERE
+    solutions: ASK is SELECT's non-emptiness, CONSTRUCT { ?s ex:x ?o }
+    is its bound (s, o) pairs, DESCRIBE ?s covers its subjects."""
+    rows = [r.asDict() for r in sparql_query(
+        triples, PFX + f"SELECT * WHERE {{ {where} }}").collect()]
+    assert sparql_query(triples, PFX + f"ASK {{ {where} }}") == bool(rows)
+    built = sparql_query(triples, PFX + "CONSTRUCT { ?s ex:x ?o } "
+                         f"WHERE {{ {where} }}")
+    assert sorted((r.subj, r.obj_value) for r in built.collect()) == \
+        sorted({(r["s"], r["o"]) for r in rows
+                if r["s"] is not None and r["o"] is not None})
+    described = sparql_query(triples, PFX + f"DESCRIBE ?s WHERE {{ {where} }}")
+    subjects = {r.subj for r in described.where(
+        F.col("role") == "subject").collect()}
+    all_subjects = {r.subj for r in triples.select("subj").collect()}
+    assert {r["s"] for r in rows} & all_subjects <= subjects
