@@ -46,7 +46,7 @@ from ..core.normalize import (_hash_paths, _hash_quads, canonical_namer,
                               rename_quads)
 from ..core.nquads import quad_to_nquad
 from ..core.rdf import Quad
-from ..session import cut_lineage, observed_cut
+from ..session import cut_lineage, local_frame, observed_cut
 from .linking import connected_components
 
 QUAD_COLS = ["doc_id", "graph", "subj", "pred", "obj_kind", "obj_value",
@@ -269,8 +269,8 @@ def prefix_offsets(df: DataFrame, order_cols: list[str], value_col: str,
         # tens of thousands of partitions would blow up a literal-map
         # expression tree; a broadcast join of the (one row per
         # partition) offset table is the textbook small side
-        base_df = spark.createDataFrame(
-            [(int(k), int(v)) for k, v in base.items()],
+        base_df = local_frame(
+            spark, [(int(k), int(v)) for k, v in base.items()],
             "_pid int, _base long")
         ranged = ranged.join(F.broadcast(base_df), "_pid", "left")
         base_off = F.coalesce(F.col("_base"), F.lit(0))

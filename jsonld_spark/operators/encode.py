@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import local_frame
+
 __all__ = ["encode_triples", "term_dictionary", "collision_audit",
            "decode_column", "bgp_match_encoded"]
 
@@ -76,11 +78,12 @@ def decode_column(df: DataFrame, dictionary: DataFrame, id_col: str,
 
 
 def _hash_of(spark, terms: list[str]) -> dict[str, int]:
-    """xxhash64 of constant terms, computed JVM-side (one tiny job) so
-    the driver never re-implements the hash."""
+    """xxhash64 of constant terms, computed JVM-side so the driver never
+    re-implements the hash. The projection over the local relation is
+    folded at optimization time, so no job runs."""
     if not terms:
         return {}
-    rows = (spark.createDataFrame([(t,) for t in terms], "t string")
+    rows = (local_frame(spark, [(t,) for t in terms], "t string")
             .select("t", F.xxhash64("t").alias("h")).collect())
     return {r.t: r.h for r in rows}
 

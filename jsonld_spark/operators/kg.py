@@ -35,6 +35,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 # every key a group-entry dict (optional= / not_exists= / exists= /
@@ -998,8 +1000,8 @@ def _values_join(out: DataFrame, rows: list[dict],
     a null-tolerant condition instead of the equi key. VALUES tables
     are literal and tiny: always broadcast."""
     vvars = list(dict.fromkeys(v for row in rows for v in row))
-    vdf = out.sparkSession.createDataFrame(
-        [tuple(row.get(v) for v in vvars) for row in rows],
+    vdf = local_frame(
+        out.sparkSession, [tuple(row.get(v) for v in vvars) for row in rows],
         ", ".join(f"`{v}` string" for v in vvars))
     shared = [v for v in vvars if v in out.columns]
     order = list(out.columns) + [v for v in vvars if v not in shared]
@@ -1324,9 +1326,7 @@ def rdfs_closure(triples: DataFrame, schema: DataFrame,
     spark = triples.sparkSession
 
     def _edge_df(pairs: set[tuple[str, str]], a: str, b: str) -> DataFrame:
-        return spark.createDataFrame(
-            sorted(pairs) or [("", "")], f"{a} string, {b} string"
-        ).where(F.col(a) != "")
+        return local_frame(spark, sorted(pairs), f"{a} string, {b} string")
 
     sel = [F.col(s_col).alias("subj"), F.col(p_col).alias("pred"),
            F.col(o_col).alias("obj")]
@@ -1886,7 +1886,7 @@ def owl_closure(triples: DataFrame, schema: DataFrame,
         node_facts = node_facts.where(F.col(kind_col) != "literal")
     ents: list[DataFrame] = []
     if inv:
-        iv = spark.createDataFrame(sorted(inv), "p_fwd string, p_inv string")
+        iv = local_frame(spark, sorted(inv), "p_fwd string, p_inv string")
         ents.append(node_facts.join(F.broadcast(iv),
                                     node_facts.pred == iv.p_fwd)
                     .select(F.col("obj").alias("subj"),

@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import cut_lineage, fixpoint, observed_cut
+from ..session import cut_lineage, fixpoint, local_frame, observed_cut
 
 # Driver-CC threshold (distinct edges). An edge row is two longs (16 B),
 # so 32 M edges is ~0.5 GB of driver arrays; the vectorized numpy
@@ -60,7 +60,7 @@ def _driver_union_find(rows, spark, schema):
         src = np.array([r[0] for r in rows])
         dst = np.array([r[1] for r in rows])
     if len(src) == 0:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     s, d = inv[:len(src)], inv[len(src):]
     label = np.arange(len(nodes), dtype=np.int64)

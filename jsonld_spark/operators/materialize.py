@@ -17,7 +17,9 @@ north_rule requirements covered here (SURVEY.md §4 items 1 & 4):
   with data but no manifest row is considered incomplete. Resume
   anti-joins the input's partition set against completed manifests and
   rewrites only the missing buckets (dynamic partition overwrite), so a
-  killed job redoes only unfinished work.
+  killed job redoes only unfinished work. Manifest rows are built on the
+  driver as a local Arrow relation (``session.local_frame``), so a
+  commit's append is one JVM-only write job with no Python worker.
 
 The fingerprint is an order-independent aggregate (sum of per-row
 xxhash64 in DECIMAL(38,0) — no overflow below 10^19 rows), so it is
@@ -36,6 +38,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import local_frame
 
 TRIPLE_COLS = ["doc_id", "graph", "subj", "pred", "obj_kind", "obj_value",
                "obj_datatype", "obj_lang"]
@@ -189,7 +193,7 @@ def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame:
     except AnalysisException as e:  # first run: no manifest table yet.
         if not _is_missing_table(e):
             raise
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return local_frame(spark, [], MANIFEST_SCHEMA)
 
 
 def materialize_graph(triples: DataFrame, out_dir: str,
@@ -218,16 +222,8 @@ def materialize_graph(triples: DataFrame, out_dir: str,
     spark = triples.sparkSession
     parted = with_partition(triples, n_buckets)
 
-    if not resume:
-        # rebuild from scratch: stale part directories under a different
-        # bucketing would leak into read_graph (dynamic overwrite only
-        # replaces partitions the new run writes), and stale manifest
-        # config rows would block every future resume — clear both.
-        _delete_path(spark, _data_path(out_dir))
-        _delete_path(spark, _manifest_path(out_dir))
-        _delete_path(spark, _index_path(out_dir))
-    manifests = read_manifests(spark, out_dir)
     if resume:
+        manifests = read_manifests(spark, out_dir)
         cfgs = (manifests.select("n_buckets", "input_id").distinct()
                 .collect())
         for r in cfgs:
@@ -242,29 +238,38 @@ def materialize_graph(triples: DataFrame, out_dir: str,
                     f"cannot resume {out_dir!r}: manifests record "
                     f"input_id={r['input_id']!r}, current run reads "
                     f"{input_id!r}; pass resume=False to rebuild")
-    done = manifests.select("part").distinct()
-    if not resume:
-        done = done.limit(0)
-    n_done = done.count()
-    if resume and n_done and input_id is None:
-        # without an input identity the resume CANNOT tell a crash
-        # re-run (same input — skip completed buckets, the intended
-        # use) from a re-run against grown/changed input, where
-        # skipping silently drops every new row that hashes to a
-        # manifested bucket. Warn loudly; callers with evolving
-        # inputs must pass input_id (mismatch then refuses above) or
-        # use upsert_documents.
-        import warnings
-        warnings.warn(
-            f"materialize_graph: resuming {out_dir!r} with "
-            f"{n_done} manifested bucket(s) and no input_id — if the "
-            "input changed since the prior run, rows hashing to those "
-            "buckets are SKIPPED; pass input_id to pin the input, "
-            "resume=False to rebuild, or upsert_documents for "
-            "incremental updates", stacklevel=2)
+        done = manifests.select("part").distinct()
+        n_done = done.count()
+        if n_done and input_id is None:
+            # without an input identity the resume CANNOT tell a crash
+            # re-run (same input — skip completed buckets, the intended
+            # use) from a re-run against grown/changed input, where
+            # skipping silently drops every new row that hashes to a
+            # manifested bucket. Warn loudly; callers with evolving
+            # inputs must pass input_id (mismatch then refuses above) or
+            # use upsert_documents.
+            import warnings
+            warnings.warn(
+                f"materialize_graph: resuming {out_dir!r} with "
+                f"{n_done} manifested bucket(s) and no input_id — if the "
+                "input changed since the prior run, rows hashing to those "
+                "buckets are SKIPPED; pass input_id to pin the input, "
+                "resume=False to rebuild, or upsert_documents for "
+                "incremental updates", stacklevel=2)
+        pending = parted.join(F.broadcast(done), "part", "left_anti")
+    else:
+        # rebuild from scratch: stale part directories under a different
+        # bucketing would leak into read_graph (dynamic overwrite only
+        # replaces partitions the new run writes), and stale manifest
+        # config rows would block every future resume — clear both.
+        # Nothing is done yet, so no manifest is read back.
+        _delete_path(spark, _data_path(out_dir))
+        _delete_path(spark, _manifest_path(out_dir))
+        _delete_path(spark, _index_path(out_dir))
+        n_done = 0
+        pending = parted
 
     t0 = time.time()
-    pending = parted.join(F.broadcast(done), "part", "left_anti")
     # one pass computes both the data write and the lineage rows
     pending = pending.persist()
     try:
@@ -290,7 +295,7 @@ def materialize_graph(triples: DataFrame, out_dir: str,
                           round(wall / len(stats), 6), time.time(),
                           n_buckets, input_id)
                          for r in stats]
-        (spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA)
+        (local_frame(spark, manifest_rows, MANIFEST_SCHEMA)
          .coalesce(1).write.mode("append").parquet(_manifest_path(out_dir)))
         n_rows = sum(r["n_rows"] for r in stats)
     finally:
@@ -306,7 +311,7 @@ _GRAPH_SCHEMA = T.StructType(
 
 def read_graph(spark: SparkSession, out_dir: str) -> DataFrame:
     try:
-        return spark.read.parquet(_data_path(out_dir))
+        return spark.read.schema(_GRAPH_SCHEMA).parquet(_data_path(out_dir))
     except AnalysisException as e:
         # every bucket deleted (or nothing materialized yet): an empty
         # typed table. ONLY the missing-table analysis conditions — a
@@ -315,7 +320,7 @@ def read_graph(spark: SparkSession, out_dir: str) -> DataFrame:
         # every unchanged document's rows in the affected buckets
         if not _is_missing_table(e):
             raise
-        return spark.createDataFrame([], _GRAPH_SCHEMA)
+        return local_frame(spark, [], _GRAPH_SCHEMA)
 
 
 def read_doc_index(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -323,8 +328,8 @@ def read_doc_index(spark: SparkSession, out_dir: str) -> DataFrame:
     Graphs materialized before the index existed fall back to deriving
     it from the triple table (one narrow two-column scan)."""
     try:
-        return spark.read.parquet(_index_path(out_dir)) \
-            .select("part", "doc_id")
+        return spark.read.schema("doc_id string, part int") \
+            .parquet(_index_path(out_dir)).select("part", "doc_id")
     except AnalysisException as e:
         if not _is_missing_table(e):
             raise
@@ -423,7 +428,7 @@ def upsert_documents(new_triples: DataFrame, out_dir: str,
                      for r in stats]
     manifest_rows += [(p, 0, "0", run_id, round(wall / len(affected), 6),
                        now, n_buckets, input_id) for p in emptied]
-    (spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA)
+    (local_frame(spark, manifest_rows, MANIFEST_SCHEMA)
      .coalesce(1).write.mode("append").parquet(_manifest_path(out_dir)))
     for p in emptied:  # dynamic overwrite can't write an empty bucket
         _delete_path(spark, f"{_data_path(out_dir)}/part={p}")

@@ -183,6 +183,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
 from .kg import META_SUFFIXES, RDF_TYPE, _expr_identifiers, \
     _optional_entry_vars as _kg_optional_entry_vars, _template_rows, \
     _values_join, ask, bgp_match, bgp_union, describe, describe_nodes
@@ -2349,8 +2350,8 @@ def _sparql_dispatch(triples: DataFrame, query: str,
         triples = _apply_dataset_clause(triples, q, g_col)
     if q.form == "describe":
         if q.describe_nodes is not None:
-            ndf = triples.sparkSession.createDataFrame(
-                [(n,) for n in q.describe_nodes], "node string")
+            ndf = local_frame(triples.sparkSession,
+                              [(n,) for n in q.describe_nodes], "node string")
             return describe_nodes(triples, ndf, s_col=s_col,
                                   p_col=p_col, o_col=o_col)
         if q.describe_var is None:

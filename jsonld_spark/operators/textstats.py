@@ -11,6 +11,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # Per-language stopword/function-word probes. Space-padded probes are
 # whole words, scored by membership of the space-split tokens (one
 # shared tokenize pass); bare probes (CJK — no word spacing in those
@@ -95,7 +97,7 @@ def lang_id(docs: DataFrame, text_col: str = "text",
     lt = F.lower(F.col(text_col))
     word_rows = [(p.strip(), lang) for lang, probes in LANG_PROBES.items()
                  for p in probes if p.startswith(" ")]
-    probe_df = spark.createDataFrame(word_rows, "tok string, lang string")
+    probe_df = local_frame(spark, word_rows, "tok string, lang string")
     toks = docs.select(id_col, F.explode(F.split(lt, " ")).alias("tok"))
     hits = (toks.join(F.broadcast(probe_df), "tok")
             .groupBy(id_col).pivot("lang", langs)

@@ -5,6 +5,25 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import Observation, SparkSession
+from pyspark.sql import types as T
+
+
+def local_frame(spark, rows, schema):
+    """A DataFrame of driver-side ``rows`` (tuples) with ``schema`` (a
+    StructType or DDL string), built as an Arrow table: the result is a
+    JVM ``LocalRelation``, so no pickled RDD, no Python worker and no
+    job to read it (a DataFrame built from a Python list pays all
+    three)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table([pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+                     schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def spread_partitions(df, min_factor: int = 1):

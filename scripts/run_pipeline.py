@@ -16,6 +16,11 @@ only buckets without committed manifests are rewritten. With
 triples replace their previous versions in the existing graph (doc →
 bucket index lookup, only affected buckets rewritten).
 
+Iterative operators (c14n, linking, the upsert's lineage cuts) use
+reliable checkpoints under ``<output>/_checkpoints`` unless
+``--checkpoint-dir`` names another directory; the default one is
+removed after a successful run.
+
 Prints one JSON metrics line (rows, pending/skipped buckets, error
 count, wall seconds) — the per-stage metrics hook the north rule asks
 for.
@@ -32,7 +37,8 @@ from pyspark.sql import functions as F
 
 from jsonld_spark.operators.canonicalize import canonicalize_triples
 from jsonld_spark.operators.linking import connected_components, link_triples
-from jsonld_spark.operators.materialize import (materialize_graph,
+from jsonld_spark.operators.materialize import (_delete_path,
+                                                materialize_graph,
                                                 upsert_documents)
 from jsonld_spark.operators.pipeline import extract_quads
 from jsonld_spark.session import get_spark
@@ -55,8 +61,10 @@ def main(argv: list[str] | None = None) -> int:
                         "(default) or the reference's byte-exact global "
                         "interleave")
     p.add_argument("--checkpoint-dir", default=None,
-                   help="enable RELIABLE checkpoints for iterative "
-                        "operators (survives executor loss)")
+                   help="directory for the RELIABLE checkpoints of "
+                        "iterative operators (survive executor loss); "
+                        "default <output>/_checkpoints, removed after a "
+                        "successful run")
     p.add_argument("--link-sameas", action="store_true")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--upsert", action="store_true",
@@ -88,6 +96,27 @@ def main(argv: list[str] | None = None) -> int:
                               p for p, s in statuses.items() if s != "ok"),
                           "total_wall_s": round(time.time() - t0, 2)}))
         return 0 if set(counts) <= {"ok"} else 1
+    ckpt = args.checkpoint_dir or f"{args.output.rstrip('/')}/_checkpoints"
+    jsc = spark.sparkContext._jsc.sc()
+    prev_ckpt = jsc.getCheckpointDir()
+    spark.sparkContext.setCheckpointDir(ckpt)
+    try:
+        metrics, n_errors = _build(spark, args)
+    finally:
+        # restore the session's setting: it may outlive this run
+        getattr(jsc, "checkpointDir_$eq")(prev_ckpt)
+    if not args.checkpoint_dir:
+        _delete_path(spark, ckpt)
+    metrics.update({"errors": int(n_errors),
+                    "total_wall_s": round(time.time() - t0, 2),
+                    "run_id": args.run_id})
+    print(json.dumps(metrics))
+    return 0
+
+
+def _build(spark, args) -> tuple[dict, int]:
+    """Scan → extract → [c14n] → [linking] → materialize or upsert:
+    (their metrics, error document count)."""
     interleaved = spark.read.parquet(args.input)
     assembled = assemble_documents(interleaved)
     quads = extract_quads(assembled, include_media=True).persist()
@@ -96,8 +125,6 @@ def main(argv: list[str] | None = None) -> int:
     triples = quads.where(F.col("error").isNull()).drop("error") \
                    .dropDuplicates()
 
-    if args.checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
     if args.canonicalize:
         triples = canonicalize_triples(triples, labels=args.labels)
     if args.link_sameas:
@@ -122,11 +149,7 @@ def main(argv: list[str] | None = None) -> int:
                                     resume=not args.no_resume,
                                     input_id=args.input)
     quads.unpersist()
-    metrics.update({"errors": int(n_errors),
-                    "total_wall_s": round(time.time() - t0, 2),
-                    "run_id": args.run_id})
-    print(json.dumps(metrics))
-    return 0
+    return metrics, n_errors
 
 
 if __name__ == "__main__":

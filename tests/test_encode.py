@@ -99,3 +99,23 @@ def test_encoded_binds_bigint_survives_decode(triples):
     rows = {(r["d"], r["who"], r["flag"]) for r in out.collect()}
     assert rows == {("d1", "alice", 42), ("d2", "alice", 42),
                     ("d3", "bob", 42)}
+
+
+def test_hash_of_runs_no_job(spark):
+    """Constant terms are hashed over a local relation: the projection
+    folds at optimization time, so no Spark job runs, and the hashes
+    equal those of the same terms in an ordinary row-based frame."""
+    from jsonld_spark.operators.encode import _hash_of
+    terms = [EX + "a", "alice", "", "ünïcode"]
+    sc = spark.sparkContext
+    sc.setJobGroup("hash_of_jobs", "encode._hash_of")
+    try:
+        got = _hash_of(spark, terms)
+        jobs = sc.statusTracker().getJobIdsForGroup("hash_of_jobs")
+    finally:
+        sc.setJobGroup(None, None)
+    want = {r.t: r.h for r in spark.createDataFrame(
+        [(t,) for t in terms], "t string")
+        .select("t", F.xxhash64("t").alias("h")).collect()}
+    assert got == want
+    assert len(jobs) == 0

@@ -6,6 +6,7 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from jsonld_spark.operators.materialize import (
     detect_heavy_subjects, materialize_graph, read_graph, read_manifests,
@@ -280,3 +281,63 @@ def test_is_missing_table_classification():
         AnalysisException("[UNABLE_TO_INFER_SCHEMA] empty directory"))
     assert not _is_missing_table(
         AnalysisException("[AMBIGUOUS_REFERENCE] column x is ambiguous"))
+
+
+@pytest.mark.parametrize("schema", [
+    "a string, n long, x double",
+    T.StructType([T.StructField("a", T.StringType()),
+                  T.StructField("n", T.LongType()),
+                  T.StructField("x", T.DoubleType())]),
+], ids=["ddl", "struct"])
+def test_local_frame_roundtrip(spark, schema):
+    from jsonld_spark.session import local_frame
+    rows = [("x", 1, 0.5), (None, None, None), ("", 2**40, -1.25)]
+    df = local_frame(spark, rows, schema)
+    assert df.dtypes == [("a", "string"), ("n", "bigint"), ("x", "double")]
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = local_frame(spark, [], schema)
+    assert empty.schema == df.schema and empty.collect() == []
+
+
+def test_local_frame_is_a_local_relation(spark):
+    """No pickled RDD behind it: the plan scans a local table."""
+    from jsonld_spark.session import local_frame
+    df = local_frame(spark, [("x", 1)], "a string, b int")
+    plan = df._jdf.queryExecution().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
+
+
+def _job_count(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_commit_job_counts(spark, triples, tmp_path):
+    """A fresh build reads no manifests back (7 jobs; 8 when it read the
+    just-deleted table and anti-joined against nothing), and the upsert's
+    graph and doc-index reads use fixed schemas instead of inferring one
+    from parquet footers (16 jobs; 18 with two inference jobs)."""
+    from jsonld_spark.operators.materialize import upsert_documents
+    out = str(tmp_path / "graph")
+    ids = [r.doc_id for r in triples.select("doc_id").distinct()
+           .orderBy("doc_id").limit(3).collect()]
+    m, jobs = _job_count(spark, "build_jobs", lambda: materialize_graph(
+        triples, out, n_buckets=N_BUCKETS, run_id="r1", resume=False))
+    assert m["pending"] > 0 and m["skipped"] == 0
+    assert jobs <= 7
+
+    new = (triples.where(F.col("doc_id").isin(ids[:2]))
+           .withColumn("obj_value", F.concat("obj_value", F.lit("-v2"))))
+    deleted = triples.select("doc_id").where(F.col("doc_id") == ids[2])
+    m, jobs = _job_count(spark, "upsert_jobs", lambda: upsert_documents(
+        new, out, deleted_doc_ids=deleted, run_id="u1"))
+    assert m["docs_changed"] == 3
+    assert jobs <= 16
+    statuses = {r["status"] for r in verify_manifests(spark, out).collect()}
+    assert statuses == {"ok"}

@@ -102,3 +102,45 @@ def test_audit_flag_reports_and_detects_corruption(spark, tmp_path, capsys):
     rc = run_pipeline.main(["--output", out, "--audit"])
     m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rc == 1 and m["bad_parts"] == [3]
+
+
+def test_run_pipeline_checkpoints_under_output(spark, tmp_path, capsys,
+                                               monkeypatch):
+    """Without --checkpoint-dir the lineage cuts are reliable checkpoints
+    under <output>/_checkpoints; the directory is gone after the run and
+    the session's checkpoint setting is restored."""
+    import os
+
+    import run_pipeline
+    from jsonld_spark import session
+
+    inp = str(tmp_path / "docs")
+    out = str(tmp_path / "kg")
+    docs = interleaved_from_documents(spark, SF_DIR)
+    docs.write.parquet(inp)
+    run_pipeline.main(["--input", inp, "--output", out,
+                       "--n-buckets", "8", "--run-id", "r1"])
+    batch = str(tmp_path / "batch")
+    docs.limit(2).write.parquet(batch)
+
+    seen = []
+    real_cut = session.cut_lineage
+
+    def spy(df, eager=True):
+        d = df.sparkSession.sparkContext._jsc.sc().getCheckpointDir()
+        seen.append(d.get() if d.isDefined() else None)
+        return real_cut(df, eager)
+
+    monkeypatch.setattr(session, "cut_lineage", spy)
+    capsys.readouterr()
+    rc = run_pipeline.main(["--input", batch, "--output", out,
+                            "--run-id", "u1", "--upsert"])
+    assert rc == 0
+    m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert m["docs_changed"] == 2
+    assert seen and all(d is not None and f"{out}/_checkpoints/" in d
+                        for d in seen)
+    assert not os.path.exists(f"{out}/_checkpoints")
+    assert not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
+    assert {r["status"] for r in verify_manifests(spark, out).collect()} \
+        == {"ok"}
