@@ -32,23 +32,13 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _cut(df: DataFrame) -> DataFrame:
-    """Materialize a derived triples frame consumed by MULTIPLE plan
-    branches (pattern joins / unions / rule branches over the same
-    mapInArrow extraction subtree). Constants pushed below the
-    extraction's dedup exchange make each branch's exchange differ, so
-    ReuseExchange never fires and every branch re-executes the Python
-    extraction — the cut runs it exactly once (guide §2.4/§5). Results
-    are unchanged; the cut happens inside the timed query body."""
-    from jsonld_spark.session import cut_lineage
-    return cut_lineage(df)
-
-
 def _doc_triples3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(subj, pred, obj_value) doc-triples projection, materialized once
-    — the shared input shape of the BGP/SPARQL query rows."""
-    return _cut(q_jsonld_doc_triples(spark, sf_dir)
-                .select("subj", "pred", "obj_value"))
+    """(subj, pred, obj_value) doc-triples projection — the shared input
+    shape of the BGP/SPARQL query rows. Operators that read it in
+    several plan branches materialize it themselves
+    (``jsonld_spark.session.reuse``)."""
+    return q_jsonld_doc_triples(spark, sf_dir) \
+        .select("subj", "pred", "obj_value")
 
 
 # ---------------------------------------------------------------------------
@@ -262,7 +252,7 @@ def q_subject_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe two-phase subject rollup over the doc triples (salted
     partial agg for hub subjects, final merge per subject)."""
     from jsonld_spark.operators.materialize import subject_stats
-    triples = _cut(q_jsonld_doc_triples(spark, sf_dir))
+    triples = q_jsonld_doc_triples(spark, sf_dir)
     stats = subject_stats(triples, heavy_threshold=100, sample_fraction=1.0,
                           n_salts=8)
     return stats.select(
@@ -292,7 +282,7 @@ def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node in/out degree over the extracted KG (skew-safe salted
     two-phase counts; literals never count as nodes)."""
     from jsonld_spark.operators.graphstats import node_degrees
-    return node_degrees(_cut(q_jsonld_doc_triples(spark, sf_dir))) \
+    return node_degrees(q_jsonld_doc_triples(spark, sf_dir)) \
         .select("node",
                 F.col("out_degree").cast("long").alias("out_degree"),
                 F.col("in_degree").cast("long").alias("in_degree"))
@@ -303,8 +293,7 @@ def q_predicate_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distinct runs on the well-spread (pred, subj) pair, never funneling
     a popular predicate through one reducer)."""
     from jsonld_spark.operators.graphstats import predicate_histogram
-    return predicate_histogram(
-        _cut(q_jsonld_doc_triples(spark, sf_dir))) \
+    return predicate_histogram(q_jsonld_doc_triples(spark, sf_dir)) \
         .select("pred",
                 F.col("n_triples").cast("long").alias("n_triples"),
                 F.col("n_subjects").cast("long").alias("n_subjects"))
@@ -313,7 +302,7 @@ def q_predicate_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k highest-degree nodes, deterministic tie-break by node id."""
     from jsonld_spark.operators.graphstats import top_hubs
-    return top_hubs(_cut(q_jsonld_doc_triples(spark, sf_dir)), k=10) \
+    return top_hubs(q_jsonld_doc_triples(spark, sf_dir), k=10) \
         .select("node",
                 F.col("out_degree").cast("long").alias("out_degree"),
                 F.col("in_degree").cast("long").alias("in_degree"),
@@ -331,9 +320,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     a true value within 1e-12 of a half-way point, p≈1e-7 per node."""
     from jsonld_spark.operators.graphstats import pagerank
     t = q_jsonld_doc_triples(spark, sf_dir)
-    edges = _cut(t.where(F.col("obj_kind") == "iri")
-                 .select(F.col("subj").alias("src"),
-                         F.col("obj_value").alias("dst")))
+    edges = t.where(F.col("obj_kind") == "iri") \
+        .select(F.col("subj").alias("src"), F.col("obj_value").alias("dst"))
     pr = pagerank(edges, max_iter=10, tol=None)
     # pagerank's result is lineage-cut, so the double read (rows + the
     # 1-row count) never recomputes the iterations
@@ -773,9 +761,7 @@ def _kg_data_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit(_KG_EX + "class/C"),
                  (F.col("doc_id") % 8).cast("string")).alias("obj_value"),
         F.lit("iri").alias("obj_kind"))
-    # materialized once: rdfs_closure's rule branches (ent7/2/3/9) each
-    # read the fact table — uncut, each branch re-runs the extraction
-    return _cut(triples.unionByName(types))
+    return triples.unionByName(types)
 
 
 def q_rdfs_entail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -794,7 +780,7 @@ def q_bgp_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the triples table (constants → pushed-down filters, shared
     variable ?d → equi-joins; order/broadcast left to Catalyst+AQE)."""
     from jsonld_spark.operators.kg import bgp_match
-    return bgp_match(_cut(q_jsonld_doc_triples(spark, sf_dir)), [
+    return bgp_match(q_jsonld_doc_triples(spark, sf_dir), [
         ("?d", "http://schema.org/associatedMedia", "?media"),
         ("?d", "http://schema.org/inLanguage", "?lang"),
         ("?d", "http://purl.org/dc/terms/source", "?src"),
@@ -1097,9 +1083,6 @@ def q_sparql_optional_subquery(spark: SparkSession, sf_dir: str
     subquery), so the outer left join is a plain equi join; the
     aggregate compiles bottom-up per SPARQL §18.2.2."""
     from jsonld_spark.operators.sparql import sparql_query
-    # A/B-measured: this query consumes the triples once per its single
-    # required pattern — the eager cut costs more than it saves here
-    # (2.04 s vs 1.62 s at sf1), so it stays uncut
     triples = q_jsonld_doc_triples(spark, sf_dir) \
         .select("subj", "pred", "obj_value")
     return sparql_query(triples, """
@@ -1325,7 +1308,9 @@ def q_bgp_star_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonld_spark.operators.encode import (bgp_match_encoded,
                                                encode_triples,
                                                term_dictionary)
-    triples = _doc_triples3(spark, sf_dir)
+    from jsonld_spark.session import reuse
+    # this row reads the triples twice (encoded facts and dictionary)
+    triples = reuse(_doc_triples3(spark, sf_dir))
     enc = encode_triples(triples)
     d = term_dictionary(triples)
     return bgp_match_encoded(enc, [
@@ -1418,13 +1403,13 @@ def q_bgp_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonld_spark.operators.kg import bgp_match
     docs = _read(spark, sf_dir, "documents")
     src = docs.select(F.col("doc_id").cast("long").alias("_n"), "source")
-    t = _cut(q_jsonld_doc_triples(spark, sf_dir)
-             .withColumn("_n", F.regexp_replace("doc_id", "^doc-", "")
-                         .cast("long"))
-             .join(src, "_n")
-             .withColumn("graph", F.concat(F.lit(_KG_EX + "g/"),
-                                           F.col("source")))
-             .select("subj", "pred", "obj_value", "graph"))
+    t = (q_jsonld_doc_triples(spark, sf_dir)
+         .withColumn("_n", F.regexp_replace("doc_id", "^doc-", "")
+                     .cast("long"))
+         .join(src, "_n")
+         .withColumn("graph", F.concat(F.lit(_KG_EX + "g/"),
+                                       F.col("source")))
+         .select("subj", "pred", "obj_value", "graph"))
     return bgp_match(t, [
         ("?d", "http://schema.org/associatedMedia", "?media",
          _KG_EX + "g/src1"),
@@ -1468,11 +1453,13 @@ def q_kg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonld_spark.operators.materialize import (materialize_graph,
                                                     read_graph,
                                                     upsert_documents)
+    from jsonld_spark.session import reuse
     cols = ["doc_id", "graph", "subj", "pred", "obj_kind", "obj_value",
             "obj_datatype", "obj_lang"]
-    t = _cut(q_jsonld_doc_triples(spark, sf_dir)
-             .withColumn("_n", F.regexp_replace("doc_id", "^doc-", "")
-                         .cast("long")))
+    # this row reads t in three operator calls (build, batch, deletes)
+    t = reuse(q_jsonld_doc_triples(spark, sf_dir)
+              .withColumn("_n", F.regexp_replace("doc_id", "^doc-", "")
+                          .cast("long")))
     out = os.path.join(tempfile.mkdtemp(prefix="kg_incr_q_"), "graph")
     materialize_graph(t.where(F.col("_n") % 10 != 0).select(*cols),
                       out, n_buckets=8, run_id="r1")
@@ -1603,9 +1590,9 @@ def q_owl_entail(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_KG_EX + "sharesTopicWith").alias("pred"),
         iri(F.col("doc_id") + 1).alias("obj_value"),
         F.lit("iri").alias("obj_kind"))
-    triples = _cut(q_jsonld_doc_triples(spark, sf_dir)
-                   .select("subj", "pred", "obj_value", "obj_kind")
-                   .unionByName(under).unionByName(topic))
+    triples = q_jsonld_doc_triples(spark, sf_dir) \
+        .select("subj", "pred", "obj_value", "obj_kind") \
+        .unionByName(under).unionByName(topic)
     schema = spark.createDataFrame([
         (_KG_EX + "under", RDF_TYPE, TRANSITIVE_PROPERTY),
         ("http://schema.org/associatedMedia", INVERSE_OF,
@@ -1621,12 +1608,14 @@ def q_shacl_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     triple (minCount), % 13 get a .png media IRI (pattern), % 11 gain
     a second inLanguage literal (maxCount)."""
     from jsonld_spark.operators.kg import Shape, shacl_validate
+    from jsonld_spark.session import reuse
     ASSOC = "http://schema.org/associatedMedia"
     LANGP = "http://schema.org/inLanguage"
     TEXT = "http://schema.org/text"
-    t = _cut(q_jsonld_doc_triples(spark, sf_dir)
-             .withColumn("_n", F.regexp_replace("doc_id", "^doc-", "")
-                         .cast("long")))
+    # this row reads t twice (the defect-injected base and the extras)
+    t = reuse(q_jsonld_doc_triples(spark, sf_dir)
+              .withColumn("_n", F.regexp_replace("doc_id", "^doc-", "")
+                          .cast("long")))
     base = (t.where(~((F.col("pred") == ASSOC) & (F.col("_n") % 7 == 0)))
             .withColumn("obj_value",
                         F.when((F.col("pred") == ASSOC)
@@ -1749,9 +1738,6 @@ def q_bgp_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule) constrains and extends the solutions; BIND computes a new
     column. VALUES plans as a broadcast join, BIND a pure projection."""
     from jsonld_spark.operators.kg import bgp_match
-    # A/B-measured: this query consumes the triples once per its single
-    # required pattern — the eager cut costs more than it saves here
-    # (2.38 s vs 1.99 s at sf1), so it stays uncut
     triples = q_jsonld_doc_triples(spark, sf_dir) \
         .select("subj", "pred", "obj_value")
     return bgp_match(
@@ -1788,9 +1774,9 @@ def q_same_as_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_KG_EX + "citedBy").alias("pred"),
         iri("doc/", F.col("doc_id") + 1).alias("obj_value"),
         F.lit("iri").alias("obj_kind"))
-    triples = _cut(q_jsonld_doc_triples(spark, sf_dir)
-                   .select("subj", "pred", "obj_value", "obj_kind")
-                   .unionByName(chain).unionByName(far_fact))
+    triples = q_jsonld_doc_triples(spark, sf_dir) \
+        .select("subj", "pred", "obj_value", "obj_kind") \
+        .unionByName(chain).unionByName(far_fact)
     return same_as_fuse(triples) \
         .select("subj", "pred", "obj_value", "obj_kind")
 

@@ -49,10 +49,6 @@ def is_relative_iri(value: str) -> bool:
     return not (is_keyword(value) or is_absolute_iri(value))
 
 
-def is_bnode_id(value: Any) -> bool:
-    return isinstance(value, str) and value.startswith("_:")
-
-
 class JsonLdOptions:
     """Processing options (reference: core/JsonLdOptions.java:13-303)."""
 

@@ -46,7 +46,7 @@ from ..core.normalize import (_hash_paths, _hash_quads, canonical_namer,
                               rename_quads)
 from ..core.nquads import quad_to_nquad
 from ..core.rdf import Quad
-from ..session import cut_lineage, local_frame, observed_cut
+from ..session import cut_lineage, local_frame, observed_cut, reuse
 from .linking import connected_components
 
 QUAD_COLS = ["doc_id", "graph", "subj", "pred", "obj_kind", "obj_value",
@@ -77,11 +77,14 @@ def bnode_components(triples: DataFrame, max_iter: int = 50) -> DataFrame:
     multi = mentions.where(F.size("bs") > 1)
     edges = multi.select(F.element_at("bs", 1).alias("src"),
                          F.explode(F.slice("bs", 2, 1 << 30)).alias("dst"))
-    if edges.isEmpty():
+    # counted on the job that materializes them, so CC reads the
+    # edges without running their subtree again
+    edges, n = observed_cut(edges, F.count(F.lit(1)))
+    if n == 0:
         # flat corpora (≤1 bnode per quad — every doc-local pipeline
         # output) have no co-occurrence edges at all: every bnode is
-        # its own component, and the CC probe/collect/anti-join
-        # machinery is pure overhead (one limit(1) probe replaces it)
+        # its own component, and the CC collect/anti-join machinery is
+        # pure overhead
         return (mentions.select(F.explode("bs").alias("node")).distinct()
                 .withColumn("component", F.col("node")))
     cc = connected_components(edges, max_iter=max_iter)
@@ -250,6 +253,7 @@ def prefix_offsets(df: DataFrame, order_cols: list[str], value_col: str,
     # task's local sort
     n_part = max(spark.sparkContext.defaultParallelism,
                  df.rdd.getNumPartitions(), 1)
+    # correctness: both reads below must see the same sampled bounds
     ranged = cut_lineage(df.repartitionByRange(n_part, *order_cols)
                          .withColumn("_pid", F.spark_partition_id()))
     totals = ranged.groupBy("_pid").agg(F.sum(value_col).alias("_t")) \
@@ -313,12 +317,9 @@ def canonicalize_triples(triples: DataFrame, max_iter: int = 50,
     if labels != "component":
         raise ValueError(f"labels must be 'component' or 'reference', "
                          f"got {labels!r}")
-    # the input lineage (typically the full expand+toRDF UDF stage) is
-    # referenced several times below — materialize it exactly once.
-    # cut_lineage uses a reliable checkpoint when the session has a
-    # checkpoint dir (executor loss mid-job doesn't kill an hour-long
-    # run), else executor-local blocks.
-    triples = cut_lineage(triples)
+    # the input (typically the full expand+toRDF UDF stage) is read by
+    # the plain and blank-node branches below
+    triples = reuse(triples)
     has_b = F.size(_bnode_mentions()) > 0
     plain = triples.where(~has_b)
     bquads = triples.where(has_b)
@@ -330,9 +331,9 @@ def canonicalize_triples(triples: DataFrame, max_iter: int = 50,
              .drop("_b0"))
 
     # the kernel output is read twice (per-component offsets + the final
-    # join side) — materialize so the canonicalization pass runs once
+    # join side)
     cap = MAX_COMPONENT_ROWS  # driver-side read → shipped in closure
-    canon = cut_lineage(
+    canon = reuse(
         keyed.repartition("component")
         .mapInPandas(lambda it: _canonize_partition(it, cap),
                      _CANON_SCHEMA))
@@ -342,11 +343,10 @@ def canonicalize_triples(triples: DataFrame, max_iter: int = 50,
     # — the prefix sum is fully distributed (no single-partition window)
     # and the offset join is a plain shuffled join (AQE may still pick a
     # broadcast at small scale; never forced)
-    # cut: prefix_offsets probes the input's partition count (df.rdd —
-    # on a lazy distinct that executes it once extra under AQE) and
-    # then range-repartitions it; a checkpointed per-component table
-    # makes the probe free and the distinct run once
-    per_comp = cut_lineage(
+    # prefix_offsets reads its input twice: the partition-count probe
+    # (df.rdd — on a lazy distinct that executes it once extra under
+    # AQE) and the range repartition
+    per_comp = reuse(
         canon.select("component", "comp_hash", "n_labels").distinct())
     offsets = prefix_offsets(per_comp, ["comp_hash", "component"],
                              "n_labels").select("component", "_offset")
@@ -563,19 +563,20 @@ def _apply_label_map(df: DataFrame, mapping: DataFrame) -> DataFrame:
 def _canonicalize_reference(triples: DataFrame, max_iter: int) -> DataFrame:
     """labels="reference": global interleaved numbering, byte-identical
     to pure-core ``normalize_quads`` on the union (see module comment)."""
-    triples = cut_lineage(triples)
+    # each of these three is read by several branches below
+    triples = reuse(triples)
     has_b = F.size(_bnode_mentions()) > 0
     plain = triples.where(~has_b)
     bquads = triples.where(has_b)
 
     comps = bnode_components(bquads, max_iter=max_iter)
-    keyed = cut_lineage(
+    keyed = reuse(
         bquads.withColumn("_b0", F.element_at(_bnode_mentions(), 1))
               .join(comps.withColumnRenamed("node", "_b0"), "_b0")
               .drop("_b0"))
 
     cap = MAX_COMPONENT_ROWS  # driver-side read → shipped in closure
-    binfo = cut_lineage(
+    binfo = reuse(
         keyed.repartition("component")
         .mapInPandas(lambda it: _fd_hash_partition(it, cap),
                      _BINFO_SCHEMA))
@@ -589,6 +590,7 @@ def _canonicalize_reference(triples: DataFrame, max_iter: int) -> DataFrame:
 
     binfo_full = (with_counts.join(phase1, "bnode", "left")
                   .select("component", "bnode", "fd_hash", "num"))
+    # a coupled component must raise before the events are numbered
     events, n_coupled = observed_cut(
         keyed.groupby("component")
              .cogroup(binfo_full.groupby("component"))

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import cut_lineage
+from ..session import reuse, spread_partitions
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text",
@@ -134,102 +134,75 @@ def minhash_candidate_pairs(docs: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", shingle_len: int = 5,
                             num_hashes: int = 16, bands: int = 4,
                             hash_fn: str = "xxhash64",
-                            shingle: str = "char",
-                            eager_cut: bool = True
-                            ) -> DataFrame | tuple[DataFrame, DataFrame]:
+                            shingle: str = "char") -> DataFrame:
     """LSH banding: equal band-hash ⇒ candidate pair (id_a < id_b).
     Shuffle is O(n·bands) bucket rows — never the cross product.
 
-    The signature table is cached before banding: the boundary stops
-    projection collapse from re-inlining the k·|shingles| hash
-    expressions into the band hashes and again into both sides of the
-    self-join — re-inlined they evaluate O(bands²) times per row inside
-    the Generate node (measured 30× slower). With ``eager_cut`` (the
-    default) the candidate pairs are eagerly materialized (lineage cut)
-    so the cache can be RELEASED before returning — a persist left
-    behind held executor storage for the session lifetime (the round-1
-    leak). ``eager_cut=False`` returns an explicit ``(pairs, sigs)``
-    TUPLE with the persist still live — for callers that consume the
-    pairs exactly once and manage the cache lifetime themselves (call
-    ``sigs.unpersist()`` when done; a tuple, not an attribute on the
-    DataFrame, because any transformation would return a new frame
-    without the attribute and silently lose the only unpersist handle),
-    and for benchmarking the cut's cost (BENCH/SF1.md quantifies it).
-    At warehouse scale the signatures are a landed table and neither
-    mode's tradeoff exists."""
-    sigs = minhash_signatures(docs, text_col, id_col, shingle_len,
-                              num_hashes, hash_fn, shingle).persist()
-    try:
-        # COLLAPSE-FIRST (the simhash path's fix, ported): a corpus
-        # where one boilerplate text occurs m times puts m identical
-        # rows in every one of its band buckets, making the band
-        # self-join emit O(bands·m²) rows before dedup — the measured
-        # 47× blowup BENCH/SF1.md records for pre-fix simhash. Band
-        # and join over DISTINCT signatures only (the signature ARRAY
-        # itself is the group key — exact, no hash-collision risk),
-        # then expand representative pairs back to id pairs through
-        # the membership table. The OUTPUT is still quadratic in
-        # duplicate-group size — that is the id-pair contract's
-        # answer size — but the band join and its shuffle stay linear
-        # in DISTINCT signatures.
-        members = sigs.select(F.col(id_col), "sig")
-        # cut + spread: the groupBy output is AQE-coalesced to few
-        # partitions, and the band self-join below multiplies rows —
-        # unspread, its enumeration would serialize onto those few
-        # cores. The cut matters twice over: reps feeds BOTH the band
-        # join and the membership join (one compute instead of two),
-        # and spread_partitions' partition probe on a LAZY aggregate
-        # would itself execute the aggregate once more (df.rdd
-        # finalizes AQE stages); on the checkpoint it is free.
-        from ..session import spread_partitions
-        reps = spread_partitions(cut_lineage(
-            members.groupBy("sig").agg(F.min(id_col).alias(id_col))))
-        banded = band_signatures(reps, num_hashes, bands, hash_fn,
-                                 id_col)
-        a = banded.alias("a")
-        b = banded.alias("b")
-        rep_pairs = (a.join(b, [
-                        F.col("a.band") == F.col("b.band"),
-                        F.col("a.band_hash") == F.col("b.band_hash"),
-                        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
-                     .select(F.col(f"a.{id_col}").alias("_ra"),
-                             F.col(f"b.{id_col}").alias("_rb"))
-                     .dropDuplicates())
-        mem = members.join(reps.select(F.col("sig"),
-                                       F.col(id_col).alias("_rep")),
-                           "sig").select(id_col, "_rep")
-        # ``cross`` and ``within`` are each duplicate-free and mutually
-        # disjoint (ids are unique per the function's contract, so every
-        # id has exactly ONE rep: an unordered id pair determines its
-        # rep pair — unique in rep_pairs — and within-pairs share a rep
-        # while cross-pairs never do), so no final dropDuplicates pass
-        # is needed — removing it drops a full-output exchange+agg. The
-        # `_ia != _ib` guard keeps a malformed corpus (same id, two
-        # texts) from emitting a self pair (advice finding).
-        cross = (rep_pairs
-                 .join(mem.select(F.col(id_col).alias("_ia"),
-                                  F.col("_rep").alias("_ra")), "_ra")
-                 .join(mem.select(F.col(id_col).alias("_ib"),
-                                  F.col("_rep").alias("_rb")), "_rb")
-                 .where(F.col("_ia") != F.col("_ib"))
-                 .select(F.least("_ia", "_ib").alias("id_a"),
-                         F.greatest("_ia", "_ib").alias("id_b")))
-        within = (mem.alias("ma").join(
-                      mem.alias("mb"),
-                      [F.col("ma._rep") == F.col("mb._rep"),
-                       F.col(f"ma.{id_col}") < F.col(f"mb.{id_col}")])
-                  .select(F.col(f"ma.{id_col}").alias("id_a"),
-                          F.col(f"mb.{id_col}").alias("id_b")))
-        pairs = cross.unionByName(within)
-    except BaseException:
-        sigs.unpersist()  # never leak the cache on a failed build
-        raise
-    if not eager_cut:
-        return pairs, sigs
-    try:
-        return cut_lineage(pairs)
-    finally:
-        sigs.unpersist()
+    The signature table is materialized (``reuse``) before banding:
+    the boundary stops projection collapse from re-inlining the
+    k·|shingles| hash expressions into the band hashes and again into
+    both sides of the self-join — re-inlined they evaluate O(bands²)
+    times per row inside the Generate node (measured 30× slower). The
+    pairs come back lazy; a caller that reads them more than once
+    materializes them itself."""
+    sigs = reuse(minhash_signatures(docs, text_col, id_col, shingle_len,
+                                    num_hashes, hash_fn, shingle))
+    # COLLAPSE-FIRST (the simhash path's fix, ported): a corpus
+    # where one boilerplate text occurs m times puts m identical
+    # rows in every one of its band buckets, making the band
+    # self-join emit O(bands·m²) rows before dedup — the measured
+    # 47× blowup BENCH/SF1.md records for pre-fix simhash. Band
+    # and join over DISTINCT signatures only (the signature ARRAY
+    # itself is the group key — exact, no hash-collision risk),
+    # then expand representative pairs back to id pairs through
+    # the membership table. The OUTPUT is still quadratic in
+    # duplicate-group size — that is the id-pair contract's
+    # answer size — but the band join and its shuffle stay linear
+    # in DISTINCT signatures.
+    members = sigs.select(F.col(id_col), "sig")
+    # materialize + spread: reps feeds BOTH the band join and the
+    # membership join, and the groupBy output is AQE-coalesced to few
+    # partitions while the band self-join below multiplies rows —
+    # unspread, its enumeration would serialize onto those few cores
+    # (spread_partitions' partition probe is free on the checkpoint)
+    reps = spread_partitions(reuse(
+        members.groupBy("sig").agg(F.min(id_col).alias(id_col))))
+    banded = band_signatures(reps, num_hashes, bands, hash_fn, id_col)
+    a = banded.alias("a")
+    b = banded.alias("b")
+    rep_pairs = (a.join(b, [
+                    F.col("a.band") == F.col("b.band"),
+                    F.col("a.band_hash") == F.col("b.band_hash"),
+                    F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
+                 .select(F.col(f"a.{id_col}").alias("_ra"),
+                         F.col(f"b.{id_col}").alias("_rb"))
+                 .dropDuplicates())
+    mem = members.join(reps.select(F.col("sig"),
+                                   F.col(id_col).alias("_rep")),
+                       "sig").select(id_col, "_rep")
+    # ``cross`` and ``within`` are each duplicate-free and mutually
+    # disjoint (ids are unique per the function's contract, so every
+    # id has exactly ONE rep: an unordered id pair determines its
+    # rep pair — unique in rep_pairs — and within-pairs share a rep
+    # while cross-pairs never do), so no final dropDuplicates pass
+    # is needed — removing it drops a full-output exchange+agg. The
+    # `_ia != _ib` guard keeps a malformed corpus (same id, two
+    # texts) from emitting a self pair (advice finding).
+    cross = (rep_pairs
+             .join(mem.select(F.col(id_col).alias("_ia"),
+                              F.col("_rep").alias("_ra")), "_ra")
+             .join(mem.select(F.col(id_col).alias("_ib"),
+                              F.col("_rep").alias("_rb")), "_rb")
+             .where(F.col("_ia") != F.col("_ib"))
+             .select(F.least("_ia", "_ib").alias("id_a"),
+                     F.greatest("_ia", "_ib").alias("id_b")))
+    within = (mem.alias("ma").join(
+                  mem.alias("mb"),
+                  [F.col("ma._rep") == F.col("mb._rep"),
+                   F.col(f"ma.{id_col}") < F.col(f"mb.{id_col}")])
+              .select(F.col(f"ma.{id_col}").alias("id_a"),
+                      F.col(f"mb.{id_col}").alias("id_b")))
+    return cross.unionByName(within)
 
 
 def minhash_pairs_incremental(new_docs: DataFrame, corpus_sigs: DataFrame,
@@ -253,21 +226,19 @@ def minhash_pairs_incremental(new_docs: DataFrame, corpus_sigs: DataFrame,
     runtime; never a cross product. Self-pairs (a re-crawled id already
     in the corpus) are dropped. Within-batch duplicates are
     ``minhash_candidate_pairs`` on the batch alone."""
-    new_sigs = minhash_signatures(new_docs, text_col, id_col, shingle_len,
-                                  num_hashes, hash_fn, shingle).persist()
-    try:
-        n_b = band_signatures(new_sigs, num_hashes, bands, hash_fn, id_col) \
-            .select(F.col(id_col).alias("new_id"), "band", "band_hash")
-        c_b = band_signatures(corpus_sigs, num_hashes, bands, hash_fn,
-                              id_col) \
-            .select(F.col(id_col).alias("corpus_id"), "band", "band_hash")
-        pairs = (c_b.join(n_b, ["band", "band_hash"])
-                 .where(F.col("new_id") != F.col("corpus_id"))
-                 .select("new_id", "corpus_id")
-                 .dropDuplicates())
-        return cut_lineage(pairs)
-    finally:
-        new_sigs.unpersist()
+    # materialized for the same projection-collapse boundary as in
+    # minhash_candidate_pairs
+    new_sigs = reuse(minhash_signatures(new_docs, text_col, id_col,
+                                        shingle_len, num_hashes, hash_fn,
+                                        shingle))
+    n_b = band_signatures(new_sigs, num_hashes, bands, hash_fn, id_col) \
+        .select(F.col(id_col).alias("new_id"), "band", "band_hash")
+    c_b = band_signatures(corpus_sigs, num_hashes, bands, hash_fn, id_col) \
+        .select(F.col(id_col).alias("corpus_id"), "band", "band_hash")
+    return (c_b.join(n_b, ["band", "band_hash"])
+            .where(F.col("new_id") != F.col("corpus_id"))
+            .select("new_id", "corpus_id")
+            .dropDuplicates())
 
 
 def dedup_clusters(docs: DataFrame, text_col: str = "text",
@@ -286,20 +257,10 @@ def dedup_clusters(docs: DataFrame, text_col: str = "text",
     (A≈B≈C with A,C never colliding) land in ONE cluster — pairwise
     dedup alone would keep both A and C."""
     from .linking import label_clusters
-    # eager_cut=False: the pairs are consumed exactly once — connected
-    # components persists its own edge table before the probe — so the
-    # eager 4M-row checkpoint of the default mode is a wasted write
-    # (~2 s at sf1). label_clusters is eager through the CC probe and
-    # the labeled-table cut, so the signature cache can be released as
-    # soon as it returns.
-    pairs, sigs = minhash_candidate_pairs(docs, text_col, id_col,
-                                          shingle_len, num_hashes, bands,
-                                          hash_fn, eager_cut=False)
-    try:
-        # pairs are provably duplicate-free (see minhash_candidate_pairs)
-        return label_clusters(docs, pairs, id_col, assume_distinct=True)
-    finally:
-        sigs.unpersist()
+    pairs = minhash_candidate_pairs(docs, text_col, id_col, shingle_len,
+                                    num_hashes, bands, hash_fn)
+    # pairs are provably duplicate-free (see minhash_candidate_pairs)
+    return label_clusters(docs, pairs, id_col, assume_distinct=True)
 
 
 def word_ngrams(text_col: str, n: int = 3):
@@ -467,7 +428,6 @@ def simhash_hash_pairs(hashes: DataFrame, max_hamming: int = 3,
     # enumeration on ONE core (measured 13 s single-task at sf1 vs
     # ~1 s spread; guide §2.5 — skew lives in join OUTPUT, which AQE's
     # byte-based splitting never sees)
-    from ..session import spread_partitions
     banded = spread_partitions(hashes).select(
         sim_col, F.posexplode(F.array(*vals)).alias("band", "val"))
     a = banded.select(F.col(sim_col).alias("hash_a"), "band", "val")
@@ -505,11 +465,9 @@ def simhash_neardup_groups(sims: DataFrame, max_hamming: int = 3,
     Everything is linear in DISTINCT hashes (band join included) — the
     id-level pair expansion (``simhash_neardup_pairs``) is the only
     quadratic object, and it is opt-in output, not plan."""
-    # groups is consumed by THREE branches (the band join and both
-    # group-info joins); uncut, each branch re-runs the upstream
-    # simhash aggregate over the whole corpus (guide §2.4) — the cut
-    # materializes the tiny (hash, rep, n) table once
-    groups = cut_lineage(simhash_groups(sims, id_col, sim_col))
+    # groups is read by THREE branches (the band join and both
+    # group-info joins)
+    groups = reuse(simhash_groups(sims, id_col, sim_col))
     hp = simhash_hash_pairs(groups.select(sim_col), max_hamming, bits,
                             sim_col)
     ga = groups.select(F.col(sim_col).alias("hash_a"),
@@ -542,14 +500,12 @@ def simhash_neardup_pairs(sims: DataFrame, max_hamming: int = 3,
     a group-size-squared candidate blowup (round-3 measured 47× wall at
     10× data from that; post-collapse the sf1 ratio is ~output-bound)."""
     # member feeds FIVE branches (distinct hashes, both sides of the
-    # in-group join, both membership expansions) — materialize the
-    # narrow (id, hash) table once instead of re-running the upstream
-    # simhash aggregate per branch
-    member = cut_lineage(sims.select(id_col, sim_col))
-    # cut: the band join spreads this frame (the partition probe on a
-    # lazy distinct would execute it once extra) and consumes it on
-    # both join sides — a ~|distinct hashes| checkpoint is cheaper
-    hashes = cut_lineage(member.select(sim_col).distinct())
+    # in-group join, both membership expansions)
+    member = reuse(sims.select(id_col, sim_col))
+    # the band join spreads this frame (the partition probe on a lazy
+    # distinct would execute it once extra) and reads it on both join
+    # sides
+    hashes = reuse(member.select(sim_col).distinct())
     hp = simhash_hash_pairs(hashes, max_hamming, bits, sim_col)
     in_group = (member.alias("x")
                 .join(member.alias("y"), [

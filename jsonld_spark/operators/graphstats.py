@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import reuse
 from .materialize import detect_heavy_subjects
 
 
@@ -48,6 +49,8 @@ def node_degrees(triples: DataFrame, heavy_threshold: int = 1_000_000,
     """(node, out_degree, in_degree) for every IRI/bnode appearing as a
     subject or as an IRI/bnode object. Literals are values, not nodes —
     they never count toward degree."""
+    # read by the out- and in-degree branches, each sampled and counted
+    triples = reuse(triples)
     outs = _skew_safe_counts(
         triples.select("subj", F.xxhash64("pred", "obj_value")
                        .alias("_salt_src")),
@@ -95,21 +98,24 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
       observed on the round's own job, as the new ranks are joined onto
       the old table; ``tol=None`` runs exactly ``max_iter`` rounds.
     """
-    from ..session import cut_lineage, fixpoint, observed_cut
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")) \
-             .where(F.col("src").isNotNull() & F.col("dst").isNotNull()) \
-             .dropDuplicates()
+    from ..session import fixpoint, observed_cut
+    # read by the node set, the out-degrees and the edge weights
+    e = reuse(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+              .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+              .dropDuplicates())
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node")))
              .distinct())
+    # the node count sets the initial rank and the teleport mass
     nodes, n = observed_cut(nodes, F.count(F.lit(1)))
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    # weight each edge once up front: contribution = rank(src) * _w
-    weighted = cut_lineage(e.join(out_deg, "src")
-                           .select("src", "dst",
-                                   (F.lit(1.0) / F.col("_deg")).alias("_w")))
+    # weight each edge once up front: contribution = rank(src) * _w;
+    # read every round
+    weighted = reuse(e.join(out_deg, "src")
+                     .select("src", "dst",
+                             (F.lit(1.0) / F.col("_deg")).alias("_w")))
 
     def power_step(ranks):
         contribs = (weighted.join(ranks.select(F.col("node").alias("src"),
@@ -155,6 +161,7 @@ def predicate_histogram(triples: DataFrame) -> DataFrame:
     reducer; instead the distinct runs hash-partitioned on the full
     (pred, subj) pair (well spread), and the per-pred count of the
     distinct pairs is a map-side partial over far fewer rows."""
+    triples = reuse(triples)
     n_triples = triples.groupBy("pred") \
         .agg(F.count(F.lit(1)).alias("n_triples"))
     n_subjects = (triples.select("pred", "subj").distinct()

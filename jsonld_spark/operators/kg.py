@@ -35,7 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import local_frame, reuse
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -498,6 +498,10 @@ def bgp_match(triples: DataFrame, patterns: list[tuple[str, str, str]],
     that IRI. Add a kind filter (``x__kind = 'iri'`` with
     ``meta_vars``) where that matters.
     """
+    entries = [patterns, optional, not_exists, exists, minus, filter_exists]
+    if sum(len(e or ()) for e in entries) > 1:
+        # each pattern and group entry reads the triples once
+        triples = reuse(triples)
     out, *_ = _compile(
         triples, {"patterns": patterns, "optional": optional,
                   "not_exists": not_exists, "exists": exists,
@@ -925,8 +929,7 @@ def _compat_join(out: DataFrame, bound: list[str], mcols: list[str],
     # every branch filters the same solutions: materialize them once
     # (masks first, so the >4-nullable guard raises before the cut)
     masks = _null_masks(nsh, where)
-    from ..session import cut_lineage
-    out = cut_lineage(out)
+    out = reuse(out)
     r = right.select(*[F.col(v).alias(f"_o_{v}") for v in rvars]) \
         if left else None
     branches = []
@@ -1115,6 +1118,9 @@ def bgp_union(triples: DataFrame,
                 f"meta_vars {sorted(missing)} were never bound by any "
                 "UNION branch — LANG()/DATATYPE()/isIRI() need a "
                 "binding pattern")
+    if len(branches) > 1:
+        # each branch reads the triples
+        triples = reuse(triples)
     outs = [bgp_match(triples, b, s_col=s_col, p_col=p_col, o_col=o_col,
                       g_col=g_col,
                       filters=(branch_filters[i] or None)
@@ -1198,9 +1204,8 @@ def _template_rows(sol: DataFrame, template: list[tuple[str, str, str]],
         # each template triple projects the solution set with its own
         # null filters, so a k-triple template re-plans (and re-joins)
         # the WHERE clause k times — materialize the solutions once;
-        # single-template constructs skip the cut (nothing re-used)
-        from ..session import cut_lineage
-        sol = cut_lineage(sol)
+        # single-template constructs read it once
+        sol = reuse(sol)
     bound = set(sol.columns)
     mint = set(mint_vars or ())
     mint_key = None
@@ -1330,9 +1335,10 @@ def rdfs_closure(triples: DataFrame, schema: DataFrame,
 
     sel = [F.col(s_col).alias("subj"), F.col(p_col).alias("pred"),
            F.col(o_col).alias("obj")]
-    facts = triples.select(
+    # read by every rule branch
+    facts = reuse(triples.select(
         *sel, *([F.col(kind_col).alias("_kind")] if kind_col else
-                [F.lit("iri").alias("_kind")]))
+                [F.lit("iri").alias("_kind")])))
 
     # rdfs7: super-property expansion
     sp = _edge_df(prop_clo, "p_sub", "p_sup")
@@ -1434,6 +1440,7 @@ def _path_closure(edges: DataFrame, max_rounds: int = 20,
     # parallelism buys (measured: owl_entail 9.0 s → 11.9 s with a
     # spread here)
     n_rows = F.count(F.lit(1))
+    # the initial count seeds the fixpoint's no-growth stop test
     paths, n = observed_cut(edges.select(*cols).distinct(), n_rows)
     paths, converged = fixpoint(
         paths,
@@ -1609,18 +1616,31 @@ def kg_path(triples: DataFrame, path: str,
     projected scans, cheap next to any closure).
     """
     ast = _PathParser(path).parse()
+
+    def scans(node) -> int:
+        # a negated set scans once per direction it names, and the
+        # zero-length identity scans subjects and objects
+        op, *args = node
+        if op == "pred":
+            return 1
+        if op == "negset":
+            return 1 + bool(args[0] and args[1])
+        return 2 * (op in ("star", "opt")) + sum(map(scans, args))
+
+    if scans(ast) > 1:
+        triples = reuse(triples)
     nodes_cache: list[DataFrame] = []
     gx: tuple = () if g_col is None else (F.col(g_col).alias("g"),)
     extra: tuple = () if g_col is None else ("g",)
 
     def nodes() -> DataFrame:
         if not nodes_cache:
-            from ..session import cut_lineage
             subs = triples.select(F.col(s_col).alias("n"), *gx)
             objs = triples.select(F.col(o_col).alias("n"), *gx)
             keep = [F.col("n").alias("src"), F.col("n").alias("dst"),
                     *[F.col(g) for g in extra]]
-            nodes_cache.append(cut_lineage(
+            # shared by every */? operator of the expression
+            nodes_cache.append(reuse(
                 subs.unionByName(objs).distinct().select(*keep)))
         return nodes_cache[0]
 
@@ -1748,6 +1768,8 @@ def shacl_validate(triples: DataFrame, shapes: list[Shape],
     """
     if not shapes:
         raise ValueError("empty shape list")
+    # every shape reads the triples for its focus set and its values
+    triples = reuse(triples)
     viols: list[DataFrame] = []
     out_cols = ["shape_id", "focus", "constraint_kind", "value"]
 
@@ -1879,6 +1901,9 @@ def owl_closure(triples: DataFrame, schema: DataFrame,
             "one costs a data-side fixpoint; raise the cap only if that "
             "is intended")
     spark = triples.sparkSession
+    # read by the inverse and symmetric branches and by each transitive
+    # predicate's edges
+    triples = reuse(triples)
     node_facts = triples.select(
         F.col(s_col).alias("subj"), F.col(p_col).alias("pred"),
         F.col(o_col).alias("obj"))
@@ -2023,6 +2048,8 @@ def same_as_fuse(triples: DataFrame,
     two broadcast left joins over the fact table, one pass.
     """
     from .linking import connected_components, link_triples
+    # read by the equivalence edges and the rewrite
+    triples = reuse(triples)
     edges = (triples
              .where((F.col(p_col) == SAME_AS)
                     & (F.col(kind_col) != "literal"))
@@ -2068,6 +2095,7 @@ def describe_nodes(triples: DataFrame, nodes: DataFrame,
     the node set when it is small, which it almost always is; a
     triple relating two described nodes appears once per role, same
     as running single-node ``describe`` per node and unioning."""
+    triples = reuse(triples)  # read by both roles
     n = nodes.select(F.col(node_col).alias("_n")).distinct()
     subj_side = (triples.join(n, F.col(s_col) == F.col("_n"), "semi")
                  .withColumn("role", F.lit("subject")))

@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import cut_lineage, fixpoint, local_frame, observed_cut
+from ..session import fixpoint, local_frame, observed_cut, reuse
 
 # Driver-CC threshold (distinct edges). An edge row is two longs (16 B),
 # so 32 M edges is ~0.5 GB of driver arrays; the vectorized numpy
@@ -117,10 +117,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
             schema = e.select(F.col("src").alias("node"),
                               F.col("src").alias("component")).schema
             return _driver_union_find(e.toPandas(), e.sparkSession, schema)
-    # undirected: keep both directions once
-    sym = cut_lineage(e.unionByName(e.select(F.col("dst").alias("src"),
-                                             F.col("src").alias("dst")))
-                      .dropDuplicates())
+    # undirected: keep both directions once; read every round
+    sym = reuse(e.unionByName(e.select(F.col("dst").alias("src"),
+                                       F.col("src").alias("dst")))
+                .dropDuplicates())
     # init fuses the first relaxation round: label(node) = min(node,
     # neighbors) from ONE groupBy over the symmetric edges (the same
     # rows the old distinct scanned) — one fewer 3-join round through
@@ -168,13 +168,9 @@ def label_clusters(ids: DataFrame, pairs: DataFrame, id_col: str,
     cc = connected_components(pairs, src=src, dst=dst,
                               assume_distinct=assume_distinct) \
         .select(F.col("node").alias(id_col), F.col("component").alias("rep"))
-    # labeled feeds both the size aggregate and the final join —
-    # materialize the narrow (id, rep) table once so the ids frame
-    # (often an expensive derived funnel, e.g. curate_corpus' quality/
-    # dedup joins) is not re-derived per branch
-    labeled = cut_lineage(ids.select(id_col).join(cc, id_col, "left")
-                          .withColumn("rep",
-                                      F.coalesce("rep", F.col(id_col))))
+    # labeled feeds both the size aggregate and the final join
+    labeled = reuse(ids.select(id_col).join(cc, id_col, "left")
+                    .withColumn("rep", F.coalesce("rep", F.col(id_col))))
     sizes = labeled.groupBy("rep").agg(F.count(F.lit(1)).alias("cluster_n"))
     return labeled.join(sizes, "rep").select(id_col, "rep", "cluster_n")
 
@@ -222,7 +218,7 @@ def link_triples(triples: DataFrame, components: DataFrame,
                               F.coalesce("_iri_rep", "component")
                                .alias("component")))
         if small:
-            components = cut_lineage(components)
+            components = reuse(components)
     hint = F.broadcast if small else (lambda df: df)
     c_subj = components.select(F.col("node").alias("subj"),
                                F.col("component").alias("_subj_canon"))
@@ -241,8 +237,9 @@ def link_triples(triples: DataFrame, components: DataFrame,
     else:
         # shuffled path: only rewrite-eligible rows join on obj_value —
         # shuffling every LITERAL row by its (long, skewed) text for a
-        # join the `when` could never apply was pure waste at scale
-        joined = cut_lineage(joined)
+        # join the `when` could never apply was pure waste at scale;
+        # both branches read the subject-joined triples
+        joined = reuse(joined)
         elig = joined.where(F.col("obj_kind").isin(kinds))
         rest = joined.where(~F.col("obj_kind").isin(kinds)
                             | F.col("obj_kind").isNull())

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import local_frame
+from ..session import local_frame, reuse
 
 TRIPLE_COLS = ["doc_id", "graph", "subj", "pred", "obj_kind", "obj_value",
                "obj_datatype", "obj_lang"]
@@ -107,6 +107,8 @@ def subject_stats(triples: DataFrame, heavy_threshold: int = 1_000_000,
     The phase-2 shuffle moves only the partials, never the raw triples
     of a hub subject through one reducer.
     """
+    # read by the heavy-hitter sample and the salted aggregate
+    triples = reuse(triples)
     heavy = detect_heavy_subjects(triples, heavy_threshold, sample_fraction)
     salted = salt_by_subject(triples, heavy, n_salts)
     partial = (salted.groupBy("subj", "salt")
@@ -394,9 +396,9 @@ def upsert_documents(new_triples: DataFrame, out_dir: str,
             .join(changed, "doc_id", "left_anti")
             .select(*TRIPLE_COLS, "part"))
     replacement = keep.unionByName(new_parted)
-    # materialize BEFORE the overwrite: the plan must stop reading the
-    # files it is about to replace (checkpoint blocks also serve the
-    # fingerprint pass and both writes without recompute)
+    # correctness: materialize BEFORE the overwrite, so the plan stops
+    # reading the files it is about to replace (the checkpoint blocks
+    # also serve the fingerprint pass and both writes)
     replacement = cut_lineage(replacement)
     stats = _fingerprints(replacement).collect()
     written_parts = {int(r["part"]) for r in stats}

@@ -4,8 +4,8 @@ Stage layout (SURVEY.md §3.2 Spark trace):
 
     interleaved(doc_id, spans)
       → assemble (pure column ops)
-      → mapInPandas(expand + node-map + toRDF per document)   # Arrow batches
-      → union media-ref triples (pure explode)
+      → mapInArrow(expand + node-map + toRDF per document,    # Arrow batches
+                   plus the media-ref triples, in the same pass)
       → dropDuplicates                                        # global dedup
 
 Per-document algorithms run inside Arrow batches (vectorization is

@@ -134,7 +134,7 @@ def curate_corpus(docs: DataFrame, text_col: str = "text",
     from .dedup import dedup_clusters
     from .textstats import fingerprint, lang_id, quality_score
 
-    from ..session import cut_lineage
+    from ..session import reuse
 
     q = quality_score(docs, text_col, id_col) \
         .where(F.col("quality") >= min_quality)
@@ -143,10 +143,8 @@ def curate_corpus(docs: DataFrame, text_col: str = "text",
     fp = fingerprint(passed, text_col, id_col)
     exact_keep = fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
     # the surviving-docs funnel feeds the near-dup signature build, the
-    # cluster-id universe, the language pass and the final joins —
-    # materialize it once instead of re-deriving the quality+dedup
-    # joins per consumer (guide §2.4)
-    passed = cut_lineage(passed.join(exact_keep.select(id_col), id_col))
+    # cluster-id universe, the language pass and the final joins
+    passed = reuse(passed.join(exact_keep.select(id_col), id_col))
 
     clusters = dedup_clusters(passed, text_col, id_col, shingle_len,
                               num_hashes, bands, hash_fn)

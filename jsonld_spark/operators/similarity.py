@@ -16,7 +16,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import cut_lineage, observed_cut
+from ..session import observed_cut, reuse
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -120,7 +120,7 @@ def embedding_neardup(embeddings: DataFrame, threshold: float = 0.95,
     # (measured heap OOM at 200k × 64-dim with replica-heavy buckets).
     # Vectors re-join by id AFTER the pair dedup — two narrow shuffles
     # of the deduped pairs instead of vector payload inside the blowup.
-    arrays = cut_lineage(
+    arrays = reuse(
         lsh_bucket_arrays(embeddings, planes, bands, id_col, vec_col))
     banded = arrays.select(
         id_col, F.posexplode("buckets").alias("band", "bucket"))
@@ -152,14 +152,13 @@ def embedding_clusters(embeddings: DataFrame, threshold: float = 0.95,
     (banded-LSH candidates when ``planes`` given — the scale path) plus
     the cluster size. Same contract as text ``dedup_clusters``.
 
-    The verified pairs are lineage-cut before clustering: the CC
-    fixpoint reads its edge set once per round, and without the cut each
-    read re-derives the banded candidate join + exact-cosine verify
-    (measured as the top sf0.1 bench cost in round 3 — the same pattern
-    ``minhash_candidate_pairs`` cuts eagerly)."""
+    The verified pairs go to connected components lazily: CC
+    materializes its edge set before its size probe and its rounds
+    read the materialized symmetric edges, so the banded candidate
+    join + exact-cosine verify runs once."""
     from .linking import label_clusters
-    pairs = cut_lineage(embedding_neardup(embeddings, threshold, id_col,
-                                          vec_col, round_to, planes, bands))
+    pairs = embedding_neardup(embeddings, threshold, id_col, vec_col,
+                              round_to, planes, bands)
     # verified pairs are already deduplicated on (id_a, id_b)
     return label_clusters(embeddings, pairs, id_col, assume_distinct=True)
 

@@ -183,7 +183,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import local_frame
+from ..session import local_frame, reuse
 from .kg import META_SUFFIXES, RDF_TYPE, _expr_identifiers, \
     _optional_entry_vars as _kg_optional_entry_vars, _template_rows, \
     _values_join, ask, bgp_match, bgp_union, describe, describe_nodes
@@ -2348,6 +2348,10 @@ def _sparql_dispatch(triples: DataFrame, query: str,
     cols = dict(s_col=s_col, p_col=p_col, o_col=o_col, g_col=g_col)
     if q.from_graphs or q.from_named:
         triples = _apply_dataset_clause(triples, q, g_col)
+    # the group compiler reads the triples once per pattern, and
+    # DESCRIBE ?var twice more
+    if sum(1 for _ in _query_patterns(q)) + 2 * bool(q.describe_var) > 1:
+        triples = reuse(triples)
     if q.form == "describe":
         if q.describe_nodes is not None:
             ndf = local_frame(triples.sparkSession,

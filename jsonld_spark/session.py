@@ -39,8 +39,17 @@ def spread_partitions(df, min_factor: int = 1):
     return df
 
 
-def cut_lineage(df, eager: bool = True):
-    """Materialize a DataFrame and truncate its lineage.
+def cut_lineage(df):
+    """Materialize a DataFrame and truncate its lineage, unconditionally.
+
+    This is the cut for correctness, and only three kinds of call use
+    it: a plan must stop reading files it is about to overwrite
+    (``upsert_documents``), a sampled range partitioning must stay
+    fixed between two reads (``prefix_offsets``), and each round of
+    ``fixpoint`` is a recovery point that keeps lineage from growing
+    with the round count. A frame materialized for speed goes through
+    ``reuse``; a frame whose size an operator needs goes through
+    ``observed_cut``.
 
     Uses a **reliable** checkpoint (written to the session's configured
     checkpoint directory, surviving executor loss) when
@@ -52,13 +61,49 @@ def cut_lineage(df, eager: bool = True):
     """
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isDefined():
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    return df.localCheckpoint()
+
+
+#: optimized-plan nodes of a frame that is cheap to read again:
+#: projections, filters and unions over a file scan, a cache, a
+#: checkpoint or a local table
+_STORED_PLAN = frozenset({"Project", "Filter", "Union", "LogicalRelation",
+                          "InMemoryRelation", "LogicalRDD",
+                          "LocalRelation"})
+
+
+def reuse(df):
+    """``df``, materialized if reading it again would recompute it.
+
+    The one rule for speed cuts: an operator that reads one input in
+    several plan branches (pattern joins, rule branches, union
+    branches, a table read every fixpoint round) calls ``reuse`` once
+    on that input, and its callers do not cut. Without it each branch
+    re-runs the input's subtree: constants pushed below an exchange
+    make sibling exchanges differ, so exchange reuse never fires.
+
+    ``df`` comes back unchanged, with no job run, when its optimized
+    plan is only Project, Filter or Union nodes over a file scan, a
+    cache, a checkpoint or a local relation. Any other frame goes
+    through ``cut_lineage``.
+    """
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() not in _STORED_PLAN:
+            return cut_lineage(df)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return df
 
 
 def observed_cut(df, metric):
     """``cut_lineage(df)`` plus one aggregate ``metric`` over ``df``,
-    observed on the job that materializes it: ``(df, value)``."""
+    observed on the job that materializes it: ``(df, value)``. For a
+    frame whose size decides the operator's next step (a driver or
+    distributed path, a broadcast, an early return, a fixpoint's stop)
+    and which the operator reads again."""
     obs = Observation()
     df = cut_lineage(df.observe(obs, metric.alias("stat")))
     return df, obs.get["stat"]
@@ -67,8 +112,9 @@ def observed_cut(df, metric):
 def fixpoint(state, step, metric, done, max_rounds: int, stat=None):
     """The data-side fixpoint loop (SURVEY.md §4 item 2): each round
     materializes ``step(state)`` once via ``observed_cut(.., metric)``
-    and stops when ``done(previous stat, stat)`` holds (``stat`` seeds
-    the previous value). A persisted initial state is released after
+    — a recovery point, whatever the plan — and stops when
+    ``done(previous stat, stat)`` holds (``stat`` seeds the previous
+    value). A persisted initial state is released after
     round 1. Returns ``(state, converged)``; the caller decides whether
     running out of ``max_rounds`` is an error."""
     for _ in range(max_rounds):

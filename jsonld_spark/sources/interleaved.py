@@ -107,19 +107,3 @@ def assemble_documents(interleaved: DataFrame) -> DataFrame:
         F.expr("transform(filter(_s, s -> s.kind = 'media'),"
                " s -> s.media_ref)").alias("media_refs"),
     )
-
-
-def media_triples(assembled: DataFrame) -> DataFrame:
-    """media_refs → (doc_id, graph, subj, pred, obj_* ) rows linking the
-    document IRI to each media ref (FIXTURES.md §1). Pure explode —
-    no UDF, no shuffle."""
-    doc_iri = F.concat(F.lit(DOC_IRI_PREFIX),
-                       F.regexp_replace("doc_id", "^doc-", ""))
-    return (assembled
-            .select("doc_id", doc_iri.alias("subj"),
-                    F.explode("media_refs").alias("obj_value"))
-            .select("doc_id", F.lit("@default").alias("graph"), "subj",
-                    F.lit(ASSOCIATED_MEDIA).alias("pred"),
-                    F.lit("iri").alias("obj_kind"), "obj_value",
-                    F.lit(None).cast("string").alias("obj_datatype"),
-                    F.lit(None).cast("string").alias("obj_lang")))

@@ -152,14 +152,10 @@ def test_minhash_eager_and_lazy_cut_agree(spark):
     eager = {(r.id_a, r.id_b) for r in
              minhash_candidate_pairs(docs, shingle_len=5, num_hashes=16,
                                      bands=4).collect()}
-    lazy_df, sigs = minhash_candidate_pairs(docs, shingle_len=5,
-                                            num_hashes=16, bands=4,
-                                            eager_cut=False)
-    # transformations no longer lose the unpersist handle (it's an
-    # explicit tuple member, not a monkey-patched attribute)
+    lazy_df = minhash_candidate_pairs(docs, shingle_len=5, num_hashes=16,
+                                      bands=4)
     lazy = {(r.id_a, r.id_b) for r in
             lazy_df.where(F.lit(True)).collect()}
-    sigs.unpersist()
     assert eager == lazy and len(eager) > 0
 
 

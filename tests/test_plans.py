@@ -650,3 +650,41 @@ def test_optional_correlated_filter_is_equi_join_with_residual(spark):
     plan = _plan(q)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+_PYTHON_EVAL = re.compile(
+    r"^(BatchEvalPython|ArrowEvalPython|\w*MapInArrow|\w*MapInPandas|"
+    r"FlatMapGroupsIn|FlatMapCoGroupsIn|AggregateInPandas|WindowInPandas)")
+
+
+def _python_eval_nodes(df) -> int:
+    """Python-eval nodes in ``df``'s final executed plan, entering
+    adaptive plans and query stages but not cached or checkpointed
+    relations (their work ran when they were stored)."""
+    df.collect()
+    n, stack = 0, [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        n += bool(_PYTHON_EVAL.match(name))
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return n
+
+
+@pytest.mark.parametrize("name", ["bgp_star", "sparql_text",
+                                  "rdfs_entail", "graph_degrees"])
+def test_fan_out_operators_materialize_their_input(spark, name):
+    """These rows pass the lazy extraction straight to an operator that
+    reads it in several branches. The operator materializes it once
+    (``session.reuse``), so the final plan reads a checkpoint and runs
+    no Python: the extraction ran once, inside the operator."""
+    q = E.queries()[name](spark, SF_SMALL)
+    assert _python_eval_nodes(q) == 0
+    assert "Scan ExistingRDD" in _plan(q)

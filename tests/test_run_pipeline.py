@@ -126,10 +126,10 @@ def test_run_pipeline_checkpoints_under_output(spark, tmp_path, capsys,
     seen = []
     real_cut = session.cut_lineage
 
-    def spy(df, eager=True):
+    def spy(df):
         d = df.sparkSession.sparkContext._jsc.sc().getCheckpointDir()
         seen.append(d.get() if d.isDefined() else None)
-        return real_cut(df, eager)
+        return real_cut(df)
 
     monkeypatch.setattr(session, "cut_lineage", spy)
     capsys.readouterr()
