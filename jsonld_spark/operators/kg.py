@@ -11,14 +11,19 @@ re-expressed Spark-first here:
   pushed-down parquet filters (partition pruning when the table is
   partitioned by predicate, the standard warehouse layout), join order
   and broadcast-vs-shuffle are AQE's call per pattern selectivity.
-  A SPARQL group compiles through ONE group compiler (``_compile``):
-  the pattern-join loop with its constant gates, solution joins,
-  OPTIONAL, VALUES, BIND, [NOT] EXISTS, MINUS and FILTER. Every nested
-  group body (OPTIONAL / [NOT] EXISTS / MINUS / expression-EXISTS, in
-  any entry form) is normalised by ``_group`` and compiled by the same
-  code, then joined by one of three joins: the null-mask compatibility
-  join (left / semi / anti / minus, with correlated filters as its
-  residual), the marker join (EXISTS as a value), or the VALUES join.
+  A SPARQL group graph pattern is one node, ``Group``, which both
+  front ends build: the SPARQL text parser directly, ``bgp_match`` /
+  ``bgp_union`` / ``construct`` from their entry forms through one
+  normaliser (``_as_group``). One evaluator, ``_compile``, turns it
+  into solutions: the pattern-join loop with its constant gates,
+  solution joins (subqueries, and UNION blocks beside other members),
+  OPTIONAL, VALUES, BIND, [NOT] EXISTS, MINUS and FILTER. A UNION is a
+  list of branch Groups wherever it appears, evaluated by ``_union``.
+  Every nested body (OPTIONAL / [NOT] EXISTS / MINUS / expression-
+  EXISTS) is compiled by the same code, then joined by one of three
+  joins: the null-mask compatibility join (left / semi / anti / minus,
+  with correlated filters as its residual), the marker join (EXISTS
+  as a value), or the VALUES join.
 * ``rdfs_closure`` — the ontology (schema) is corpus-INDEPENDENT and
   small (10^3-10^5 rows for real ontologies), so its transitive
   closure is computed once driver-side and applied to the 100 TB fact
@@ -30,7 +35,8 @@ re-expressed Spark-first here:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import re
+from dataclasses import dataclass, field, fields
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -39,59 +45,194 @@ from ..session import local_frame, reuse
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
-# every key a group-entry dict (optional= / not_exists= / exists= /
-# minus= parameter forms) may carry; anything else raises. Without
-# this, a front-end compile gap — e.g. an un-compiled 'subqueries'
-# AST list riding in an entry — would be silently IGNORED, turning a
-# missing feature into wrong results instead of an error (exactly the
-# bug a review pass found in round 5).
-_GROUP_ENTRY_KEYS = frozenset((
+
+@dataclass(eq=False)
+class Group:
+    """One SPARQL group graph pattern: the node both front ends build
+    and ``_compile`` evaluates. The SPARQL text parser builds it
+    directly; ``bgp_match``, ``bgp_union`` and ``construct`` build it
+    from their entry forms through ``_as_group``.
+
+    A UNION is a list of branch Groups (patterns plus branch-scoped
+    filters) wherever it appears. When one UNION is a group's only
+    binding member (FILTERs and BINDs may follow) it seeds the group's
+    solutions; any other UNION block joins them like a subquery.
+    ``subqueries`` holds the text front end's subquery ASTs, which it
+    compiles into ``solution_joins`` before evaluation. A Group equals
+    any entry form that normalises to it."""
+    patterns: list[tuple] = field(default_factory=list)
+    filters: list[str] = field(default_factory=list)
+    optional: list[Group] = field(default_factory=list)
+    not_exists: list[Group] = field(default_factory=list)
+    exists: list[Group] = field(default_factory=list)
+    minus: list[Group] = field(default_factory=list)
+    values: list[dict] = field(default_factory=list)
+    binds: list[tuple[str, str]] = field(default_factory=list)
+    # FILTERs whose expression embeds [NOT] EXISTS: {'expr': sql,
+    # 'markers': [(column, Group, negated), ...]}
+    filter_exists: list[dict] = field(default_factory=list)
+    unions: list[list[Group]] = field(default_factory=list)
+    # {'df': DataFrame, 'nullable': set, 'allow_disjoint': bool}
+    solution_joins: list[dict] = field(default_factory=list)
+    subqueries: list = field(default_factory=list)
+
+    def __eq__(self, other) -> bool:
+        if not isinstance(other, Group):
+            try:
+                other = _as_group(other, "comparison")
+            except (TypeError, ValueError, KeyError, IndexError):
+                return NotImplemented
+        return all(getattr(self, f.name) == getattr(other, f.name)
+                   for f in fields(self))
+
+    def seed_union(self) -> list[Group] | None:
+        """The branches when one UNION is the group's only binding
+        member (FILTERs and BINDs may follow), else None."""
+        rest = (self.patterns, self.optional, self.not_exists,
+                self.exists, self.minus, self.values, self.filter_exists,
+                self.solution_joins, self.subqueries)
+        return self.unions[0] if len(self.unions) == 1 \
+            and not any(rest) else None
+
+    @property
+    def union_branches(self) -> list[Group] | None:
+        """The branches when the group is one UNION and nothing else."""
+        return None if self.filters or self.binds else self.seed_union()
+
+    @property
+    def union_branch_filters(self) -> list[list[str]] | None:
+        branches = self.union_branches
+        return None if branches is None else [b.filters for b in branches]
+
+    @property
+    def inline_unions(self) -> list[list[Group]]:
+        """UNION blocks mixed with other group members."""
+        return [] if self.union_branches is not None else self.unions
+
+    def vars(self) -> set[str]:
+        """Every variable the group can bind: its patterns, UNION
+        branches, nested OPTIONALs, BINDs, VALUES and solution joins.
+        [NOT] EXISTS / MINUS bodies bind nothing outward."""
+        vs = _pattern_tuple_vars(self.patterns)
+        for grp in [b for block in self.unions for b in block] \
+                + self.optional:
+            vs |= grp.vars()
+        vs |= {v for v, _ in self.binds}
+        vs |= {v for row in self.values for v in row}
+        for sj in self.solution_joins:
+            vs |= set(sj["df"].columns)
+        return vs
+
+    def nullable(self) -> set[str]:
+        """Variables the group may leave unbound: not bound by every
+        branch of a UNION, or bound outside the required patterns only
+        by an OPTIONAL, an UNDEF-able VALUES cell or a BIND (other than
+        a rename of a required variable)."""
+        req = _pattern_tuple_vars(self.patterns)
+        nul: set[str] = set()
+        for block in self.unions:
+            per = [b.vars() for b in block]
+            nul |= set.union(*per) - set.intersection(*per)
+        for grp in self.optional:
+            nul |= grp.vars()
+        for v, expr in self.binds:
+            m = re.fullmatch(r"`(\w+)`", expr.strip())
+            if m is None or m.group(1) not in req:
+                nul.add(v)
+        nul |= {v for row in self.values for v, val in row.items()
+                if val is None}
+        return nul - req
+
+    def refs(self) -> set[str]:
+        """Every variable the group binds or reads: ``vars()`` plus
+        the identifiers of its filters, branch filters and BIND
+        expressions, through nested [NOT] EXISTS / MINUS bodies."""
+        vs = self.vars()
+        for expr in self.filters + [e for _, e in self.binds] + [
+                f for block in self.unions for b in block
+                for f in b.filters]:
+            vs |= _expr_identifiers(expr)
+        for grp in self.not_exists + self.exists + self.minus:
+            vs |= grp.refs()
+        return vs
+
+    def walk(self):
+        """This group and every group nested in it."""
+        yield self
+        for grp in (self.optional + self.not_exists + self.exists
+                    + self.minus
+                    + [b for block in self.unions for b in block]
+                    + [m[1] for fe in self.filter_exists
+                       for m in fe["markers"]]):
+            yield from grp.walk()
+
+
+# every key a dict entry may carry, and the subset a union entry may;
+# anything else raises, so a key the evaluator does not know (e.g. an
+# un-compiled 'subqueries' AST list) fails loudly instead of being
+# silently ignored
+_ENTRY_KEYS = frozenset((
     "patterns", "filters", "union", "branch_filters", "binds",
     "optional", "not_exists", "exists", "minus", "values",
     "solution_joins"))
-
-
 _UNION_ENTRY_KEYS = frozenset(
     ("union", "filters", "branch_filters", "binds"))
 
 
-def _check_entry_keys(entry, where: str) -> None:
-    if isinstance(entry, dict):
-        unknown = sorted(set(entry) - _GROUP_ENTRY_KEYS)
-        if unknown:
+def _as_group(entry, where: str) -> Group:
+    """The one normaliser from the Python entry forms ``bgp_match``
+    documents — a pattern tuple, a pattern list, a body dict or a union
+    dict — to a Group."""
+    if isinstance(entry, Group):
+        return entry
+    if not isinstance(entry, dict):
+        return Group(patterns=list(entry if not entry or isinstance(
+            entry[0], (list, tuple)) else [entry]))
+    unknown = sorted(set(entry) - _ENTRY_KEYS)
+    if unknown:
+        raise ValueError(
+            f"{where}: unknown group-entry key(s) {unknown} — "
+            f"supported keys are {sorted(_ENTRY_KEYS)}; an un-compiled "
+            "'subqueries' AST list must be compiled into "
+            "'solution_joins' first (the SPARQL front-end does "
+            "this; direct callers pass solution-join dicts)")
+    if "union" in entry and set(entry) - _UNION_ENTRY_KEYS:
+        raise ValueError(
+            f"{where}: a 'union' entry cannot also carry "
+            f"{sorted(set(entry) - _UNION_ENTRY_KEYS)} — a union body "
+            f"takes only {sorted(_UNION_ENTRY_KEYS)}; wrap the union in "
+            "its own group or lift the other members")
+    if "branch_filters" in entry:
+        nb = len(entry.get("union") or [])
+        if len(entry["branch_filters"]) != nb:
             raise ValueError(
-                f"{where}: unknown group-entry key(s) {unknown} — "
-                "supported keys are "
-                f"{sorted(_GROUP_ENTRY_KEYS)}; an un-compiled "
-                "'subqueries' AST list must be compiled into "
-                "'solution_joins' first (the SPARQL front-end does "
-                "this; direct callers pass solution-join dicts)")
-        if "union" in entry:
-            # a union-body entry takes only union-compatible keys —
-            # coexisting 'patterns'/'optional'/negation keys would be
-            # silently IGNORED by the union dispatch otherwise
-            extra = sorted(set(entry) - _UNION_ENTRY_KEYS)
-            if extra:
-                raise ValueError(
-                    f"{where}: a 'union' entry cannot also carry "
-                    f"{extra} — a union body takes only "
-                    f"{sorted(_UNION_ENTRY_KEYS)}; wrap the union in "
-                    "its own group or lift the other members")
-        if "branch_filters" in entry:
-            nb = len(entry.get("union") or [])
-            if len(entry["branch_filters"]) != nb:
-                raise ValueError(
-                    f"{where}: branch_filters has "
-                    f"{len(entry['branch_filters'])} entries for "
-                    f"{nb} union branches — they must parallel")
-        if "union" not in entry and "patterns" not in entry:
-            # every non-union dict entry needs the key, even as an
-            # empty list (solution_joins seeding a pattern-less
-            # group) — a bare KeyError here would be an untyped crash
-            raise ValueError(
-                f"{where}: a group-entry dict needs a 'patterns' key "
-                "(an empty list is legal when solution_joins seed "
-                "the group)")
+                f"{where}: branch_filters has "
+                f"{len(entry['branch_filters'])} entries for "
+                f"{nb} union branches — they must parallel")
+    if "union" in entry:
+        bfs = entry.get("branch_filters") or [[] for _ in entry["union"]]
+        return Group(
+            unions=[[Group(patterns=list(b), filters=list(fl or []))
+                     for b, fl in zip(entry["union"], bfs)]],
+            filters=list(entry.get("filters") or []),
+            binds=list(entry.get("binds") or []))
+    if "patterns" not in entry:
+        raise ValueError(
+            f"{where}: a group-entry dict needs a 'patterns' key "
+            "(an empty list is legal when solution_joins seed "
+            "the group)")
+    return Group(
+        patterns=list(entry["patterns"] or []),
+        filters=list(entry.get("filters") or []),
+        values=list(entry.get("values") or []),
+        binds=list(entry.get("binds") or []),
+        solution_joins=[{"df": e} if isinstance(e, DataFrame) else e
+                        for e in entry.get("solution_joins") or []],
+        **{k: [_as_group(e, f"{k} group {i}")
+               for i, e in enumerate(entry.get(k) or [])]
+           for k in ("optional", "not_exists", "exists", "minus")})
+
+
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 SUB_CLASS = RDFS + "subClassOf"
 SUB_PROP = RDFS + "subPropertyOf"
@@ -240,65 +381,9 @@ def _pattern_tuple_vars(pats) -> set[str]:
             if isinstance(t, str) and t.startswith("?")}
 
 
-def _group_entry_vars(entry) -> set[str]:
-    """Every variable a [NOT] EXISTS / EXISTS / MINUS group entry
-    references — pattern variables plus group-filter identifiers,
-    recursing through nested-body keys (inner negations, BINDs,
-    VALUES, inner OPTIONALs). Entry forms mirror the ``not_exists=``
-    parameter: a pattern list, a ``{'patterns', 'filters'}`` dict
-    (optionally with nested-body keys), or a ``{'union': ...}``
-    dict."""
-    if isinstance(entry, dict):
-        if "union" in entry:
-            pats = [p for branch in entry["union"] for p in branch]
-        else:
-            pats = entry.get("patterns", [])
-        vs = _pattern_tuple_vars(pats)
-        for fexpr in entry.get("filters", []):
-            vs |= _expr_identifiers(fexpr)
-        for bfl in entry.get("branch_filters", []):
-            for fexpr in bfl:
-                vs |= _expr_identifiers(fexpr)
-        for k in ("not_exists", "exists", "minus"):
-            for inner in entry.get(k, []):
-                vs |= _group_entry_vars(inner)
-        for bv, bexpr in entry.get("binds", []):
-            vs |= {bv} | _expr_identifiers(bexpr)
-        for row in entry.get("values", []):
-            vs |= set(row)
-        for inner in entry.get("optional", []):
-            vs |= _optional_entry_vars(inner)
-        for sj in entry.get("solution_joins", []):
-            sjdf = sj["df"] if isinstance(sj, dict) else sj
-            vs |= set(sjdf.columns)
-        return vs
-    if entry and isinstance(entry[0], (list, tuple)):
-        return _pattern_tuple_vars(entry)
-    return _pattern_tuple_vars([entry])
-
-
-def _optional_entry_vars(entry) -> set[str]:
-    """Every variable an ``optional=`` entry can BIND — through its
-    patterns, UNION branches, nested OPTIONALs (recursively), group
-    BINDs, and VALUES rows. (Negation groups bind nothing.)"""
-    if isinstance(entry, dict):
-        vs: set[str] = set()
-        if "union" in entry:
-            vs |= _pattern_tuple_vars(
-                [p for branch in entry["union"] for p in branch])
-        vs |= _pattern_tuple_vars(entry.get("patterns", []))
-        for inner in entry.get("optional", []):
-            vs |= _optional_entry_vars(inner)
-        vs |= {v for v, _ in entry.get("binds", [])}
-        for row in entry.get("values", []):
-            vs |= set(row)
-        for sj in entry.get("solution_joins", []):
-            sjdf = sj["df"] if isinstance(sj, dict) else sj
-            vs |= set(sjdf.columns)
-        return vs
-    if entry and isinstance(entry[0], (list, tuple)):
-        return _pattern_tuple_vars(entry)
-    return _pattern_tuple_vars([entry])
+# a single- or double-quoted SQL string literal: splitting an
+# expression on it leaves the code at the even indexes
+_LITERAL_RE = re.compile(r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")")
 
 
 def _expr_identifiers(expr: str) -> set[str]:
@@ -314,16 +399,12 @@ def _expr_identifiers(expr: str) -> set[str]:
     would log a spurious ERROR for the expected path. A backticked
     name is always taken verbatim — callers quoting `date` as a
     variable get the right answer."""
-    import re as _re
     ids: set[str] = set()
-    parts = _re.split(
-        r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")", expr)
-    for j in range(0, len(parts), 2):
-        s = parts[j]
-        ids |= set(_re.findall(r"`([^`]+)`", s))
-        s = _re.sub(r"`[^`]*`", " ", s)
-        s = _re.sub(r"(?i)\bas\s+\w+(\s*\(\s*\d+[\d\s,]*\))?", " ", s)
-        ids |= {w for m in _re.finditer(
+    for s in _LITERAL_RE.split(expr)[0::2]:
+        ids |= set(re.findall(r"`([^`]+)`", s))
+        s = re.sub(r"`[^`]*`", " ", s)
+        s = re.sub(r"(?i)\bas\s+\w+(\s*\(\s*\d+[\d\s,]*\))?", " ", s)
+        ids |= {w for m in re.finditer(
                     r"\b([A-Za-z_]\w*)\b(?!\s*\()", s)
                 if (w := m.group(1)).lower() not in _SQL_WORDS}
     return ids
@@ -335,14 +416,12 @@ def _rewrite_refs(expr: str, mapping: dict[str, str]) -> str:
     or double-quoted string literals. Used to point a correlated group
     filter's group-variable references at the join's renamed right
     side."""
-    import re as _re
-    parts = _re.split(
-        r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")", expr)
+    parts = _LITERAL_RE.split(expr)
     for j in range(0, len(parts), 2):
         s = parts[j]
         for old, new in mapping.items():
             s = s.replace(f"`{old}`", f"`{new}`")
-            s = _re.sub(rf"(?<![\w`]){_re.escape(old)}(?![\w`])", new, s)
+            s = re.sub(rf"(?<![\w`]){re.escape(old)}(?![\w`])", new, s)
         parts[j] = s
     return "".join(parts)
 
@@ -356,9 +435,7 @@ def _null_refs(expr: str, names: set[str]) -> str:
     (``error || true = true``, ``error && x`` never true,
     ``COALESCE`` skips the error, ``BOUND`` is false), so
     error-absorbing expressions keep their non-erroring branches."""
-    import re as _re
-    parts = _re.split(
-        r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")", expr)
+    parts = _LITERAL_RE.split(expr)
     for j in range(0, len(parts), 2):
         s = parts[j]
         for n in names:
@@ -367,8 +444,8 @@ def _null_refs(expr: str, names: set[str]) -> str:
             # by '(' is a SQL function whose name happens to equal the
             # variable (e.g. outer var ?abs vs abs(...)) — backticked
             # references already disambiguate the variable case
-            s = _re.sub(
-                rf"(?<![\w`]){_re.escape(n)}(?![\w`])(?!\s*\()",
+            s = re.sub(
+                rf"(?<![\w`]){re.escape(n)}(?![\w`])(?!\s*\()",
                 "NULL", s)
         parts[j] = s
     return "".join(parts)
@@ -416,7 +493,9 @@ def bgp_match(triples: DataFrame, patterns: list[tuple[str, str, str]],
               filter_exists: list[dict] | None = None) -> DataFrame:
     """Match a SPARQL group graph pattern over the triples frame.
     Returns one column per variable (first-appearance order), one row
-    per solution.
+    per solution. This is the Python front end of ``Group``: the
+    arguments are a group's members, normalised by ``_as_group`` and
+    evaluated by ``_compile`` exactly as a parsed SPARQL group is.
 
     ``patterns`` — (subject, predicate, object) terms; a term starting
     with ``?`` is a variable, anything else a constant. A 4-tuple
@@ -431,6 +510,7 @@ def bgp_match(triples: DataFrame, patterns: list[tuple[str, str, str]],
     Group entries. ``optional``, ``not_exists``, ``exists`` and
     ``minus`` take lists of group entries, each one of:
 
+    * a ``Group``;
     * a pattern tuple, or a list of pattern tuples (a group evaluated
       as a unit: its patterns inner-join, then the group joins);
     * a body dict ``{'patterns': [...], 'filters': [...], 'binds':
@@ -502,20 +582,19 @@ def bgp_match(triples: DataFrame, patterns: list[tuple[str, str, str]],
     if sum(len(e or ()) for e in entries) > 1:
         # each pattern and group entry reads the triples once
         triples = reuse(triples)
-    out, *_ = _compile(
-        triples, {"patterns": patterns, "optional": optional,
-                  "not_exists": not_exists, "exists": exists,
-                  "minus": minus, "filters": filters, "values": values,
-                  "binds": binds, "solution_joins": solution_joins,
-                  "filter_exists": filter_exists},
-        (s_col, p_col, o_col, g_col), set(), "query",
-        set(meta_vars or ()), top=True, distinct=distinct_solutions)
-    return out
-
-
-#: body keys that make a group more than patterns + BINDs + FILTERs
-_BODY_KEYS = ("optional", "not_exists", "exists", "minus", "values",
-              "solution_joins")
+    g = _as_group({"patterns": patterns, "optional": optional,
+                   "not_exists": not_exists, "exists": exists,
+                   "minus": minus, "filters": filters, "values": values,
+                   "binds": binds, "solution_joins": solution_joins},
+                  "query")
+    g.filter_exists = [
+        {"expr": fe["expr"],
+         "markers": [(name, _as_group(e, f"EXISTS marker {name}"), neg)
+                     for name, e, neg in fe["markers"]]}
+        for fe in filter_exists or []]
+    return _compile(triples, g, (s_col, p_col, o_col, g_col), set(),
+                    "query", set(meta_vars or ()), top=True,
+                    distinct=distinct_solutions)[0]
 
 
 def _join_patterns(triples: DataFrame, patterns: list, pos_cols: tuple,
@@ -559,38 +638,37 @@ def _join_patterns(triples: DataFrame, patterns: list, pos_cols: tuple,
     return out, bound, mcols, gates
 
 
-def _compile(triples: DataFrame, body: dict, pos_cols: tuple,
+def _compile(triples: DataFrame, g: Group, pos_cols: tuple,
              outer: set, where: str, meta: set, top: bool = False,
              distinct: bool = False):
-    """Compile one group body (the keys ``bgp_match`` documents) to
-    (solutions, variables, nullable variables, metadata columns,
-    correlated filters). The same code compiles the top-level query
-    (``top``) and, recursively through ``_group``, every OPTIONAL /
-    [NOT] EXISTS / MINUS / expression-EXISTS body. ``outer`` holds the
-    enclosing solutions' variables: a filter referencing one is
-    correlated and returned unapplied. ``meta`` holds the pending
-    term-metadata requests; patterns serving one remove it."""
+    """Evaluate one Group to (solutions, variables, nullable variables,
+    metadata columns, correlated filters). This is the only evaluator:
+    the same code compiles a query's group (``top``), every UNION
+    branch and, through ``_nested``, every OPTIONAL / [NOT] EXISTS /
+    MINUS / expression-EXISTS body. ``outer`` holds the enclosing
+    solutions' variables: a filter referencing one is correlated and
+    returned unapplied. ``meta`` holds the pending term-metadata
+    requests; patterns serving one remove it."""
     nullable: set[str] = set()
     gates: list[DataFrame] = []
-    settle = top or any(body.get(k) for k in _BODY_KEYS)
-    if "union" in body:
-        per = [_pattern_tuple_vars(b) for b in body["union"]]
-        uvars = set.union(*per)
-        served = meta & uvars
-        meta.difference_update(served)
-        out = bgp_union(triples, body["union"], *pos_cols, distinct=False,
-                        branch_filters=body.get("branch_filters"),
-                        meta_vars=served or None)
-        bound = [c for c in out.columns if c in uvars]
-        mcols = [c for c in out.columns if c not in uvars]
-        nullable = uvars - set.intersection(*per)
+    seed = g.seed_union()
+    settle = seed is None and (top or any((
+        g.optional, g.not_exists, g.exists, g.minus, g.values,
+        g.solution_joins, g.unions)))
+    if seed is not None:
+        out, bound, mcols, nullable = _union(triples, seed, pos_cols,
+                                             distinct, meta)
     else:
-        sjoins = [{"df": e} if isinstance(e, DataFrame) else e
-                  for e in body.get("solution_joins") or []]
-        if not body.get("patterns") and not sjoins:
+        # a UNION beside other members joins like a subquery:
+        # Join(Union(A, B), rest of the group)
+        sjoins = list(g.solution_joins)
+        for block in g.unions:
+            udf, _, _, unul = _union(triples, block, pos_cols, True, set())
+            sjoins.append({"df": udf, "nullable": unul})
+        if not g.patterns and not sjoins:
             raise ValueError(f"{where}: empty pattern list")
         out, bound, mcols, gates = _join_patterns(
-            triples, body.get("patterns") or [], pos_cols, where, meta)
+            triples, g.patterns, pos_cols, where, meta)
         if out is None and not sjoins and top:
             raise ValueError(
                 "all patterns are constant — use ask() for a pure "
@@ -634,19 +712,18 @@ def _compile(triples: DataFrame, body: dict, pos_cols: tuple,
             # every pattern constant: the gates' cross product binds
             # nothing — callers decide what a variable-free group means
             out, gates = gates[0], gates[1:]
-            for g in gates:
-                out = out.crossJoin(g)
+            for gate in gates:
+                out = out.crossJoin(gate)
             gates = []
-    for g in gates:
-        out = out.crossJoin(g).drop(g.columns[0])
+    for gate in gates:
+        out = out.crossJoin(gate).drop(gate.columns[0])
 
-    for i, entry in enumerate(body.get("optional") or []):
+    for i, entry in enumerate(g.optional):
         w = f"optional group {i}"
-        _check_entry_keys(entry, w)
-        if not _optional_entry_vars(entry):
+        if not entry.vars():
             # LeftJoin(Ω, {μ0}) = LeftJoin(Ω, ∅) = Ω
             continue
-        step, gvars, gnull, gmeta, corr = _group(
+        step, gvars, gnull, gmeta, corr = _nested(
             triples, entry, pos_cols, set(bound), w, meta)
         shared = [v for v in gvars if v in bound]
         if not shared:
@@ -676,15 +753,14 @@ def _compile(triples: DataFrame, body: dict, pos_cols: tuple,
         bound += new
         nullable |= set(new)
         mcols += gmeta
-    if body.get("values"):
-        rows = body["values"]
-        out = _values_join(out, rows, nullable)
-        new = [v for v in dict.fromkeys(v for r in rows for v in r)
+    if g.values:
+        out = _values_join(out, g.values, nullable)
+        new = [v for v in dict.fromkeys(v for r in g.values for v in r)
                if v not in bound]
         bound += new
         nullable |= {v for v in new
-                     if any(r.get(v) is None for r in rows)}
-    for var, expr in body.get("binds") or []:
+                     if any(r.get(v) is None for r in g.values)}
+    for var, expr in g.binds:
         if var in bound:
             raise ValueError(
                 f"{where}: BIND would rebind {var!r} — SPARQL forbids "
@@ -696,10 +772,10 @@ def _compile(triples: DataFrame, body: dict, pos_cols: tuple,
 
     for kind, how in (("not_exists", "anti"), ("exists", "semi"),
                       ("minus", "minus")):
-        for gi, entry in enumerate(body.get(kind) or []):
+        for gi, entry in enumerate(getattr(g, kind)):
             w = f"{kind} group {gi}"
             entries = [entry]
-            if isinstance(entry, dict) and "union" in entry:
+            if entry.seed_union() is not None:
                 # NOT EXISTS and MINUS distribute over UNION; EXISTS
                 # over UNION is an OR of the branches: a marker join
                 entries = _expand_union_group(entry, set(bound), w)
@@ -711,7 +787,7 @@ def _compile(triples: DataFrame, body: dict, pos_cols: tuple,
                     continue
             for bi, e in enumerate(entries):
                 wb = f"{w} (UNION branch {bi})" if len(entries) > 1 else w
-                inner, gvars, _, _, corr = _group(
+                inner, gvars, _, _, corr = _nested(
                     triples, e, pos_cols, set(bound), wb, None)
                 on = [v for v in gvars if v in bound]
                 if kind == "minus":
@@ -733,7 +809,7 @@ def _compile(triples: DataFrame, body: dict, pos_cols: tuple,
             "required or OPTIONAL triple pattern")
     if settle:
         out = out.select(*bound, *mcols)
-    for fe in body.get("filter_exists") or []:
+    for fe in g.filter_exists:
         names: list[str] = []
         for name, gentry, neg in fe["markers"]:
             if name in bound:
@@ -741,9 +817,8 @@ def _compile(triples: DataFrame, body: dict, pos_cols: tuple,
                     f"EXISTS marker column {name!r} collides with a "
                     "query variable — rename the variable")
             w = f"EXISTS inside FILTER expression {fe['expr']!r}"
-            entries = _expand_union_group(gentry, set(bound), w) \
-                if isinstance(gentry, dict) and "union" in gentry \
-                else [gentry]
+            entries = [gentry] if gentry.seed_union() is None \
+                else _expand_union_group(gentry, set(bound), w)
             flags = [f"{name}_b{bi}" for bi in range(len(entries))]
             out, cond = _marker_join(triples, pos_cols, out, bound,
                                      nullable, entries, flags, w)
@@ -751,7 +826,7 @@ def _compile(triples: DataFrame, body: dict, pos_cols: tuple,
             names.append(name)
         out = out.where(F.expr(fe["expr"])).drop(*names)
     correlated: list[str] = []
-    for fexpr in body.get("filters") or []:
+    for fexpr in g.filters:
         if any(x in outer and x not in bound
                for x in _expr_identifiers(fexpr)):
             correlated.append(fexpr)
@@ -760,48 +835,41 @@ def _compile(triples: DataFrame, body: dict, pos_cols: tuple,
     return out, bound, nullable, mcols, correlated
 
 
-def _group(triples: DataFrame, entry, pos_cols: tuple, outer: set,
-           where: str, meta: set | None):
-    """Normalise a group entry — a pattern tuple, a pattern list, a
-    body dict or a union dict — and compile it with ``_compile``.
-    ``meta`` is the caller's pending metadata requests for an OPTIONAL
-    body, whose variables flow out. ``None`` marks a [NOT] EXISTS /
-    MINUS / expression-EXISTS body: it binds nothing outward, so it
-    serves the metadata its own filters read, and under SPARQL's
-    substitution a variable shared with the outer solutions must be
-    bound by a required body pattern."""
-    _check_entry_keys(entry, where)
-    if not isinstance(entry, dict):
-        entry = {"patterns": entry if not entry or isinstance(
-            entry[0], (list, tuple)) else [entry]}
-    _refuse_outer_refs(entry, outer, where)
+def _nested(triples: DataFrame, g: Group, pos_cols: tuple, outer: set,
+            where: str, meta: set | None):
+    """Compile a nested group body with ``_compile``. ``meta`` is the
+    caller's pending metadata requests for an OPTIONAL body, whose
+    variables flow out. ``None`` marks a [NOT] EXISTS / MINUS /
+    expression-EXISTS body: it binds nothing outward, so it serves the
+    metadata its own filters read, and under SPARQL's substitution a
+    variable shared with the outer solutions must be bound by a
+    required body pattern."""
+    _refuse_outer_refs(g, outer, where)
     if meta is None:
-        _refuse_unsubstituted(entry, outer, where)
-        meta = {x[: -len(sfx)] for f in entry.get("filters", [])
+        _refuse_unsubstituted(g, outer, where)
+        meta = {x[: -len(sfx)] for f in g.filters
                 for x in _expr_identifiers(f)
                 for sfx in META_SUFFIXES if x.endswith(sfx)}
-    return _compile(triples, entry, pos_cols, outer, where, meta)
+    return _compile(triples, g, pos_cols, outer, where, meta)
 
 
-def _refuse_outer_refs(entry: dict, outer: set, where: str) -> None:
+def _refuse_outer_refs(g: Group, outer: set, where: str) -> None:
     """A group body's nested members — BINDs, [NOT] EXISTS / MINUS
     members, inner-OPTIONAL filters at any depth — see only the
     group's own variables: an outer reference there would need a
     conditional join. Refuse it typed, before compiling would die on
     an unresolved column."""
-    gvars = _optional_entry_vars(entry)
-    refs = [(f"BIND {e!r}", _expr_identifiers(e))
-            for _v, e in entry.get("binds", [])]
-    refs += [(k.upper(), _group_entry_vars(m))
+    gvars = g.vars()
+    refs = [(f"BIND {e!r}", _expr_identifiers(e)) for _v, e in g.binds]
+    refs += [(k.upper(), m.refs())
              for k in ("not_exists", "exists", "minus")
-             for m in entry.get(k, [])]
-    inner = list(entry.get("optional", []))
+             for m in getattr(g, k)]
+    inner = list(g.optional)
     while inner:
         ie = inner.pop()
-        if isinstance(ie, dict):
-            refs += [(f"inner-OPTIONAL filter {f!r}", _expr_identifiers(f))
-                     for f in ie.get("filters", [])]
-            inner += ie.get("optional", [])
+        refs += [(f"inner-OPTIONAL filter {f!r}", _expr_identifiers(f))
+                 for f in ie.filters]
+        inner += ie.optional
     for what, names in refs:
         bad = sorted((names & outer) - gvars)
         if bad:
@@ -812,7 +880,7 @@ def _refuse_outer_refs(entry: dict, outer: set, where: str) -> None:
                 "conditional join)")
 
 
-def _refuse_unsubstituted(entry: dict, outer: set, where: str) -> None:
+def _refuse_unsubstituted(g: Group, outer: set, where: str) -> None:
     """[NOT] EXISTS / MINUS bodies are evaluated under SUBSTITUTION: an
     outer-bound variable is a constant inside the body. The plan joins
     on the shared variables instead, which is equivalent only when the
@@ -820,18 +888,7 @@ def _refuse_unsubstituted(entry: dict, outer: set, where: str) -> None:
     binds only through an inner OPTIONAL, a non-rename BIND, an
     UNDEF-able VALUES cell or a subquery (substitution does not descend
     into subqueries) would diverge — refuse it typed."""
-    req = _pattern_tuple_vars(entry.get("patterns", []))
-    soft: set[str] = set()
-    for oentry in entry.get("optional", []):
-        soft |= _optional_entry_vars(oentry)
-    for row in entry.get("values", []):
-        soft |= {v for v, val in row.items() if val is None}
-    import re as _re
-    for bv, bexpr in entry.get("binds", []):
-        m = _re.fullmatch(r"`(\w+)`", bexpr.strip())
-        if m is None or m.group(1) not in req:
-            soft.add(bv)
-    bad = sorted((soft - req) & outer)
+    bad = sorted(g.nullable() & outer)
     if bad:
         raise ValueError(
             f"{where}: variable(s) {bad} are shared with the outer "
@@ -839,9 +896,9 @@ def _refuse_unsubstituted(entry: dict, outer: set, where: str) -> None:
             "BIND / an UNDEF-able VALUES — substitution semantics would "
             "need a conditional join; bind them in a required body "
             "pattern or rename them")
-    for sj in entry.get("solution_joins", []):
-        sjdf = sj["df"] if isinstance(sj, dict) else sj
-        bad = sorted((set(sjdf.columns) - req) & outer)
+    req = _pattern_tuple_vars(g.patterns)
+    for sj in g.solution_joins:
+        bad = sorted((set(sj["df"].columns) - req) & outer)
         if bad:
             raise ValueError(
                 f"{where}: variable(s) {bad} are shared with the outer "
@@ -860,12 +917,10 @@ def _minus_filters(inner: DataFrame, correlated: list[str],
     the error, BOUND is false). IF()/CASE diverge (an erroring
     condition is an error in SPARQL, the else branch in SQL) and
     refuse."""
-    import re as _re
     for fexpr in correlated:
         refs = {x for x in _expr_identifiers(fexpr) if x in outer_only}
-        code = "".join(_re.split(
-            r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")", fexpr)[0::2])
-        if _re.search(r"(?i)(?<!\w)(?:if\s*\(|case\b)", code):
+        code = "".join(_LITERAL_RE.split(fexpr)[0::2])
+        if re.search(r"(?i)(?<!\w)(?:if\s*\(|case\b)", code):
             raise ValueError(
                 f"{where}: filter {fexpr!r} references outer variables "
                 f"{sorted(refs)} inside an IF()/CASE — SQL's "
@@ -969,7 +1024,7 @@ def _marker_join(triples: DataFrame, pos_cols: tuple, out: DataFrame,
     entry matched" condition)."""
     cond = None
     for entry, flag in zip(entries, flags):
-        inner, gvars, _, _, corr = _group(
+        inner, gvars, _, _, corr = _nested(
             triples, entry, pos_cols, set(bound), where, None)
         if corr:
             raise ValueError(
@@ -1030,20 +1085,18 @@ def _values_join(out: DataFrame, rows: list[dict],
     return j.drop(*[f"_v_{v}" for v in shared]).select(*order)
 
 
-def _expand_union_group(group: dict, outer: set, where: str) -> list:
-    """{'union': [...], 'filters': [...], ...} → one group entry per
-    branch (NOT EXISTS and MINUS distribute over UNION; EXISTS ORs the
-    branches). Filters must reference only variables bound by every
-    branch (or outer variables): distributed into a branch that does
-    not bind the variable, the filter would be a type error → false,
-    silently emptying just that branch. BINDs distribute too (Extend
-    over Union)."""
-    _check_entry_keys(group, where)
-    branches = group["union"]
-    fs = group.get("filters", [])
-    per = [_pattern_tuple_vars(b) for b in branches]
+def _expand_union_group(group: Group, outer: set, where: str) -> list:
+    """A UNION-seeded group → one Group per branch (NOT EXISTS and
+    MINUS distribute over UNION; EXISTS ORs the branches). Filters must
+    reference only variables bound by every branch (or outer
+    variables): distributed into a branch that does not bind the
+    variable, the filter would be a type error → false, silently
+    emptying just that branch. BINDs distribute too (Extend over
+    Union)."""
+    branches = group.seed_union()
+    per = [_pattern_tuple_vars(b.patterns) for b in branches]
     allv, common = set.union(*per), set.intersection(*per)
-    for fexpr in fs:
+    for fexpr in group.filters:
         bad = sorted(x for x in _expr_identifiers(fexpr)
                      if x in allv and x not in common and x not in outer)
         if bad:
@@ -1051,18 +1104,62 @@ def _expand_union_group(group: dict, outer: set, where: str) -> list:
                 f"{where}: filter {fexpr!r} references variable(s) "
                 f"{bad} not bound by every UNION branch — bind them in "
                 "every branch")
-    bfs = group.get("branch_filters") or [[] for _ in branches]
-    bnds = group.get("binds") or []
-    out_entries = []
-    for bi, b in enumerate(branches):
-        if fs or bfs[bi] or bnds:
-            e: dict = {"patterns": b, "filters": fs + bfs[bi]}
-            if bnds:
-                e["binds"] = bnds
-            out_entries.append(e)
-        else:
-            out_entries.append(b)
-    return out_entries
+    return [Group(patterns=b.patterns, filters=group.filters + b.filters,
+                  binds=list(group.binds)) for b in branches]
+
+
+def _union(triples: DataFrame, branches: list[Group], pos_cols: tuple,
+           distinct: bool, meta: set):
+    """Evaluate one UNION block: each branch is its own group, so its
+    own join tree, planned independently (a selective branch still
+    broadcasts when a sibling is large). A variable a branch does not
+    bind is null in its rows (SPARQL's unbound), and the output carries
+    every branch's variables in first-appearance order. The union is a
+    zero-shuffle concatenation; ``distinct`` adds one hash aggregate.
+    A branch FILTER is scoped to its branch, so it may read only the
+    variables the branch binds and the metadata served for them.
+    Serves the requests in ``meta`` that a branch binds: each branch
+    emits the metadata of the variables it binds, and a branch that
+    does not bind one pads null (LANG() of unbound is a type error →
+    NULL). Returns (solutions, variables, metadata columns, nullable
+    variables)."""
+    if not branches:
+        raise ValueError("empty branch list")
+    per = [_pattern_tuple_vars(b.patterns) for b in branches]
+    uvars = set.union(*per)
+    served = meta & uvars
+    meta.difference_update(served)
+    for bi, (b, bv) in enumerate(zip(branches, per)):
+        ok = bv | {f"{v}{sfx}" for v in served & bv
+                   for sfx in META_SUFFIXES}
+        for expr in b.filters:
+            loose = sorted(_expr_identifiers(expr) - ok)
+            if loose:
+                raise ValueError(
+                    f"union branch {bi} filter {expr!r} references "
+                    f"{loose} not bound in that branch — a branch "
+                    "FILTER scopes to its branch group (for "
+                    "LANG()/DATATYPE() pass the var in meta_vars)")
+    if sum(len(b.patterns) for b in branches) > 1:
+        # each branch pattern reads the triples
+        triples = reuse(triples)
+    outs = [_compile(triples, b, pos_cols, set(), "query", served & bv,
+                     top=True, distinct=True)[0]
+            for b, bv in zip(branches, per)]
+    all_vars: list[str] = []
+    for o in outs:
+        all_vars += [v for v in o.columns if v not in all_vars]
+    aligned = [o.select(*[F.col(v) if v in o.columns
+                          else F.lit(None).cast("string").alias(v)
+                          for v in all_vars]) for o in outs]
+    out = aligned[0]
+    for o in aligned[1:]:
+        out = out.unionByName(o)
+    if distinct:
+        out = out.distinct()
+    return (out, [c for c in out.columns if c in uvars],
+            [c for c in out.columns if c not in uvars],
+            uvars - set.intersection(*per))
 
 
 def bgp_union(triples: DataFrame,
@@ -1081,65 +1178,19 @@ def bgp_union(triples: DataFrame,
     FILTER expressions applied to that branch's solutions BEFORE the
     null-padding union — SPARQL scopes a branch FILTER to the branch
     group, so it may reference only branch-bound variables.
+    ``distinct=False`` keeps duplicate solutions (bag semantics).
 
-    Plan shape: each branch is an independent ``bgp_match`` join tree;
-    the union is a zero-shuffle concatenation and the final distinct
-    one hash aggregate. Branch trees are planned independently, so a
-    selective branch still broadcasts even when a sibling is large.
+    Plan shape: each branch is an independent join tree; the union is
+    a zero-shuffle concatenation and the final distinct one hash
+    aggregate. Branch trees are planned independently, so a selective
+    branch still broadcasts even when a sibling is large.
     """
-    if not branches:
-        raise ValueError("empty branch list")
+    entry = {"union": branches}
     if branch_filters is not None:
-        if len(branch_filters) != len(branches):
-            raise ValueError("branch_filters must parallel branches")
-        for bi, (b, fl) in enumerate(zip(branches, branch_filters)):
-            bv = _pattern_tuple_vars(b)
-            # meta columns exist for branch vars requested via
-            # meta_vars — a branch filter may reference those too
-            ok = bv | {f"{v}{sfx}" for v in set(meta_vars or ()) & bv
-                       for sfx in META_SUFFIXES}
-            for expr in fl or []:
-                loose = sorted(_expr_identifiers(expr) - ok)
-                if loose:
-                    raise ValueError(
-                        f"union branch {bi} filter {expr!r} references "
-                        f"{loose} not bound in that branch — a branch "
-                        "FILTER scopes to its branch group (for "
-                        "LANG()/DATATYPE() pass the var in meta_vars)")
-    if meta_vars:
-        # term-metadata columns for union-bound variables: each branch
-        # emits {v}__kind/__lang/__datatype for the vars IT binds; a
-        # var a branch does not bind pads null metadata like the var
-        # itself (LANG() of unbound is a type error → NULL per SPARQL)
-        missing = set(meta_vars) \
-            - set().union(*[_pattern_tuple_vars(b) for b in branches])
-        if missing:
-            raise ValueError(
-                f"meta_vars {sorted(missing)} were never bound by any "
-                "UNION branch — LANG()/DATATYPE()/isIRI() need a "
-                "binding pattern")
-    if len(branches) > 1:
-        # each branch reads the triples
-        triples = reuse(triples)
-    outs = [bgp_match(triples, b, s_col=s_col, p_col=p_col, o_col=o_col,
-                      g_col=g_col,
-                      filters=(branch_filters[i] or None)
-                      if branch_filters else None,
-                      meta_vars=(set(meta_vars) & _pattern_tuple_vars(b))
-                      or None if meta_vars else None)
-            for i, b in enumerate(branches)]
-    all_vars: list[str] = []
-    for o in outs:
-        all_vars += [v for v in o.columns if v not in all_vars]
-    aligned = [o.select(*[F.col(v) if v in o.columns
-                          else F.lit(None).cast("string").alias(v)
-                          for v in all_vars]) for o in outs]
-    out = aligned[0]
-    for o in aligned[1:]:
-        out = out.unionByName(o)
-    # distinct=False lets a caller that immediately dedups (the
-    # optional-union branch's dropDuplicates) skip a second exchange
-    return out.distinct() if distinct else out
+        entry["branch_filters"] = branch_filters
+    return _compile(triples, _as_group(entry, "query"),
+                    (s_col, p_col, o_col, g_col), set(), "query",
+                    set(meta_vars or ()), top=True, distinct=distinct)[0]
 
 
 def construct(triples: DataFrame, patterns: list[tuple[str, str, str]],

@@ -8,13 +8,16 @@ user-facing layer: parse SPARQL *query text* and compile it onto those
 operators, so a user can run the same query string here that they
 would hand to any SPARQL endpoint over the reference's output.
 
-One group compiler (``_compile_group``) turns every WHERE clause into
-its solutions, whatever the query form: SELECT (and each subquery,
-bottom-up), ASK, CONSTRUCT and DESCRIBE all read from it. The group
-itself compiles to one ``kg.bgp_match`` call — or ``bgp_union`` for a
-whole-group UNION — and bgp_match compiles every nested OPTIONAL /
-[NOT] EXISTS / MINUS / UNION / VALUES body the same way as the top
-level, then applies that body's join.
+Both front ends build the same node, ``kg.Group``. The parser turns
+every group graph pattern (a WHERE clause, an OPTIONAL / [NOT] EXISTS
+/ MINUS body, a UNION branch, a GRAPH body or CONSTRUCT template) into
+one through a single method, ``_Parser._group``; its context table
+``_GROUP_CONTEXTS`` says which members each context admits and raises
+every refusal. ``_solutions`` turns a WHERE group into its solutions,
+whatever the query form: SELECT (and each subquery), ASK, CONSTRUCT
+and DESCRIBE all read from it. It compiles the group's subqueries
+bottom-up into solution joins, then hands the group to ``kg._compile``,
+the one evaluator, which ``bgp_match`` / ``bgp_union`` use too.
 
 Supported subset:
 
@@ -32,63 +35,51 @@ Supported subset:
 * triple patterns with ``;`` / ``,`` predicate-object lists,
   property-path predicates (``^ / | + * ?`` and ``!`` negated sets
   — the full kg_path grammar), ``GRAPH <g>|?g { ... }``
-* ``OPTIONAL { ... }`` — single- and multi-pattern groups (a
-  multi-pattern group is evaluated as a unit per SPARQL leftjoin:
-  its patterns inner-join among themselves, then the joined group
-  left-joins the solutions); group-scoped ``FILTER`` inside the
-  OPTIONAL body — SPARQL leftjoin's expr argument: a filter over
-  group variables pre-filters the group, one referencing OUTER
-  variables conditions the left join itself (compiled as the
-  join's residual condition; over nullable shared variables it
-  raises); an OPTIONAL body
-  that is a ``{ A } UNION { B }`` block is
-  LeftJoin(rest, Union(A, B)) — a shared join variable must be
-  bound by every branch (else a typed error); nested
-  ``OPTIONAL { ... }`` members inside an OPTIONAL body (any depth,
-  UNION bodies allowed inside) evaluate as a unit — a variable
-  bound only by an inner OPTIONAL is nullable in the group's
-  solutions, so using it as the outer join key raises the same
-  typed error, and a body that is ONLY a nested OPTIONAL (no
-  required part) raises;
-  ``BIND (expr AS ?v)`` members inside an OPTIONAL body (SPARQL
-  Extend over the group's solutions, applied before the group's
-  FILTERs, UNION bodies allowed) — a bind variable may evaluate
-  to null, so using it as the outer join key raises too;
-  ``FILTER [NOT] EXISTS`` / ``MINUS`` / ``VALUES`` members inside
-  an OPTIONAL body (a rejected group row leaves the optional
-  variables null instead of dropping the outer solution; a
-  negation member referencing an OUTER-only variable raises, as
-  correlation would need a conditional left join);
-  subqueries as OPTIONAL-body members, including a subquery as the
-  ONLY member (the attach-an-aggregate idiom: the subquery's
-  solution set seeds the group) — a subquery-bound variable outside
-  the subquery's own nullable set is provably non-null and accepted
-  as the outer join key
-* ``FILTER expr`` (compiled to a Spark SQL boolean — the same string
-  ``bgp_match(filters=...)`` takes); ``[NOT] EXISTS { ... }`` may be
+* one grammar for every group (the ``_GROUP_CONTEXTS`` table): a
+  WHERE group and every OPTIONAL / [NOT] EXISTS / MINUS body, at any
+  depth, hold triple patterns, ``GRAPH``, ``FILTER``, ``OPTIONAL``,
+  ``FILTER [NOT] EXISTS``, ``MINUS``, ``VALUES`` (both forms, ``UNDEF``
+  wildcards; also the trailing ValuesClause after solution
+  modifiers), ``BIND (expr AS ?v)``, subqueries and ``{ A } UNION
+  { B }`` blocks. A body needs a required part (patterns, a subquery
+  or its one UNION) and takes a UNION only beside FILTERs and BINDs;
+  a UNION branch holds triple patterns, GRAPH and plain FILTERs
+* ``OPTIONAL`` — the body is evaluated as a unit and left-joined
+  (SPARQL LeftJoin): a body FILTER over group variables pre-filters
+  the group, one referencing OUTER variables is the join's residual
+  condition (over nullable shared variables it raises), and a
+  rejected body row leaves the optional variables null. A shared join
+  variable the body may leave unbound (bound only by an inner
+  OPTIONAL or a BIND, or not by every UNION branch) raises typed; a
+  subquery-bound one is accepted (the attach-an-aggregate idiom). A
+  nested member referencing an OUTER-only variable raises, as
+  correlation would need a conditional join
+* ``FILTER expr`` compiles to a Spark SQL boolean (the same string
+  ``bgp_match``'s ``filters`` take). ``[NOT] EXISTS { ... }`` may be
   EMBEDDED in the expression (``FILTER(?a = 'x' || EXISTS {...})``,
-  ``!EXISTS`` too) — each occurrence compiles to a marker left join
-  against the group's distinct shared-key set (EXISTS as a value in
-  a boolean expression cannot be a semi/anti join); standalone
-  ``FILTER [NOT] EXISTS { ... }`` keeps the semi/anti-join plan,
-  ``MINUS { ... }``, ``VALUES`` (both forms, ``UNDEF`` wildcards,
-  in-group AND the trailing ValuesClause after solution modifiers),
-  ``BIND (expr AS ?v)``; a [NOT] EXISTS / MINUS body that is a
-  ``{ A } UNION { B }`` block: NOT EXISTS and MINUS distribute over
-  UNION (per-branch anti joins — exact); EXISTS is an OR, planned as
-  marker left joins against each branch's distinct key set
-* a WHERE clause that is entirely ``{ BGP } UNION { BGP } ...``;
-  ``CONSTRUCT`` over such a UNION instantiates the template per
-  branch and unions the graphs;
-  UNION branches accept group-scoped ``FILTER`` members (applied to
-  the branch's solutions BEFORE the null-padding union — a filter
-  referencing a variable the branch does not bind raises typed, as
-  the variable is out of scope there per SPARQL); term-metadata
-  builtins in branch filters and over union-bound variables work in
-  the complete-union SELECT/ASK/CONSTRUCT/DESCRIBE forms (each
-  branch emits the metadata of the vars it binds; a non-binding
-  branch pads null — LANG of unbound is a type error → NULL) and
-  reject typed in group-body/inline unions
+  ``!EXISTS`` too): each occurrence is a marker left join against the
+  body's distinct shared-key set, while a standalone ``FILTER [NOT]
+  EXISTS`` is a semi/anti join. Over a UNION body NOT EXISTS and
+  MINUS distribute (per-branch anti joins — exact); EXISTS is an OR
+  of per-branch marker joins. [NOT] EXISTS / MINUS bodies see the
+  outer solutions by substitution, so a shared variable the body
+  binds only through an inner OPTIONAL, a non-rename BIND, an
+  UNDEF-able VALUES or a subquery raises typed (the equality join
+  would diverge)
+* ``UNION``: a WHERE clause that is entirely a UNION, and
+  ``CONSTRUCT`` over one instantiates the template per branch and
+  unions the graphs. A UNION beside other members is
+  Join(Union(branches), rest): a variable not bound by every branch
+  is nullable, and using one as the join key, or in a term-metadata
+  builtin, raises. A branch FILTER applies to the branch's solutions
+  before the null-padding union and may reference only the branch's
+  variables (an outer one is out of scope per SPARQL: typed error);
+  term-metadata builtins there work in a whole-group UNION only
+* SPARQL 1.1 subqueries ``{ SELECT ... }`` in a WHERE group or a body
+  — compiled bottom-up (§18.2.2) and joined on the shared variables;
+  a scalar aggregate subquery (no GROUP BY — the ``MAX``-argmax
+  idiom) joins disjoint via broadcast, and a possibly-unbound shared
+  variable raises rather than mis-joins
 * ``FROM <g>`` / ``FROM NAMED <g>`` dataset clauses (§13.2) in all
   four query forms — one pushed graph-column ``isin`` filter.
   Supported scopes: FROM alone (patterns match the merged default
@@ -96,39 +87,18 @@ Supported subset:
   pattern must sit inside GRAPH); FROM + FROM NAMED together
   refuses (two scan scopes); subqueries reject dataset clauses per
   the SubSelect grammar
-* ``[NOT] EXISTS`` / ``MINUS`` bodies accept FULL group bodies:
-  nested ``FILTER [NOT] EXISTS`` / ``MINUS`` (the double-negation /
-  forall idiom), ``BIND``, ``VALUES``, inner ``OPTIONAL``, and
-  UNION bodies WITH per-branch filters and BINDs (Extend
-  distributes over Union); a nested member referencing an OUTER
-  variable raises typed (correlation through nesting), and a
-  variable shared
-  with the outer solutions that the body binds only through an
-  inner OPTIONAL / non-rename BIND / UNDEF-able VALUES raises typed
-  (the equality join would diverge from substitution semantics)
 * ``REGEX`` / ``REPLACE`` flags ``i`` / ``s`` / ``m`` (Java inline
   ``(?ism)``) and ``q`` (literal pattern → substring containment /
   plain replace; ``iq`` folds case); ``x`` refuses — Java's ``(?x)``
   treats ``#`` as a comment, silently diverging from fn:matches;
   ``SUM/AVG(DISTINCT expr)`` aggregate the distinct value multiset
-* SPARQL 1.1 subqueries ``{ SELECT ... }`` as group members —
-  compiled bottom-up (§18.2.2) and joined to the group's solutions
-  on the shared variables (``bgp_match``'s ``solution_joins``); a
-  scalar aggregate subquery (no GROUP BY — the ``MAX``-argmax idiom)
-  joins disjoint via broadcast. Subqueries projecting possibly-
-  unbound variables used as join keys raise rather than mis-join.
-  Subqueries are also accepted inside ``FILTER [NOT] EXISTS`` and
-  ``MINUS`` bodies (each compiles independently — substitution does
-  not descend into subqueries, so a subquery-only variable shared
-  with the outer solutions raises typed instead of being wrongly
-  constrained)
 * blank nodes in patterns: ``_:label``, ``[]`` and
   ``[ p1 o1 ; p2 o2 ]`` property lists (nesting allowed) compile to
   non-distinguished variables + desugared patterns (``SELECT *``
   does not project them); template blank nodes raise
 * term-test builtins LANG / DATATYPE / isIRI / isLiteral / isBlank /
   LANGMATCHES / sameTerm over the quad frame's kind/lang/datatype
-  columns (``bgp_match(meta_vars=...)``; the variable may be bound
+  columns (the evaluator's ``meta_vars``; the variable may be bound
   by a required pattern, an OPTIONAL group or a whole-group UNION),
   plus STRBEFORE / STRAFTER / ENCODE_FOR_URI / MD5 / SHA1 /
   SHA256/384/512 and IRI()/URI() (identity on the stored lexical IRI — enables skolem templates)
@@ -138,9 +108,7 @@ Supported subset:
   task-failing ANSI cast error; SECONDS returns whole seconds
 
 Deviations / limits (all raise a clear error, never mis-execute):
-SERVICE, nested GRAPH, subqueries inside expression-embedded EXISTS
-(and any body mixing UNION with other members, subqueries included,
-raises the UNION-mixed error),
+SERVICE, nested GRAPH, subqueries inside expression-embedded EXISTS,
 a variable referenced in SELECT / FILTER / BIND but never bound in
 its scope (SPARQL evaluates it as a per-solution type error, usually
 yielding an empty result; this engine refuses typed rather than
@@ -149,11 +117,7 @@ nondeterministic builtins (NOW / UUID / STRUUID / RAND / BNODE — a
 retried Spark task would re-evaluate them, breaking reproducibility),
 TZ / TIMEZONE (lexical forms carry no normalized offset), STRLANG /
 STRDT, and FROM combined with FROM NAMED or GRAPH
-are not supported. A UNION block mixed
-with other group members compiles to Join(Union(branches), rest) via
-a solution join (a variable not bound by every branch is nullable;
-using one as the join key, or in a term-metadata builtin, raises).
-ASK probes the group's solutions under ``limit(1)``; only an ASK whose
+are not supported. ASK probes the group's solutions under ``limit(1)``; only an ASK whose
 group is all-constant triple patterns uses ``kg.ask``'s per-pattern
 probe scans. Expression
 translation casts a variable compared against a numeric literal to
@@ -178,15 +142,15 @@ these queries run over are produced per jsonld-java's
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..session import local_frame, reuse
-from .kg import META_SUFFIXES, RDF_TYPE, _expr_identifiers, \
-    _optional_entry_vars as _kg_optional_entry_vars, _template_rows, \
-    _values_join, ask, bgp_match, bgp_union, describe, describe_nodes
+from .kg import META_SUFFIXES, RDF_TYPE, Group, _compile, \
+    _expr_identifiers, _pattern_tuple_vars, _template_rows, _values_join, \
+    ask, describe, describe_nodes
 
 _META_SUFFIXES = tuple(META_SUFFIXES)
 
@@ -304,56 +268,9 @@ def _unquote(s: str) -> str:
 # ---------------------------------------------------------------------------
 
 @dataclass
-class _Group:
-    """One GroupGraphPattern, flattened to the algebra's argument
-    shape (matches bgp_match's keyword surface)."""
-    patterns: list[tuple] = field(default_factory=list)
-    optional: list[tuple] = field(default_factory=list)
-    filters: list[str] = field(default_factory=list)
-    not_exists: list[list[tuple]] = field(default_factory=list)
-    exists: list[list[tuple]] = field(default_factory=list)
-    minus: list[list[tuple]] = field(default_factory=list)
-    values: list[dict] = field(default_factory=list)
-    binds: list[tuple[str, str]] = field(default_factory=list)
-    # FILTERs whose expression embeds [NOT] EXISTS markers:
-    # {'expr': sql, 'markers': [(name, group_entry, negated), ...]}
-    filter_exists: list[dict] = field(default_factory=list)
-    union_branches: list[list[tuple]] | None = None
-    # per-branch group-scoped FILTERs (parallel to union_branches):
-    # applied to the branch's solutions BEFORE null-padding/union
-    union_branch_filters: list[list[str]] | None = None
-    # UNION blocks mixed with other group members: each entry is one
-    # { A } UNION { B } ... block's branch list, compiled to a
-    # solution join — algebra Join(Union(A, B), rest-of-group)
-    inline_unions: list[list[list[tuple]]] = field(default_factory=list)
-    # parallel per-block, per-branch FILTER lists for inline_unions
-    inline_union_filters: list[list[list[str]]] = field(
-        default_factory=list)
-    subqueries: list["_Query"] = field(default_factory=list)
-
-
-@dataclass
-class _Body:
-    """Parsed members of an OPTIONAL / [NOT] EXISTS / MINUS group
-    body (what ``_filtered_body`` returns)."""
-    pats: list[tuple] = field(default_factory=list)
-    filters: list[str] = field(default_factory=list)
-    union: list[list[tuple]] | None = None
-    # per-branch FILTERs parallel to ``union`` (None when none)
-    union_branch_filters: list[list[str]] | None = None
-    nested: list = field(default_factory=list)
-    binds: list[tuple[str, str]] = field(default_factory=list)
-    not_exists: list = field(default_factory=list)
-    exists: list = field(default_factory=list)
-    minus: list = field(default_factory=list)
-    values: list[dict] = field(default_factory=list)
-    subqueries: list = field(default_factory=list)
-
-
-@dataclass
 class _Query:
     form: str                       # select | ask | construct | describe
-    where: _Group | None = None
+    where: Group | None = None
     select: list[tuple[str | None, str]] | None = None  # (sql_expr|None=var, name)
     select_star: bool = False
     distinct: bool = True
@@ -372,6 +289,49 @@ class _Query:
     # dataset clauses: FROM <g> (default-graph merge) / FROM NAMED <g>
     from_graphs: list[str] = field(default_factory=list)
     from_named: list[str] = field(default_factory=list)
+
+
+# ---------------------------------------------------------------------------
+# Group contexts
+# ---------------------------------------------------------------------------
+
+_MEMBER_KEYWORDS = ("optional", "filter", "minus", "values", "bind",
+                    "graph", "union", "select")
+_ALL_MEMBERS = frozenset(("optional", "filter", "minus", "values", "bind",
+                          "graph", "subquery", "block", "dot"))
+# the OPTIONAL / [NOT] EXISTS / MINUS bodies: every member, but one
+# UNION only and beside nothing but FILTERs and BINDs (_check_body)
+_BODY_CONTEXT = (
+    _ALL_MEMBERS, ("union",),
+    "{kw} inside a {ctx} group is not supported — only triple patterns, "
+    "GRAPH blocks, and plain FILTERs; restructure with the construct at "
+    "the outer group level",
+    "unterminated {ctx} group")
+#: per group context: (members admitted, members refused, the refusal
+#: text, the unterminated-group text). A member neither admitted nor
+#: refused parses as a triples block, whose term grammar rejects it.
+#: WHERE is a query's or subquery's group; BGP is a GRAPH body or a
+#: CONSTRUCT template.
+_GROUP_CONTEXTS = {
+    "WHERE": (_ALL_MEMBERS, (), "", "unterminated group"),
+    "OPTIONAL": _BODY_CONTEXT, "EXISTS": _BODY_CONTEXT,
+    "NOT EXISTS": _BODY_CONTEXT, "MINUS": _BODY_CONTEXT,
+    "UNION": (
+        frozenset(("filter", "graph", "dot")),
+        ("optional", "bind", "values", "minus", "union", "select",
+         "subquery", "block"),
+        "{kw} inside a UNION branch is not supported — only triple "
+        "patterns, GRAPH blocks, and plain FILTERs here",
+        "unterminated union branch"),
+    "BGP": (
+        frozenset(("graph",)),
+        ("optional", "bind", "values", "minus", "union", "filter",
+         "select", "subquery", "block"),
+        "{kw} inside this group body is not supported — only triple "
+        "patterns and GRAPH blocks here; restructure with the construct "
+        "at the outer group level",
+        "unterminated group"),
+}
 
 
 # ---------------------------------------------------------------------------
@@ -396,16 +356,16 @@ class _Parser:
         # compile to hidden aggregate columns on the current query
         self._having_q = None
         # variables whose term metadata (kind/lang/datatype columns)
-        # the compiled expressions reference — LANG(?x) etc.; passed
-        # to bgp_match(meta_vars=...) at compile time
+        # the compiled expressions reference — LANG(?x) etc.; the
+        # evaluator's metadata requests at compile time
         self.meta_vars: set[str] = set()
         # [NOT] EXISTS embedded in a FILTER expression: allowed only
         # while a group-level FILTER is being parsed (the flag), each
-        # occurrence allocating a marker (name, group_entry, negated)
-        # that bgp_match(filter_exists=...) materializes as a boolean
-        # column the expression references
+        # occurrence allocating a marker (name, Group, negated) that
+        # the evaluator materializes as a boolean column the
+        # expression references
         self._allow_exists = False
-        self._exists_markers: list[tuple[str, object, bool]] = []
+        self._exists_markers: list[tuple[str, Group, bool]] = []
         self._fx_n = 0
 
     # -- token helpers ----------------------------------------------------
@@ -675,88 +635,184 @@ class _Parser:
             out.append(pat + (gterm,))
         return out
 
-    def _plain_bgp(self) -> list[tuple]:
-        """'{' triples* '}' with only triple patterns inside — the
-        body shape of EXISTS / MINUS / UNION branches."""
-        self._expect("OP", "{")
-        pats: list[tuple] = []
-        while not (self._peek().kind == "OP" and self._peek().value == "}"):
-            if self._peek().kind == "EOF":
-                raise SparqlSyntaxError("unterminated group")
-            if self._at_kw("graph"):
-                self._next()
-                g = self._term("graph")
-                inner = self._plain_bgp()
-                pats += self._graphify(inner, g)
-                continue
-            t = self._peek()
-            if (t.kind == "KW" and t.value in (
-                    "optional", "bind", "values", "minus", "union",
-                    "filter", "select")) \
-                    or (t.kind == "OP" and t.value == "{"):
-                raise SparqlUnsupportedError(
-                    f"{t.value.upper()} inside this group body is not "
-                    "supported — only triple patterns and GRAPH "
-                    "blocks here; restructure with the construct at "
-                    "the outer group level")
-            pats += self._triples_block(None)
-        self._next()
-        return pats
+    # -- group graph pattern ----------------------------------------------
+    def _member_kind(self) -> str:
+        """The kind of the group member at the cursor: a keyword
+        member, ``subquery`` / ``block`` for ``{``, ``dot``, ``end``
+        for ``}``, ``eof``, or ``triples``."""
+        t = self._peek()
+        if t.kind == "EOF":
+            return "eof"
+        if t.kind == "OP" and t.value == "{":
+            nxt = self._peek(1)
+            return "subquery" if nxt.kind == "KW" \
+                and nxt.value == "select" else "block"
+        if t.kind == "OP" and t.value in ("}", "."):
+            return "end" if t.value == "}" else "dot"
+        if t.kind == "KW" and t.value in _MEMBER_KEYWORDS:
+            return t.value
+        return "triples"
 
-    def _union_branch(self, allow_meta: bool = True
-                      ) -> tuple[list[tuple], list[str]]:
-        """One UNION branch at WHERE level: triple patterns, GRAPH
-        blocks, and group-scoped FILTERs (applied to the branch's
-        solutions before the null-padding union — SPARQL scopes a
-        branch FILTER to the branch group). A branch FILTER may
-        reference only variables the branch itself binds: an outer
-        variable is out of scope there per SPARQL (always unbound →
-        the filter errors every row), so we reject it typed instead
-        of silently emptying the branch. ``allow_meta=False`` (unions
-        inside group bodies / mixed with other members, where the
-        compile paths cannot thread meta_vars) rejects
-        LANG()/DATATYPE()-family references typed."""
+    def _group(self, ctx: str = "WHERE") -> Group:
+        """One GroupGraphPattern ``{ ... }`` in context ``ctx`` (a key
+        of ``_GROUP_CONTEXTS``, which decides the members it admits).
+        The context is also the label its error messages use."""
+        admitted, refused, refusal, unterminated = _GROUP_CONTEXTS[ctx]
         self._expect("OP", "{")
-        pats: list[tuple] = []
-        filters: list[str] = []
-        while not (self._peek().kind == "OP" and self._peek().value == "}"):
-            if self._peek().kind == "EOF":
-                raise SparqlSyntaxError("unterminated union branch")
-            if self._at_kw("graph"):
+        start = self.i
+        g = Group()
+        while (kind := self._member_kind()) != "end":
+            if kind == "eof":
+                raise SparqlSyntaxError(unterminated.format(ctx=ctx))
+            if kind in refused:
+                raise SparqlUnsupportedError(refusal.format(
+                    kw=self._peek().value.upper(), ctx=ctx))
+            if kind not in admitted:
+                g.patterns += self._triples_block(None)
+                continue
+            if kind == "subquery":
+                # SPARQL 1.1 subquery: evaluated independently
+                # (bottom-up), joined to the group's solutions on the
+                # shared variables
                 self._next()
-                g = self._term("graph")
-                pats += self._graphify(self._plain_bgp(), g)
-            elif self._eat_kw("filter"):
-                if self._at_kw("exists") or self._at_kw("not"):
-                    raise SparqlUnsupportedError(
-                        "FILTER [NOT] EXISTS inside a UNION branch is "
-                        "not supported — lift it to the outer group")
-                filters.append(self._expression())
-            elif self._peek().kind == "OP" and self._peek().value == ".":
                 self._next()
-            elif (self._peek().kind == "KW" and self._peek().value in (
-                    "optional", "bind", "values", "minus", "union",
-                    "select")) \
-                    or (self._peek().kind == "OP"
-                        and self._peek().value == "{"):
-                raise SparqlUnsupportedError(
-                    f"{self._peek().value.upper()} inside a UNION "
-                    "branch is not supported — only triple patterns, "
-                    "GRAPH blocks, and plain FILTERs here")
-            else:
-                pats += self._triples_block(None)
+                g.subqueries.append(self._parse_select(sub=True))
+                self._expect("OP", "}")
+                continue
+            if kind == "block":
+                self._union_block(g, ctx, leading=self.i == start)
+                continue
+            self._next()
+            if kind == "filter":
+                self._group_filter(g, ctx)
+            elif kind == "optional":
+                g.optional.append(self._group("OPTIONAL"))
+            elif kind == "minus":
+                g.minus.append(self._group("MINUS"))
+            elif kind == "values":
+                vrows = self._values_clause()
+                joined = _join_values_tables(g.values, vrows)
+                if not vrows or (g.values and not joined):
+                    # an empty inline table (or an empty JOIN of two
+                    # tables) admits no solution — FILTER(false)
+                    g.filters.append("false")
+                g.values = joined
+            elif kind == "bind":
+                self._expect("OP", "(")
+                expr = self._expression()
+                self._expect("KW", "as")
+                var = self._expect("VAR").value[1:]
+                self._expect("OP", ")")
+                g.binds.append((var, expr))
+            elif kind == "graph":
+                gterm = self._term("graph")
+                g.patterns += self._graphify(self._group("BGP").patterns,
+                                             gterm)
         self._next()
-        if filters and not pats:
+        if _GROUP_CONTEXTS[ctx] is _BODY_CONTEXT:
+            self._check_body(g, ctx)
+        return g
+
+    def _group_filter(self, g: Group, ctx: str) -> None:
+        """A FILTER member (keyword consumed): ``[NOT] EXISTS { ... }``
+        becomes a negation body; in a WHERE group a FILTER expression
+        may also EMBED [NOT] EXISTS tests (markers compiled to boolean
+        columns)."""
+        negated = self._at_kw("not") and (
+            ctx != "WHERE" or (self._peek(1).kind == "KW"
+                               and self._peek(1).value == "exists"))
+        if self._at_kw("exists") or negated:
+            if ctx == "UNION":
+                raise SparqlUnsupportedError(
+                    "FILTER [NOT] EXISTS inside a UNION branch is "
+                    "not supported — lift it to the outer group")
+            if self._eat_kw("not"):
+                self._expect("KW", "exists")
+                g.not_exists.append(self._group("NOT EXISTS"))
+            else:
+                self._next()
+                g.exists.append(self._group("EXISTS"))
+        elif ctx == "WHERE":
+            self._allow_exists = True
+            start = len(self._exists_markers)
+            fexpr = self._expression()
+            self._allow_exists = False
+            new = self._exists_markers[start:]
+            if new:
+                del self._exists_markers[start:]
+                g.filter_exists.append({"expr": fexpr, "markers": new})
+            else:
+                g.filters.append(fexpr)
+        else:
+            g.filters.append(self._expression())
+
+    def _union_block(self, g: Group, ctx: str, leading: bool) -> None:
+        """A ``{`` member that is not a subquery: a nested plain group
+        (inlined: its FILTERs read only its own variables, so they
+        commute with the join) or a ``{ A } UNION { B } ...`` block. In
+        a WHERE group a UNION that is not the whole group joins the
+        other members as a solution set; a body admits one UNION and
+        nothing beside it but FILTERs and BINDs."""
+        block = []
+        while True:
+            branch = self._group("UNION")
+            self._check_branch(branch, allow_meta=ctx == "WHERE")
+            block.append(branch)
+            if not self._eat_kw("union"):
+                break
+        if len(block) == 1:
+            g.patterns += block[0].patterns
+            g.filters += block[0].filters
+        elif ctx == "WHERE":
+            if not (leading and self._peek().kind == "OP"
+                    and self._peek().value == "}"):
+                self._reject_branch_meta(block)
+            g.unions.append(block)
+        elif g.unions:
+            raise SparqlUnsupportedError(
+                f"multiple UNION blocks inside one {ctx} group are not "
+                "supported — merge the branches into one UNION")
+        else:
+            g.unions.append(block)
+
+    @staticmethod
+    def _check_body(g: Group, ctx: str) -> None:
+        """An OPTIONAL / [NOT] EXISTS / MINUS body needs a required part
+        (triple patterns, a subquery or one UNION) to join against."""
+        if g.unions and (g.patterns or g.optional or g.not_exists
+                         or g.exists or g.minus or g.values
+                         or g.subqueries):
+            raise SparqlUnsupportedError(
+                f"UNION mixed with other members inside one {ctx} "
+                "group is not supported — lift the patterns into each "
+                "branch, or move them outside the group")
+        if g.patterns or g.subqueries or g.unions:
+            return
+        if g.optional or g.binds or g.not_exists or g.exists or g.minus \
+                or g.values:
+            raise SparqlUnsupportedError(
+                f"a {ctx} group whose body has no triple pattern "
+                "or subquery has no required part to left-join the "
+                "group against — add one, or restructure at the "
+                "outer level")
+        raise SparqlSyntaxError(f"empty {ctx} group")
+
+    @staticmethod
+    def _check_branch(b: Group, allow_meta: bool) -> None:
+        """A UNION branch FILTER is scoped to the branch group: it may
+        reference only variables the branch itself binds. An outer
+        variable is out of scope there per SPARQL (always unbound → the
+        filter errors every row), so it is refused typed instead of
+        silently emptying the branch. ``allow_meta=False`` (unions
+        inside group bodies, which evaluate without metadata requests)
+        refuses LANG()/DATATYPE()-family references typed."""
+        if b.filters and not b.patterns:
             raise SparqlUnsupportedError(
                 "a UNION branch with only FILTERs has no patterns to "
                 "filter — add a triple pattern")
-        bound = {t[1:] for p in pats for t in p if t.startswith("?")}
-        for expr in filters:
+        bound = _pattern_tuple_vars(b.patterns)
+        for expr in b.filters:
             loose = _expr_identifiers(expr) - bound
-            # term-metadata identifiers over branch-bound vars are
-            # fine where the compile path threads meta_vars (complete
-            # unions in SELECT/ASK/CONSTRUCT/DESCRIBE); group-body and
-            # inline unions cannot, so they reject typed
             meta_refs = {x for x in loose
                          if any(x.endswith(sfx) for sfx in META_SUFFIXES)
                          and x.rsplit("__", 1)[0] in bound}
@@ -772,346 +828,21 @@ class _Parser:
                     "not bound in that branch — an outer variable is "
                     "out of scope inside a branch group per SPARQL; "
                     "move the FILTER to the outer group")
-        return pats, filters
-
-    def _union_block(self, allow_meta: bool = True
-                     ) -> tuple[list[list[tuple]], list[list[str]]]:
-        """``{ A } UNION { B } ...`` (first '{' NOT yet consumed):
-        one or more branches with their per-branch FILTER lists."""
-        pair = self._union_branch(allow_meta)
-        branches, bfilters = [pair[0]], [pair[1]]
-        while self._at_kw("union"):
-            self._next()
-            pair = self._union_branch(allow_meta)
-            branches.append(pair[0])
-            bfilters.append(pair[1])
-        return branches, bfilters
 
     @staticmethod
-    def _reject_branch_meta(bfilters: list[list[str]],
-                            where: str) -> None:
-        """Inline unions' compile path cannot thread meta_vars into
-        bgp_union — reject term-metadata branch-filter references
-        typed instead of crashing on an unresolved column."""
-        for fl in bfilters:
-            for expr in fl:
+    def _reject_branch_meta(block: list[Group]) -> None:
+        """A UNION joined as a solution set carries no term metadata —
+        reject term-metadata branch-filter references typed instead of
+        crashing on an unresolved column."""
+        for b in block:
+            for expr in b.filters:
                 if any(any(x.endswith(s) for s in META_SUFFIXES)
                        for x in _expr_identifiers(expr)):
                     raise SparqlUnsupportedError(
                         "LANG()/DATATYPE()/isIRI()-family builtins in "
-                        "a UNION-branch FILTER are not supported "
-                        f"{where} — lift the test to the outer group")
-
-    def _filtered_body(self, label: str, allow_union: bool = False,
-                       allow_optional: bool = False) -> "_Body":
-        """A group body that may mix triple patterns (incl. GRAPH)
-        with group-scoped FILTER expressions — the body shape of
-        OPTIONAL / [NOT] EXISTS / MINUS groups. With ``allow_union``
-        a ``{ A } UNION { B }`` block is accepted (``union`` field:
-        branch pattern lists); with ``allow_optional`` (OPTIONAL
-        bodies) nested ``OPTIONAL { ... }`` members parse recursively
-        (``nested`` field, in the ``bgp_match(optional=...)`` entry
-        forms), plus ``BIND (expr AS ?v)``, ``FILTER [NOT] EXISTS``,
-        ``MINUS`` and ``VALUES`` members (``binds`` / ``not_exists`` /
-        ``exists`` / ``minus`` / ``values`` fields)."""
-        self._expect("OP", "{")
-        b = _Body()
-        pats, filters = b.pats, b.filters
-        union: list[list[tuple]] | None = None
-        nested, binds = b.nested, b.binds
-        while not (self._peek().kind == "OP" and self._peek().value == "}"):
-            if self._peek().kind == "EOF":
-                raise SparqlSyntaxError(f"unterminated {label} group")
-            if self._eat_kw("filter"):
-                if self._at_kw("exists") or self._at_kw("not"):
-                    if not allow_optional:
-                        raise SparqlUnsupportedError(
-                            f"FILTER [NOT] EXISTS inside {label} is "
-                            "not supported — lift it to the outer "
-                            "group")
-                    if self._eat_kw("not"):
-                        self._expect("KW", "exists")
-                        b.not_exists.append(
-                            self._group_entry("NOT EXISTS"))
-                    else:
-                        self._next()
-                        b.exists.append(self._group_entry("EXISTS"))
-                    continue
-                filters.append(self._expression())
-            elif self._at_kw("graph"):
-                self._next()
-                gterm = self._term("graph")
-                pats += self._graphify(self._plain_bgp(), gterm)
-            elif self._peek().kind == "OP" and self._peek().value == ".":
-                self._next()
-            elif (allow_optional and self._peek().kind == "OP"
-                    and self._peek().value == "{"
-                    and self._peek(1).kind == "KW"
-                    and self._peek(1).value == "select"):
-                # SPARQL 1.1 subquery as an OPTIONAL-body member:
-                # compiled bottom-up later, joined to the group's
-                # solutions on the shared variables
-                self._next()
-                self._next()
-                b.subqueries.append(self._parse_select(sub=True))
-                self._expect("OP", "}")
-            elif (allow_union and self._peek().kind == "OP"
-                    and self._peek().value == "{"):
-                branches, bfilters = self._union_block(allow_meta=False)
-                if len(branches) == 1:
-                    # a plain nested group inlines; its FILTERs are
-                    # group-scoped and reference only branch-bound
-                    # vars, so they join the body's filters
-                    pats += branches[0]
-                    filters += bfilters[0]
-                elif union is not None:
-                    raise SparqlUnsupportedError(
-                        f"multiple UNION blocks inside one {label} "
-                        "group are not supported — merge the branches "
-                        "into one UNION")
-                else:
-                    union = branches
-                    if any(bfilters):
-                        b.union_branch_filters = bfilters
-            elif allow_optional and self._at_kw("optional"):
-                self._next()
-                nested.append(self._optional_entry())
-            elif allow_optional and self._eat_kw("bind"):
-                self._expect("OP", "(")
-                bexpr = self._expression()
-                self._expect("KW", "as")
-                bvar = self._expect("VAR").value[1:]
-                self._expect("OP", ")")
-                binds.append((bvar, bexpr))
-            elif allow_optional and self._eat_kw("minus"):
-                b.minus.append(self._group_entry("MINUS"))
-            elif allow_optional and self._eat_kw("values"):
-                vrows = self._values_clause()
-                joined = _join_values_tables(b.values, vrows)
-                if not vrows or (b.values and not joined):
-                    # an empty inline table (or an empty JOIN of two
-                    # tables) admits no solution — FILTER(false)
-                    b.filters.append("false")
-                b.values = joined
-            elif (self._peek().kind == "KW"
-                  and self._peek().value in ("optional", "bind",
-                                             "values", "minus",
-                                             "union")) \
-                    or (self._peek().kind == "OP"
-                        and self._peek().value == "{"):
-                raise SparqlUnsupportedError(
-                    f"{self._peek().value.upper()} inside a {label} "
-                    "group is not supported — only triple patterns, "
-                    "GRAPH blocks, and plain FILTERs; restructure "
-                    "with the construct at the outer group level")
-            else:
-                pats += self._triples_block(None)
-        self._next()
-        extras = (nested or binds or b.not_exists or b.exists
-                  or b.minus or b.values)
-        # a UNION body takes FILTERs and BINDs over its solutions;
-        # any other member beside it is unsupported
-        if union is not None and (pats or nested or b.not_exists
-                                  or b.exists or b.minus or b.values
-                                  or b.subqueries):
-            raise SparqlUnsupportedError(
-                f"UNION mixed with other members inside one {label} "
-                "group is not supported — lift the patterns into each "
-                "branch, or move them outside the group")
-        # triple patterns or a subquery seed the group's solutions;
-        # everything else only transforms them
-        seeded = bool(pats) or bool(b.subqueries)
-        if extras and not seeded and union is None:
-            raise SparqlUnsupportedError(
-                f"a {label} group whose body has no triple pattern "
-                "or subquery has no required part to left-join the "
-                "group against — add one, or restructure at the "
-                "outer level")
-        if not seeded and union is None:
-            raise SparqlSyntaxError(f"empty {label} group")
-        b.union = union
-        return b
-
-    def _optional_entry(self) -> tuple | list | dict:
-        """Parse one OPTIONAL body (recursively: nested OPTIONALs,
-        UNION bodies, BIND, [NOT] EXISTS, MINUS and VALUES members
-        allowed) into the ``bgp_match(optional=...)`` entry forms: a
-        single pattern tuple, a pattern list (group), or a dict with
-        'patterns' / 'filters' / 'union' / 'optional' / 'binds' /
-        'not_exists' / 'exists' / 'minus' / 'values' keys."""
-        b = self._filtered_body(
-            "OPTIONAL", allow_union=True, allow_optional=True)
-        extras = {k: v for k, v in (
-            ("optional", b.nested), ("binds", b.binds),
-            ("not_exists", b.not_exists), ("exists", b.exists),
-            ("minus", b.minus), ("values", b.values),
-            ("subqueries", b.subqueries),
-            ("filters", b.filters),
-            ("branch_filters", b.union_branch_filters)) if v}
-        if b.union is not None:
-            return {"union": b.union, **extras}
-        extras.pop("branch_filters", None)
-        if not extras:
-            return b.pats[0] if len(b.pats) == 1 else b.pats
-        return {"patterns": b.pats, **extras}
-
-    @staticmethod
-    def _entry_has_subqueries(entry) -> bool:
-        """True if a group-entry dict carries (possibly nested)
-        un-compiled subquery ASTs — those compile only through the
-        optional-entry / negation-entry compilers, never through the
-        embedded-EXISTS marker path or a UNION body."""
-        if isinstance(entry, dict):
-            if entry.get("subqueries"):
-                return True
-            return any(
-                _Parser._entry_has_subqueries(i)
-                for k in ("optional", "not_exists", "exists", "minus")
-                for i in entry.get(k, []))
-        return False
-
-    def _group_entry(self, label: str) -> list | dict:
-        b = self._filtered_body(label, allow_union=True,
-                                allow_optional=True)
-        # (union + subqueries in one body is unreachable here:
-        # _filtered_body already raises "UNION mixed with other
-        # members" for that shape)
-        if b.union is not None:
-            entry: dict = {"union": b.union}
-            if b.filters:
-                entry["filters"] = b.filters
-            if b.union_branch_filters:
-                entry["branch_filters"] = b.union_branch_filters
-            if b.binds:
-                # BIND over a union body: Extend distributes over
-                # Union — each expanded branch entry carries it
-                entry["binds"] = b.binds
-            return entry
-        extras = {k: v for k, v in (
-            ("optional", b.nested), ("binds", b.binds),
-            ("not_exists", b.not_exists), ("exists", b.exists),
-            ("minus", b.minus), ("values", b.values),
-            ("filters", b.filters),
-            ("subqueries", b.subqueries)) if v}
-        if not extras:
-            return b.pats
-        return {"patterns": b.pats, **extras}
-
-    # -- group graph pattern ----------------------------------------------
-    def _group(self) -> _Group:
-        self._expect("OP", "{")
-        g = _Group()
-        if self._peek().kind == "OP" and self._peek().value == "{" \
-                and not (self._peek(1).kind == "KW"
-                         and self._peek(1).value == "select"):
-            # UNION form: { BGP } UNION { BGP } ... — or a single
-            # nested plain group, which is equivalent to inlining
-            branches, bfilters = self._union_block()
-            if len(branches) > 1:
-                if (self._peek().kind == "OP"
-                        and self._peek().value == "}"):
-                    self._next()
-                    g.union_branches = branches
-                    if any(bfilters):
-                        g.union_branch_filters = bfilters
-                    return g
-                # other members follow the UNION block: compiles to
-                # Join(Union(branches), rest) via a solution join
-                self._reject_branch_meta(
-                    bfilters, "in a UNION mixed with other members")
-                g.inline_unions.append(branches)
-                g.inline_union_filters.append(bfilters)
-            else:
-                # a single nested plain group inlines; its branch
-                # FILTERs reference only branch-bound vars, so they
-                # commute with the join and join the group's filters
-                g.patterns += branches[0]
-                g.filters += bfilters[0]
-        while not (self._peek().kind == "OP" and self._peek().value == "}"):
-            t = self._peek()
-            if t.kind == "EOF":
-                raise SparqlSyntaxError("unterminated group")
-            if self._eat_kw("optional"):
-                # single pattern → tuple (plain left join); several →
-                # list = OPTIONAL group evaluated as a unit; with
-                # group-scoped FILTERs → dict form; a UNION body →
-                # union-dict form (LeftJoin(rest, Union(A, B)));
-                # nested OPTIONALs → dict with an 'optional' key
-                g.optional.append(self._optional_entry())
-            elif self._eat_kw("filter"):
-                if self._at_kw("exists"):
-                    self._next()
-                    g.exists.append(self._group_entry("EXISTS"))
-                elif (self._at_kw("not")
-                        and self._peek(1).kind == "KW"
-                        and self._peek(1).value == "exists"):
-                    self._next()
-                    self._next()
-                    g.not_exists.append(self._group_entry("NOT EXISTS"))
-                else:
-                    # a FILTER expression may EMBED [NOT] EXISTS
-                    # tests (markers compiled to boolean columns);
-                    # a pure boolean expression stays in g.filters
-                    self._allow_exists = True
-                    start = len(self._exists_markers)
-                    fexpr = self._expression()
-                    self._allow_exists = False
-                    new = self._exists_markers[start:]
-                    if new:
-                        del self._exists_markers[start:]
-                        g.filter_exists.append(
-                            {"expr": fexpr, "markers": new})
-                    else:
-                        g.filters.append(fexpr)
-            elif self._eat_kw("minus"):
-                g.minus.append(self._group_entry("MINUS"))
-            elif self._eat_kw("values"):
-                vrows = self._values_clause()
-                joined = _join_values_tables(g.values, vrows)
-                if not vrows or (g.values and not joined):
-                    # empty inline table / empty join: no solutions
-                    g.filters.append("false")
-                g.values = joined
-            elif self._eat_kw("bind"):
-                self._expect("OP", "(")
-                expr = self._expression()
-                self._expect("KW", "as")
-                var = self._expect("VAR").value[1:]
-                self._expect("OP", ")")
-                g.binds.append((var, expr))
-            elif self._eat_kw("graph"):
-                gterm = self._term("graph")
-                g.patterns += self._graphify(self._plain_bgp(), gterm)
-            elif t.kind == "OP" and t.value == "{":
-                if self._peek(1).kind == "KW" \
-                        and self._peek(1).value == "select":
-                    # SPARQL 1.1 subquery: evaluated independently
-                    # (bottom-up), joined to the group's solutions on
-                    # the shared variables
-                    self._next()
-                    self._next()
-                    g.subqueries.append(self._parse_select(sub=True))
-                    self._expect("OP", "}")
-                    continue
-                # nested group / UNION block after other members
-                branches, bfilters = self._union_block()
-                if len(branches) == 1:
-                    # a single nested plain group joins by inlining
-                    # (branch FILTERs commute — see the leading form)
-                    g.patterns += branches[0]
-                    g.filters += bfilters[0]
-                else:
-                    self._reject_branch_meta(
-                        bfilters, "in a UNION mixed with other members")
-                    g.inline_unions.append(branches)
-                    g.inline_union_filters.append(bfilters)
-                continue
-            elif t.kind == "OP" and t.value == ".":
-                self._next()
-            else:
-                g.patterns += self._triples_block(None)
-        self._next()
-        return g
+                        "a UNION-branch FILTER are not supported in a "
+                        "UNION mixed with other members — lift the test "
+                        "to the outer group")
 
     def _values_clause(self) -> list[dict]:
         """Both VALUES forms → list of {var: value|None} rows."""
@@ -1256,11 +987,10 @@ class _Parser:
         # column in the inner group — raise typed instead
         self._allow_exists = False
         try:
-            entry = self._group_entry(
-                "NOT EXISTS" if negated else "EXISTS")
+            entry = self._group("NOT EXISTS" if negated else "EXISTS")
         finally:
             self._allow_exists = True
-        if self._entry_has_subqueries(entry):
+        if any(grp.subqueries for grp in entry.walk()):
             # the marker-join path has no subquery compile hook —
             # refuse rather than silently dropping the subquery
             raise SparqlUnsupportedError(
@@ -1647,11 +1377,11 @@ class _Parser:
                 # the (plain-BGP) where clause
                 self._dataset_clause(q)
                 self._expect("KW", "where")
-                pats = self._plain_bgp()
+                pats = self._group("BGP").patterns
                 q.template = [p[:3] for p in pats]
-                q.where = _Group(patterns=pats)
+                q.where = Group(patterns=pats)
             else:
-                q.template = self._plain_bgp()
+                q.template = self._group("BGP").patterns
                 self._dataset_clause(q)
                 self._expect("KW", "where")
                 q.where = self._group()
@@ -1822,44 +1552,13 @@ class _Parser:
 # Compiler
 # ---------------------------------------------------------------------------
 
-def _entry_patterns(entry):
-    """All pattern tuples inside an optional/negation entry (dicts
-    recurse through union branches, nested bodies, and subqueries)."""
-    if isinstance(entry, dict):
-        for br in entry.get("union", []):
-            yield from br
-        yield from entry.get("patterns", [])
-        for k in ("not_exists", "exists", "minus", "optional"):
-            for e in entry.get(k, []):
-                yield from _entry_patterns(e)
-        for sq in entry.get("subqueries", []):
-            yield from _query_patterns(sq)
-    elif entry and isinstance(entry[0], (list, tuple)):
-        yield from entry
-    elif entry:
-        yield entry
-
-
-def _group_patterns(g: "_Group"):
-    yield from g.patterns
-    for br in (g.union_branches or []):
-        yield from br
-    for blk in g.inline_unions:
-        for br in blk:
-            yield from br
-    for e in (list(g.not_exists) + list(g.exists) + list(g.minus)
-              + list(g.optional)):
-        yield from _entry_patterns(e)
-    for fe in g.filter_exists:
-        for _name, entry, _neg in fe["markers"]:
-            yield from _entry_patterns(entry)
-    for sq in g.subqueries:
-        yield from _query_patterns(sq)
-
-
 def _query_patterns(q: "_Query"):
+    """Every pattern tuple in the query's groups, subqueries included."""
     if q.where is not None:
-        yield from _group_patterns(q.where)
+        for grp in q.where.walk():
+            yield from grp.patterns
+            for sq in grp.subqueries:
+                yield from _query_patterns(sq)
 
 
 def _apply_dataset_clause(triples: DataFrame, q: "_Query",
@@ -1947,213 +1646,59 @@ def _agg_column(spec: tuple, alias: str, all_cols: list[str]) -> Any:
     return col.alias(alias)
 
 
-def _pattern_var_names(pats: list) -> set[str]:
-    vs: set[str] = set()
-    for p in pats:
-        for t in p:
-            if isinstance(t, str) and t.startswith("?"):
-                vs.add(t[1:])
-    return vs
-
-
-def _subquery_proj_vars(sq: "_Query") -> set[str]:
-    """The variable names a subquery's solution set projects."""
-    if sq.select_star:
-        # the full in-scope variable set of the subquery's group:
-        # pattern vars, everything nullable (optional/binds/UNDEF
-        # values), plus VALUES vars, union vars, inner-subquery vars
-        g = sq.where
-        vs = _pattern_var_names(g.patterns) | _group_nullable(g)
-        for row in g.values:
-            vs |= set(row)
-        for branches in ([g.union_branches] if g.union_branches
-                         else []) + g.inline_unions:
-            vs |= set().union(*[_pattern_var_names(b)
-                                for b in branches])
-        for isq in g.subqueries:
-            vs |= _subquery_proj_vars(isq)
-        for opt in g.optional:
-            vs |= _opt_entry_vars(opt)
-        return vs
-    return {item[-1] for item in (sq.select or [])}
-
-
-def _opt_entry_vars(opt) -> set[str]:
-    """Every variable an OPTIONAL entry can bind. Delegates to the
-    engine's collector (patterns / union / nested optionals / binds /
-    values / compiled solution_joins — kept in ONE place) and adds the
-    parser-only ``subqueries`` key, recursing so inner entries'
-    subqueries are seen too."""
-    vs = _kg_optional_entry_vars(opt)
-    if isinstance(opt, dict):
-        for sq in opt.get("subqueries", []):
-            vs |= _subquery_proj_vars(sq)
-        for inner in opt.get("optional", []):
-            vs |= _opt_entry_vars(inner)
-    return vs
-
-
-def _group_nullable(g: _Group) -> set[str]:
-    """Variables that may be unbound (null) in the group's solutions:
-    introduced by OPTIONAL, an UNDEF VALUES cell, or BIND. Used to
-    decide whether a subquery's projected variables are safe join
-    keys (nullable keys raise in bgp_match's solution join)."""
-    req = _pattern_var_names(g.patterns)
-    nul: set[str] = set()
-    if g.union_branches:
-        # bgp_union pads a variable missing from a branch with null —
-        # any var not bound by EVERY branch may be unbound
-        per_branch = [_pattern_var_names(b) for b in g.union_branches]
-        nul |= set.union(*per_branch) - set.intersection(*per_branch)
-    for branches in g.inline_unions:
-        per_branch = [_pattern_var_names(b) for b in branches]
-        nul |= set.union(*per_branch) - set.intersection(*per_branch)
-    for opt in g.optional:
-        nul |= _opt_entry_vars(opt) - req
-    for var, _ in g.binds:
-        nul.add(var)
-    for row in g.values:
-        for v, val in row.items():
-            if val is None and v not in req:
-                nul.add(v)
-    return nul
-
-
-def _compile_subqueries(triples: DataFrame, g: _Group, cols: dict,
-                        distinct_solutions: bool,
-                        meta_vars: frozenset = frozenset()
-                        ) -> tuple[list[dict] | None, set[str]]:
-    """Compile a group's subqueries bottom-up (SPARQL 1.1 §18.2.2)
-    and its inline UNION blocks (a UNION mixed with other group
-    members) into bgp_match solution-join entries. Returns (entries,
-    nullable variable names they may contribute)."""
-    if not g.subqueries and not g.inline_unions:
-        return None, set()
-    entries: list[dict] = []
-    nul: set[str] = set()
+def _join_subqueries(triples: DataFrame, g: Group, cols: dict,
+                     distinct_solutions: bool,
+                     meta_vars: frozenset) -> Group:
+    """Compile every subquery in ``g``, at any depth, bottom-up (SPARQL
+    §18.2.2) into a solution join of the group that holds it.
+    Substitution does not descend into subqueries, so each compiles
+    independently of the outer solutions; the evaluator refuses, typed,
+    a subquery-only variable shared with an outer [NOT] EXISTS / MINUS
+    solution."""
+    joins = list(g.solution_joins)
     for sq in g.subqueries:
         sdf, snul, scalar = _compile_select(
-            triples, sq, cols, distinct_solutions, meta_vars=meta_vars)
-        entries.append({"df": sdf, "nullable": snul,
-                        "allow_disjoint": scalar})
-        nul |= snul
-    for bi, branches in enumerate(g.inline_unions):
-        # UNION mixed with other group members: the union's solution
-        # set joins the rest of the group on the shared variables
-        # (algebra Join(Union(...), rest)). A variable not bound by
-        # EVERY branch is nullable — bgp_match raises (typed) if such
-        # a variable is a join key, per its unbound-compatibility
-        # policy for solution joins
-        per_branch = [_pattern_var_names(b) for b in branches]
-        bad = (set(meta_vars) & set.union(*per_branch)) \
-            - _pattern_var_names(g.patterns)
+            triples, sq, cols, distinct_solutions, meta_vars)
+        joins.append({"df": sdf, "nullable": snul,
+                      "allow_disjoint": scalar})
+
+    def nested(groups: list[Group]) -> list[Group]:
+        return [_join_subqueries(triples, x, cols, distinct_solutions,
+                                 meta_vars) for x in groups]
+    return replace(g, subqueries=[], solution_joins=joins,
+                   optional=nested(g.optional),
+                   not_exists=nested(g.not_exists),
+                   exists=nested(g.exists), minus=nested(g.minus))
+
+
+def _solutions(triples: DataFrame, g: Group, cols: dict,
+               distinct_solutions: bool,
+               meta_vars: frozenset = frozenset()
+               ) -> tuple[DataFrame, set[str]]:
+    """The WHERE group → (solutions, variables that may be unbound).
+    Every query form (SELECT and subqueries, ASK, CONSTRUCT, DESCRIBE)
+    reads its solutions from here: the group's subqueries become
+    solution joins, then ``kg._compile`` evaluates it."""
+    g = _join_subqueries(triples, g, cols, distinct_solutions, meta_vars)
+    if g.union_branches is not None:
+        scope = g.vars()
+    else:
+        req = _pattern_tuple_vars(g.patterns)
+        # a UNION that joins the other members as a solution set
+        # carries no term metadata
+        bad = (set(meta_vars) & {v for block in g.unions
+                                 for b in block for v in b.vars()}) - req
         if bad:
             raise SparqlUnsupportedError(
                 "LANG()/DATATYPE()/isIRI()-family builtins over the "
                 f"UNION-bound variable(s) {sorted(bad)} are not "
                 "supported — bind the variable in a required triple "
                 "pattern outside the UNION")
-        bf = g.inline_union_filters[bi] \
-            if bi < len(g.inline_union_filters) else None
-        udf = bgp_union(triples, branches,
-                        branch_filters=bf if bf and any(bf) else None,
-                        **cols)
-        unul = set.union(*per_branch) - set.intersection(*per_branch)
-        entries.append({"df": udf, "nullable": unul})
-        nul |= unul
-    return entries, nul
-
-
-def _compile_body_entries(triples: DataFrame, entries: list | None,
-                          cols: dict, distinct_solutions: bool,
-                          meta_vars: frozenset = frozenset()
-                          ) -> list | None:
-    """ONE recursive compiler for every group-body entry list —
-    OPTIONAL entries and [NOT] EXISTS / MINUS entries alike. Each
-    dict entry's nested-body keys ('optional', 'not_exists',
-    'exists', 'minus') recurse through this same function, and an
-    un-compiled 'subqueries' AST list is popped and compiled
-    bottom-up (SPARQL §18.2.2 — substitution does not descend into
-    subqueries, so each compiles independently of the outer
-    solutions; kg.bgp_match refuses, typed, a subquery-only variable
-    shared with the outer query) into bgp_match solution-join
-    entries AT EVERY NESTING LEVEL. A single compiler, not one per
-    entry kind: a per-kind copy that misses a nested key silently
-    drops the subquery — wrong results, not an error (the bug a
-    review pass found in the two-compiler version). Entries without
-    subqueries or nested bodies pass through unchanged; kg.bgp_match
-    additionally raises on any dict entry still carrying an unknown
-    key, so a future compile gap fails loudly."""
-    if not entries:
-        return None
-    out = []
-    for entry in entries:
-        if isinstance(entry, dict) and (
-                entry.get("subqueries")
-                or any(entry.get(k) for k in
-                       ("optional", "not_exists", "exists", "minus"))):
-            entry = dict(entry)
-            for k in ("optional", "not_exists", "exists", "minus"):
-                if entry.get(k):
-                    entry[k] = _compile_body_entries(
-                        triples, entry[k], cols, distinct_solutions,
-                        meta_vars)
-            sqs = entry.pop("subqueries", None)
-            if sqs:
-                sj = list(entry.get("solution_joins") or [])
-                for sq in sqs:
-                    sdf, snul, scalar = _compile_select(
-                        triples, sq, cols, distinct_solutions,
-                        meta_vars=meta_vars)
-                    sj.append({"df": sdf, "nullable": snul,
-                               "allow_disjoint": scalar})
-                entry["solution_joins"] = sj
-        out.append(entry)
-    return out
-
-
-def _compile_group(triples: DataFrame, g: _Group, cols: dict,
-                   distinct_solutions: bool,
-                   meta_vars: frozenset = frozenset()
-                   ) -> tuple[DataFrame, set[str]]:
-    """The WHERE group → (solutions, variables that may be unbound).
-    Every query form (SELECT and subqueries, ASK, CONSTRUCT, DESCRIBE)
-    reads its solutions from here: a whole-group UNION compiles to
-    ``bgp_union``, any other group to one ``bgp_match`` call with its
-    body entries and subqueries compiled bottom-up."""
-    sj, sub_nul = _compile_subqueries(triples, g, cols,
-                                      distinct_solutions, meta_vars)
-    if g.union_branches is not None:
-        if g.optional or g.filters or g.not_exists or g.exists \
-                or g.minus or g.values or g.binds or g.subqueries \
-                or g.filter_exists:
-            raise SparqlUnsupportedError(
-                "UNION mixed with other clauses is not supported")
-        uvars = set().union(*[_pattern_var_names(b)
-                              for b in g.union_branches])
-        df = bgp_union(triples, g.union_branches,
-                       distinct=distinct_solutions,
-                       branch_filters=g.union_branch_filters,
-                       meta_vars=(set(meta_vars) & uvars) or None,
-                       **cols)
-    else:
-        gvars = _pattern_var_names(g.patterns) | _group_nullable(g)
-
-        def body(entries, meta=frozenset()):
-            return _compile_body_entries(triples, entries, cols,
-                                         distinct_solutions, meta)
-        df = bgp_match(triples, g.patterns,
-                       optional=body(g.optional, meta_vars),
-                       not_exists=body(g.not_exists),
-                       exists=body(g.exists), minus=body(g.minus),
-                       filters=g.filters or None, values=g.values or None,
-                       binds=g.binds or None,
-                       filter_exists=g.filter_exists or None,
-                       distinct_solutions=distinct_solutions,
-                       solution_joins=sj,
-                       meta_vars=(set(meta_vars) & gvars) or None,
-                       **cols)
-    return df, _group_nullable(g) | sub_nul
+        scope = req | g.nullable()
+    out, _, nullable, _, _ = _compile(
+        triples, g, tuple(cols.values()), set(), "query",
+        set(meta_vars) & scope, top=True, distinct=distinct_solutions)
+    return out, nullable
 
 
 def _compile_select(triples: DataFrame, q: _Query, cols: dict,
@@ -2164,8 +1709,8 @@ def _compile_select(triples: DataFrame, q: _Query, cols: dict,
     projected variables, is_scalar) — is_scalar marks an aggregate
     query with no GROUP BY, which produces exactly one row (the
     scalar-subquery idiom; joined disjoint via broadcast)."""
-    df, nullable = _compile_group(triples, q.where, cols,
-                                  distinct_solutions, meta_vars)
+    df, nullable = _solutions(triples, q.where, cols,
+                              distinct_solutions, meta_vars)
     out_nul: set[str] = set()
     scalar = False
     has_agg = any(item[0] == "agg" for item in (q.select or []))
@@ -2300,8 +1845,8 @@ def sparql_query(triples: DataFrame, query: str,
     SELECT / CONSTRUCT / DESCRIBE return a DataFrame (one column per
     projected variable); ASK returns a bool (same contract as
     ``kg.ask``). See the module docstring for the supported subset.
-    Every form reads the WHERE solutions from the one group compiler
-    (a ``bgp_match`` / ``bgp_union`` call), then adds only its own
+    Every form reads the WHERE solutions from ``_solutions`` (the one
+    evaluator, ``kg._compile``), then adds only its own
     operators: SELECT's projection and solution modifiers, ASK's
     ``limit(1)`` probe, CONSTRUCT's template projections, DESCRIBE's
     node semi-joins.
@@ -2362,7 +1907,7 @@ def _sparql_dispatch(triples: DataFrame, query: str,
             return describe(triples, q.describe_node,
                             s_col=s_col, p_col=p_col, o_col=o_col)
     g = q.where
-    if q.form == "ask" and g == _Group(patterns=g.patterns) and all(
+    if q.form == "ask" and g == Group(patterns=g.patterns) and all(
             not t.startswith("?") for pat in g.patterns for t in pat):
         # ASK { <s> <p> <o> }: one pushed-filter probe per pattern
         return ask(triples, g.patterns, **cols)
@@ -2371,11 +1916,11 @@ def _sparql_dispatch(triples: DataFrame, query: str,
                                meta_vars=meta_vars)[0]
     if q.form == "ask":
         # existence needs no dedup; limit(1) stops at the first row
-        return bool(_compile_group(triples, g, cols, False,
-                                   meta_vars)[0].limit(1).take(1))
+        return bool(_solutions(triples, g, cols, False,
+                               meta_vars)[0].limit(1).take(1))
     if q.form == "describe":
-        sol, _ = _compile_group(triples, g, cols, distinct_solutions,
-                                meta_vars)
+        sol, _ = _solutions(triples, g, cols, distinct_solutions,
+                            meta_vars)
         if q.describe_var not in sol.columns:
             raise SparqlSyntaxError(
                 f"DESCRIBE ?{q.describe_var}: variable is not "
@@ -2392,23 +1937,21 @@ def _sparql_dispatch(triples: DataFrame, query: str,
     mint = {term[1:] for tri in q.template for term in tri
             if term.startswith("?" + _BNODE_VAR_PREFIX)} or None
     if not g.union_branches:
-        sol, _ = _compile_group(triples, g, cols, distinct_solutions,
-                                meta_vars)
+        sol, _ = _solutions(triples, g, cols, distinct_solutions,
+                            meta_vars)
         return _template_rows(sol, q.template, mint)
     # over a whole-group UNION the template instantiates per branch
     # (each branch's solutions mint their own ids) and the graphs
     # union; a template triple a branch cannot bind is skipped there
     outs = []
-    for branch, bf in zip(g.union_branches, g.union_branch_filters
-                          or [[] for _ in g.union_branches]):
-        bvars = _pattern_var_names(branch) | (mint or set())
+    for branch in g.union_branches:
+        bvars = _pattern_tuple_vars(branch.patterns) | (mint or set())
         tmpl = [t for t in q.template
                 if all(not term.startswith("?") or term[1:] in bvars
                        for term in t)]
         if tmpl:
-            sol, _ = _compile_group(
-                triples, _Group(patterns=branch, filters=bf), cols,
-                distinct_solutions, meta_vars)
+            sol, _ = _solutions(triples, branch, cols,
+                                distinct_solutions, meta_vars)
             outs.append(_template_rows(sol, tmpl, mint))
     if not outs:
         raise SparqlSyntaxError(

@@ -9,10 +9,15 @@ variables leaking UNRESOLVED_COLUMN out of sparql_query).
 
     python scripts/fuzz_sparql_exec.py [N_CASES] [SEED]
 
+One line per case: its index and its outcome, which is ``rows`` plus the
+sha256 prefix of the sorted result rows (``ask`` plus the bool for ASK),
+the typed exception's class name, or ``finding``. The totals come last,
+so two checkouts run with the same N and seed diff case by case.
+
 A bounded 60-case variant runs in the suite
 (tests/test_sparql.py::test_compile_fuzz_typed_or_runs)."""
-import random, sys
-sys.path.insert(0, "/root/repo")
+import hashlib, os, random, sys
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from jsonld_spark.operators.sparql import (
     sparql_query, SparqlSyntaxError, SparqlUnsupportedError)
@@ -114,15 +119,22 @@ for i in range(N):
     q = PFX + query()
     try:
         res = sparql_query(t, q)
-        if not isinstance(res, bool):
-            res.collect()
+        if isinstance(res, bool):
+            outcome = f"ask {res}"
+        else:
+            got = sorted(repr(tuple(r)) for r in res.collect())
+            digest = hashlib.sha256("\n".join(got).encode()).hexdigest()
+            outcome = f"rows {digest[:12]}"
         ok += 1
-    except (SparqlSyntaxError, SparqlUnsupportedError, ValueError):
+    except (SparqlSyntaxError, SparqlUnsupportedError, ValueError) as exc:
+        outcome = type(exc).__name__
         typed += 1
     except Exception as exc:
+        outcome = "finding"
         findings.append((q, repr(exc)[:200]))
-        if len(findings) >= 8:
-            break
+    print(f"{i}\t{outcome}", flush=True)
+    if len(findings) >= 8:
+        break
 print(f"ok={ok} typed={typed} findings={len(findings)}")
 for q, e in findings:
     print("----\n", q, "\n", e)

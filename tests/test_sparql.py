@@ -2408,3 +2408,76 @@ def test_query_forms_agree_on_where_solutions(triples, where):
         F.col("role") == "subject").collect()}
     all_subjects = {r.subj for r in triples.select("subj").collect()}
     assert {r["s"] for r in rows} & all_subjects <= subjects
+
+
+# ---------------------------------------------------------------------------
+# front-end parity: SPARQL text and the Python API build the same Group,
+# so they compile to the same optimized plan
+# ---------------------------------------------------------------------------
+
+def _normalised_plan(df) -> str:
+    import importlib.util
+    from pathlib import Path
+    path = Path(__file__).resolve().parents[1] / "scripts" / "dump_plans.py"
+    spec = importlib.util.spec_from_file_location("dump_plans", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.normalise(df._jdf.queryExecution().optimizedPlan().toString())
+
+
+_AUTHOR = ("?d", EX + "author", "?a")
+_PARITY = {
+    "optional_filter": (
+        "{ ?d ex:author ?a OPTIONAL { ?d ex:cites ?c . ?c ex:lang ?l "
+        "FILTER (?l = 'en') } }",
+        lambda t: bgp_match(t, [_AUTHOR], optional=[{
+            "patterns": [("?d", EX + "cites", "?c"),
+                         ("?c", EX + "lang", "?l")],
+            "filters": ["l = 'en'"]}])),
+    "not_exists": (
+        "{ ?d ex:author ?a FILTER NOT EXISTS { ?d ex:cites ?c } }",
+        lambda t: bgp_match(t, [_AUTHOR],
+                            not_exists=[[("?d", EX + "cites", "?c")]])),
+    "minus": (
+        "{ ?d ex:author ?a MINUS { ?d ex:lang 'de' } }",
+        lambda t: bgp_match(t, [_AUTHOR],
+                            minus=[[("?d", EX + "lang", "de")]])),
+    "values_undef": (
+        "{ ?d ex:author ?a VALUES (?a ?x) { ('alice' UNDEF) ('bob' 'b') } }",
+        lambda t: bgp_match(t, [_AUTHOR], values=[
+            {"a": "alice", "x": None}, {"a": "bob", "x": "b"}])),
+    "bind": (
+        "{ ?d ex:author ?a BIND (UCASE(?a) AS ?u) }",
+        lambda t: bgp_match(t, [_AUTHOR], binds=[("u", "upper(a)")])),
+    "union_branch_filters": (
+        "{ { ?d ex:author ?a FILTER (?a = 'alice') } UNION "
+        "{ ?d ex:lang ?l } }",
+        lambda t: bgp_union(t, [[_AUTHOR], [("?d", EX + "lang", "?l")]],
+                            branch_filters=[["a = 'alice'"], []])),
+    "inline_union": (
+        "{ ?d ex:lang ?l { ?d ex:author ?a } UNION { ?d ex:cites ?c } }",
+        lambda t: bgp_match(t, [("?d", EX + "lang", "?l")], solution_joins=[{
+            "df": bgp_union(t, [[_AUTHOR], [("?d", EX + "cites", "?c")]]),
+            "nullable": {"a", "c"}}])),
+    "exists_in_filter_expression": (
+        "{ ?d ex:lang ?l FILTER (?l = 'en' || EXISTS { ?d ex:cites ?c }) }",
+        lambda t: bgp_match(t, [("?d", EX + "lang", "?l")], filter_exists=[{
+            "expr": "l = 'en' OR _fx0",
+            "markers": [("_fx0", [("?d", EX + "cites", "?c")], False)]}])),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_PARITY))
+def test_front_ends_build_the_same_plan(spark, shape):
+    from jsonld_spark.session import local_frame
+    t = local_frame(spark, [
+        ("d1", EX + "author", "alice"), ("d2", EX + "author", "bob"),
+        ("d1", EX + "lang", "en"), ("d2", EX + "lang", "de"),
+        ("d1", EX + "cites", "d2")],
+        "subj string, pred string, obj_value string")
+    text, api = _PARITY[shape]
+    got = sparql_query(t, PFX + "SELECT * WHERE " + text)
+    want = api(t)
+    assert _normalised_plan(got) == _normalised_plan(want)
+    assert sorted(got.collect(), key=repr) == \
+        sorted(want.collect(), key=repr)
