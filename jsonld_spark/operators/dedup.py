@@ -4,11 +4,18 @@ Exact dedup is a hash-groupBy (map-side partial agg for free). MinHash
 LSH: shingle → 64-bit hashes → k minima → band buckets → candidate
 pairs by bucket join — only candidate pairs are verified, never the
 full cross product, so the shuffle stays O(n·bands) at 100 TB.
+
+The near-duplicate operators share two steps, each written once: the
+block step ``_band_pairs`` (the (band, key) self-join over MinHash
+band hashes, SimHash bit bands and — from ``similarity`` — embedding
+LSH buckets) and the expand step ``_expand`` (key-level pairs → id
+pairs through the membership table, plus the in-group pairs), which
+``minhash_candidate_pairs`` and ``simhash_neardup_pairs`` both use.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import reuse, spread_partitions
@@ -130,6 +137,51 @@ def band_signatures(sigs: DataFrame, num_hashes: int = 16, bands: int = 4,
         F.posexplode(F.array(*band_hashes)).alias("band", "band_hash"))
 
 
+def _band_pairs(banded: DataFrame, id_col: str, key: str, a: str, b: str,
+                keep: Column | None = None) -> DataFrame:
+    """The block step: rows (``id_col``, band, ``key``) that agree on
+    (band, ``key``) in any band → the distinct candidate pairs (``a``,
+    ``b``), ``a < b``. ``keep`` is a further pair predicate, applied
+    before the dedup so the dedup exchange carries only kept pairs."""
+    cond = F.col(a) < F.col(b)
+    return (banded.select("band", key, F.col(id_col).alias(a))
+            .join(banded.select("band", key, F.col(id_col).alias(b)),
+                  ["band", key])
+            .where(cond if keep is None else cond & keep)
+            .select(a, b).dropDuplicates())
+
+
+def _expand(key_pairs: DataFrame, member: DataFrame, id_col: str, key: str,
+            ka: str, kb: str, **in_group: Column) -> DataFrame:
+    """The expand step: key-level pairs (``ka``, ``kb``) → id pairs
+    (id_a < id_b) through the membership table (``id_col``, ``key``),
+    plus the pairs inside each key. Each ``in_group`` name is a further
+    key-pair column: carried to the expanded pairs, set to its value on
+    the in-group pairs.
+
+    No final dropDuplicates (one full-output exchange+agg fewer): with
+    unique ids every id has ONE key, so an id pair determines its key
+    pair and the two parts are duplicate-free and disjoint. The
+    `_ia != _ib` guard keeps a malformed table (one id under two keys)
+    from emitting a self pair."""
+    cross = (key_pairs
+             .join(member.select(F.col(id_col).alias("_ia"),
+                                 F.col(key).alias(ka)), ka)
+             .join(member.select(F.col(id_col).alias("_ib"),
+                                 F.col(key).alias(kb)), kb)
+             .where(F.col("_ia") != F.col("_ib"))
+             .select(F.least("_ia", "_ib").alias("id_a"),
+                     F.greatest("_ia", "_ib").alias("id_b"), *in_group))
+    within = (member.alias("ma").join(
+                  member.alias("mb"),
+                  [F.col(f"ma.{key}") == F.col(f"mb.{key}"),
+                   F.col(f"ma.{id_col}") < F.col(f"mb.{id_col}")])
+              .select(F.col(f"ma.{id_col}").alias("id_a"),
+                      F.col(f"mb.{id_col}").alias("id_b"),
+                      *[v.alias(n) for n, v in in_group.items()]))
+    return cross.unionByName(within)
+
+
 def minhash_candidate_pairs(docs: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", shingle_len: int = 5,
                             num_hashes: int = 16, bands: int = 4,
@@ -168,41 +220,11 @@ def minhash_candidate_pairs(docs: DataFrame, text_col: str = "text",
     reps = spread_partitions(reuse(
         members.groupBy("sig").agg(F.min(id_col).alias(id_col))))
     banded = band_signatures(reps, num_hashes, bands, hash_fn, id_col)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    rep_pairs = (a.join(b, [
-                    F.col("a.band") == F.col("b.band"),
-                    F.col("a.band_hash") == F.col("b.band_hash"),
-                    F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
-                 .select(F.col(f"a.{id_col}").alias("_ra"),
-                         F.col(f"b.{id_col}").alias("_rb"))
-                 .dropDuplicates())
+    rep_pairs = _band_pairs(banded, id_col, "band_hash", "_ra", "_rb")
     mem = members.join(reps.select(F.col("sig"),
                                    F.col(id_col).alias("_rep")),
                        "sig").select(id_col, "_rep")
-    # ``cross`` and ``within`` are each duplicate-free and mutually
-    # disjoint (ids are unique per the function's contract, so every
-    # id has exactly ONE rep: an unordered id pair determines its
-    # rep pair — unique in rep_pairs — and within-pairs share a rep
-    # while cross-pairs never do), so no final dropDuplicates pass
-    # is needed — removing it drops a full-output exchange+agg. The
-    # `_ia != _ib` guard keeps a malformed corpus (same id, two
-    # texts) from emitting a self pair (advice finding).
-    cross = (rep_pairs
-             .join(mem.select(F.col(id_col).alias("_ia"),
-                              F.col("_rep").alias("_ra")), "_ra")
-             .join(mem.select(F.col(id_col).alias("_ib"),
-                              F.col("_rep").alias("_rb")), "_rb")
-             .where(F.col("_ia") != F.col("_ib"))
-             .select(F.least("_ia", "_ib").alias("id_a"),
-                     F.greatest("_ia", "_ib").alias("id_b")))
-    within = (mem.alias("ma").join(
-                  mem.alias("mb"),
-                  [F.col("ma._rep") == F.col("mb._rep"),
-                   F.col(f"ma.{id_col}") < F.col(f"mb.{id_col}")])
-              .select(F.col(f"ma.{id_col}").alias("id_a"),
-                      F.col(f"mb.{id_col}").alias("id_b")))
-    return cross.unionByName(within)
+    return _expand(rep_pairs, mem, id_col, "_rep", "_ra", "_rb")
 
 
 def minhash_pairs_incremental(new_docs: DataFrame, corpus_sigs: DataFrame,
@@ -430,18 +452,11 @@ def simhash_hash_pairs(hashes: DataFrame, max_hamming: int = 3,
     # byte-based splitting never sees)
     banded = spread_partitions(hashes).select(
         sim_col, F.posexplode(F.array(*vals)).alias("band", "val"))
-    a = banded.select(F.col(sim_col).alias("hash_a"), "band", "val")
-    b = banded.select(F.col(sim_col).alias("hash_b"), "band", "val")
-    # Hamming-verify BEFORE the pair dedup: bit_count(xor) is a cheap
-    # per-row expression on columns already in the join output, and
-    # filter-then-dedup equals dedup-then-filter (hamming is a pure
-    # function of the pair), so the dropDuplicates exchange carries
-    # only true pairs instead of the whole candidate superset.
+    # Hamming-verify BEFORE the pair dedup (hamming is a pure function
+    # of the pair): the dedup exchange carries only true pairs
     hamming = F.bit_count(F.col("hash_a").bitwiseXOR(F.col("hash_b")))
-    cand = (a.join(b, ["band", "val"])
-            .where((F.col("hash_a") < F.col("hash_b"))
-                   & (hamming <= max_hamming))
-            .dropDuplicates(["hash_a", "hash_b"]))
+    cand = _band_pairs(banded, sim_col, "val", "hash_a", "hash_b",
+                       hamming <= max_hamming)
     return cand.select("hash_a", "hash_b",
                        hamming.cast("long").alias("hamming"))
 
@@ -507,22 +522,8 @@ def simhash_neardup_pairs(sims: DataFrame, max_hamming: int = 3,
     # sides
     hashes = reuse(member.select(sim_col).distinct())
     hp = simhash_hash_pairs(hashes, max_hamming, bits, sim_col)
-    in_group = (member.alias("x")
-                .join(member.alias("y"), [
-                    F.col(f"x.{sim_col}") == F.col(f"y.{sim_col}"),
-                    F.col(f"x.{id_col}") < F.col(f"y.{id_col}")])
-                .select(F.col(f"x.{id_col}").alias("id_a"),
-                        F.col(f"y.{id_col}").alias("id_b"),
-                        F.lit(0).cast("long").alias("hamming")))
-    ma = member.select(F.col(sim_col).alias("hash_a"),
-                       F.col(id_col).alias("_ia"))
-    mb = member.select(F.col(sim_col).alias("hash_b"),
-                       F.col(id_col).alias("_ib"))
-    cross = (hp.join(ma, "hash_a").join(mb, "hash_b")
-             .select(F.least("_ia", "_ib").alias("id_a"),
-                     F.greatest("_ia", "_ib").alias("id_b"),
-                     "hamming"))
-    return in_group.unionByName(cross)
+    return _expand(hp, member, id_col, sim_col, "hash_a", "hash_b",
+                   hamming=F.lit(0).cast("long"))
 
 
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",

@@ -1,9 +1,18 @@
 """Similarity search over embedding columns.
 
-Brute-force cosine top-k as the correctness baseline (broadcast the
-small query side — the scan side never shuffles), and an LSH-bucketed
-variant as the 100 TB scale path (random-hyperplane signs → bucket
-join; only candidate buckets are scored).
+Brute-force cosine top-k is the correctness baseline (broadcast the
+small query side — the scan side never shuffles). The LSH and IVF
+operators, the 100 TB scale path, run candidate → verify → rank with
+each shared step written once:
+
+* block: ``_lsh_buckets_expr`` (numpy kernel: ``lsh_bucket_arrays``)
+  + ``dedup._band_pairs``, the (band, key) self-join MinHash and SimHash
+  use too; or IVF lists (``ivf_assign``, ``_write_ivf_lists``);
+* probe: ``_probe``, the query side through the same assignment;
+* score: ``_sim``, the rounded exact cosine over two norm expressions
+  (``try_divide``, as in ``_approx_cos``: a zero norm scores NULL);
+* verify: ``_verify``, id pairs → both vectors → sim ≥ threshold;
+* rank: ``_topk``, NULL scores dropped, the k best per query.
 
 Dot products are built-in ``zip_with``/``aggregate`` expressions in
 double precision — JVM-side, no Python.
@@ -11,12 +20,13 @@ double precision — JVM-side, no Python.
 
 from __future__ import annotations
 
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import observed_cut, reuse
+from .dedup import _band_pairs
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -40,6 +50,69 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
+def _sim(a: Column, b: Column, na: Column, nb: Column,
+         round_to: int) -> Column:
+    """The score step: ``cosine`` over the norm expressions ``na`` /
+    ``nb`` (precomputed columns where the caller has them), rounded."""
+    return F.round(F.try_divide(_dot(a, b), na * nb), round_to)
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The rank step over (query_id, neighbor_id, sim): per query the k
+    best, ties broken by neighbor id. A NULL sim (zero-norm vector) is
+    no neighbor — kept, it would take a top-k slot at the tail."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"),
+                                               F.asc("neighbor_id"))
+    return (scored.where(F.col("sim").isNotNull())
+            .withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k))
+
+
+def _neighbors(j: DataFrame, id_col: str, sim: Column,
+               exclude_self: bool) -> DataFrame:
+    """Scored (query_id, neighbor_id, sim) rows of a query × corpus
+    join; ``exclude_self`` as in ``cosine_topk``."""
+    if exclude_self:
+        j = j.where(F.col(id_col) != F.col("query_id"))
+    return j.select("query_id", F.col(id_col).alias("neighbor_id"),
+                    sim.alias("sim"))
+
+
+def _probe(queries: DataFrame, assign: Callable[[DataFrame], DataFrame],
+           key: str, id_col: str, vec_col: str) -> DataFrame:
+    """The probe step: (query_id, query_vec) through the corpus-side
+    ``assign`` (bucket or list assignment, which reads corpus column
+    names) → (query_id, query_vec, ``key``)."""
+    return (assign(queries.withColumnRenamed("query_id", id_col)
+                   .withColumnRenamed("query_vec", vec_col))
+            .select(F.col(id_col).alias("query_id"),
+                    F.col(vec_col).alias("query_vec"), key))
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, pair_id: str,
+             side: str) -> DataFrame:
+    """One side of a verify join: (``pair_id``, v_``side``,
+    _n``side``). The norm is computed once per vector, below the
+    exchange, not per candidate pair: bit-identical doubles, ~2/3 less
+    arithmetic per verified pair (guide §2.3)."""
+    return df.select(F.col(id_col).alias(pair_id),
+                     F.col(vec_col).alias(f"v_{side}"),
+                     _norm(F.col(vec_col)).alias(f"_n{side}"))
+
+
+def _verify(pairs: DataFrame, va: DataFrame, vb: DataFrame,
+            threshold: float, round_to: int) -> DataFrame:
+    """The verify step: candidate id pairs join both sides' vectors
+    (``_vectors`` frames, sides a and b) by id; the (a, b, sim) pairs
+    whose exact rounded cosine reaches ``threshold`` are kept."""
+    a, b = va.columns[0], vb.columns[0]
+    sim = _sim(F.col("v_a"), F.col("v_b"), F.col("_na"), F.col("_nb"),
+               round_to)
+    return (pairs.join(va, a).join(vb, b)
+            .select(a, b, sim.alias("sim"))
+            .where(F.col("sim") >= threshold))
+
+
 def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 round_to: int = 4, exclude_self: bool = True) -> DataFrame:
@@ -60,18 +133,9 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     j = embeddings.withColumn("_vn", _norm(F.col(vec_col))) \
         .crossJoin(F.broadcast(
             queries.withColumn("_qn", _norm(F.col("query_vec")))))
-    if exclude_self:
-        j = j.where(F.col(id_col) != F.col("query_id"))
-    sim = F.round(F.try_divide(_dot(F.col(vec_col), F.col("query_vec")),
-                               F.col("_vn") * F.col("_qn")), round_to)
-    scored = j.select("query_id", F.col(id_col).alias("neighbor_id"),
-                      sim.alias("sim"))
-    # a NULL sim (zero-norm vector) is not a neighbor — without the
-    # filter it would still occupy a top-k slot at the tail
-    scored = scored.where(F.col("sim").isNotNull())
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    sim = _sim(F.col(vec_col), F.col("query_vec"), F.col("_vn"),
+               F.col("_qn"), round_to)
+    return _topk(_neighbors(j, id_col, sim, exclude_self), k)
 
 
 def embedding_neardup(embeddings: DataFrame, threshold: float = 0.95,
@@ -91,21 +155,13 @@ def embedding_neardup(embeddings: DataFrame, threshold: float = 0.95,
     Without ``planes``: the O(n²) all-pairs self-join — the exact recall
     baseline, for tests and small inputs only.
     """
-    # Norms are computed ONCE PER VECTOR in the pre-join projections
-    # (below the exchange), not per candidate pair: same expression over
-    # the same values ⇒ bit-identical doubles, ~2/3 less arithmetic per
-    # verified pair (guide §2.3 — move work off the post-shuffle rows).
+    va = _vectors(embeddings, id_col, vec_col, "id_a", "a")
+    vb = _vectors(embeddings, id_col, vec_col, "id_b", "b")
     if planes is None:
-        a = embeddings.select(F.col(id_col).alias("id_a"),
-                              F.col(vec_col).alias("v_a"),
-                              _norm(F.col(vec_col)).alias("_na"))
-        b = embeddings.select(F.col(id_col).alias("id_b"),
-                              F.col(vec_col).alias("v_b"),
-                              _norm(F.col(vec_col)).alias("_nb"))
-        j = a.join(b, F.col("id_a") < F.col("id_b"))
-        sim = F.round(F.try_divide(_dot(F.col("v_a"), F.col("v_b")),
-                                   F.col("_na") * F.col("_nb")), round_to)
-        return (j.select("id_a", "id_b", sim.alias("sim"))
+        sim = _sim(F.col("v_a"), F.col("v_b"), F.col("_na"), F.col("_nb"),
+                   round_to)
+        return (va.join(vb, F.col("id_a") < F.col("id_b"))
+                .select("id_a", "id_b", sim.alias("sim"))
                 .where(F.col("sim") >= threshold))
     # The bucket ARRAYS are materialized once (lineage cut) before the
     # self-join — the same boundary minhash_candidate_pairs puts after
@@ -124,22 +180,8 @@ def embedding_neardup(embeddings: DataFrame, threshold: float = 0.95,
         lsh_bucket_arrays(embeddings, planes, bands, id_col, vec_col))
     banded = arrays.select(
         id_col, F.posexplode("buckets").alias("band", "bucket"))
-    a = banded.select("band", "bucket", F.col(id_col).alias("id_a"))
-    b = banded.select("band", "bucket", F.col(id_col).alias("id_b"))
-    cand = (a.join(b, ["band", "bucket"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    va = embeddings.select(F.col(id_col).alias("id_a"),
-                           F.col(vec_col).alias("v_a"),
-                           _norm(F.col(vec_col)).alias("_na"))
-    vb = embeddings.select(F.col(id_col).alias("id_b"),
-                           F.col(vec_col).alias("v_b"),
-                           _norm(F.col(vec_col)).alias("_nb"))
-    sim = F.round(F.try_divide(_dot(F.col("v_a"), F.col("v_b")),
-                               F.col("_na") * F.col("_nb")), round_to)
-    return (cand.join(va, "id_a").join(vb, "id_b")
-            .select("id_a", "id_b", sim.alias("sim"))
-            .where(F.col("sim") >= threshold))
+    cand = _band_pairs(banded, id_col, "bucket", "id_a", "id_b")
+    return _verify(cand, va, vb, threshold, round_to)
 
 
 def embedding_clusters(embeddings: DataFrame, threshold: float = 0.95,
@@ -254,10 +296,9 @@ def lsh_geometry(threshold: float, target_recall: float = 0.9,
     return out
 
 
-def _lsh_buckets_expr(planes: list[list[float]], bands: int,
-                      vec_col: str) -> Column:
-    """The banded-bucket ARRAY expression (one long per band) shared by
-    ``banded_lsh_buckets`` and ``lsh_bucket_arrays``."""
+def _check_lsh_geometry(planes: list[list[float]], bands: int) -> int:
+    """Shared validation for the banded-bucket builders; returns
+    planes-per-band."""
     per = len(planes) // max(bands, 1)
     if bands < 1 or per < 1:
         # per == 0 would make every bucket the constant 0 → the candidate
@@ -274,6 +315,14 @@ def _lsh_buckets_expr(planes: list[list[float]], bands: int,
     import math
     if any(not math.isfinite(x) for p in planes for x in p):
         raise ValueError("planes must be finite floats")
+    return per
+
+
+def _lsh_buckets_expr(planes: list[list[float]], bands: int,
+                      vec_col: str) -> Column:
+    """The banded-bucket ARRAY expression (one long per band) behind
+    ``lsh_buckets``, ``banded_lsh_buckets`` and ``lsh_bucket_arrays``."""
+    per = _check_lsh_geometry(planes, bands)
     # ONE expression tree: sign bits for all planes computed once from a
     # nested array literal, band buckets derived by slicing that shared
     # array. The per-plane formulation built one dot-aggregate subtree
@@ -301,26 +350,6 @@ def _lsh_buckets_expr(planes: list[list[float]], bands: int,
             F.zip_with(F.slice(signs, b * per + 1, per), weights,
                        lambda s, w: s * w),
             F.lit(0).cast("long"), lambda acc, x: acc + x))
-
-
-def _check_lsh_geometry(planes: list[list[float]], bands: int) -> int:
-    """Shared validation for the banded-bucket builders; returns
-    planes-per-band."""
-    per = len(planes) // max(bands, 1)
-    if bands < 1 or per < 1:
-        raise ValueError(
-            f"banded_lsh_buckets needs at least one plane per band "
-            f"(got {len(planes)} planes, {bands} bands)")
-    if len(planes) % bands != 0:
-        raise ValueError(
-            f"len(planes)={len(planes)} must divide evenly into "
-            f"bands={bands}; remainder planes would be silently unused")
-    if per > 62:
-        raise ValueError(f"{per} planes per band overflows a long bucket")
-    import math
-    if any(not math.isfinite(x) for p in planes for x in p):
-        raise ValueError("planes must be finite floats")
-    return per
 
 
 def lsh_bucket_arrays(embeddings: DataFrame, planes: list[list[float]],
@@ -424,16 +453,14 @@ def banded_lsh_buckets(embeddings: DataFrame, planes: list[list[float]],
 def lsh_buckets(embeddings: DataFrame, planes: list[list[float]],
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Random-hyperplane LSH: sign bits of dot products with fixed planes
-    → integer bucket. ``planes`` must be generated driver-side with a
-    fixed seed so bucketing is deterministic."""
-    if len(planes) > 62:
-        raise ValueError(f"{len(planes)} planes overflows a long bucket")
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        d = _dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in plane]))
-        bucket = bucket + F.when(d > 0, F.lit(1 << i).cast("long")) \
-                           .otherwise(F.lit(0).cast("long"))
-    return embeddings.select(id_col, vec_col, bucket.alias("bucket"))
+    → integer bucket — the one-band ``_lsh_buckets_expr``. ``planes``
+    must be generated driver-side with a fixed seed so bucketing is
+    deterministic."""
+    # explode, not [0]: on a nullable element the join's inferred
+    # isnotnull filter would evaluate the bucket expression twice
+    return embeddings.select(
+        id_col, vec_col,
+        F.explode(_lsh_buckets_expr(planes, 1, vec_col)).alias("bucket"))
 
 
 def ann_cosine_topk(embeddings: DataFrame, queries: DataFrame,
@@ -445,26 +472,14 @@ def ann_cosine_topk(embeddings: DataFrame, queries: DataFrame,
     brute force is off the table. ``exclude_self`` as in
     ``cosine_topk`` — set False for a disjoint query id space."""
     e_b = lsh_buckets(embeddings, planes, id_col, vec_col)
-    q_b = lsh_buckets(queries.withColumnRenamed("query_id", id_col)
-                      .withColumnRenamed("query_vec", vec_col),
-                      planes, id_col, vec_col) \
-        .select(F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("query_vec"), "bucket")
+    q_b = _probe(queries, lambda d: lsh_buckets(d, planes, id_col, vec_col),
+                 "bucket", id_col, vec_col)
     j = e_b.withColumn("_vn", _norm(F.col(vec_col))) \
         .join(F.broadcast(q_b.withColumn("_qn", _norm(F.col("query_vec")))),
               "bucket")
-    if exclude_self:
-        j = j.where(F.col(id_col) != F.col("query_id"))
-    sim = F.round(F.try_divide(_dot(F.col(vec_col), F.col("query_vec")),
-                               F.col("_vn") * F.col("_qn")), 4)
-    scored = j.select("query_id", F.col(id_col).alias("neighbor_id"),
-                      sim.alias("sim"))
-    # a NULL sim (zero-norm vector) is not a neighbor — without the
-    # filter it would still occupy a top-k slot at the tail
-    scored = scored.where(F.col("sim").isNotNull())
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    sim = _sim(F.col(vec_col), F.col("query_vec"), F.col("_vn"),
+               F.col("_qn"), 4)
+    return _topk(_neighbors(j, id_col, sim, exclude_self), k)
 
 
 def ivf_assign(embeddings: DataFrame, centroids: list[list[float]],
@@ -560,30 +575,19 @@ def ivf_cosine_topk(embeddings: DataFrame, queries: DataFrame,
     (random-hyperplane LSH) — IVF adapts to the data distribution via
     its codebook, LSH needs no training."""
     e_l = ivf_assign(embeddings, centroids, id_col, vec_col, nprobe=1)
-    q_l = (ivf_assign(
-        queries.withColumnRenamed("query_id", id_col)
-               .withColumnRenamed("query_vec", vec_col),
-        centroids, id_col, vec_col, nprobe=nprobe)
-        .select(F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("query_vec"), "list_id"))
+    q_l = _probe(queries, lambda d: ivf_assign(d, centroids, id_col, vec_col,
+                                               nprobe=nprobe),
+                 "list_id", id_col, vec_col)
     # NOT norm-precomputed: A/B at sf1 measured the extra projection
     # over the ivf_assign Generate slightly SLOWER than the per-pair
     # cosine here (2.14 s vs 1.88 s) — the probed-pair count is small
     # (nprobe/k of the corpus × queries-per-list), unlike the neardup
     # verify joins where precomputed norms win
     j = e_l.join(F.broadcast(q_l), "list_id")
-    if exclude_self:
-        # assumes query ids share the corpus id space; pass False for an
-        # external query table, else an id collision drops a neighbor
-        j = j.where(F.col(id_col) != F.col("query_id"))
-    sim = F.round(cosine(F.col(vec_col), F.col("query_vec")), round_to)
-    scored = j.select("query_id", F.col(id_col).alias("neighbor_id"),
-                      sim.alias("sim")).dropDuplicates(
-                          ["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    v, q = F.col(vec_col), F.col("query_vec")
+    scored = _neighbors(j, id_col, _sim(v, q, _norm(v), _norm(q), round_to),
+                        exclude_self)
+    return _topk(scored.dropDuplicates(["query_id", "neighbor_id"]), k)
 
 
 def embedding_neardup_incremental(spark, index_dir: str,
@@ -649,9 +653,7 @@ def embedding_neardup_incremental(spark, index_dir: str,
         n_l, n = observed_cut(n_l, F.count(F.lit(1)))
         small = n <= eff_rows
     hint = F.broadcast if small else (lambda df: df)
-    probed = sorted({r["list_id"] for r in
-                     n_l.select("list_id").distinct().collect()})
-    idx = spark.read.parquet(index_dir).where(F.col("list_id").isin(probed))
+    idx = _probed_lists(spark, index_dir, n_l)
     j = (idx.join(hint(n_l), "list_id")
          .where(F.col("vec_id") != F.col("new_id")))
     approx = _approx_cos(F.col("qvec"), F.col("scale"), F.col("vnorm"),
@@ -659,17 +661,9 @@ def embedding_neardup_incremental(spark, index_dir: str,
     cand = (j.where(approx >= threshold - prefilter_margin)
             .select("new_id", F.col("vec_id").alias("corpus_id"))
             .dropDuplicates(["new_id", "corpus_id"]))
-    cv = corpus.select(F.col(id_col).alias("corpus_id"),
-                       F.col(vec_col).alias("_cv"),
-                       _norm(F.col(vec_col)).alias("_cn"))
-    nv = new_batch.select(F.col(id_col).alias("new_id"),
-                          F.col(vec_col).alias("_nv2"),
-                          _norm(F.col(vec_col)).alias("_nn"))
-    sim = F.round(F.try_divide(_dot(F.col("_cv"), F.col("_nv2")),
-                               F.col("_cn") * F.col("_nn")), round_to)
-    return (cand.join(cv, "corpus_id").join(nv, "new_id")
-            .select("new_id", "corpus_id", sim.alias("sim"))
-            .where(F.col("sim") >= threshold))
+    return _verify(cand, _vectors(new_batch, id_col, vec_col, "new_id", "a"),
+                   _vectors(corpus, id_col, vec_col, "corpus_id", "b"),
+                   threshold, round_to)
 
 
 def _approx_cos(qvec: Column, scale: Column, vnorm: Column,
@@ -677,8 +671,9 @@ def _approx_cos(qvec: Column, scale: Column, vnorm: Column,
     """Approximate cosine from an int8-quantized corpus vector against a
     full-precision query: scale·(qvec·query) / (‖v‖·‖q‖). Only the
     numerator is quantized; the stored exact norm keeps the estimate
-    unbiased to ~1/254 relative error per component."""
-    return (scale * _dot(qvec, query_vec)) / (vnorm * qnorm)
+    unbiased to ~1/254 relative error per component. A zero norm on
+    either side scores NULL (``try_divide``, as ``cosine``)."""
+    return F.try_divide(scale * _dot(qvec, query_vec), vnorm * qnorm)
 
 
 def quantize_int8(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -706,6 +701,27 @@ def quantize_int8(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return staged.withColumn("qvec", qvec)
 
 
+def _write_ivf_lists(embeddings: DataFrame, centroids: list[list[float]],
+                     out_dir: str, id_col: str, vec_col: str,
+                     mode: str) -> None:
+    """The one IVF list writer: (list_id, vec_id, qvec, scale, vnorm)
+    rows, partitioned by ``list_id``, written with ``mode``."""
+    assigned = ivf_assign(embeddings, centroids, id_col, vec_col, nprobe=1)
+    (quantize_int8(assigned, vec_col)
+     .select("list_id", F.col(id_col).alias("vec_id"), "qvec", "scale",
+             "vnorm")
+     .write.mode(mode).partitionBy("list_id").parquet(out_dir))
+
+
+def _probed_lists(spark, index_dir: str, probes: DataFrame) -> DataFrame:
+    """The index rows of the lists ``probes`` names, read by partition
+    pruning (`list_id IN` driver literals → the scan's
+    PartitionFilters, not a post-read filter)."""
+    probed = sorted({r["list_id"] for r in
+                     probes.select("list_id").distinct().collect()})
+    return spark.read.parquet(index_dir).where(F.col("list_id").isin(probed))
+
+
 def build_ivf_index(embeddings: DataFrame, centroids: list[list[float]],
                     out_dir: str, id_col: str = "vec_id",
                     vec_col: str = "embedding") -> None:
@@ -720,11 +736,8 @@ def build_ivf_index(embeddings: DataFrame, centroids: list[list[float]],
     only for the exact rerank of the few approx-survivors (at scale,
     keep that table bucketed by ``vec_id`` so the fetch join is
     co-located, not a scan)."""
-    assigned = ivf_assign(embeddings, centroids, id_col, vec_col, nprobe=1)
-    (quantize_int8(assigned, vec_col)
-     .select("list_id", F.col(id_col).alias("vec_id"), "qvec", "scale",
-             "vnorm")
-     .write.mode("overwrite").partitionBy("list_id").parquet(out_dir))
+    _write_ivf_lists(embeddings, centroids, out_dir, id_col, vec_col,
+                     "overwrite")
 
 
 def append_to_ivf_index(new_batch: DataFrame,
@@ -740,11 +753,8 @@ def append_to_ivf_index(new_batch: DataFrame,
     (tested). ``centroids`` MUST be the codebook the index was built
     with — inverted lists are keyed by it; retraining the codebook
     means a full rebuild."""
-    assigned = ivf_assign(new_batch, centroids, id_col, vec_col, nprobe=1)
-    (quantize_int8(assigned, vec_col)
-     .select("list_id", F.col(id_col).alias("vec_id"), "qvec", "scale",
-             "vnorm")
-     .write.mode("append").partitionBy("list_id").parquet(index_dir))
+    _write_ivf_lists(new_batch, centroids, index_dir, id_col, vec_col,
+                     "append")
 
 
 def search_ivf_index(spark, index_dir: str, embeddings: DataFrame,
@@ -758,9 +768,7 @@ def search_ivf_index(spark, index_dir: str, embeddings: DataFrame,
 
     1. assign each query to its ``nprobe`` nearest lists (driver-side
        literal centroids, pure column math);
-    2. read ONLY those list partitions of the index (`.where(list_id
-       IN ...)` → parquet partition pruning — the scan's
-       PartitionFilters, not a post-read filter);
+    2. read ONLY those list partitions of the index (``_probed_lists``);
     3. approximate cosine against the broadcast queries (int8 numerator,
        stored exact norms) keeps the top ``k·oversample`` per query;
     4. survivors join back to the full-precision embeddings column for
@@ -770,39 +778,26 @@ def search_ivf_index(spark, index_dir: str, embeddings: DataFrame,
     With adequate ``oversample`` the int8 prefilter (~0.4% worst-case
     per-component error) does not perturb the exact top-k — verified by
     equality tests against ``ivf_cosine_topk``."""
-    q_l = (ivf_assign(
-        queries.withColumnRenamed("query_id", id_col)
-               .withColumnRenamed("query_vec", vec_col),
-        centroids, id_col, vec_col, nprobe=nprobe)
-        .select(F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("query_vec"),
-                _norm(F.col(vec_col)).alias("_qn"), "list_id"))
-    probed = sorted({r["list_id"] for r in
-                     q_l.select("list_id").distinct().collect()})
-    idx = spark.read.parquet(index_dir).where(F.col("list_id").isin(probed))
-    j = idx.join(F.broadcast(q_l), "list_id")
-    if exclude_self:
-        j = j.where(F.col("vec_id") != F.col("query_id"))
     # query norm computed once per broadcast probe row, not per
     # (index row × query) pair — bit-identical doubles
+    q_l = _probe(queries, lambda d: ivf_assign(d, centroids, id_col, vec_col,
+                                               nprobe=nprobe),
+                 "list_id", id_col, vec_col) \
+        .withColumn("_qn", _norm(F.col("query_vec")))
+    idx = _probed_lists(spark, index_dir, q_l)
+    j = idx.join(F.broadcast(q_l), "list_id")
     approx = _approx_cos(F.col("qvec"), F.col("scale"), F.col("vnorm"),
                          F.col("query_vec"), F.col("_qn"))
-    scored = (j.select("query_id", "vec_id", approx.alias("_a"))
-              .dropDuplicates(["query_id", "vec_id"]))
-    w = Window.partitionBy("query_id").orderBy(F.desc("_a"),
-                                               F.asc("vec_id"))
-    surv = (scored.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= k * oversample)
-            .select("query_id", F.col("vec_id").alias("_nid")))
+    scored = _neighbors(j, "vec_id", approx, exclude_self)
+    surv = (_topk(scored.dropDuplicates(["query_id", "neighbor_id"]),
+                  k * oversample)
+            .select("query_id", F.col("neighbor_id").alias("_nid")))
     # exact rerank on the full-precision column; survivors are tiny
     # (k·oversample·|queries| rows) so they broadcast
     full = embeddings.join(F.broadcast(surv),
                            F.col(id_col) == F.col("_nid")) \
         .join(F.broadcast(queries), "query_id")
-    sim = F.round(cosine(F.col(vec_col), F.col("query_vec")), round_to)
-    rescored = full.select("query_id", F.col("_nid").alias("neighbor_id"),
-                           sim.alias("sim"))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("sim"),
-                                                F.asc("neighbor_id"))
-    return (rescored.withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= k))
+    v, q = F.col(vec_col), F.col("query_vec")
+    return _topk(_neighbors(full, "_nid",
+                            _sim(v, q, _norm(v), _norm(q), round_to),
+                            False), k)

@@ -190,6 +190,19 @@ def test_simhash_neardup_collapses_giant_dup_groups(spark):
     assert sum(1 for p in pairs if p.hamming == 1) == cross
 
 
+def test_simhash_neardup_pairs_no_self_pair(spark):
+    """A malformed table that lists one id under two hashes within the
+    Hamming threshold must not emit that id paired with itself — the
+    same guard the MinHash expansion has."""
+    from jsonld_spark.operators.dedup import simhash_neardup_pairs
+    sims = spark.createDataFrame([(1, 0b1010), (1, 0b1011), (2, 0b1010)],
+                                 "doc_id long, simhash long")
+    got = {(r.id_a, r.id_b, r.hamming)
+           for r in simhash_neardup_pairs(sims, max_hamming=3).collect()}
+    assert all(a != b for a, b, _ in got), got
+    assert (1, 2, 0) in got
+
+
 def test_simhash_hash_pairs_requires_band_divisibility(spark):
     import pytest as _pytest
 

@@ -107,3 +107,29 @@ def test_append_to_index_equals_full_rebuild(spark, setup, tmp_path):
     want = sorted(map(key, search_ivf_index(
         spark, idx_dir, emb, queries, cents, k=10, nprobe=2).collect()))
     assert got == want and len(got) > 0
+
+
+def test_zero_norm_vector_is_no_neighbor_or_near_dup(spark, tmp_path):
+    """A zero-norm vector (failed encoder) in the landed index or in a
+    new batch scores NULL in the int8 approximate cosine — the division
+    by its zero norm must not fail the job under ANSI mode — and is
+    never a neighbor nor a near-duplicate, as ``cosine`` has it."""
+    from jsonld_spark.operators.similarity import (
+        embedding_neardup_incremental)
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.9, 0.1])], schema)
+    cents = [[1.0, 0.0]]
+    idx_dir = str(tmp_path / "index")
+    build_ivf_index(corpus, cents, idx_dir)
+    q = spark.createDataFrame([(1, [1.0, 0.0]), (9, [0.0, 0.0])],
+                              "query_id long, query_vec array<double>")
+    got = [(r.query_id, r.neighbor_id, r.rank) for r in search_ivf_index(
+        spark, idx_dir, corpus, q, cents, k=3, nprobe=1).collect()]
+    assert got == [(1, 2, 1)], got
+    new = spark.createDataFrame(
+        [(10, [0.0, 0.0]), (11, [0.91, 0.1])], schema)
+    pairs = [(r.new_id, r.corpus_id) for r in embedding_neardup_incremental(
+        spark, idx_dir, corpus, new, cents, threshold=0.9,
+        nprobe=1).collect()]
+    assert sorted(pairs) == [(11, 1), (11, 2)], pairs

@@ -688,3 +688,35 @@ def test_fan_out_operators_materialize_their_input(spark, name):
     q = E.queries()[name](spark, SF_SMALL)
     assert _python_eval_nodes(q) == 0
     assert "Scan ExistingRDD" in _plan(q)
+
+
+def test_normalise_canonicalises_distinct_aggregate_gids():
+    """``RewriteDistinctAggregates`` numbers the COUNT(DISTINCT ...)
+    groups and orders their child columns by hashes that follow
+    expression ids, so one query can print either form;
+    ``scripts/dump_plans.py::normalise`` maps both to one text (the gid
+    filters, the Expand literals and the child columns together), as it
+    does for lambda variable suffixes."""
+    import importlib.util
+    from pathlib import Path
+    path = Path(__file__).resolve().parents[1] / "scripts" / "dump_plans.py"
+    spec = importlib.util.spec_from_file_location("dump_plans", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    plan = (
+        "Aggregate [lang#3], [lang#3, count(d#7) FILTER (WHERE (gid#9 = {a}))"
+        " AS n_docs#10L, count(r#8) FILTER (WHERE (gid#9 = {b})) AS"
+        " n_reviewers#11L]\n"
+        "+- Aggregate [{cols}], [{cols}]\n"
+        "   +- Expand [{rows}], [{cols}]\n"
+        "      +- Project [lang#3, size(transform(x#2, lambdafunction("
+        "lambda x_{n}#12, lambda x_{n}#12, false))) AS d#7, r#8]")
+    one = plan.format(a=1, b=2, n=71, cols="lang#3, d#7, r#8, gid#9",
+                      rows="[lang#3, d#7, null, 1], [lang#3, null, r#8, 2]")
+    two = plan.format(a=2, b=1, n=5, cols="lang#3, r#8, d#7, gid#9",
+                      rows="[lang#3, r#8, null, 1], [lang#3, null, d#7, 2]")
+    assert one != two
+    assert mod.normalise(one) == mod.normalise(two)
+    assert "(gid# = 1)) AS n_docs#L" in mod.normalise(two)
+    assert ("Expand [[lang#, d#, null, 1], [lang#, null, r#, 2]], "
+            "[lang#, d#, r#, gid#]") in mod.normalise(two)

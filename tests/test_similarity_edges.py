@@ -216,11 +216,18 @@ def test_embedding_neardup_hi_regime_selective_and_complete(spark):
     assert cand < 0.02 * (n * (n - 1) / 2)
 
 
-def test_cosine_zero_vector_yields_null_not_nan(spark):
+def test_cosine_zero_vector_yields_null_not_nan(spark, tmp_path):
     """Review regression: a zero-norm vector (failed encoder) must
     yield NULL similarity — Spark orders NaN above every number, so a
-    NaN would pass every threshold filter and rank first in top-k."""
-    from jsonld_spark.operators.similarity import cosine_topk
+    NaN would pass every threshold filter and rank first in top-k.
+    Every top-k operator drops the NULL row rather than ranking it: the
+    LSH and IVF ones are given one bucket / one list holding all three
+    vectors, so the zero vector is a candidate everywhere."""
+    from jsonld_spark.operators.similarity import (ann_cosine_topk,
+                                                   build_ivf_index,
+                                                   cosine_topk,
+                                                   ivf_cosine_topk,
+                                                   search_ivf_index)
     emb = spark.createDataFrame(
         [("z", [0.0, 0.0]), ("a", [1.0, 0.0]), ("b", [0.9, 0.1])],
         "vec_id string, embedding array<double>")
@@ -231,6 +238,19 @@ def test_cosine_zero_vector_yields_null_not_nan(spark):
     # the zero vector must NOT appear as a neighbor
     assert all(v != "z" for v, _ in rows), rows
     assert rows[0][0] in ("a", "b")
+
+    cents = [[1.0, 0.0]]
+    idx_dir = str(tmp_path / "index")
+    build_ivf_index(emb, cents, idx_dir)
+    for name, df in [
+            ("ann", ann_cosine_topk(emb, q, [[-1.0, 0.0]], k=2)),
+            ("ivf", ivf_cosine_topk(emb, q, cents, k=2, nprobe=1)),
+            ("index", search_ivf_index(spark, idx_dir, emb, q, cents, k=2,
+                                       nprobe=1))]:
+        rows = [(r["neighbor_id"], r["sim"], r["rank"])
+                for r in df.collect()]
+        assert rows == [("b", rows[0][1], 1)], (name, rows)
+        assert rows[0][1] is not None, name
 
 
 def test_lsh_geometry_capped_fallback_picks_best_recall():
@@ -257,7 +277,8 @@ def test_lsh_bucket_arrays_numpy_matches_expr_form(spark):
     from pyspark.sql import functions as F
 
     from jsonld_spark.operators.similarity import (_lsh_buckets_expr,
-                                                   lsh_bucket_arrays)
+                                                   lsh_bucket_arrays,
+                                                   lsh_buckets)
     rs = np.random.RandomState(3)
     planes = [[round(float(x), 6) for x in row]
               for row in rs.normal(size=(8, 4))]
@@ -276,3 +297,9 @@ def test_lsh_bucket_arrays_numpy_matches_expr_form(spark):
                 _lsh_buckets_expr(planes, 2, "embedding").alias("buckets"))
             .collect()}
     assert got == want
+    # the one-band kernel against lsh_buckets, the one-band expression
+    got1 = {r["vec_id"]: r["buckets"]
+            for r in lsh_bucket_arrays(df, planes, 1).collect()}
+    want1 = {r["vec_id"]: [r["bucket"]]
+             for r in lsh_buckets(df, planes).collect()}
+    assert got1 == want1
