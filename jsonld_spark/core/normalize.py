@@ -195,11 +195,10 @@ def _hash_paths(bid: str, bnodes: dict, namer: BlankNodeNamer,
     return _HashResult(md.hexdigest(), path_namer)
 
 
-def canonical_namer(quads: list[Quad]) -> BlankNodeNamer:
-    """Run the hashBlankNodes fixpoint + hashPaths passes and return the
-    namer holding the ``old label → _:c14n{n}`` mapping (the naming core
-    of NormalizeUtils.java:35-203, without serialization)."""
-    # index quads by the bnodes they mention (subject, object, graph)
+def index_bnodes(quads: list[Quad]) -> dict[str, list[Quad]]:
+    """bnode label → quads mentioning it (subject, object, graph), in
+    quad order — the reference's ``bnodes`` map
+    (JsonLdApi.java:2197-2225)."""
     bnodes: dict[str, list[Quad]] = {}
     for q in quads:
         for val, is_b in ((q.subj, q.subj.startswith("_:")),
@@ -208,7 +207,14 @@ def canonical_namer(quads: list[Quad]) -> BlankNodeNamer:
                            and q.graph.startswith("_:"))):
             if is_b:
                 bnodes.setdefault(val, []).append(q)
+    return bnodes
 
+
+def canonical_namer(quads: list[Quad]) -> BlankNodeNamer:
+    """Run the hashBlankNodes fixpoint + hashPaths passes and return the
+    namer holding the ``old label → _:c14n{n}`` mapping (the naming core
+    of NormalizeUtils.java:35-203, without serialization)."""
+    bnodes = index_bnodes(quads)
     namer = BlankNodeNamer("c14n")
     cache: dict[str, str] = {}
     unnamed = list(bnodes.keys())

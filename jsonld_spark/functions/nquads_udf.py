@@ -3,7 +3,8 @@
 Serialization needs the reference-exact escape rules
 (RDFDatasetUtils.java:203-258) — codepoint-class escaping isn't
 expressible with built-in SQL functions, so this is a pandas UDF
-(Arrow batch transfer, never per-row Python)."""
+(Arrow batch transfer, never per-row Python). Parsing runs per line
+through ``operators.kernels.map_rows``."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from pyspark.sql import types as T
 
 from ..core.nquads import parse_nquads, quad_to_nquad
 from ..core.rdf import Quad
+from ..operators.kernels import QUAD_FIELDS, map_rows
 
 
 @F.pandas_udf("string")
@@ -34,40 +36,21 @@ def nquad_line(graph: pd.Series, subj: pd.Series, pred: pd.Series,
 def triples_to_nquads(triples: DataFrame) -> DataFrame:
     """Add an ``nq`` column with the serialized N-Quads line."""
     return triples.withColumn(
-        "nq", nquad_line("graph", "subj", "pred", "obj_kind", "obj_value",
-                         "obj_datatype", "obj_lang"))
+        "nq", nquad_line(*QUAD_FIELDS))
 
 
-NQUAD_PARSED_SCHEMA = T.StructType([
-    T.StructField("graph", T.StringType()),
-    T.StructField("subj", T.StringType()),
-    T.StructField("pred", T.StringType()),
-    T.StructField("obj_kind", T.StringType()),
-    T.StructField("obj_value", T.StringType()),
-    T.StructField("obj_datatype", T.StringType()),
-    T.StructField("obj_lang", T.StringType()),
-])
+NQUAD_PARSED_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in QUAD_FIELDS])
 
 
 def nquads_lines_to_triples(lines: DataFrame, line_col: str = "nq") -> DataFrame:
     """Parse a DataFrame of N-Quads lines into quad columns
     (reference grammar RDFDatasetUtils.java:260-287), Arrow-batched."""
 
-    def parse_batch(batches):
-        for pdf in batches:
-            rows = {f: [] for f in NQUAD_PARSED_SCHEMA.fieldNames()}
-            for line in pdf[line_col]:
-                for q in parse_nquads(line, dedupe=False):
-                    rows["graph"].append(q.graph)
-                    rows["subj"].append(q.subj)
-                    rows["pred"].append(q.pred)
-                    rows["obj_kind"].append(q.obj_kind)
-                    rows["obj_value"].append(q.obj_value)
-                    rows["obj_datatype"].append(q.obj_datatype)
-                    rows["obj_lang"].append(q.obj_lang)
-            yield pd.DataFrame(rows)
+    def parse(line):
+        return parse_nquads(line, dedupe=False)
 
-    return lines.select(line_col).mapInPandas(parse_batch, NQUAD_PARSED_SCHEMA)
+    return map_rows(lines, parse, NQUAD_PARSED_SCHEMA, [line_col])
 
 
 def read_nquads(spark, path: str) -> DataFrame:
@@ -78,9 +61,7 @@ def read_nquads(spark, path: str) -> DataFrame:
     lines = spark.read.text(path).withColumnRenamed("value", "nq") \
         .where(F.length(F.trim("nq")) > 0) \
         .where(~F.trim("nq").startswith("#"))
-    return nquads_lines_to_triples(lines).dropDuplicates(
-        ["graph", "subj", "pred", "obj_kind", "obj_value", "obj_datatype",
-         "obj_lang"])
+    return nquads_lines_to_triples(lines).dropDuplicates(QUAD_FIELDS)
 
 
 def write_nquads(triples: DataFrame, path: str, mode: str = "error") -> None:

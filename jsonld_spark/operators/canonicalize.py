@@ -6,13 +6,16 @@ values are *component-local* (a bnode's hash depends only on its own
 quads), so the distributed plan is:
 
 1. **bnode components** — blank nodes co-occurring in a quad are
-   connected; connected components via the same iterative min-label
-   propagation used for entity linking (each round one shuffle,
-   ``localCheckpoint`` to cut lineage). In pipeline output bnode labels
-   are doc-prefixed, so components are doc-local and tiny — the fixpoint
-   converges in one or two rounds.
-2. **per-component exact canonicalization** — repartition by component,
-   then a ``mapInPandas`` kernel runs the verbatim pure-core algorithm
+   connected; ``bnode_components`` counts the co-occurrence edges on
+   the job that materializes them and, when there are none (flat
+   corpora: every doc-local pipeline output), makes each bnode its own
+   component without running CC. Otherwise it runs the same connected
+   components as entity linking (``linking.connected_components``: a
+   driver-side fixpoint for small edge sets, else min-label
+   propagation on ``session.fixpoint``). In pipeline output bnode
+   labels are doc-prefixed, so components are doc-local and tiny.
+2. **per-component exact canonicalization** — ``kernels.map_groups``
+   repartitions by component and runs the verbatim pure-core algorithm
    (``core/normalize.canonical_namer``: URGNA2012-lineage SHA-1
    hashing + SJT permutation search) per component, embarrassingly
    parallel and batched (many doc-sized components per Arrow batch).
@@ -36,21 +39,19 @@ a single-node run; per-component canonical forms are identical.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core.nodemap import BlankNodeNamer
 from ..core.normalize import (_hash_paths, _hash_quads, canonical_namer,
-                              rename_quads)
+                              index_bnodes, rename_quads)
 from ..core.nquads import quad_to_nquad
 from ..core.rdf import Quad
 from ..session import cut_lineage, local_frame, observed_cut, reuse
+from .kernels import (QUAD_COLS, QUAD_FIELDS,  # noqa: F401 - re-exported
+                      ComponentTooLargeError, map_groups, to_quads)
 from .linking import connected_components
-
-QUAD_COLS = ["doc_id", "graph", "subj", "pred", "obj_kind", "obj_value",
-             "obj_datatype", "obj_lang"]
 
 _CANON_SCHEMA = T.StructType(
     [T.StructField(c, T.StringType()) for c in QUAD_COLS]
@@ -104,14 +105,7 @@ def _shield_c14n_labels(quads: list[Quad]) -> list[Quad]:
     would then silently MERGE it with another component's fresh
     ``_:c14n5`` (review finding, confirmed by repro). Deterministic:
     the replacement depends only on the component's own label set."""
-    labels = set()
-    for q in quads:
-        for v, is_b in ((q.subj, q.subj.startswith("_:")),
-                        (q.obj_value, q.obj_kind == "bnode"),
-                        (q.graph, q.graph is not None
-                         and q.graph.startswith("_:"))):
-            if is_b:
-                labels.add(v)
+    labels = index_bnodes(quads)
     shield: dict[str, str] = {}
     for lab in sorted(labels):
         if lab.startswith("_:c14n"):
@@ -130,104 +124,30 @@ def _shield_c14n_labels(quads: list[Quad]) -> list[Quad]:
         q.obj_datatype, q.obj_lang) for q in quads]
 
 
-def _canonize_group(doc_ids: list, quads: list[Quad], component: str,
-                    out: dict) -> None:
-    """Canonicalize one component's quads into the output column lists."""
+def _canonize(component: str, rows: list[tuple]) -> list[tuple]:
+    """Canonicalize one component: rows are (doc_id, *Quad fields)."""
     import hashlib
-    quads = _shield_c14n_labels(quads)
+    quads = _shield_c14n_labels(to_quads(r[1:] for r in rows))
     namer = canonical_namer(quads)
     renamed = rename_quads(quads, namer)
     # sha256 (not the algorithm's SHA-1): this hash only orders components
     # for the global renumber, and sha256 is reproducible in SQL oracles
     comp_hash = hashlib.sha256("".join(
         sorted(quad_to_nquad(q) + "\n" for q in renamed)).encode()).hexdigest()
-    n = len(renamed)
-    out["doc_id"].extend(doc_ids)
-    out["graph"].extend(q.graph for q in renamed)
-    out["subj"].extend(q.subj for q in renamed)
-    out["pred"].extend(q.pred for q in renamed)
-    out["obj_kind"].extend(q.obj_kind for q in renamed)
-    out["obj_value"].extend(q.obj_value for q in renamed)
-    out["obj_datatype"].extend(q.obj_datatype for q in renamed)
-    out["obj_lang"].extend(q.obj_lang for q in renamed)
-    out["component"].extend([component] * n)
-    out["comp_hash"].extend([comp_hash] * n)
-    out["n_labels"].extend([namer.counter] * n)
+    return [(r[0], *q, component, comp_hash, namer.counter)
+            for r, q in zip(rows, renamed)]
 
 
 # Per-component row cap for the canonicalization kernels. Components
 # are doc-local by construction (pipeline bnode labels are doc-prefixed)
 # so real ones are tiny; a dataset whose bnode graph forms one giant
 # component would otherwise funnel into a single task and die as an
-# opaque executor OOM deep in the hash loop. The streaming count below
-# fails fast — by name — while batches are still arriving, before the
-# partition is fully materialized or any exponential HND work starts.
+# opaque executor OOM deep in the hash loop. ``map_groups`` counts rows
+# per component while batches are still arriving and raises
+# ``ComponentTooLargeError`` by name, before the partition is fully
+# materialized or any exponential HND work starts. Read on the driver
+# at call time.
 MAX_COMPONENT_ROWS = 2_000_000
-
-
-class ComponentTooLargeError(RuntimeError):
-    """A single bnode component exceeds MAX_COMPONENT_ROWS quads."""
-
-    def __init__(self, component, n_rows: int, cap: int):
-        self.component, self.n_rows, self.cap = component, n_rows, cap
-        super().__init__(
-            f"bnode component {component!r} has at least {n_rows} quads "
-            f"(cap {cap}): exact canonicalization of one component is "
-            f"single-task by nature. Split the input (bnode labels "
-            f"shared across this many documents usually indicate a "
-            f"label-collision bug upstream) or raise "
-            f"canonicalize.MAX_COMPONENT_ROWS if the memory is truly "
-            f"available.")
-
-
-def _collect_batches(batches, cap: int):
-    """Accumulate a partition's Arrow batches, counting rows per
-    component as they stream in; raises ComponentTooLargeError the
-    moment any single component passes the cap. ``cap`` is captured
-    into the kernel closure ON THE DRIVER (executor workers re-import
-    the module, so a module global set driver-side would not reach
-    them)."""
-    counts: dict = {}
-    pdfs = []
-    for pdf in batches:
-        for comp, n in pdf["component"].value_counts().items():
-            total = counts.get(comp, 0) + int(n)
-            counts[comp] = total
-            if total > cap:
-                raise ComponentTooLargeError(comp, total, cap)
-        pdfs.append(pdf)
-    return pdfs
-
-
-def _canonize_partition(batches, cap: int = MAX_COMPONENT_ROWS):
-    """mapInPandas kernel: the partition holds complete components
-    (guaranteed by repartition('component')); regroup across Arrow
-    batches in-Python and canonicalize each component. Components are
-    doc-sized, so output columns accumulate in plain lists across the
-    whole partition — one output DataFrame, not one per group (per-group
-    DataFrame construction dominated an applyInPandas variant ~10×)."""
-    pdfs = _collect_batches(batches, cap)
-    if not pdfs:
-        return
-    pdf = pd.concat(pdfs, ignore_index=True)
-    out: dict[str, list] = {c: [] for c in _CANON_SCHEMA.fieldNames()}
-    # column lists + index groups instead of groupby/itertuples: pandas
-    # per-row indexing dominated the kernel (measured ~40% of wall) —
-    # .tolist() is one C call per column and plain list indexing after
-    cols = {c: pdf[c].tolist()
-            for c in ("doc_id", "graph", "subj", "pred", "obj_kind",
-                      "obj_value", "obj_datatype", "obj_lang")}
-    groups: dict = {}
-    for i, comp in enumerate(pdf["component"].tolist()):
-        groups.setdefault(comp, []).append(i)
-    for component, idxs in groups.items():
-        quads = [Quad(cols["graph"][i], cols["subj"][i], cols["pred"][i],
-                      cols["obj_kind"][i], cols["obj_value"][i],
-                      cols["obj_datatype"][i], cols["obj_lang"][i])
-                 for i in idxs]
-        _canonize_group([cols["doc_id"][i] for i in idxs], quads,
-                        component, out)
-    yield pd.DataFrame(out)
 
 
 def prefix_offsets(df: DataFrame, order_cols: list[str], value_col: str,
@@ -332,11 +252,8 @@ def canonicalize_triples(triples: DataFrame, max_iter: int = 50,
 
     # the kernel output is read twice (per-component offsets + the final
     # join side)
-    cap = MAX_COMPONENT_ROWS  # driver-side read → shipped in closure
-    canon = reuse(
-        keyed.repartition("component")
-        .mapInPandas(lambda it: _canonize_partition(it, cap),
-                     _CANON_SCHEMA))
+    canon = reuse(map_groups(keyed, "component", _canonize, _CANON_SCHEMA,
+                             QUAD_COLS, cap=MAX_COMPONENT_ROWS))
 
     # deterministic disjoint label ranges: order components by canonical
     # hash; one row per component, but at 10^12 docs that is ~10^12 rows
@@ -418,47 +335,17 @@ _EVENT_SCHEMA = T.StructType([
 ])
 
 
-def _index_bnodes(quads: list[Quad]) -> dict[str, list[Quad]]:
-    """bnode label → quads mentioning it (subject/object/graph), in quad
-    order — the reference's ``bnodes`` map (JsonLdApi.java:2197-2225)."""
-    bnodes: dict[str, list[Quad]] = {}
-    for q in quads:
-        for val, is_b in ((q.subj, q.subj.startswith("_:")),
-                          (q.obj_value, q.obj_kind == "bnode"),
-                          (q.graph, q.graph is not None
-                           and q.graph.startswith("_:"))):
-            if is_b:
-                bnodes.setdefault(val, []).append(q)
-    return bnodes
-
-
-def _rows_to_sorted_quads(pdf) -> list[Quad]:
-    cols = [pdf[c].tolist() for c in ("graph", "subj", "pred", "obj_kind",
-                                      "obj_value", "obj_datatype",
-                                      "obj_lang")]
-    quads = [Quad(*vals) for vals in zip(*cols)]
+def _sorted_quads(rows) -> list[Quad]:
     # content order: the replay must not depend on shuffle arrival order
-    quads.sort(key=quad_to_nquad)
-    return quads
+    return sorted(to_quads(rows), key=quad_to_nquad)
 
 
-def _fd_hash_partition(batches, cap: int = MAX_COMPONENT_ROWS):
-    """mapInPandas kernel: per component, every bnode's first-degree hash
-    (NormalizeUtils hashQuads — pure content function)."""
-    import pandas as pd
-    pdfs = _collect_batches(batches, cap)
-    if not pdfs:
-        return
-    pdf = pd.concat(pdfs, ignore_index=True)
-    out = {"component": [], "bnode": [], "fd_hash": []}
-    for component, g in pdf.groupby("component", sort=False):
-        bnodes = _index_bnodes(_rows_to_sorted_quads(g))
-        cache: dict[str, str] = {}
-        for b in bnodes:
-            out["component"].append(component)
-            out["bnode"].append(b)
-            out["fd_hash"].append(_hash_quads(b, bnodes, cache))
-    yield pd.DataFrame(out)
+def _fd_hashes(component: str, rows: list[tuple]) -> list[tuple]:
+    """Every bnode's first-degree hash in one component (NormalizeUtils
+    hashQuads — pure content function)."""
+    bnodes = index_bnodes(_sorted_quads(rows))
+    cache: dict[str, str] = {}
+    return [(component, b, _hash_quads(b, bnodes, cache)) for b in bnodes]
 
 
 class _ShadowNamer:
@@ -496,7 +383,8 @@ def _phase2_kernel(quads_pdf, binfo_pdf):
     if sys.getrecursionlimit() < 20000:
         sys.setrecursionlimit(20000)
     component = quads_pdf["component"].iloc[0]
-    bnodes = _index_bnodes(_rows_to_sorted_quads(quads_pdf))
+    bnodes = index_bnodes(_sorted_quads(
+        zip(*(quads_pdf[c].tolist() for c in QUAD_FIELDS))))
     fd = dict(zip(binfo_pdf["bnode"], binfo_pdf["fd_hash"]))
     phase1 = {b: int(n) for b, n in zip(binfo_pdf["bnode"], binfo_pdf["num"])
               if pd.notna(n)}
@@ -575,11 +463,8 @@ def _canonicalize_reference(triples: DataFrame, max_iter: int) -> DataFrame:
               .join(comps.withColumnRenamed("node", "_b0"), "_b0")
               .drop("_b0"))
 
-    cap = MAX_COMPONENT_ROWS  # driver-side read → shipped in closure
-    binfo = reuse(
-        keyed.repartition("component")
-        .mapInPandas(lambda it: _fd_hash_partition(it, cap),
-                     _BINFO_SCHEMA))
+    binfo = reuse(map_groups(keyed, "component", _fd_hashes, _BINFO_SCHEMA,
+                             QUAD_FIELDS, cap=MAX_COMPONENT_ROWS))
     counts = binfo.groupBy("fd_hash").agg(F.count(F.lit(1)).alias("_cnt"))
     with_counts = binfo.join(counts, "fd_hash")
     uniq = (with_counts.where(F.col("_cnt") == 1)

@@ -40,9 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import local_frame, reuse
-
-TRIPLE_COLS = ["doc_id", "graph", "subj", "pred", "obj_kind", "obj_value",
-               "obj_datatype", "obj_lang"]
+from .kernels import QUAD_COLS as TRIPLE_COLS
 
 MANIFEST_SCHEMA = T.StructType([
     T.StructField("part", T.IntegerType()),

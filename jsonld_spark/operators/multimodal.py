@@ -2,8 +2,9 @@
 
 Media (image/audio/video) rides through the pipeline as an opaque
 ``binary`` column with a typed metadata struct — Spark never interprets
-the bytes; decode/feature-extract runs in Arrow-batched ``mapInPandas``
-so the JVM↔Python boundary is crossed once per batch, not per row.
+the bytes; decode/feature-extract runs per item through
+``kernels.map_rows``, so the JVM↔Python boundary is crossed once per
+Arrow batch, not per row.
 
 The image/audio codec libraries are not available in this container, so
 the decode step is STUBBED: ``decode_image`` raises
@@ -12,16 +13,18 @@ the decode step is STUBBED: ``decode_image`` raises
 (derived from the md5 of the bytes) with the REAL Spark-side plumbing —
 schema, batch shape, binary Arrow transfer — exercised end to end and
 oracle-checked. Swapping in a real decoder changes only the inner
-per-batch function.
+per-item function.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .kernels import map_rows
 
 try:  # decode path gated behind an import-try (not in this container)
     from PIL import Image  # noqa: F401
@@ -41,6 +44,9 @@ MEDIA_SCHEMA = T.StructType([
 ])
 
 FEATURE_DIM = 8
+
+# the columns every media kernel reads
+_MEDIA_COLS = ["doc_id", "media_ref", "content"]
 
 FEATURE_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -83,7 +89,6 @@ def _feature_from_bytes(content: bytes) -> list[float]:
     """Deterministic fake feature: first FEATURE_DIM bytes of
     md5(hex(content)) scaled to [0,1] — hex-string based so it is
     reproducible in SQL oracles (md5-over-blob isn't portable)."""
-    import hashlib
     d = hashlib.md5(content.hex().encode()).digest()
     return [d[i] / 255.0 for i in range(FEATURE_DIM)]
 
@@ -92,35 +97,20 @@ def extract_media_features(media: DataFrame,
                            batch_size_hint: int = 1024) -> DataFrame:
     """binary content → (n_bytes, content_hex, feature[FEATURE_DIM]).
 
-    Arrow-batched mapInPandas: one Python invocation per batch; the
-    binary column arrives as a pandas Series of bytes objects. The
-    decode step would slot in per element here (vectorized libs like
-    pillow-simd / torchvision batch decode when available)."""
+    One Python invocation per Arrow batch; the binary column arrives as
+    bytes objects. The decode step would slot in per element here
+    (vectorized libs like pillow-simd / torchvision batch decode when
+    available)."""
 
-    def extract(batches: Iterator) -> Iterator:
-        import pandas as pd
-        for pdf in batches:
-            contents = pdf["content"]
-            feats, hexes, sizes = [], [], []
-            for c in contents:
-                b = bytes(c)
-                sizes.append(len(b))
-                hexes.append(b.hex())
-                if _HAS_PIL:  # real decode path (unreachable here)
-                    img = decode_image(b)  # pragma: no cover
-                    feats.append(_feature_from_bytes(img.tobytes()))
-                else:
-                    feats.append(_feature_from_bytes(b))
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "media_ref": pdf["media_ref"],
-                "n_bytes": pd.Series(sizes, dtype="int64"),
-                "content_hex": hexes,
-                "feature": feats,
-            })
+    def extract(doc_id, media_ref, content):
+        if _HAS_PIL:  # real decode path (unreachable here)
+            img = decode_image(content)  # pragma: no cover
+            feature = _feature_from_bytes(img.tobytes())
+        else:
+            feature = _feature_from_bytes(content)
+        return [(doc_id, media_ref, len(content), content.hex(), feature)]
 
-    return (media.select("doc_id", "media_ref", "content")
-            .mapInPandas(extract, FEATURE_SCHEMA))
+    return map_rows(media, extract, FEATURE_SCHEMA, _MEDIA_COLS)
 
 
 RESIZE_SCHEMA = T.StructType([
@@ -142,30 +132,16 @@ def resize_media(media: DataFrame, width: int = 224,
     the SQL oracle, so the distributed plumbing is exercised end to
     end and a real codec swaps in by replacing one inner function."""
 
-    def resize(batches: Iterator) -> Iterator:
-        import hashlib
+    def resize(doc_id, media_ref, content):
+        if _HAS_PIL:  # pragma: no cover - real decode+resize
+            img = decode_image(content).resize((width, height))
+            out_hex = img.tobytes().hex()
+        else:
+            out_hex = hashlib.md5(
+                f"{content.hex()}|{width}x{height}".encode()).hexdigest()
+        return [(doc_id, media_ref, width, height, out_hex)]
 
-        import pandas as pd
-        for pdf in batches:
-            out_hex = []
-            for c in pdf["content"]:
-                b = bytes(c)
-                if _HAS_PIL:  # pragma: no cover - real decode+resize
-                    img = decode_image(b).resize((width, height))
-                    out_hex.append(img.tobytes().hex())
-                else:
-                    out_hex.append(hashlib.md5(
-                        f"{b.hex()}|{width}x{height}".encode()).hexdigest())
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "media_ref": pdf["media_ref"],
-                "width": pd.Series([width] * len(pdf), dtype="int32"),
-                "height": pd.Series([height] * len(pdf), dtype="int32"),
-                "content_hex": out_hex,
-            })
-
-    return (media.select("doc_id", "media_ref", "content")
-            .mapInPandas(resize, RESIZE_SCHEMA))
+    return map_rows(media, resize, RESIZE_SCHEMA, _MEDIA_COLS)
 
 
 FRAME_SCHEMA = T.StructType([
@@ -186,27 +162,10 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     if n_frames < 1:
         raise ValueError(f"n_frames must be >= 1, got {n_frames}")
 
-    def sample(batches: Iterator) -> Iterator:
-        import hashlib
+    def sample(doc_id, media_ref, content):
+        hx = content.hex()
+        return [(doc_id, media_ref, i,
+                 hashlib.md5(f"{hx}|frame|{i}".encode()).hexdigest())
+                for i in range(n_frames)]
 
-        import pandas as pd
-        for pdf in batches:
-            ids, refs, idxs, sigs = [], [], [], []
-            for doc_id, ref, c in zip(pdf["doc_id"], pdf["media_ref"],
-                                      pdf["content"]):
-                hx = bytes(c).hex()
-                for i in range(n_frames):
-                    ids.append(doc_id)
-                    refs.append(ref)
-                    idxs.append(i)
-                    sigs.append(hashlib.md5(
-                        f"{hx}|frame|{i}".encode()).hexdigest())
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "media_ref": refs,
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "frame_sig": sigs,
-            })
-
-    return (media.select("doc_id", "media_ref", "content")
-            .mapInPandas(sample, FRAME_SCHEMA))
+    return map_rows(media, sample, FRAME_SCHEMA, _MEDIA_COLS)

@@ -8,45 +8,28 @@ Stage layout (SURVEY.md §3.2 Spark trace):
                    plus the media-ref triples, in the same pass)
       → dropDuplicates                                        # global dedup
 
-Per-document algorithms run inside Arrow batches (vectorization is
-across documents); errors are captured per document into an ``error``
-column instead of failing the job — at 10^12 docs a single malformed
-payload must not kill the stage. Blank-node labels are globally
-uniquified by prefixing a doc-content hash, so output labels are a pure
-function of (doc content, doc_id), never of task scheduling
-(SURVEY.md §4 determinism discipline).
+Per-document algorithms run inside Arrow batches through
+``kernels.map_rows`` (vectorization is across documents; a failing
+document becomes one ``error`` row instead of failing the job — at
+10^12 docs a single malformed payload must not kill the stage).
+Blank-node labels are globally uniquified by prefixing a doc-content
+hash, so output labels are a pure function of (doc content, doc_id),
+never of task scheduling (SURVEY.md §4 determinism discipline).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import sys
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..core.context import JsonLdOptions
 from ..core.rdf import document_to_quads
 from ..sources.interleaved import (ASSOCIATED_MEDIA, DOC_IRI_PREFIX,
                                    assemble_documents)
-
-QUAD_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("graph", T.StringType()),
-    T.StructField("subj", T.StringType()),
-    T.StructField("pred", T.StringType()),
-    T.StructField("obj_kind", T.StringType()),
-    T.StructField("obj_value", T.StringType()),
-    T.StructField("obj_datatype", T.StringType()),
-    T.StructField("obj_lang", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
-
-QUAD_COLS = ["doc_id", "graph", "subj", "pred", "obj_kind", "obj_value",
-             "obj_datatype", "obj_lang"]
+from .kernels import QUAD_COLS, QUAD_SCHEMA, error_row, map_rows
 
 
 def _doc_tag(doc_id: str, doc_json: str) -> str:
@@ -73,12 +56,14 @@ def make_extract_quads(base: str | None = None,
                        document_loader=None,
                        options_kwargs: dict | None = None,
                        media_subject_fn=None):
-    """Build the mapInArrow kernel. ``contexts`` is the pre-resolved
-    remote-context cache (broadcast by value into the closure — executors
-    never do HTTP; reference role: JarCacheStorage). A batch ``base``
-    column overrides the global ``base`` per document (documents carry
-    their own URI). ``document_loader``/``options_kwargs`` override the
-    cache loader / extra JsonLdOptions — conformance-harness hooks.
+    """Build the per-document row function of ``extract_quads``:
+    ``extract(doc_id, doc_json, media_refs, base)`` → quad rows.
+    ``contexts`` is the pre-resolved remote-context cache (broadcast by
+    value into the closure — executors never do HTTP; reference role:
+    JarCacheStorage). A row ``base`` overrides the global ``base`` per
+    document (documents carry their own URI). ``document_loader``/
+    ``options_kwargs`` override the cache loader / extra JsonLdOptions —
+    conformance-harness hooks.
 
     ``include_media=True`` emits the media-linking triples from the same
     pass (batch carries a ``media_refs`` column): a JVM-side explode of
@@ -86,7 +71,9 @@ def make_extract_quads(base: str | None = None,
     span-assembly expression chain per output row inside Generate —
     measured ~40× slower than emitting the rows here. Media rows derive
     from the spans table, not the JSON payload, so they are emitted even
-    when the payload fails to parse (the error row coexists with them)."""
+    when the payload fails to parse (the error row coexists with them):
+    the function isolates its own payload error instead of leaving it
+    to the runner."""
     ctx_cache = contexts or {}
     extra_opts = options_kwargs or {}
     media_subject = media_subject_fn or default_media_subject
@@ -97,77 +84,37 @@ def make_extract_quads(base: str | None = None,
         raise IOError(f"remote context not pre-resolved: {url}")
 
     loader = document_loader or cache_loader
+    opts_by_base = {None: JsonLdOptions(base=base, document_loader=loader,
+                                        **extra_opts)}
 
-    def extract(batches: Iterator) -> Iterator:
-        # mapInArrow kernel: RecordBatch in, RecordBatch out. Measured
-        # wall-neutral vs mapInPandas (the stage's floor is the ~half-
-        # billion Python string objects round-tripping the boundary,
-        # not pandas block assembly) — kept for the smaller per-batch
-        # memory footprint: no pandas block consolidation on 9
-        # all-string columns, lists go straight to Arrow arrays
-        import pyarrow as pa
-        # deep recursive docs: one recursion frame budget well above default
-        if sys.getrecursionlimit() < 20000:
-            sys.setrecursionlimit(20000)
-        out_schema = pa.schema([pa.field(n, pa.string())
-                                for n in QUAD_SCHEMA.fieldNames()])
-        opts = JsonLdOptions(base=base, document_loader=loader, **extra_opts)
-        opts_by_base: dict = {}
-        for rb in batches:
-            names = set(rb.schema.names)
-            pdf = {n: rb.column(n).to_pylist() for n in names}
-            out = {c: [] for c in QUAD_SCHEMA.fieldNames()}
-
-            def emit(doc_id, graph, subj, pred, okind, oval, odt, olang, err):
-                out["doc_id"].append(doc_id)
-                out["graph"].append(graph)
-                out["subj"].append(subj)
-                out["pred"].append(pred)
-                out["obj_kind"].append(okind)
-                out["obj_value"].append(oval)
-                out["obj_datatype"].append(odt)
-                out["obj_lang"].append(olang)
-                out["error"].append(err)
-
-            n_rows = rb.num_rows
-            media_col = (pdf["media_refs"] if include_media
-                         and "media_refs" in names
-                         else [None] * n_rows)
-            base_col = (pdf["base"] if "base" in names
-                        else [None] * n_rows)
-            for doc_id, doc_json, refs, row_base in zip(
-                    pdf["doc_id"], pdf["doc_json"], media_col, base_col):
-                try:
-                    doc = json.loads(doc_json)
-                    doc_opts = opts
-                    if row_base is not None:
-                        if row_base not in opts_by_base:
-                            opts_by_base[row_base] = JsonLdOptions(
-                                base=row_base, document_loader=loader,
-                                **extra_opts)
-                        doc_opts = opts_by_base[row_base]
-                    quads = document_to_quads(doc, doc_opts)
-                    tag = _doc_tag(doc_id, doc_json) if globalize_bnodes else None
-                    for q in quads:
-                        g, s, o = q.graph, q.subj, q.obj_value
-                        if tag is not None:
-                            g = _prefix_bnode(g, tag)
-                            s = _prefix_bnode(s, tag)
-                            if q.obj_kind == "bnode":
-                                o = _prefix_bnode(o, tag)
-                        emit(doc_id, g, s, q.pred, q.obj_kind, o,
-                             q.obj_datatype, q.obj_lang, None)
-                except Exception as e:  # noqa: BLE001 - per-doc isolation
-                    emit(doc_id, None, None, None, None, None, None, None,
-                         f"{type(e).__name__}: {e}")
-                # media links come from the spans table, not the payload
-                # — emit them even for docs whose payload failed above
-                if refs is not None and len(refs):
-                    subj = media_subject(doc_id)
-                    for ref in refs:
-                        emit(doc_id, "@default", subj, ASSOCIATED_MEDIA,
-                             "iri", ref, None, None, None)
-            yield pa.RecordBatch.from_pydict(out, schema=out_schema)
+    def extract(doc_id, doc_json, refs, row_base):
+        try:
+            doc = json.loads(doc_json)
+            doc_opts = opts_by_base.get(row_base)
+            if doc_opts is None:
+                doc_opts = opts_by_base[row_base] = JsonLdOptions(
+                    base=row_base, document_loader=loader, **extra_opts)
+            quads = document_to_quads(doc, doc_opts)
+            tag = _doc_tag(doc_id, doc_json) if globalize_bnodes else None
+            rows = []
+            for q in quads:
+                g, s, o = q.graph, q.subj, q.obj_value
+                if tag is not None:
+                    g = _prefix_bnode(g, tag)
+                    s = _prefix_bnode(s, tag)
+                    if q.obj_kind == "bnode":
+                        o = _prefix_bnode(o, tag)
+                rows.append((doc_id, g, s, q.pred, q.obj_kind, o,
+                             q.obj_datatype, q.obj_lang, None))
+        except Exception as e:  # noqa: BLE001 - per-doc isolation
+            rows = [error_row(doc_id, QUAD_SCHEMA, e)]
+        # media links come from the spans table, not the payload
+        # — emit them even for docs whose payload failed above
+        if include_media and refs:
+            subj = media_subject(doc_id)
+            rows.extend((doc_id, "@default", subj, ASSOCIATED_MEDIA, "iri",
+                         ref, None, None, None) for ref in refs)
+        return rows
 
     return extract
 
@@ -184,12 +131,10 @@ def extract_quads(assembled: DataFrame, base: str | None = None,
     fn = make_extract_quads(base, contexts, globalize_bnodes, include_media,
                             document_loader, options_kwargs,
                             media_subject_fn)
-    cols = ["doc_id", "doc_json"]
-    if include_media and "media_refs" in assembled.columns:
-        cols.append("media_refs")
-    if "base" in assembled.columns:
-        cols.append("base")
-    return assembled.select(*cols).mapInArrow(fn, QUAD_SCHEMA)
+    if not include_media:
+        assembled = assembled.drop("media_refs")
+    return map_rows(assembled, fn, QUAD_SCHEMA,
+                    ["doc_id", "doc_json", "media_refs", "base"])
 
 
 def docs_to_triples(interleaved: DataFrame, base: str | None = None,

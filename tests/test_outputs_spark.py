@@ -10,9 +10,11 @@ from pyspark.sql import functions as F
 from jsonld_spark.core.compact import compact_document, flatten_document
 from jsonld_spark.core.fromrdf import from_rdf_quads
 from jsonld_spark.core.rdf import Quad
+from jsonld_spark.core.frame import frame_document
 from jsonld_spark.operators.outputs import (compact_docs, flatten_docs,
-                                            frame_docs, jsonld_from_triples)
-from jsonld_spark.operators.pipeline import docs_to_triples
+                                            frame_docs, jsonld_from_triples,
+                                            jsonld_transform_docs)
+from jsonld_spark.operators.pipeline import docs_to_triples, extract_quads
 from jsonld_spark.sources.interleaved import (assemble_documents,
                                               interleaved_from_documents)
 
@@ -77,3 +79,41 @@ def test_fromrdf_matches_core(spark):
             assert got[doc_id] == from_rdf_quads(quads), doc_id
     finally:
         triples.unpersist()
+
+
+_GOOD = {"@id": "http://e/x", "http://e/p": "v"}
+_MIXED = [("good", json.dumps(_GOOD)),
+          ("bad-json", '{"@id": broken'),
+          ("bad-jsonld", '{"@context": {"": "http://e/"}, "a": 1}')]
+_FRAME = {"@context": CTX}
+_STAGES = {
+    "compact": (lambda df: compact_docs(df, CTX),
+                lambda d: compact_document(d, CTX)),
+    "flatten": (flatten_docs, flatten_document),
+    "frame": (lambda df: frame_docs(df, _FRAME),
+              lambda d: frame_document(d, _FRAME)),
+    "transform": (lambda df: jsonld_transform_docs(
+        df.withColumn("aux_json", F.lit(json.dumps(CTX))), "compact"),
+        lambda d: compact_document(d, CTX)),
+}
+
+
+@pytest.mark.parametrize("stage", sorted(_STAGES))
+def test_document_outputs_isolate_bad_documents(spark, stage):
+    """A malformed payload becomes one NULL-output error row, with the
+    same error text extract_quads gives; the good document's output is
+    unchanged."""
+    df = spark.createDataFrame(_MIXED, "doc_id string, doc_json string")
+    run, core = _STAGES[stage]
+    rows = run(df).collect()
+    got = {r.doc_id: r for r in rows}
+    assert len(rows) == len(got) == 3
+    assert got["good"].error is None
+    assert json.loads(got["good"].out_json) == core(_GOOD)
+    want = {r.doc_id: r.error for r in extract_quads(df).collect()
+            if r.error is not None}
+    assert want["bad-json"].startswith("JSONDecodeError")
+    assert "invalid term definition" in want["bad-jsonld"]
+    for doc_id in ("bad-json", "bad-jsonld"):
+        assert got[doc_id].out_json is None
+        assert got[doc_id].error == want[doc_id]

@@ -118,3 +118,66 @@ def test_media_links_survive_doc_parse_errors(spark):
     subj = {r.subj for r in out2
             if r.pred == "http://schema.org/associatedMedia"}
     assert subj == {"urn:doc:doc-1", "urn:doc:doc-2"}
+
+
+def _nested(depth: int) -> str:
+    return '{"http://e/p": ' * depth + '"v"' + "}" * depth
+
+
+def test_hostile_inputs_become_error_rows(spark):
+    """Truncated JSON, very deep nesting, a remote-context cycle and a
+    1 MB literal, in one frame with good documents: each failing
+    document gives exactly one error row, every other document gives
+    the quads the pure core gives, and no task fails (a failed task
+    fails the collect in local mode)."""
+    import sys
+
+    from jsonld_spark.core.context import JsonLdOptions
+    from jsonld_spark.core.rdf import document_to_quads
+    from jsonld_spark.operators.pipeline import _doc_tag, _prefix_bnode
+
+    contexts = {"http://ctx/a": {"@context": "http://ctx/b"},
+                "http://ctx/b": {"@context": "http://ctx/a"}}
+    docs = {
+        "good": '{"@id": "http://e/x", "http://e/p": {"http://e/q": "v"}}',
+        "truncated": '{"@id": "http://e/t", "http://e/p": {"@value": "v"',
+        "deep-5k": _nested(5_000),
+        "deep-50k": _nested(50_000),
+        "cycle": '{"@context": "http://ctx/a", "http://e/p": "v"}',
+        "huge-literal": json.dumps({"@id": "http://e/big",
+                                    "http://e/p": "x" * 1_000_000}),
+    }
+    failing = {"truncated": "JSONDecodeError", "deep-50k": "RecursionError",
+               "cycle": "recursive context inclusion"}
+    df = spark.createDataFrame(list(docs.items()),
+                               "doc_id string, doc_json string")
+    by_doc: dict[str, list] = {}
+    for r in extract_quads(df, contexts=contexts).collect():
+        by_doc.setdefault(r.doc_id, []).append(r)
+    assert set(by_doc) == set(docs)
+    for doc_id, text in failing.items():
+        rows = by_doc[doc_id]
+        assert len(rows) == 1 and text in rows[0].error, rows[0].error
+
+    opts = JsonLdOptions(document_loader=contexts.__getitem__)
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(20_000)
+    try:
+        for doc_id in set(docs) - set(failing):
+            tag = _doc_tag(doc_id, docs[doc_id])
+            want = sorted(
+                (_prefix_bnode(q.graph, tag), _prefix_bnode(q.subj, tag),
+                 q.pred, q.obj_kind,
+                 _prefix_bnode(q.obj_value, tag)
+                 if q.obj_kind == "bnode" else q.obj_value,
+                 q.obj_datatype, q.obj_lang)
+                for q in document_to_quads(json.loads(docs[doc_id]), opts))
+            got = sorted((r.graph, r.subj, r.pred, r.obj_kind, r.obj_value,
+                          r.obj_datatype, r.obj_lang)
+                         for r in by_doc[doc_id])
+            assert all(r.error is None for r in by_doc[doc_id])
+            assert got == want, doc_id
+    finally:
+        sys.setrecursionlimit(limit)
+    assert len(by_doc["deep-5k"]) == 5_000
+    assert len(by_doc["huge-literal"]) == 1
