@@ -919,13 +919,13 @@ def q_sparql_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_construct_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONSTRUCT over a UNION where clause, from SPARQL text: the
-    template instantiates once per branch and the constructed graphs
-    union (set semantics dedups across branches). Branch 1 also
-    exercises blank-node pattern syntax — ``[]`` compiles to a
-    non-distinguished variable, here an existence constraint on
-    ex:nChars. Plan: one pushed-filter scan + template projection per
-    branch, one union, one distinct — no joins beyond the bnode
-    existence join."""
+    template instantiates once over the union's solutions (set
+    semantics dedups across branches). Branch 1 also exercises
+    blank-node pattern syntax — ``[]`` compiles to a non-distinguished
+    variable, here an existence constraint on ex:nChars. Plan: per
+    branch one pushed-filter scan and a distinct of its solutions, one
+    union, then the template projection and one distinct — no joins
+    beyond the bnode existence join."""
     from jsonld_spark.operators.sparql import sparql_query
     triples = _doc_triples3(spark, sf_dir)
     return sparql_query(triples, """

@@ -578,10 +578,6 @@ def bgp_match(triples: DataFrame, patterns: list[tuple[str, str, str]],
     that IRI. Add a kind filter (``x__kind = 'iri'`` with
     ``meta_vars``) where that matters.
     """
-    entries = [patterns, optional, not_exists, exists, minus, filter_exists]
-    if sum(len(e or ()) for e in entries) > 1:
-        # each pattern and group entry reads the triples once
-        triples = reuse(triples)
     g = _as_group({"patterns": patterns, "optional": optional,
                    "not_exists": not_exists, "exists": exists,
                    "minus": minus, "filters": filters, "values": values,
@@ -592,9 +588,34 @@ def bgp_match(triples: DataFrame, patterns: list[tuple[str, str, str]],
          "markers": [(name, _as_group(e, f"EXISTS marker {name}"), neg)
                      for name, e, neg in fe["markers"]]}
         for fe in filter_exists or []]
-    return _compile(triples, g, (s_col, p_col, o_col, g_col), set(),
-                    "query", set(meta_vars or ()), top=True,
-                    distinct=distinct_solutions)[0]
+    _refuse_constant(g)
+    return _match(triples, g, (s_col, p_col, o_col, g_col), meta_vars,
+                  distinct_solutions)
+
+
+def _match(triples: DataFrame, g: Group, pos_cols: tuple,
+           meta_vars: set | None, distinct: bool) -> DataFrame:
+    """A query's group → its solutions: ``bgp_match`` and ``ask``."""
+    if sum(map(len, (g.patterns, g.optional, g.not_exists, g.exists,
+                     g.minus, g.filter_exists))) > 1:
+        # each pattern and group entry reads the triples once
+        triples = reuse(triples)
+    return _compile(triples, g, pos_cols, set(), "query",
+                    set(meta_vars or ()), top=True, distinct=distinct)[0]
+
+
+def _refuse_constant(g: Group) -> None:
+    """The forms that return solutions need a variable: refuse a group,
+    or a branch of one of its UNIONs, whose patterns are all constant.
+    ASK alone answers such a group (its constant patterns are existence
+    gates)."""
+    for grp in [g, *(b for block in g.unions for b in block)]:
+        if grp.patterns and not (grp.unions or grp.solution_joins
+                                 or grp.subqueries
+                                 or _pattern_tuple_vars(grp.patterns)):
+            raise ValueError(
+                "all patterns are constant — use ask() for a pure "
+                "existence test; bgp_match needs at least one variable")
 
 
 def _join_patterns(triples: DataFrame, patterns: list, pos_cols: tuple,
@@ -669,10 +690,6 @@ def _compile(triples: DataFrame, g: Group, pos_cols: tuple,
             raise ValueError(f"{where}: empty pattern list")
         out, bound, mcols, gates = _join_patterns(
             triples, g.patterns, pos_cols, where, meta)
-        if out is None and not sjoins and top:
-            raise ValueError(
-                "all patterns are constant — use ask() for a pure "
-                "existence test; bgp_match needs at least one variable")
         if out is not None and settle:
             # required bindings are set-distinct BEFORE optionals, so
             # duplicate input triples cannot multiply optional matches
@@ -710,7 +727,8 @@ def _compile(triples: DataFrame, g: Group, pos_cols: tuple,
             nullable |= {v for v in new if v in snul}
         if out is None:
             # every pattern constant: the gates' cross product binds
-            # nothing — callers decide what a variable-free group means
+            # nothing — ASK answers it, the other forms refuse it first
+            # (_refuse_constant)
             out, gates = gates[0], gates[1:]
             for gate in gates:
                 out = out.crossJoin(gate)
@@ -1188,7 +1206,9 @@ def bgp_union(triples: DataFrame,
     entry = {"union": branches}
     if branch_filters is not None:
         entry["branch_filters"] = branch_filters
-    return _compile(triples, _as_group(entry, "query"),
+    g = _as_group(entry, "query")
+    _refuse_constant(g)
+    return _compile(triples, g,
                     (s_col, p_col, o_col, g_col), set(), "query",
                     set(meta_vars or ()), top=True, distinct=distinct)[0]
 
@@ -1452,12 +1472,11 @@ def property_path(triples: DataFrame, pred: str,
     10^6 hops; a relation that has not converged by then raises rather
     than silently truncating. Output size is the real scale bound —
     O(V·D) for hierarchies (fine for taxonomy/thread shapes, the
-    intended use), O(V²) for dense cyclic relations (don't).
+    intended use), O(V²) for dense cyclic relations (don't). The same
+    plan as ``kg_path(triples, f"<{pred}>+")``, which computes it.
     """
-    edges = (triples.where(F.col(p_col) == pred)
-             .select(F.col(s_col).alias("src"), F.col(o_col).alias("dst"))
-             .distinct())
-    return _path_closure(edges, max_rounds)
+    return kg_path(triples, f"<{pred}>+", s_col=s_col, p_col=p_col,
+                   o_col=o_col, max_rounds=max_rounds)
 
 
 def _compose(a: DataFrame, b: DataFrame,
@@ -1511,122 +1530,134 @@ def _path_closure(edges: DataFrame, max_rounds: int = 20,
 # doubling kernel as ``property_path``.
 # ---------------------------------------------------------------------------
 
-class _PathParser:
-    """Recursive-descent parser for SPARQL path expressions.
+#: the path operators; any other token is an IRI (or an error)
+_PATH_OPS = frozenset("|/+*?^!()")
+_PATH_MODS = {"+": "plus", "*": "star", "?": "opt"}
 
-    Grammar (precedence low→high, as in SPARQL 1.1 §9.1):
 
-        alt  := seq ('|' seq)*
-        seq  := post ('/' post)*
-        post := prim ('+' | '*' | '?')*
-        prim := '<' IRI '>' | '^' prim | '!' negset | '(' alt ')'
-        negset := '<' IRI '>' | '^' '<' IRI '>'
-                | '(' member ('|' member)* ')'   # member: <iri> | ^<iri>
+class _PathGrammar:
+    """The SPARQL 1.1 property-path grammar (§9.1), the one parser of
+    path syntax: ``kg_path`` strings (``_PathLexer``) and the SPARQL
+    text parser's token stream both feed it. Precedence low→high:
 
+        alt    := seq ('|' seq)*
+        seq    := post ('/' post)*
+        post   := prim ('+' | '*' | '?')?
+        prim   := IRI | '^' prim | '!' negset | '(' alt ')'
+        negset := member | '(' member ('|' member)* ')'
+        member := IRI | '^' IRI
+
+    A front end supplies the tokens: ``_path_op()`` is the operator at
+    the cursor ('' for any other token), ``_path_skip()`` consumes it,
+    ``_path_iri()`` consumes one IRI and returns it, and
+    ``_path_error(msg)`` makes the exception to raise. The result is
+    the tuple tree ``kg_path`` evaluates: ``('pred', iri)``, ``('inv',
+    n)``, ``('seq' | 'alt', a, b)``, ``('plus' | 'star' | 'opt', n)``
+    and ``('negset', forward_iris, inverse_iris)``."""
+
+    def _path_alt(self) -> tuple:
+        node = self._path_seq()
+        while self._path_op() == "|":
+            self._path_skip()
+            node = ("alt", node, self._path_seq())
+        return node
+
+    def _path_seq(self) -> tuple:
+        node = self._path_post()
+        while self._path_op() == "/":
+            self._path_skip()
+            node = ("seq", node, self._path_post())
+        return node
+
+    def _path_post(self) -> tuple:
+        node = self._path_prim()
+        mod = _PATH_MODS.get(self._path_op())
+        if mod:
+            self._path_skip()
+            node = (mod, node)
+        return node
+
+    def _path_prim(self) -> tuple:
+        op = self._path_op()
+        if op == "^":
+            self._path_skip()
+            return ("inv", self._path_prim())
+        if op == "!":
+            self._path_skip()
+            return self._path_negset()
+        if op == "(":
+            self._path_skip()
+            node = self._path_alt()
+            self._path_close("expected ')'")
+            return node
+        return ("pred", self._path_iri())
+
+    def _path_negset(self) -> tuple:
+        """Forward and inverse members are collected apart: they negate
+        different scan directions."""
+        fwd: list[str] = []
+        inv: list[str] = []
+        grouped = self._path_op() == "("
+        if grouped:
+            self._path_skip()
+        while True:
+            if self._path_op() == "^":
+                self._path_skip()
+                inv.append(self._path_iri())
+            else:
+                fwd.append(self._path_iri())
+            if not grouped or self._path_op() != "|":
+                break
+            self._path_skip()
+        if grouped:
+            self._path_close("expected '|' or ')' in negated set")
+        return ("negset", tuple(fwd), tuple(inv))
+
+    def _path_close(self, msg: str) -> None:
+        if self._path_op() != ")":
+            raise self._path_error(msg)
+        self._path_skip()
+
+
+class _PathLexer(_PathGrammar):
+    """``kg_path``'s tokens: the operator characters and ``<iri>``;
     IRIs MUST be angle-bracketed — they contain ``/`` and ``|``
-    themselves, so bare IRIs are ambiguous in a path string.
-    """
+    themselves, so bare IRIs are ambiguous in a path string."""
 
     def __init__(self, s: str):
         self.s = s
         self.i = 0
 
-    def _peek(self) -> str:
+    def parse(self) -> tuple:
+        node = self._path_alt()
+        self._path_op()     # skips trailing whitespace
+        if self.i < len(self.s):
+            raise self._path_error(f"unexpected {self.s[self.i]!r}")
+        return node
+
+    def _path_op(self) -> str:
         while self.i < len(self.s) and self.s[self.i].isspace():
             self.i += 1
-        return self.s[self.i] if self.i < len(self.s) else ""
+        c = self.s[self.i:self.i + 1]
+        return c if c in _PATH_OPS else ""
 
-    def _err(self, msg: str) -> ValueError:
+    def _path_skip(self) -> None:
+        self.i += 1
+
+    def _path_iri(self) -> str:
+        if self._path_op() or not self.s.startswith("<", self.i):
+            raise self._path_error("expected '<iri>', '^', '!' or '('")
+        j = self.s.find(">", self.i)
+        if j < 0:
+            raise self._path_error("unterminated '<iri>'")
+        if j == self.i + 1:
+            raise self._path_error("empty IRI")
+        iri, self.i = self.s[self.i + 1:j], j + 1
+        return iri
+
+    def _path_error(self, msg: str) -> ValueError:
         return ValueError(f"path syntax error at offset {self.i} "
                           f"in {self.s!r}: {msg}")
-
-    def parse(self) -> tuple:
-        node = self._alt()
-        if self._peek():
-            raise self._err(f"unexpected {self.s[self.i]!r}")
-        return node
-
-    def _alt(self) -> tuple:
-        node = self._seq()
-        while self._peek() == "|":
-            self.i += 1
-            node = ("alt", node, self._seq())
-        return node
-
-    def _seq(self) -> tuple:
-        node = self._post()
-        while self._peek() == "/":
-            self.i += 1
-            node = ("seq", node, self._post())
-        return node
-
-    def _post(self) -> tuple:
-        node = self._prim()
-        while self._peek() in ("+", "*", "?"):
-            node = ({"+": "plus", "*": "star", "?": "opt"}[self._peek()],
-                    node)
-            self.i += 1
-        return node
-
-    def _prim(self) -> tuple:
-        c = self._peek()
-        if c == "<":
-            j = self.s.find(">", self.i)
-            if j < 0:
-                raise self._err("unterminated '<iri>'")
-            iri = self.s[self.i + 1:j]
-            if not iri:
-                raise self._err("empty IRI")
-            self.i = j + 1
-            return ("pred", iri)
-        if c == "^":
-            self.i += 1
-            return ("inv", self._prim())
-        if c == "!":
-            self.i += 1
-            return self._negset()
-        if c == "(":
-            self.i += 1
-            node = self._alt()
-            if self._peek() != ")":
-                raise self._err("expected ')'")
-            self.i += 1
-            return node
-        raise self._err("expected '<iri>', '^', '!' or '('")
-
-    def _neg_member(self) -> tuple[bool, str]:
-        invm = False
-        if self._peek() == "^":
-            invm = True
-            self.i += 1
-        if self._peek() != "<":
-            raise self._err("negated property set members must be "
-                            "'<iri>' or '^<iri>'")
-        node = self._prim()
-        return invm, node[1]
-
-    def _negset(self) -> tuple:
-        """SPARQL §9.1 PathNegatedPropertySet: '!<p>', '!^<p>' or
-        '!(<p1>|^<p2>|...)' — forward members and inverse members are
-        collected separately (they negate different scan directions)."""
-        fwd: list[str] = []
-        inv: list[str] = []
-        if self._peek() == "(":
-            self.i += 1
-            while True:
-                invm, iri = self._neg_member()
-                (inv if invm else fwd).append(iri)
-                if self._peek() == "|":
-                    self.i += 1
-                    continue
-                if self._peek() == ")":
-                    self.i += 1
-                    break
-                raise self._err("expected '|' or ')' in negated set")
-        else:
-            invm, iri = self._neg_member()
-            (inv if invm else fwd).append(iri)
-        return ("negset", tuple(fwd), tuple(inv))
 
 
 def kg_path(triples: DataFrame, path: str,
@@ -1666,7 +1697,7 @@ def kg_path(triples: DataFrame, path: str,
     every ``*``/``?`` in the expression (it is one distinct over two
     projected scans, cheap next to any closure).
     """
-    ast = _PathParser(path).parse()
+    ast = _PathLexer(path).parse()
 
     def scans(node) -> int:
         # a negated set scans once per direction it names, and the
@@ -2035,39 +2066,15 @@ def ask(triples: DataFrame, patterns: list[tuple[str, str, str]],
     same join tree as ``bgp_match`` under a ``limit(1)`` — Spark stops
     the scan at the first produced row (LocalLimit short-circuit), so
     an ASK over 100 TB that matches early reads almost nothing.
-    All-constant pattern sets (``ASK { <s> <p> <o> }`` — the primary
-    SPARQL ASK idiom) short-circuit here directly: one pushed-filter
-    probe scan per pattern, no join tree at all."""
-    if patterns and all(
-            not t.startswith("?") for pat in patterns for t in pat) \
-            and not (not_exists or exists or minus or filters
-                     or values):
-        pos = (s_col, p_col, o_col, g_col)
-        for i, pat in enumerate(patterns):
-            if "<" in pat[1]:       # constant property-path pattern
-                # a 4-tuple carries a constant GRAPH term: the
-                # closure must run over THAT graph's edges only —
-                # dropping the scope would answer True for a path
-                # that exists only in another graph
-                scoped = triples
-                if len(pat) == 4:
-                    scoped = triples.where(F.col(g_col) == pat[3])
-                rel = kg_path(scoped, pat[1], s_col=s_col,
-                              p_col=p_col, o_col=o_col)
-                probe = rel.where((F.col("src") == pat[0])
-                                  & (F.col("dst") == pat[2]))
-            else:
-                probe = triples
-                for term, col in zip(pat, pos):
-                    probe = probe.where(F.col(col) == term)
-            if not probe.limit(1).take(1):
-                return False
-        return True
-    return bool(bgp_match(triples, patterns, not_exists=not_exists,
-                          exists=exists, minus=minus, values=values,
-                          filters=filters, s_col=s_col, p_col=p_col,
-                          o_col=o_col, g_col=g_col,
-                          meta_vars=meta_vars).limit(1).take(1))
+    All-constant patterns (``ASK { <s> <p> <o> }`` — the primary SPARQL
+    ASK idiom) are the join tree's existence gates: one pushed-filter
+    ``limit(1)`` probe per pattern (a constant path pattern probes its
+    closure over its GRAPH's edges only)."""
+    g = _as_group({"patterns": patterns, "not_exists": not_exists,
+                   "exists": exists, "minus": minus, "filters": filters,
+                   "values": values}, "query")
+    return bool(_match(triples, g, (s_col, p_col, o_col, g_col), meta_vars,
+                       False).limit(1).take(1))
 
 
 SAME_AS = OWL + "sameAs"

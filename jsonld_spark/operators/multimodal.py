@@ -93,8 +93,7 @@ def _feature_from_bytes(content: bytes) -> list[float]:
     return [d[i] / 255.0 for i in range(FEATURE_DIM)]
 
 
-def extract_media_features(media: DataFrame,
-                           batch_size_hint: int = 1024) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """binary content → (n_bytes, content_hex, feature[FEATURE_DIM]).
 
     One Python invocation per Arrow batch; the binary column arrives as

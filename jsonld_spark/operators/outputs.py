@@ -125,11 +125,12 @@ def jsonld_from_triples(triples: DataFrame, group_col: str = "doc_id",
     doc_id keeps reassembly local (list reconstruction via rdf:first/
     rest usages runs per document inside the batch, never as a global
     self-join); grouping by graph instead is a ``repartition`` away.
-    Quads whose group key is NULL form no group."""
+    Quads whose group key is NULL belong to no document: together they
+    give one error row (NULL key, NULL ``out_json``, ``ValueError``)."""
 
     def fromrdf(key, rows):
         if key is None:
-            return []
+            raise ValueError(f"{len(rows)} quads have a NULL {group_col}")
         return [(key, _canon_json(from_rdf_quads(
             to_quads(rows), use_native_types=use_native_types)), None)]
 

@@ -17,7 +17,15 @@ every refusal. ``_solutions`` turns a WHERE group into its solutions,
 whatever the query form: SELECT (and each subquery), ASK, CONSTRUCT
 and DESCRIBE all read from it. It compiles the group's subqueries
 bottom-up into solution joins, then hands the group to ``kg._compile``,
-the one evaluator, which ``bgp_match`` / ``bgp_union`` use too.
+the one evaluator, which ``bgp_match`` / ``bgp_union`` use too. Each
+form then has one path: SELECT runs its solution modifiers once each
+in SPARQL §18.2.4–18.2.5 order (``_compile_select``), ASK probes the
+solutions under ``limit(1)``, CONSTRUCT instantiates its template once
+over them (``kg._template_rows``), and DESCRIBE semi-joins a node
+frame — its IRIs, or the solutions' bindings — with
+``kg.describe_nodes``. Property paths have one grammar,
+``kg._PathGrammar``, which reads this parser's tokens as it reads
+``kg_path`` strings.
 
 Supported subset:
 
@@ -30,11 +38,14 @@ Supported subset:
   SAMPLE / GROUP_CONCAT`` (GROUP_CONCAT is made deterministic by
   sorting the group's values — SPARQL leaves the order undefined);
   aggregates may appear directly inside HAVING constraints (hidden
-  aggregate columns, dropped after the filter)
+  aggregate columns, dropped after the filter); HAVING and a trailing
+  VALUES read the GROUP BY keys and the aggregates (under their
+  SELECT aliases), not the other SELECT expressions, which SPARQL
+  binds after them
 * ``ASK`` / ``CONSTRUCT { template } WHERE`` / ``DESCRIBE <node>``
 * triple patterns with ``;`` / ``,`` predicate-object lists,
   property-path predicates (``^ / | + * ?`` and ``!`` negated sets
-  — the full kg_path grammar), ``GRAPH <g>|?g { ... }``
+  — kg_path's grammar, over PNAMEs too), ``GRAPH <g>|?g { ... }``
 * one grammar for every group (the ``_GROUP_CONTEXTS`` table): a
   WHERE group and every OPTIONAL / [NOT] EXISTS / MINUS body, at any
   depth, hold triple patterns, ``GRAPH``, ``FILTER``, ``OPTIONAL``,
@@ -66,9 +77,11 @@ Supported subset:
   binds only through an inner OPTIONAL, a non-rename BIND, an
   UNDEF-able VALUES or a subquery raises typed (the equality join
   would diverge)
-* ``UNION``: a WHERE clause that is entirely a UNION, and
-  ``CONSTRUCT`` over one instantiates the template per branch and
-  unions the graphs. A UNION beside other members is
+* ``UNION``: a WHERE clause that is entirely a UNION; ``CONSTRUCT``
+  over one instantiates the template over the union's solutions, so
+  a template triple a solution leaves unbound is skipped for it, a
+  template no branch binds completely raises, and so does a template
+  variable no branch binds. A UNION beside other members is
   Join(Union(branches), rest): a variable not bound by every branch
   is nullable, and using one as the join key, or in a term-metadata
   builtin, raises. A branch FILTER applies to the branch's solutions
@@ -117,9 +130,10 @@ nondeterministic builtins (NOW / UUID / STRUUID / RAND / BNODE — a
 retried Spark task would re-evaluate them, breaking reproducibility),
 TZ / TIMEZONE (lexical forms carry no normalized offset), STRLANG /
 STRDT, and FROM combined with FROM NAMED or GRAPH
-are not supported. ASK probes the group's solutions under ``limit(1)``; only an ASK whose
-group is all-constant triple patterns uses ``kg.ask``'s per-pattern
-probe scans. Expression
+are not supported. ASK probes the group's solutions under
+``limit(1)``; an all-constant pattern is an existence gate there, so
+ASK answers an all-constant group, which the other forms refuse (they
+need a variable). Expression
 translation casts a variable compared against a numeric literal to
 ``double``, and ``xsd:integer(?v)``-style constructors cast
 explicitly (SPARQL compares typed values; the triples frame stores
@@ -148,9 +162,9 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 from ..session import local_frame, reuse
-from .kg import META_SUFFIXES, RDF_TYPE, Group, _compile, \
-    _expr_identifiers, _pattern_tuple_vars, _template_rows, _values_join, \
-    ask, describe, describe_nodes
+from .kg import _PATH_OPS, META_SUFFIXES, RDF_TYPE, Group, _PathGrammar, \
+    _compile, _expr_identifiers, _pattern_tuple_vars, \
+    _refuse_constant, _template_rows, _values_join, describe_nodes
 
 _META_SUFFIXES = tuple(META_SUFFIXES)
 
@@ -281,10 +295,8 @@ class _Query:
     limit: int | None = None
     offset: int | None = None
     template: list[tuple] | None = None
-    describe_node: str | None = None
     describe_nodes: list[str] | None = None
     describe_var: str | None = None
-    aggregates: list[tuple[Any, str]] = field(default_factory=list)
     post_values: list[dict] = field(default_factory=list)
     # dataset clauses: FROM <g> (default-graph merge) / FROM NAMED <g>
     from_graphs: list[str] = field(default_factory=list)
@@ -342,7 +354,7 @@ _AGG_FUNCS = {"count", "sum", "avg", "min", "max", "sample",
               "group_concat"}
 
 
-class _Parser:
+class _Parser(_PathGrammar):
     def __init__(self, text: str):
         self.toks = _tokenize(text)
         self.i = 0
@@ -437,15 +449,7 @@ class _Parser:
         if t.kind in ("IRIREF", "PNAME"):
             return self._iri(t)
         if t.kind == "STRING":
-            val = _unquote(t.value)
-            # @lang / ^^datatype tags don't change the stored lexical
-            # form in the single obj_value column — consume and drop
-            if self._peek().kind == "LANGTAG":
-                self._next()
-            elif self._peek().kind == "OP" and self._peek().value == "^^":
-                self._next()
-                self._iri(self._next())
-            return val
+            return self._literal(t)
         if t.kind == "NUMBER":
             return t.value
         if t.kind == "OP" and t.value in ("-", "+") \
@@ -467,11 +471,23 @@ class _Parser:
         raise SparqlSyntaxError(
             f"bad {position} term {t.value!r} at offset {t.pos}")
 
+    def _literal(self, t: _Tok) -> str:
+        """A STRING token's value. Its @lang / ^^datatype tag does not
+        change the stored lexical form in the single obj_value column:
+        consumed and dropped."""
+        if self._peek().kind == "LANGTAG":
+            self._next()
+        elif self._peek().kind == "OP" and self._peek().value == "^^":
+            self._next()
+            self._iri(self._next())
+        return _unquote(t.value)
+
     # -- property paths ---------------------------------------------------
     def _predicate(self) -> str:
         """Predicate position: a variable, ``a``, a plain IRI, or a
-        property-path expression. Paths are re-rendered with full
-        ``<iri>`` tokens — the exact grammar ``kg_path`` parses."""
+        property-path expression. kg's path grammar parses a path; its
+        tokens are echoed, IRIs expanded to full ``<iri>`` tokens, as
+        the ``kg_path`` text the pattern carries."""
         t = self._peek()
         if t.kind == "VAR":
             self._next()
@@ -479,72 +495,27 @@ class _Parser:
         if t.kind == "KW" and t.value == "a":
             self._next()
             return RDF_TYPE
-        text, is_path = self._path_alt()
-        if not is_path:
-            return text[1:-1]            # plain IRI → bare (fast path)
-        return text
+        self._path_text = []
+        node = self._path_alt()
+        if len(self._path_text) == 1:
+            return node[1]               # plain IRI → bare (fast path)
+        return "".join(self._path_text)
 
-    def _path_alt(self) -> tuple[str, bool]:
-        s, p = self._path_seq()
-        parts, is_path = [s], p
-        while self._peek().kind == "OP" and self._peek().value == "|":
-            self._next()
-            s2, _ = self._path_seq()
-            parts.append(s2)
-            is_path = True
-        return "|".join(parts), is_path
-
-    def _path_seq(self) -> tuple[str, bool]:
-        s, p = self._path_post()
-        parts, is_path = [s], p
-        while self._peek().kind == "OP" and self._peek().value == "/":
-            self._next()
-            s2, _ = self._path_post()
-            parts.append(s2)
-            is_path = True
-        return "/".join(parts), is_path
-
-    def _path_post(self) -> tuple[str, bool]:
-        s, p = self._path_prim()
+    # the token interface of kg._PathGrammar
+    def _path_op(self) -> str:
         t = self._peek()
-        if t.kind == "OP" and t.value in ("+", "*", "?"):
-            self._next()
-            return s + t.value, True
-        return s, p
+        return t.value if t.kind == "OP" and t.value in _PATH_OPS else ""
 
-    def _path_prim(self) -> tuple[str, bool]:
-        t = self._peek()
-        if t.kind == "OP" and t.value == "^":
-            self._next()
-            s, _ = self._path_prim()
-            return "^" + s, True
-        if t.kind == "OP" and t.value == "!":
-            self._next()
-            return "!" + self._path_negset(), True
-        if t.kind == "OP" and t.value == "(":
-            self._next()
-            s, _ = self._path_alt()
-            self._expect("OP", ")")
-            return "(" + s + ")", True
-        return "<" + self._iri(self._next()) + ">", False
+    def _path_skip(self) -> None:
+        self._path_text.append(self._next().value)
 
-    def _path_negset(self) -> str:
-        t = self._peek()
-        if t.kind == "OP" and t.value == "(":
-            self._next()
-            members = [self._path_neg_member()]
-            while self._peek().kind == "OP" and self._peek().value == "|":
-                self._next()
-                members.append(self._path_neg_member())
-            self._expect("OP", ")")
-            return "(" + "|".join(members) + ")"
-        return self._path_neg_member()
+    def _path_iri(self) -> str:
+        iri = self._iri(self._next())
+        self._path_text.append(f"<{iri}>")
+        return iri
 
-    def _path_neg_member(self) -> str:
-        if self._peek().kind == "OP" and self._peek().value == "^":
-            self._next()
-            return "^<" + self._iri(self._next()) + ">"
-        return "<" + self._iri(self._next()) + ">"
+    def _path_error(self, msg: str) -> SparqlSyntaxError:
+        return SparqlSyntaxError(f"{msg} at offset {self._peek().pos}")
 
     # -- triples block ----------------------------------------------------
     def _triples_block(self, graph: str | None) -> list[tuple]:
@@ -552,46 +523,39 @@ class _Parser:
         trailing '.'; returns 3- or 4-tuples (graph term appended)."""
         pats: list[tuple] = []
         subj = self._term("subject")
-        if self._bn_buf and subj.startswith("?" + _BNODE_VAR_PREFIX) \
-                and self._peek().kind == "OP" \
-                and self._peek().value in (".", "}"):
-            # TriplesSameSubject = blankNodePropertyList with an empty
-            # outer property list: { [ p o ] . } — the desugared
-            # patterns ARE the block
-            if self._peek().value == ".":
-                self._next()
-            for bp in self._bn_buf:
-                pats.append(bp + (graph,) if graph is not None else bp)
-            self._bn_buf.clear()
-            return pats
-        while True:
-            pred = self._predicate()
-            while True:
-                obj = self._term("object")
-                if graph is not None:
-                    pats.append((subj, pred, obj, graph))
-                else:
-                    pats.append((subj, pred, obj))
-                if self._peek().kind == "OP" and self._peek().value == ",":
-                    self._next()
-                    continue
-                break
-            if self._peek().kind == "OP" and self._peek().value == ";":
-                self._next()
-                # a ';' directly before '.' or '}' is legal trailing
-                if (self._peek().kind == "OP"
-                        and self._peek().value in (".", "}")):
-                    break
-                continue
-            break
+        # TriplesSameSubject may be a blankNodePropertyList with an
+        # empty outer property list, { [ p o ] . }: the desugared
+        # patterns ARE the block
+        if not (self._bn_buf and subj.startswith("?" + _BNODE_VAR_PREFIX)
+                and self._peek().kind == "OP"
+                and self._peek().value in (".", "}")):
+            self._property_list(subj, (".", "}"), pats)
         if self._peek().kind == "OP" and self._peek().value == ".":
             self._next()
         # drain patterns desugared from [ p o ] property lists parsed
         # inside this block (they scope to the same graph)
-        for bp in self._bn_buf:
-            pats.append(bp + (graph,) if graph is not None else bp)
+        pats += self._bn_buf
         self._bn_buf.clear()
-        return pats
+        return [p + (graph,) for p in pats] if graph is not None else pats
+
+    def _property_list(self, subj: str, ends: tuple[str, ...],
+                       out: list) -> None:
+        """``pred obj (, obj)* (; pred obj ...)*`` about ``subj``,
+        appended to ``out`` as (s, p, o) patterns; a ';' directly
+        before one of ``ends`` is a legal trailing one."""
+        while True:
+            pred = self._predicate()
+            while True:
+                out.append((subj, pred, self._term("object")))
+                if not (self._peek().kind == "OP"
+                        and self._peek().value == ","):
+                    break
+                self._next()
+            if not (self._peek().kind == "OP" and self._peek().value == ";"):
+                return
+            self._next()
+            if self._peek().kind == "OP" and self._peek().value in ends:
+                return
 
     def _bnode_property_list(self) -> str:
         """``[`` already consumed, non-empty body: a blank-node
@@ -601,23 +565,7 @@ class _Parser:
         Nests (an object may itself be a property list)."""
         self._anon_bn += 1
         var = f"?{_BNODE_VAR_PREFIX}anon{self._anon_bn}"
-        while True:
-            pred = self._predicate()
-            while True:
-                obj = self._term("object")
-                self._bn_buf.append((var, pred, obj))
-                if self._peek().kind == "OP" \
-                        and self._peek().value == ",":
-                    self._next()
-                    continue
-                break
-            if self._peek().kind == "OP" and self._peek().value == ";":
-                self._next()
-                if self._peek().kind == "OP" \
-                        and self._peek().value == "]":
-                    break
-                continue
-            break
+        self._property_list(var, ("]",), self._bn_buf)
         self._expect("OP", "]")
         return var
 
@@ -874,29 +822,15 @@ class _Parser:
         return rows
 
     def _values_cell(self) -> str | None:
+        """UNDEF (None) or a constant term: no variable, no blank
+        node."""
         if self._eat_kw("undef"):
             return None
-        t = self._next()
-        if t.kind == "OP" and t.value in ("-", "+") \
-                and self._peek().kind == "NUMBER":
-            num = self._next().value
-            return num if t.value == "+" else "-" + num
-        if t.kind == "STRING":
-            val = _unquote(t.value)
-            if self._peek().kind == "LANGTAG":
-                self._next()
-            elif self._peek().kind == "OP" and self._peek().value == "^^":
-                self._next()
-                self._iri(self._next())
-            return val
-        if t.kind in ("IRIREF", "PNAME"):
-            return self._iri(t)
-        if t.kind == "NUMBER":
-            return t.value
-        if t.kind == "KW" and t.value in ("true", "false"):
-            return t.value
-        raise SparqlSyntaxError(
-            f"bad VALUES cell {t.value!r} at offset {t.pos}")
+        t = self._peek()
+        if t.kind == "VAR" or t.value == "[" or t.value.startswith("_:"):
+            raise SparqlSyntaxError(
+                f"bad VALUES cell {t.value!r} at offset {t.pos}")
+        return self._term("VALUES cell")
 
     # -- expressions → Spark SQL ------------------------------------------
     # Precedence: || < && < (=,!=,<,>,<=,>=,IN) < (+,-) < (*,/) < unary
@@ -1095,12 +1029,7 @@ class _Parser:
         if t.kind == "NUMBER":
             return t.value, "num"
         if t.kind == "STRING":
-            lit = _unquote(t.value).replace("\\", "\\\\").replace("'", "\\'")
-            if self._peek().kind == "LANGTAG":
-                self._next()
-            elif self._peek().kind == "OP" and self._peek().value == "^^":
-                self._next()
-                self._iri(self._next())
+            lit = self._literal(t).replace("\\", "\\\\").replace("'", "\\'")
             return f"'{lit}'", "str"
         if t.kind in ("IRIREF", "PNAME"):
             iri = self._iri(t)
@@ -1397,10 +1326,7 @@ class _Parser:
                 while self._peek().kind in ("IRIREF", "PNAME"):
                     nodes.append(self._iri(self._next()))
                 self._dataset_clause(q)
-                if len(nodes) == 1:
-                    q.describe_node = nodes[0]
-                else:
-                    q.describe_nodes = nodes
+                q.describe_nodes = nodes
         else:
             t = self._peek()
             raise SparqlSyntaxError(
@@ -1708,124 +1634,93 @@ def _compile_select(triples: DataFrame, q: _Query, cols: dict,
     """Compile a (sub)SELECT to (solutions DataFrame, nullable
     projected variables, is_scalar) — is_scalar marks an aggregate
     query with no GROUP BY, which produces exactly one row (the
-    scalar-subquery idiom; joined disjoint via broadcast)."""
+    scalar-subquery idiom; joined disjoint via broadcast). Each
+    solution modifier runs once, in SPARQL §18.2.4–18.2.5 order:
+    Group / Aggregate, Having, VALUES, Extend / Project, Distinct,
+    OrderBy, Slice."""
+    _refuse_constant(q.where)
     df, nullable = _solutions(triples, q.where, cols,
                               distinct_solutions, meta_vars)
-    out_nul: set[str] = set()
-    scalar = False
-    has_agg = any(item[0] == "agg" for item in (q.select or []))
-    # trailing VALUES joins BEFORE projection and solution modifiers
-    # (SPARQL 18.2.4.3: after aggregation+HAVING, before Project /
-    # Distinct / OrderBy / Slice). Non-aggregate queries join the
-    # full solution frame here; aggregate queries join the grouped
-    # frame after HAVING below.
-    if q.post_values and not (q.group_by or has_agg):
-        df = _values_join(df, q.post_values, nullable)
-        nullable |= {v for row in q.post_values for v in row
-                     if any(r.get(v) is None for r in q.post_values)}
-    agg_out_order: list[str] | None = None
-    having_handled = False
-    if q.group_by or has_agg or q.having_aggs:
+    items = q.select or []
+    has_agg = any(item[0] == "agg" for item in items)
+    grouped = bool(q.group_by or has_agg or q.having_aggs)
+    scalar = has_agg and not q.group_by
+    if grouped:
         if q.select_star:
             raise SparqlSyntaxError("SELECT * with GROUP BY is not SPARQL")
-        scalar = has_agg and not q.group_by
-        aggs, out_order, post_exprs = [], [], []
-        for item in q.select:
+        ungrouped = set(df.columns) - set(q.group_by)
+        aggs, agg_nul = [], set()
+        for item in items:
             if item[0] == "agg":
                 aggs.append(_agg_column(item[1], item[2], df.columns))
-                out_order.append(item[2])
                 name, arg = item[1][0], item[1][1]
                 # COUNT is never null; other aggregates are null on an
                 # empty (scalar) input or an all-null nullable arg
                 if name != "count" and (scalar or (
                         arg and any(x in nullable
                                     for x in _expr_identifiers(arg)))):
-                    out_nul.add(item[2])
-            elif item[0] == "var":
-                if item[1] not in q.group_by:
-                    raise SparqlSyntaxError(
-                        f"?{item[1]} is projected but neither grouped "
-                        "nor aggregated")
-                out_order.append(item[1])
-                if item[1] in nullable:
-                    out_nul.add(item[1])
-            else:
-                # (expr AS ?x) beside aggregates: a projection over
-                # the grouped frame — may reference group keys and
-                # earlier SELECT aliases (SPARQL's in-scope rule);
+                    agg_nul.add(item[2])
+            elif item[0] == "var" and item[1] not in q.group_by:
+                raise SparqlSyntaxError(
+                    f"?{item[1]} is projected but neither grouped "
+                    "nor aggregated")
+            elif item[0] == "expr":
+                # (expr AS ?x) beside aggregates: may reference group
+                # keys and SELECT aliases (SPARQL's in-scope rule);
                 # anything else surfaces as an unresolved column
-                refs = _expr_identifiers(item[1])
-                bad = [x for x in refs
-                       if x in set(df.columns) - set(q.group_by)]
+                bad = sorted(_expr_identifiers(item[1]) & ungrouped)
                 if bad:
                     raise SparqlSyntaxError(
                         f"(… AS ?{item[2]}) references ungrouped "
-                        f"variables {sorted(bad)} — aggregate them "
+                        f"variables {bad} — aggregate them "
                         "or add them to GROUP BY")
-                post_exprs.append((item[2], item[1]))
-                out_order.append(item[2])
-                out_nul.add(item[2])
-        # aggregates referenced only by HAVING become hidden columns,
-        # computed with the visible ones and dropped by the final
-        # projection after the HAVING filter runs
-        hidden = [_agg_column(spec, alias, df.columns)
-                  for alias, spec in q.having_aggs]
-        if aggs or hidden:
-            all_aggs = aggs + hidden
-            df = df.groupBy(*q.group_by).agg(*all_aggs) if q.group_by \
-                else df.agg(*all_aggs)
+        # aggregates referenced only by HAVING are hidden columns,
+        # which the projection drops
+        aggs += [_agg_column(spec, alias, df.columns)
+                 for alias, spec in q.having_aggs]
+        nullable = agg_nul | (nullable & set(q.group_by))
+        if aggs:
+            df = df.groupBy(*q.group_by).agg(*aggs) if q.group_by \
+                else df.agg(*aggs)
         else:
             # GROUP BY with no aggregate in SELECT: one row per group
             df = df.select(*q.group_by).distinct()
-        for alias, sql in post_exprs:
-            df = df.withColumn(alias, F.expr(sql))
-        if hidden:
-            # HAVING must see the hidden aggregate columns — filter
-            # here, then project them away
-            for h in q.having:
-                df = df.where(F.expr(h))
-            having_handled = True
-        df = df.select(*out_order)
-        agg_out_order = out_order
-    elif q.select and not q.select_star:
-        out_cols = []
-        for item in q.select:
-            if item[0] == "var":
-                out_cols.append(F.col(item[1]))
-                if item[1] in nullable:
-                    out_nul.add(item[1])
-            elif item[0] == "expr":
-                out_cols.append(F.expr(item[1]).alias(item[2]))
-                # conservative: an arbitrary expression may evaluate
-                # to null even over bound inputs
-                out_nul.add(item[2])
-            else:  # pragma: no cover — has_agg branch above catches
-                raise AssertionError
-        df = df.select(*out_cols)
-        if q.distinct and distinct_solutions:
-            df = df.distinct()
-    else:
+        # in scope after grouping (§18.2.4.1): the aggregates and the
+        # keys the query reads outside an aggregate
+        reads = set().union(*map(_expr_identifiers, [
+            f"`{item[1]}`" if item[0] == "var" else item[1]
+            for item in items if item[0] != "agg"]
+            + q.having + [e for e, _ in q.order_by]))
+        df = df.select(*[c for c in df.columns
+                         if c not in q.group_by or c in reads])
+    for h in q.having:
+        df = df.where(F.expr(h))
+    if q.post_values:
+        # the trailing ValuesClause; an UNDEF cell leaves a new
+        # variable unbound
+        before = set(df.columns)
+        df = _values_join(df, q.post_values, nullable)
+        nullable |= {v for row in q.post_values for v, val in row.items()
+                     if val is None and v not in before}
+    if q.select_star:
         # SELECT * projects only named variables — blank-node-label
         # variables and {var}__kind/__lang/__datatype term-metadata
-        # columns drop out here (dedup afterwards: distinct solutions
-        # may collapse once they go)
-        drop = [c for c in df.columns
-                if c.startswith(_BNODE_VAR_PREFIX)
-                or c.endswith(_META_SUFFIXES)]
-        if drop:
-            df = df.select(*[c for c in df.columns if c not in drop])
-            if distinct_solutions:
-                df = df.distinct()
-        out_nul = {v for v in df.columns if v in nullable}
-    if not having_handled:
-        for h in q.having:
-            df = df.where(F.expr(h))
-    if q.post_values and agg_out_order is not None:
-        # aggregate path: VALUES joins the grouped frame after HAVING,
-        # then the spec's Project re-applies (new VALUES variables do
-        # not survive an explicit select list)
-        df = _values_join(df, q.post_values, out_nul)
-        df = df.select(*agg_out_order)
+        # columns drop out (distinct solutions may collapse once they
+        # go)
+        proj = [c for c in df.columns
+                if not c.startswith(_BNODE_VAR_PREFIX)
+                and not c.endswith(_META_SUFFIXES)]
+        dedup = len(proj) < len(df.columns)
+    else:
+        proj = [F.expr(item[1]).alias(item[2]) if item[0] == "expr"
+                else F.col(item[-1]) for item in items]
+        # conservative: an expression may evaluate to null even over
+        # bound inputs
+        nullable |= {item[2] for item in items if item[0] == "expr"}
+        dedup = q.distinct and not grouped
+    df = df.select(*proj)
+    if dedup and distinct_solutions:
+        df = df.distinct()
     if q.order_by:
         df = df.orderBy(*[F.expr(e).desc() if d else F.expr(e).asc()
                           for e, d in q.order_by])
@@ -1833,7 +1728,7 @@ def _compile_select(triples: DataFrame, q: _Query, cols: dict,
         df = df.offset(q.offset)
     if q.limit is not None:
         df = df.limit(q.limit)
-    return df, {v for v in out_nul if v in df.columns}, scalar
+    return df, nullable & set(df.columns), scalar
 
 
 def sparql_query(triples: DataFrame, query: str,
@@ -1846,10 +1741,11 @@ def sparql_query(triples: DataFrame, query: str,
     projected variable); ASK returns a bool (same contract as
     ``kg.ask``). See the module docstring for the supported subset.
     Every form reads the WHERE solutions from ``_solutions`` (the one
-    evaluator, ``kg._compile``), then adds only its own
-    operators: SELECT's projection and solution modifiers, ASK's
-    ``limit(1)`` probe, CONSTRUCT's template projections, DESCRIBE's
-    node semi-joins.
+    evaluator, ``kg._compile``) through one path, then adds only its
+    own operators: SELECT's solution modifiers, ASK's ``limit(1)``
+    probe, CONSTRUCT's template projections (once, over a whole-group
+    UNION too), DESCRIBE's node semi-joins (``describe_nodes``, for
+    ``DESCRIBE <iri> ...`` too).
     """
     from pyspark.errors import AnalysisException
     try:
@@ -1897,20 +1793,7 @@ def _sparql_dispatch(triples: DataFrame, query: str,
     # DESCRIBE ?var twice more
     if sum(1 for _ in _query_patterns(q)) + 2 * bool(q.describe_var) > 1:
         triples = reuse(triples)
-    if q.form == "describe":
-        if q.describe_nodes is not None:
-            ndf = local_frame(triples.sparkSession,
-                              [(n,) for n in q.describe_nodes], "node string")
-            return describe_nodes(triples, ndf, s_col=s_col,
-                                  p_col=p_col, o_col=o_col)
-        if q.describe_var is None:
-            return describe(triples, q.describe_node,
-                            s_col=s_col, p_col=p_col, o_col=o_col)
     g = q.where
-    if q.form == "ask" and g == Group(patterns=g.patterns) and all(
-            not t.startswith("?") for pat in g.patterns for t in pat):
-        # ASK { <s> <p> <o> }: one pushed-filter probe per pattern
-        return ask(triples, g.patterns, **cols)
     if q.form == "select":
         return _compile_select(triples, q, cols, distinct_solutions,
                                meta_vars=meta_vars)[0]
@@ -1918,46 +1801,43 @@ def _sparql_dispatch(triples: DataFrame, query: str,
         # existence needs no dedup; limit(1) stops at the first row
         return bool(_solutions(triples, g, cols, False,
                                meta_vars)[0].limit(1).take(1))
-    if q.form == "describe":
-        sol, _ = _solutions(triples, g, cols, distinct_solutions,
-                            meta_vars)
-        if q.describe_var not in sol.columns:
-            raise SparqlSyntaxError(
-                f"DESCRIBE ?{q.describe_var}: variable is not "
-                "bound by the WHERE clause")
+    if q.form == "describe" and q.describe_var is None:
         return describe_nodes(
-            triples, sol.select(q.describe_var).where(
-                F.col(q.describe_var).isNotNull()),
-            node_col=q.describe_var,
+            triples, local_frame(triples.sparkSession,
+                                 [(n,) for n in q.describe_nodes],
+                                 "node string"),
             s_col=s_col, p_col=p_col, o_col=o_col)
-    # CONSTRUCT. Blank-node labels in the template (SPARQL §16.2) are
-    # minted as a fresh deterministic node per solution; template
-    # labels are scoped to the template (§19.6), so one that also
-    # appears in the WHERE clause shadows that variable
-    mint = {term[1:] for tri in q.template for term in tri
-            if term.startswith("?" + _BNODE_VAR_PREFIX)} or None
-    if not g.union_branches:
+    _refuse_constant(g)
+    if q.form == "construct":
+        # Blank-node labels in the template (SPARQL §16.2) are minted
+        # as a fresh deterministic node per solution; template labels
+        # are scoped to the template (§19.6), so one that also appears
+        # in the WHERE clause shadows that variable
+        mint = {term[1:] for tri in q.template for term in tri
+                if term.startswith("?" + _BNODE_VAR_PREFIX)}
+        # over a whole-group UNION a solution binds only its branch's
+        # variables and a template triple with an unbound term is
+        # skipped: a template no branch binds completely would
+        # construct an empty graph
+        if g.union_branches and not any(
+                all(not term.startswith("?") or term[1:] in bvars
+                    for term in tri)
+                for b in g.union_branches
+                for bvars in [_pattern_tuple_vars(b.patterns) | mint]
+                for tri in q.template):
+            raise SparqlSyntaxError(
+                "CONSTRUCT over UNION: no template triple is fully "
+                "bound by any branch")
         sol, _ = _solutions(triples, g, cols, distinct_solutions,
                             meta_vars)
         return _template_rows(sol, q.template, mint)
-    # over a whole-group UNION the template instantiates per branch
-    # (each branch's solutions mint their own ids) and the graphs
-    # union; a template triple a branch cannot bind is skipped there
-    outs = []
-    for branch in g.union_branches:
-        bvars = _pattern_tuple_vars(branch.patterns) | (mint or set())
-        tmpl = [t for t in q.template
-                if all(not term.startswith("?") or term[1:] in bvars
-                       for term in t)]
-        if tmpl:
-            sol, _ = _solutions(triples, branch, cols,
-                                distinct_solutions, meta_vars)
-            outs.append(_template_rows(sol, tmpl, mint))
-    if not outs:
+    sol, _ = _solutions(triples, g, cols, distinct_solutions, meta_vars)
+    if q.describe_var not in sol.columns:
         raise SparqlSyntaxError(
-            "CONSTRUCT over UNION: no template triple is fully "
-            "bound by any branch")
-    df = outs[0]
-    for o in outs[1:]:
-        df = df.unionByName(o)
-    return df.distinct()
+            f"DESCRIBE ?{q.describe_var}: variable is not "
+            "bound by the WHERE clause")
+    return describe_nodes(
+        triples, sol.select(q.describe_var).where(
+            F.col(q.describe_var).isNotNull()),
+        node_col=q.describe_var,
+        s_col=s_col, p_col=p_col, o_col=o_col)

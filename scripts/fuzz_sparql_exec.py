@@ -1,7 +1,13 @@
 """Execution-level SPARQL fuzz: whole-grammar member soup (patterns,
 property paths, OPTIONAL, [NOT] EXISTS, MINUS, UNION, VALUES, GRAPH,
 subqueries, BIND, FILTER builtins) over all four query forms, each
-case EXECUTED against a small in-memory graph. Allowed outcomes: a
+case EXECUTED against a small in-memory graph. The forms cover every
+solution modifier (GROUP BY with COUNT / SUM / MIN / MAX / AVG /
+SAMPLE / GROUP_CONCAT, HAVING-only aggregates, ``(expr AS ?x)``,
+ORDER BY ASC / DESC, LIMIT, OFFSET, a trailing VALUES, DISTINCT and
+REDUCED), all-constant ASK (plain and path patterns, under GRAPH),
+``DESCRIBE <iri> ...``, and CONSTRUCT with template blank nodes, over
+a whole-group UNION too. Allowed outcomes: a
 result, or a typed SparqlSyntaxError / SparqlUnsupportedError /
 ValueError. Anything else (raw AnalysisException, Py4J error) is a
 finding — the bug class this harness caught in round 5 (never-bound
@@ -26,13 +32,14 @@ spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.shuffle.partitions", "4").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 EX = "http://example.org/"
-rows = [(s, EX + p, o, g) for s, p, o, g in [
+FACTS = [
     ("d1", "lang", "en", "g1"), ("d2", "lang", "de", "g2"),
     ("d3", "lang", "en", "g1"), ("d1", "author", "alice", "g1"),
     ("d2", "author", "alice", "g2"), ("d3", "author", "bob", "g1"),
     ("d1", "cites", "d2", "g1"), ("d2", "cites", "d3", "g2"),
     ("d1", "score", "3", "g1"), ("d2", "score", "9", "g2"),
-    ("alice", "level", "senior", "g1"), ("bob", "level", "junior", "g1")]]
+    ("alice", "level", "senior", "g1"), ("bob", "level", "junior", "g1")]
+rows = [(s, EX + p, o, g) for s, p, o, g in FACTS]
 t = spark.createDataFrame(
     rows, "subj string, pred string, obj_value string, graph string")
 
@@ -43,6 +50,10 @@ PREDS = ["ex:lang", "ex:author", "ex:cites", "ex:score", "ex:level"]
 PATHS = ["ex:cites+", "ex:cites*", "(ex:cites/ex:lang)", "^ex:author",
          "(ex:lang|ex:author)", "!(ex:lang)", "ex:cites?"]
 CONSTS = ["'en'", "'alice'", "'3'", "'senior'", "42"]
+NODES = ["<d1>", "<d2>", "<d3>", "<alice>", "<bob>"]
+AGGS = ["COUNT(*)", "COUNT(DISTINCT %s)", "SUM(%s)", "MIN(%s)", "MAX(%s)",
+        "AVG(%s)", "SAMPLE(%s)", "GROUP_CONCAT(%s)",
+        "GROUP_CONCAT(DISTINCT %s; SEPARATOR='|')"]
 
 def term():
     return rng.choice(VARS + VARS + CONSTS)
@@ -85,30 +96,78 @@ def member(depth):
 def body(depth):
     return " ".join(member(depth) for _ in range(rng.randrange(1, 4)))
 
+def agg():
+    return rng.choice(AGGS).replace("%s", rng.choice(VARS))
+
+def const_pattern():
+    # half the time a stored fact, so that ASK answers both ways
+    if rng.random() < 0.5:
+        s, p, o, _ = rng.choice(FACTS)
+        return f"<{s}> ex:{p} '{o}' ."
+    return "%s %s %s ." % (rng.choice(NODES), rng.choice(PREDS + PATHS),
+                           rng.choice(NODES + CONSTS))
+
+def select(w):
+    v = rng.choice(VARS)
+    sel = "*" if rng.random() < 0.5 else " ".join(
+        dict.fromkeys(rng.choice(VARS) for _ in range(2)))
+    if sel != "*" and rng.random() < 0.3:
+        sel += " (UCASE(%s) AS ?u)" % rng.choice(VARS)
+    mods = ""
+    r = rng.random()
+    if r < 0.3:
+        mods = f" GROUP BY {v}"
+        sel = f"{v} ({agg()} AS ?n)"
+        if rng.random() < 0.3:
+            sel += f" (STRLEN({v}) AS ?len)"
+    elif r < 0.4:
+        sel = f"({agg()} AS ?n)"
+    if mods or r < 0.4:
+        h = rng.random()
+        if h < 0.3:
+            mods += " HAVING (COUNT(*) >= 1)"
+        elif h < 0.5:
+            mods += " HAVING (%s != 'zzz')" % agg()
+        elif h < 0.6:
+            mods += " HAVING (?n != '0')"
+    if rng.random() < 0.3:
+        mods += " ORDER BY %s" % rng.choice(
+            VARS + ["DESC(%s)" % rng.choice(VARS), "ASC(%s)" % v])
+    if rng.random() < 0.3:
+        mods += " LIMIT %d" % rng.randrange(1, 5)
+    if rng.random() < 0.15:
+        mods += " OFFSET %d" % rng.randrange(0, 3)
+    if rng.random() < 0.15:
+        mods += " VALUES %s { %s }" % (rng.choice(VARS), " ".join(
+            rng.choice(CONSTS + ["UNDEF"]) for _ in range(2)))
+    dst = rng.choice(["", "", "DISTINCT ", "REDUCED "])
+    return f"SELECT {dst}{sel} WHERE {{ {w} }}{mods}"
+
 def query():
     r = rng.random()
     w = body(0)
     if r < 0.55:
-        sel = "*" if rng.random() < 0.5 else " ".join(
-            dict.fromkeys(rng.choice(VARS) for _ in range(2)))
-        mods = ""
-        if rng.random() < 0.3:
-            v = rng.choice(VARS)
-            mods = f" GROUP BY {v}"
-            sel = f"{v} (COUNT(*) AS ?n)"
-            if rng.random() < 0.5:
-                mods += " HAVING (COUNT(*) >= 1)"
-        if rng.random() < 0.3:
-            mods += " ORDER BY %s" % rng.choice(VARS)
-        if rng.random() < 0.3:
-            mods += " LIMIT %d" % rng.randrange(1, 5)
-        dst = "DISTINCT " if rng.random() < 0.3 else ""
-        return f"SELECT {dst}{sel} WHERE {{ {w} }}{mods}"
+        return select(w)
     if r < 0.7:
+        if rng.random() < 0.4:
+            w = " ".join(const_pattern() for _ in range(rng.randrange(1, 3)))
+            if rng.random() < 0.3:
+                w = "GRAPH %s { %s }" % (rng.choice(["<g1>", "<g2>"]), w)
         return f"ASK {{ {w} }}"
     if r < 0.85:
-        return ("CONSTRUCT { %s ex:out %s } WHERE { %s }"
-                % (rng.choice(VARS), rng.choice(VARS), w))
+        s, o = rng.choice(VARS), rng.choice(VARS)
+        tmpl = f"{s} ex:out {o}"
+        if rng.random() < 0.4:
+            tmpl = f"_:b ex:out {o} . _:b ex:of {s}"
+        if rng.random() < 0.3:
+            # a whole-group UNION whose branches bind the template's
+            # variables, or some of them
+            w = " UNION ".join("{ %s %s %s . }" % (
+                s, rng.choice(PREDS + PATHS), rng.choice([o, term()]))
+                for _ in range(2))
+        return "CONSTRUCT { %s } WHERE { %s }" % (tmpl, w)
+    if rng.random() < 0.3:
+        return "DESCRIBE " + " ".join(rng.sample(NODES, rng.randrange(1, 3)))
     return "DESCRIBE %s WHERE { %s }" % (rng.choice(VARS), w)
 
 PFX = ("PREFIX ex: <%s> PREFIX xsd: <http://www.w3.org/2001/XMLSchema#> "

@@ -117,3 +117,24 @@ def test_document_outputs_isolate_bad_documents(spark, stage):
     for doc_id in ("bad-json", "bad-jsonld"):
         assert got[doc_id].out_json is None
         assert got[doc_id].error == want[doc_id]
+
+
+def test_fromrdf_null_key_quads_give_one_error_row(spark):
+    """Quads with a NULL doc_id belong to no document: they give one
+    error row, and the other document's output is unchanged."""
+    from jsonld_spark.operators.kernels import QUAD_COLS
+    good = [("d1", None, "http://e/x", "http://e/p", "literal", "v",
+             None, None)]
+    orphans = [(None, None, "http://e/y", "http://e/p", "literal", str(i),
+                None, None) for i in range(3)]
+    rows = jsonld_from_triples(
+        spark.createDataFrame(
+            good + orphans, ", ".join(f"{c} string" for c in QUAD_COLS))
+    ).collect()
+    assert len(rows) == 2
+    got = {r.doc_id: r for r in rows}
+    assert got["d1"].error is None
+    assert json.loads(got["d1"].out_json) == from_rdf_quads(
+        [Quad(*q[1:]) for q in good])
+    assert got[None].out_json is None
+    assert got[None].error.startswith("ValueError: ")

@@ -233,7 +233,7 @@ def test_parse_ask_construct_describe():
     assert q.form == "construct"
     assert q.template == [("?a", EX + "wrote", "?d")]
     q = _parse(PFX + "DESCRIBE ex:doc1")
-    assert q.form == "describe" and q.describe_node == EX + "doc1"
+    assert q.form == "describe" and q.describe_nodes == [EX + "doc1"]
 
 
 def test_parse_comments_and_base():
@@ -1626,6 +1626,60 @@ def test_construct_over_union_partial_template_binding(triples):
     rows = _rows(got)
     assert ("rev1", EX + "rev", "d1") in rows
     assert ("d1", EX + "seen", "y") in rows and ("d2", EX + "seen", "y") in rows
+
+
+def test_construct_over_union_mints_per_solution(triples):
+    """Over a whole-group UNION the template instantiates once over the
+    union's solutions: a template blank node is one distinct node per
+    solution, and a re-run mints the same ids."""
+    q = PFX + """CONSTRUCT { _:e ex:from ?a . _:e ex:to ?b }
+        WHERE { { ?a ex:cites ?b } UNION { ?a ex:author ?b } }"""
+    rows = _rows(sparql_query(triples, q))
+    src = {r[0]: r[2] for r in rows if r[1] == EX + "from"}
+    dst = {r[0]: r[2] for r in rows if r[1] == EX + "to"}
+    assert sorted((src[n], dst[n]) for n in src) == [
+        ("d1", "alice"), ("d1", "d2"), ("d2", "alice"), ("d2", "d3"),
+        ("d3", "bob")]
+    assert len(rows) == 10 and all(n.startswith("_:m") for n in src)
+    assert _rows(sparql_query(triples, q)) == rows
+
+
+@pytest.mark.parametrize("template, error", [
+    # each branch binds one of ?a / ?r, none binds both
+    ("?a ex:x ?r", SparqlSyntaxError),
+    # ?z is bound by no branch at all
+    ("?a ex:x ?o . ?a ex:y ?z", ValueError),
+], ids=["no_branch_binds_a_triple", "unbound_template_variable"])
+def test_construct_over_union_refuses_unbindable_template(triples,
+                                                          template, error):
+    with pytest.raises(error):
+        sparql_query(triples, PFX + "CONSTRUCT { " + template + """ }
+            WHERE { { ?a ex:cites ?o } UNION { ?d ex:author ?r } }""")
+
+
+def test_describe_iri_equals_kg_describe_on_self_loop(spark):
+    """DESCRIBE <n> runs describe_nodes over a one-node frame: the same
+    rows and roles as kg.describe, a self-loop once, as subject."""
+    from jsonld_spark.operators.kg import describe
+    t = spark.createDataFrame(
+        [("n", EX + "p", "n"), ("n", EX + "p", "m"), ("m", EX + "q", "n"),
+         ("m", EX + "q", "m")],
+        "subj string, pred string, obj_value string")
+    got = sparql_query(t, "DESCRIBE <n>")
+    want = describe(t, "n")
+    assert got.columns == want.columns
+    assert _rows(got) == _rows(want) == [
+        ("m", EX + "q", "n", "object"), ("n", EX + "p", "m", "subject"),
+        ("n", EX + "p", "n", "subject")]
+
+
+@pytest.mark.parametrize("where, want", [
+    ("<d1> ex:author 'alice' . <d3> ex:lang 'en'", True),
+    ("<d1> ex:author 'alice' . <d3> ex:lang 'de'", False),
+    ("<d1> ex:author 'bob' . <d3> ex:lang 'en'", False),
+], ids=["both", "second_fails", "first_fails"])
+def test_ask_constant_conjunction(triples, where, want):
+    assert sparql_query(triples, PFX + f"ASK {{ {where} }}") is want
 
 
 # ---------------------------------------------------------------------------
