@@ -605,17 +605,16 @@ def _match(triples: DataFrame, g: Group, pos_cols: tuple,
 
 
 def _refuse_constant(g: Group) -> None:
-    """The forms that return solutions need a variable: refuse a group,
-    or a branch of one of its UNIONs, whose patterns are all constant.
+    """The forms that return solutions need a variable: refuse a query
+    group whose patterns are all constant and that joins nothing else.
     ASK alone answers such a group (its constant patterns are existence
-    gates)."""
-    for grp in [g, *(b for block in g.unions for b in block)]:
-        if grp.patterns and not (grp.unions or grp.solution_joins
-                                 or grp.subqueries
-                                 or _pattern_tuple_vars(grp.patterns)):
-            raise ValueError(
-                "all patterns are constant — use ask() for a pure "
-                "existence test; bgp_match needs at least one variable")
+    gates). ``_union`` refuses such a branch of every UNION block it
+    evaluates, in every form."""
+    if g.patterns and not (g.unions or g.solution_joins or g.subqueries
+                           or _pattern_tuple_vars(g.patterns)):
+        raise ValueError(
+            "all patterns are constant — use ask() for a pure "
+            "existence test; bgp_match needs at least one variable")
 
 
 def _join_patterns(triples: DataFrame, patterns: list, pos_cols: tuple,
@@ -727,8 +726,8 @@ def _compile(triples: DataFrame, g: Group, pos_cols: tuple,
             nullable |= {v for v in new if v in snul}
         if out is None:
             # every pattern constant: the gates' cross product binds
-            # nothing — ASK answers it, the other forms refuse it first
-            # (_refuse_constant)
+            # nothing — ASK answers it, the other forms and every UNION
+            # branch refuse it first (_refuse_constant)
             out, gates = gates[0], gates[1:]
             for gate in gates:
                 out = out.crossJoin(gate)
@@ -1158,6 +1157,8 @@ def _union(triples: DataFrame, branches: list[Group], pos_cols: tuple,
                     f"{loose} not bound in that branch — a branch "
                     "FILTER scopes to its branch group (for "
                     "LANG()/DATATYPE() pass the var in meta_vars)")
+    for b in branches:
+        _refuse_constant(b)
     if sum(len(b.patterns) for b in branches) > 1:
         # each branch pattern reads the triples
         triples = reuse(triples)
@@ -2069,7 +2070,10 @@ def ask(triples: DataFrame, patterns: list[tuple[str, str, str]],
     All-constant patterns (``ASK { <s> <p> <o> }`` — the primary SPARQL
     ASK idiom) are the join tree's existence gates: one pushed-filter
     ``limit(1)`` probe per pattern (a constant path pattern probes its
-    closure over its GRAPH's edges only)."""
+    closure over its GRAPH's edges only). One pattern is read like any
+    other scan under the ``limit(1)``; two or more gates are
+    cross-joined, and each gate's limit then runs on every partition of
+    its scan, stopping each at its first match."""
     g = _as_group({"patterns": patterns, "not_exists": not_exists,
                    "exists": exists, "minus": minus, "filters": filters,
                    "values": values}, "query")
@@ -2135,24 +2139,37 @@ def describe(triples: DataFrame, node: str,
     """SPARQL DESCRIBE (symmetric concise form): every triple where the
     node is subject or object, plus the ``role`` it plays per row. One
     scan, two pushed-down equality filters OR-ed — no join."""
-    return (triples
-            .where((F.col(s_col) == node) | (F.col(o_col) == node))
-            .withColumn("role", F.when(F.col(s_col) == node, "subject")
-                        .otherwise("object")))
+    return describe_nodes(triples, [node], s_col=s_col, p_col=p_col,
+                          o_col=o_col)
 
 
-def describe_nodes(triples: DataFrame, nodes: DataFrame,
+def describe_nodes(triples: DataFrame, nodes: DataFrame | list[str],
                    node_col: str = "node", s_col: str = "subj",
                    p_col: str = "pred",
                    o_col: str = "obj_value") -> DataFrame:
     """SPARQL DESCRIBE over a SET of nodes (``DESCRIBE ?x WHERE ...``
     or a multi-IRI DESCRIBE): every triple whose subject or object is
-    in the node set, with the role per row. Distributed — the node
-    set stays a DataFrame (no driver collect): two semi-joins against
-    it (subject side, object side), unioned. Catalyst/AQE broadcasts
-    the node set when it is small, which it almost always is; a
-    triple relating two described nodes appears once per role, same
-    as running single-node ``describe`` per node and unioning."""
+    in the node set, with the role per row; a triple relating two
+    described nodes appears once per role, and a self-loop once, as
+    subject.
+
+    A list of constant IRIs (``DESCRIBE <a> <b>``) filters one scan:
+    pushed-down IN filters OR-ed, no join (for one node the optimizer
+    turns them into equality filters). A node DataFrame stays
+    distributed (no driver collect): two semi-joins against it
+    (subject side, object side), unioned. Catalyst/AQE broadcasts
+    the node set when it is small, which it almost always is."""
+    if isinstance(nodes, list):
+        s_in = F.col(s_col).isin(nodes)
+        o_in = F.col(o_col).isin(nodes)
+        role = F.when(s_in, "subject").otherwise("object")
+        if len(nodes) > 1:
+            # with one node, both ends described is a self-loop: once
+            role = F.explode(
+                F.when(s_in & o_in & (F.col(s_col) != F.col(o_col)),
+                       F.array(F.lit("subject"), F.lit("object")))
+                .otherwise(F.array(role)))
+        return triples.where(s_in | o_in).withColumn("role", role)
     triples = reuse(triples)  # read by both roles
     n = nodes.select(F.col(node_col).alias("_n")).distinct()
     subj_side = (triples.join(n, F.col(s_col) == F.col("_n"), "semi")

@@ -21,11 +21,10 @@ the one evaluator, which ``bgp_match`` / ``bgp_union`` use too. Each
 form then has one path: SELECT runs its solution modifiers once each
 in SPARQL §18.2.4–18.2.5 order (``_compile_select``), ASK probes the
 solutions under ``limit(1)``, CONSTRUCT instantiates its template once
-over them (``kg._template_rows``), and DESCRIBE semi-joins a node
-frame — its IRIs, or the solutions' bindings — with
-``kg.describe_nodes``. Property paths have one grammar,
-``kg._PathGrammar``, which reads this parser's tokens as it reads
-``kg_path`` strings.
+over them (``kg._template_rows``), and DESCRIBE hands its IRIs, or
+the solutions' bindings, to ``kg.describe_nodes``. Property paths have
+one grammar, ``kg._PathGrammar``, which reads this parser's tokens as
+it reads ``kg_path`` strings.
 
 Supported subset:
 
@@ -161,7 +160,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import local_frame, reuse
+from ..session import reuse
 from .kg import _PATH_OPS, META_SUFFIXES, RDF_TYPE, Group, _PathGrammar, \
     _compile, _expr_identifiers, _pattern_tuple_vars, \
     _refuse_constant, _template_rows, _values_join, describe_nodes
@@ -449,7 +448,15 @@ class _Parser(_PathGrammar):
         if t.kind in ("IRIREF", "PNAME"):
             return self._iri(t)
         if t.kind == "STRING":
-            return self._literal(t)
+            val = _unquote(t.value)
+            # @lang / ^^datatype tags don't change the stored lexical
+            # form in the single obj_value column — consume and drop
+            if self._peek().kind == "LANGTAG":
+                self._next()
+            elif self._peek().kind == "OP" and self._peek().value == "^^":
+                self._next()
+                self._iri(self._next())
+            return val
         if t.kind == "NUMBER":
             return t.value
         if t.kind == "OP" and t.value in ("-", "+") \
@@ -470,17 +477,6 @@ class _Parser(_PathGrammar):
             return self._bnode_property_list()
         raise SparqlSyntaxError(
             f"bad {position} term {t.value!r} at offset {t.pos}")
-
-    def _literal(self, t: _Tok) -> str:
-        """A STRING token's value. Its @lang / ^^datatype tag does not
-        change the stored lexical form in the single obj_value column:
-        consumed and dropped."""
-        if self._peek().kind == "LANGTAG":
-            self._next()
-        elif self._peek().kind == "OP" and self._peek().value == "^^":
-            self._next()
-            self._iri(self._next())
-        return _unquote(t.value)
 
     # -- property paths ---------------------------------------------------
     def _predicate(self) -> str:
@@ -523,39 +519,46 @@ class _Parser(_PathGrammar):
         trailing '.'; returns 3- or 4-tuples (graph term appended)."""
         pats: list[tuple] = []
         subj = self._term("subject")
-        # TriplesSameSubject may be a blankNodePropertyList with an
-        # empty outer property list, { [ p o ] . }: the desugared
-        # patterns ARE the block
-        if not (self._bn_buf and subj.startswith("?" + _BNODE_VAR_PREFIX)
-                and self._peek().kind == "OP"
-                and self._peek().value in (".", "}")):
-            self._property_list(subj, (".", "}"), pats)
+        if self._bn_buf and subj.startswith("?" + _BNODE_VAR_PREFIX) \
+                and self._peek().kind == "OP" \
+                and self._peek().value in (".", "}"):
+            # TriplesSameSubject = blankNodePropertyList with an empty
+            # outer property list: { [ p o ] . } — the desugared
+            # patterns ARE the block
+            if self._peek().value == ".":
+                self._next()
+            for bp in self._bn_buf:
+                pats.append(bp + (graph,) if graph is not None else bp)
+            self._bn_buf.clear()
+            return pats
+        while True:
+            pred = self._predicate()
+            while True:
+                obj = self._term("object")
+                if graph is not None:
+                    pats.append((subj, pred, obj, graph))
+                else:
+                    pats.append((subj, pred, obj))
+                if self._peek().kind == "OP" and self._peek().value == ",":
+                    self._next()
+                    continue
+                break
+            if self._peek().kind == "OP" and self._peek().value == ";":
+                self._next()
+                # a ';' directly before '.' or '}' is legal trailing
+                if (self._peek().kind == "OP"
+                        and self._peek().value in (".", "}")):
+                    break
+                continue
+            break
         if self._peek().kind == "OP" and self._peek().value == ".":
             self._next()
         # drain patterns desugared from [ p o ] property lists parsed
         # inside this block (they scope to the same graph)
-        pats += self._bn_buf
+        for bp in self._bn_buf:
+            pats.append(bp + (graph,) if graph is not None else bp)
         self._bn_buf.clear()
-        return [p + (graph,) for p in pats] if graph is not None else pats
-
-    def _property_list(self, subj: str, ends: tuple[str, ...],
-                       out: list) -> None:
-        """``pred obj (, obj)* (; pred obj ...)*`` about ``subj``,
-        appended to ``out`` as (s, p, o) patterns; a ';' directly
-        before one of ``ends`` is a legal trailing one."""
-        while True:
-            pred = self._predicate()
-            while True:
-                out.append((subj, pred, self._term("object")))
-                if not (self._peek().kind == "OP"
-                        and self._peek().value == ","):
-                    break
-                self._next()
-            if not (self._peek().kind == "OP" and self._peek().value == ";"):
-                return
-            self._next()
-            if self._peek().kind == "OP" and self._peek().value in ends:
-                return
+        return pats
 
     def _bnode_property_list(self) -> str:
         """``[`` already consumed, non-empty body: a blank-node
@@ -565,7 +568,23 @@ class _Parser(_PathGrammar):
         Nests (an object may itself be a property list)."""
         self._anon_bn += 1
         var = f"?{_BNODE_VAR_PREFIX}anon{self._anon_bn}"
-        self._property_list(var, ("]",), self._bn_buf)
+        while True:
+            pred = self._predicate()
+            while True:
+                obj = self._term("object")
+                self._bn_buf.append((var, pred, obj))
+                if self._peek().kind == "OP" \
+                        and self._peek().value == ",":
+                    self._next()
+                    continue
+                break
+            if self._peek().kind == "OP" and self._peek().value == ";":
+                self._next()
+                if self._peek().kind == "OP" \
+                        and self._peek().value == "]":
+                    break
+                continue
+            break
         self._expect("OP", "]")
         return var
 
@@ -822,15 +841,29 @@ class _Parser(_PathGrammar):
         return rows
 
     def _values_cell(self) -> str | None:
-        """UNDEF (None) or a constant term: no variable, no blank
-        node."""
         if self._eat_kw("undef"):
             return None
-        t = self._peek()
-        if t.kind == "VAR" or t.value == "[" or t.value.startswith("_:"):
-            raise SparqlSyntaxError(
-                f"bad VALUES cell {t.value!r} at offset {t.pos}")
-        return self._term("VALUES cell")
+        t = self._next()
+        if t.kind == "OP" and t.value in ("-", "+") \
+                and self._peek().kind == "NUMBER":
+            num = self._next().value
+            return num if t.value == "+" else "-" + num
+        if t.kind == "STRING":
+            val = _unquote(t.value)
+            if self._peek().kind == "LANGTAG":
+                self._next()
+            elif self._peek().kind == "OP" and self._peek().value == "^^":
+                self._next()
+                self._iri(self._next())
+            return val
+        if t.kind in ("IRIREF", "PNAME"):
+            return self._iri(t)
+        if t.kind == "NUMBER":
+            return t.value
+        if t.kind == "KW" and t.value in ("true", "false"):
+            return t.value
+        raise SparqlSyntaxError(
+            f"bad VALUES cell {t.value!r} at offset {t.pos}")
 
     # -- expressions → Spark SQL ------------------------------------------
     # Precedence: || < && < (=,!=,<,>,<=,>=,IN) < (+,-) < (*,/) < unary
@@ -1029,7 +1062,12 @@ class _Parser(_PathGrammar):
         if t.kind == "NUMBER":
             return t.value, "num"
         if t.kind == "STRING":
-            lit = self._literal(t).replace("\\", "\\\\").replace("'", "\\'")
+            lit = _unquote(t.value).replace("\\", "\\\\").replace("'", "\\'")
+            if self._peek().kind == "LANGTAG":
+                self._next()
+            elif self._peek().kind == "OP" and self._peek().value == "^^":
+                self._next()
+                self._iri(self._next())
             return f"'{lit}'", "str"
         if t.kind in ("IRIREF", "PNAME"):
             iri = self._iri(t)
@@ -1744,8 +1782,8 @@ def sparql_query(triples: DataFrame, query: str,
     evaluator, ``kg._compile``) through one path, then adds only its
     own operators: SELECT's solution modifiers, ASK's ``limit(1)``
     probe, CONSTRUCT's template projections (once, over a whole-group
-    UNION too), DESCRIBE's node semi-joins (``describe_nodes``, for
-    ``DESCRIBE <iri> ...`` too).
+    UNION too), DESCRIBE's ``describe_nodes`` call (a filtered scan for
+    ``DESCRIBE <iri> ...``, semi-joins for ``DESCRIBE ?var``).
     """
     from pyspark.errors import AnalysisException
     try:
@@ -1801,14 +1839,8 @@ def _sparql_dispatch(triples: DataFrame, query: str,
         # existence needs no dedup; limit(1) stops at the first row
         return bool(_solutions(triples, g, cols, False,
                                meta_vars)[0].limit(1).take(1))
-    if q.form == "describe" and q.describe_var is None:
-        return describe_nodes(
-            triples, local_frame(triples.sparkSession,
-                                 [(n,) for n in q.describe_nodes],
-                                 "node string"),
-            s_col=s_col, p_col=p_col, o_col=o_col)
-    _refuse_constant(g)
     if q.form == "construct":
+        _refuse_constant(g)
         # Blank-node labels in the template (SPARQL §16.2) are minted
         # as a fresh deterministic node per solution; template labels
         # are scoped to the template (§19.6), so one that also appears
@@ -1831,13 +1863,18 @@ def _sparql_dispatch(triples: DataFrame, query: str,
         sol, _ = _solutions(triples, g, cols, distinct_solutions,
                             meta_vars)
         return _template_rows(sol, q.template, mint)
-    sol, _ = _solutions(triples, g, cols, distinct_solutions, meta_vars)
-    if q.describe_var not in sol.columns:
-        raise SparqlSyntaxError(
-            f"DESCRIBE ?{q.describe_var}: variable is not "
-            "bound by the WHERE clause")
-    return describe_nodes(
-        triples, sol.select(q.describe_var).where(
-            F.col(q.describe_var).isNotNull()),
-        node_col=q.describe_var,
-        s_col=s_col, p_col=p_col, o_col=o_col)
+    # DESCRIBE: its IRIs, or the nodes the solutions bind to ?var
+    nodes = q.describe_nodes
+    if q.describe_var is not None:
+        _refuse_constant(g)
+        sol, _ = _solutions(triples, g, cols, distinct_solutions,
+                            meta_vars)
+        if q.describe_var not in sol.columns:
+            raise SparqlSyntaxError(
+                f"DESCRIBE ?{q.describe_var}: variable is not "
+                "bound by the WHERE clause")
+        nodes = sol.select(q.describe_var).where(
+            F.col(q.describe_var).isNotNull())
+    return describe_nodes(triples, nodes,
+                          node_col=q.describe_var or "node",
+                          s_col=s_col, p_col=p_col, o_col=o_col)

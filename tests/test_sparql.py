@@ -1657,20 +1657,25 @@ def test_construct_over_union_refuses_unbindable_template(triples,
             WHERE { { ?a ex:cites ?o } UNION { ?d ex:author ?r } }""")
 
 
-def test_describe_iri_equals_kg_describe_on_self_loop(spark):
-    """DESCRIBE <n> runs describe_nodes over a one-node frame: the same
-    rows and roles as kg.describe, a self-loop once, as subject."""
+@pytest.mark.parametrize("nodes", [["n"], ["n", "m"]], ids=["one", "two"])
+def test_describe_iri_equals_kg_describe_on_self_loop(spark, nodes):
+    """DESCRIBE <n> ... filters one scan, with no join, and gives the
+    rows and roles of kg.describe per node: a self-loop once, as
+    subject, and a triple relating two described nodes once per role."""
+    from functools import reduce
     from jsonld_spark.operators.kg import describe
     t = spark.createDataFrame(
         [("n", EX + "p", "n"), ("n", EX + "p", "m"), ("m", EX + "q", "n"),
-         ("m", EX + "q", "m")],
+         ("m", EX + "q", "m"), ("k", EX + "q", "k")],
         "subj string, pred string, obj_value string")
-    got = sparql_query(t, "DESCRIBE <n>")
-    want = describe(t, "n")
+    got = sparql_query(t, "DESCRIBE " + " ".join(f"<{n}>" for n in nodes))
+    want = reduce(lambda a, b: a.unionByName(b),
+                  [describe(t, n) for n in nodes])
     assert got.columns == want.columns
-    assert _rows(got) == _rows(want) == [
-        ("m", EX + "q", "n", "object"), ("n", EX + "p", "m", "subject"),
-        ("n", EX + "p", "n", "subject")]
+    assert _rows(got) == _rows(want)
+    assert ("m", EX + "q", "n", "object") in _rows(got)
+    assert "Join" not in \
+        got._jdf.queryExecution().optimizedPlan().toString()
 
 
 @pytest.mark.parametrize("where, want", [
@@ -1680,6 +1685,29 @@ def test_describe_iri_equals_kg_describe_on_self_loop(spark):
 ], ids=["both", "second_fails", "first_fails"])
 def test_ask_constant_conjunction(triples, where, want):
     assert sparql_query(triples, PFX + f"ASK {{ {where} }}") is want
+
+
+@pytest.mark.parametrize("where", [
+    "<d1> ex:author 'alice'",
+    "{ <d1> ex:author 'alice' } UNION { ?d ex:lang ?l }",
+    "?d ex:lang ?l OPTIONAL { { <d1> ex:author 'alice' } "
+    "UNION { ?d ex:cites ?o } }",
+    "?d ex:lang ?l { SELECT * WHERE { { <d1> ex:author 'alice' } "
+    "UNION { ?d ex:cites ?o } } }",
+], ids=["group", "union_branch", "union_in_optional",
+        "union_in_subquery"])
+def test_all_constant_group_refused(triples, where):
+    """A query group, or a UNION branch in it, in an OPTIONAL body or in
+    a subquery, whose patterns are all constant binds nothing: every
+    form that returns solutions refuses it, and ASK refuses the UNION
+    branch too."""
+    with pytest.raises(ValueError, match="all patterns are constant"):
+        sparql_query(triples, PFX + f"SELECT * WHERE {{ {where} }}")
+    if "UNION" in where:
+        with pytest.raises(ValueError, match="all patterns are constant"):
+            sparql_query(triples, PFX + f"ASK {{ {where} }}")
+    else:
+        assert sparql_query(triples, PFX + f"ASK {{ {where} }}") is True
 
 
 # ---------------------------------------------------------------------------
