@@ -10,9 +10,9 @@ nodes (the reason you run degree stats at all) are exactly the keys
 that overload a single reducer. Counts therefore go through the same
 sampled-heavy-hitter + salted two-phase scheme as
 ``materialize.subject_stats`` — AQE splits skewed joins but not
-``groupBy``, so this is explicit. Salts are deterministic hashes of
-the non-key columns (never task ids or randomness), matching
-``materialize.salt_by_subject``.
+``groupBy``, so this is explicit. Both count through
+``materialize.salt_by_subject``: salts are deterministic hashes of the
+non-key columns, never task ids or randomness.
 """
 
 from __future__ import annotations
@@ -21,22 +21,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import reuse
-from .materialize import detect_heavy_subjects
+from .materialize import detect_heavy_subjects, salt_by_subject
 
 
 def _skew_safe_counts(keyed: DataFrame, out_name: str, heavy_threshold: int,
                       sample_fraction: float, n_salts: int) -> DataFrame:
-    """(subj, _salt_src) rows → (node, out_name=count per subj); heavy
-    keys (sampled sketch) spread over ``n_salts`` partial groups via
-    ``_salt_src``, a deterministic hash of the row's OTHER columns."""
+    """(subj, pred, obj_value) rows → (node, out_name=count per subj);
+    heavy keys (sampled sketch) spread over ``n_salts`` partial groups
+    by ``materialize.salt_by_subject``."""
     heavy = detect_heavy_subjects(keyed, heavy_threshold, sample_fraction)
-    tagged = keyed.join(
-        F.broadcast(heavy.select("subj", F.lit(True).alias("_heavy"))),
-        "subj", "left")
-    salt = (F.when(F.col("_heavy").isNotNull(),
-                   F.pmod(F.col("_salt_src"), F.lit(n_salts)))
-            .otherwise(F.lit(0))).cast("int")
-    partial = (tagged.withColumn("salt", salt)
+    partial = (salt_by_subject(keyed, heavy, n_salts)
                .groupBy("subj", "salt").agg(F.count(F.lit(1)).alias("_n")))
     return (partial.groupBy("subj")
             .agg(F.sum("_n").cast("long").alias(out_name))
@@ -51,14 +45,14 @@ def node_degrees(triples: DataFrame, heavy_threshold: int = 1_000_000,
     they never count toward degree."""
     # read by the out- and in-degree branches, each sampled and counted
     triples = reuse(triples)
-    outs = _skew_safe_counts(
-        triples.select("subj", F.xxhash64("pred", "obj_value")
-                       .alias("_salt_src")),
-        "out_degree", heavy_threshold, sample_fraction, n_salts)
+    outs = _skew_safe_counts(triples.select("subj", "pred", "obj_value"),
+                             "out_degree", heavy_threshold, sample_fraction,
+                             n_salts)
+    # the in-degree side keys on the object: salted by (pred, subj)
     ins = _skew_safe_counts(
         triples.where(F.col("obj_kind").isin("iri", "bnode"))
-        .select(F.col("obj_value").alias("subj"),
-                F.xxhash64("subj", "pred").alias("_salt_src")),
+        .select(F.col("obj_value").alias("subj"), "pred",
+                F.col("subj").alias("obj_value")),
         "in_degree", heavy_threshold, sample_fraction, n_salts)
     return (outs.join(ins, "node", "full_outer")
             .select("node",

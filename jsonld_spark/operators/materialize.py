@@ -3,23 +3,28 @@ lineage manifests, metrics, and checkpoint-resume.
 
 north_rule requirements covered here (SURVEY.md §4 items 1 & 4):
 
-* **Salted repartition-by-subject with explicit skew splitting** — hub
-  subjects (a popular IRI with 10^8 triples) would overload a single
-  reducer in any ``groupBy(subj)``. We detect heavy hitters from a
-  sample sketch, append a salt derived from (pred, obj) for those
-  subjects only, and aggregate in two phases (partial per salt, final
-  per subject). AQE splits skewed *joins* but not ``groupBy``/
-  ``applyInPandas`` grouping, so this is explicit.
 * **Per-partition lineage manifests + checkpoint-resume** — triples are
-  hash-bucketed by subject into ``part=N`` directories; after each
-  partition's data is durably written, a manifest row
-  (part, n_rows, fingerprint, run_id, wall_s) is appended. A partition
-  with data but no manifest row is considered incomplete. Resume
-  anti-joins the input's partition set against completed manifests and
-  rewrites only the missing buckets (dynamic partition overwrite), so a
-  killed job redoes only unfinished work. Manifest rows are built on the
-  driver as a local Arrow relation (``session.local_frame``), so a
-  commit's append is one JVM-only write job with no Python worker.
+  hash-bucketed by subject (plain ``xxhash64(subj)``) into ``part=N``
+  directories; after each partition's data is durably written, a
+  manifest row (part, n_rows, fingerprint, run_id, wall_s) is appended.
+  A partition with data but no manifest row is considered incomplete.
+  Resume anti-joins the input's partition set against completed
+  manifests and rewrites only the missing buckets (dynamic partition
+  overwrite), so a killed job redoes only unfinished work. A build and
+  an upsert commit through one protocol, ``_commit``. Manifest rows are
+  built on the driver as a local Arrow relation
+  (``session.local_frame``), so a commit's append is one JVM-only write
+  job with no Python worker.
+* **Salted two-phase aggregation by subject** — hub subjects (a popular
+  IRI with 10^8 triples) would overload a single reducer in any
+  ``groupBy(subj)``. ``detect_heavy_subjects`` finds heavy hitters from
+  a sample sketch and ``salt_by_subject`` appends a salt derived from
+  (pred, obj) for those subjects only, so ``subject_stats`` and
+  ``graphstats.node_degrees`` aggregate in two phases (partial per
+  salt, final per subject). AQE splits skewed *joins* but not
+  ``groupBy``/``applyInPandas`` grouping, so this is explicit. The
+  bucketing above is not salted: a bucket must hold every triple of
+  its subjects.
 
 The fingerprint is an order-independent aggregate (sum of per-row
 xxhash64 in DECIMAL(38,0) — no overflow below 10^19 rows), so it is
@@ -186,14 +191,83 @@ def _is_missing_table(exc: AnalysisException) -> bool:
             or "UNABLE_TO_INFER_SCHEMA" in msg)
 
 
-def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame:
+def _read(spark: SparkSession, path: str,
+          schema: T.StructType | str) -> DataFrame | None:
+    """The parquet table at ``path`` under a fixed schema (no footer
+    inference job), or None when nothing is materialized there yet.
+    ONLY the missing-table analysis conditions mean None — a transient
+    read failure must propagate, else an upsert's ``keep`` set would be
+    empty and the overwrite would silently delete every unchanged
+    document's rows in the affected buckets."""
     try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(
-            _manifest_path(out_dir))
-    except AnalysisException as e:  # first run: no manifest table yet.
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
         if not _is_missing_table(e):
             raise
-        return local_frame(spark, [], MANIFEST_SCHEMA)
+        return None
+
+
+def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame:
+    man = _read(spark, _manifest_path(out_dir), MANIFEST_SCHEMA)
+    # first run: no manifest table yet
+    return local_frame(spark, [], MANIFEST_SCHEMA) if man is None else man
+
+
+def _commit(spark: SparkSession, out_dir: str, parts: DataFrame,
+            t0: float, run_id: str, n_buckets: int, input_id: str | None,
+            affected=()) -> tuple[list, list[int]]:
+    """Commit ``parts`` (triples plus their ``part`` column) to the graph
+    at ``out_dir``: overwrite the buckets it holds rows for, and empty
+    the ``affected`` buckets it holds none for. The caller makes
+    ``parts`` stable, because it is read by the fingerprint pass and
+    both writes. Returns (per-bucket fingerprint rows, emptied parts).
+
+    Crash order: data, then doc index, then manifests, then deletes.
+    Data and index partitions are written by dynamic partition
+    overwrite, atomic per directory. Manifests are the source of truth:
+    a crash before their append leaves data with no (or a stale)
+    manifest row, which a build's resume redoes and a replayed upsert
+    rewrites to the same content — if the replay reaches the bucket
+    through its new rows or the doc index. A bucket that only lost a
+    document it shares with others is reached by neither once its
+    index partition is rewritten, and stays ``mismatch`` (an open
+    gap, ROADMAP direction 2). Manifest rows go BEFORE the
+    empty-bucket deletes: crashing between the two leaves a 0-row
+    manifest over a stale directory, which ``verify_manifests`` reports
+    as ``mismatch`` and replaying the same upsert repairs (the stale
+    doc-index partition still routes the bucket into ``affected``).
+    Deleting first could strand a stale non-zero manifest row with no
+    data AND no index partition, which a replay can never repair."""
+    stats = _fingerprints(parts).collect()
+    written = {int(r["part"]) for r in stats}
+    emptied = [p for p in affected if p not in written]
+    if not stats and not emptied:
+        return stats, emptied
+    if stats:
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
+                              "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            (parts.write.mode("overwrite").partitionBy("part")
+             .parquet(_data_path(out_dir)))
+            # doc→bucket index: lets upsert_documents find the buckets a
+            # changed doc touches WITHOUT scanning the triple table
+            (parts.select("part", "doc_id").distinct()
+             .write.mode("overwrite").partitionBy("part")
+             .parquet(_index_path(out_dir)))
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # each written or emptied bucket's share of the commit's wall time
+    share = (time.time() - t0) / (len(stats) + len(emptied))
+    stamp = (run_id, round(share, 6), time.time(), n_buckets, input_id)
+    rows = [(int(r["part"]), int(r["n_rows"]), str(r["fingerprint"])) + stamp
+            for r in stats] + [(p, 0, "0") + stamp for p in emptied]
+    (local_frame(spark, rows, MANIFEST_SCHEMA)
+     .coalesce(1).write.mode("append").parquet(_manifest_path(out_dir)))
+    for p in emptied:  # dynamic overwrite can't write an empty bucket
+        _delete_path(spark, f"{_data_path(out_dir)}/part={p}")
+        _delete_path(spark, f"{_index_path(out_dir)}/part={p}")
+    return stats, emptied
 
 
 def materialize_graph(triples: DataFrame, out_dir: str,
@@ -202,12 +276,9 @@ def materialize_graph(triples: DataFrame, out_dir: str,
                       input_id: str | None = None) -> dict:
     """Write the triple table partitioned by subject bucket with a
     lineage manifest per partition; on re-run, redo only partitions
-    without a committed manifest row (checkpoint-resume).
-
-    Commit protocol per partition: data first (dynamic partition
-    overwrite — atomic per directory), manifest row appended after.
-    Crash between the two ⇒ data present but unmanifested ⇒ redone on
-    resume; manifests are the source of truth.
+    without a committed manifest row (checkpoint-resume). The commit
+    protocol (data before manifests; manifests are the source of
+    truth) is ``_commit``'s.
 
     ``input_id`` names the input (e.g. a source-table snapshot id or a
     content fingerprint); it is recorded in the manifests. Resuming is
@@ -273,35 +344,13 @@ def materialize_graph(triples: DataFrame, out_dir: str,
     # one pass computes both the data write and the lineage rows
     pending = pending.persist()
     try:
-        stats = _fingerprints(pending).collect()
-        if not stats:
-            return {"pending": 0, "skipped": n_done, "rows": 0, "wall_s": 0.0}
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (pending.write.mode("overwrite").partitionBy("part")
-             .parquet(_data_path(out_dir)))
-            # doc→bucket index: lets upsert_documents find the buckets a
-            # changed doc touches WITHOUT scanning the triple table
-            (pending.select("part", "doc_id").distinct()
-             .write.mode("overwrite").partitionBy("part")
-             .parquet(_index_path(out_dir)))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        wall = time.time() - t0
-        manifest_rows = [(int(r["part"]), int(r["n_rows"]),
-                          str(r["fingerprint"]), run_id,
-                          round(wall / len(stats), 6), time.time(),
-                          n_buckets, input_id)
-                         for r in stats]
-        (local_frame(spark, manifest_rows, MANIFEST_SCHEMA)
-         .coalesce(1).write.mode("append").parquet(_manifest_path(out_dir)))
-        n_rows = sum(r["n_rows"] for r in stats)
+        stats, _ = _commit(spark, out_dir, pending, t0, run_id, n_buckets,
+                           input_id)
     finally:
         pending.unpersist()
-    return {"pending": len(stats), "skipped": n_done, "rows": int(n_rows),
-            "wall_s": round(wall, 3)}
+    return {"pending": len(stats), "skipped": n_done,
+            "rows": sum(int(r["n_rows"]) for r in stats),
+            "wall_s": round(time.time() - t0, 3) if stats else 0.0}
 
 
 _GRAPH_SCHEMA = T.StructType(
@@ -310,30 +359,20 @@ _GRAPH_SCHEMA = T.StructType(
 
 
 def read_graph(spark: SparkSession, out_dir: str) -> DataFrame:
-    try:
-        return spark.read.schema(_GRAPH_SCHEMA).parquet(_data_path(out_dir))
-    except AnalysisException as e:
-        # every bucket deleted (or nothing materialized yet): an empty
-        # typed table. ONLY the missing-table analysis conditions — a
-        # transient read failure must propagate, else upsert's `keep`
-        # set would be empty and the overwrite would silently delete
-        # every unchanged document's rows in the affected buckets
-        if not _is_missing_table(e):
-            raise
-        return local_frame(spark, [], _GRAPH_SCHEMA)
+    g = _read(spark, _data_path(out_dir), _GRAPH_SCHEMA)
+    # every bucket deleted (or nothing materialized yet): an empty
+    # typed table
+    return local_frame(spark, [], _GRAPH_SCHEMA) if g is None else g
 
 
 def read_doc_index(spark: SparkSession, out_dir: str) -> DataFrame:
     """(part, doc_id) — which buckets hold triples of which document.
     Graphs materialized before the index existed fall back to deriving
     it from the triple table (one narrow two-column scan)."""
-    try:
-        return spark.read.schema("doc_id string, part int") \
-            .parquet(_index_path(out_dir)).select("part", "doc_id")
-    except AnalysisException as e:
-        if not _is_missing_table(e):
-            raise
+    idx = _read(spark, _index_path(out_dir), "doc_id string, part int")
+    if idx is None:
         return read_graph(spark, out_dir).select("part", "doc_id").distinct()
+    return idx.select("part", "doc_id")
 
 
 def upsert_documents(new_triples: DataFrame, out_dir: str,
@@ -352,10 +391,9 @@ def upsert_documents(new_triples: DataFrame, out_dir: str,
     committed (``verify_manifests`` reads manifest-says-empty + no data
     dir as ok).
 
-    Commit protocol mirrors ``materialize_graph``: data (dynamic
-    partition overwrite, atomic per directory) before manifests.
-    Re-running the same upsert after a crash is idempotent — affected
-    buckets are simply rewritten to the same content.
+    Commit protocol: ``_commit``. Re-running the same upsert after a
+    crash is idempotent — affected buckets are simply rewritten to the
+    same content.
     """
     spark = new_triples.sparkSession
     from ..session import cut_lineage, observed_cut
@@ -393,50 +431,16 @@ def upsert_documents(new_triples: DataFrame, out_dir: str,
             .where(F.col("part").isin(affected))
             .join(changed, "doc_id", "left_anti")
             .select(*TRIPLE_COLS, "part"))
-    replacement = keep.unionByName(new_parted)
     # correctness: materialize BEFORE the overwrite, so the plan stops
     # reading the files it is about to replace (the checkpoint blocks
     # also serve the fingerprint pass and both writes)
-    replacement = cut_lineage(replacement)
-    stats = _fingerprints(replacement).collect()
-    written_parts = {int(r["part"]) for r in stats}
-    emptied = [p for p in affected if p not in written_parts]
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if written_parts:
-            (replacement.write.mode("overwrite").partitionBy("part")
-             .parquet(_data_path(out_dir)))
-            (replacement.select("part", "doc_id").distinct()
-             .write.mode("overwrite").partitionBy("part")
-             .parquet(_index_path(out_dir)))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # manifest rows BEFORE the empty-bucket deletes: crashing between
-    # the two leaves a 0-row manifest + a stale dir — detected as
-    # `mismatch` and repaired by replaying the same upsert (the doc
-    # index still routes the bucket into `affected`). The old order
-    # (delete first) could strand a stale non-zero manifest row with no
-    # data AND no index partition, which a replay can never repair.
-    wall = time.time() - t0
-    now = time.time()
-    manifest_rows = [(int(r["part"]), int(r["n_rows"]),
-                      str(r["fingerprint"]), run_id,
-                      round(wall / len(affected), 6), now,
-                      n_buckets, input_id)
-                     for r in stats]
-    manifest_rows += [(p, 0, "0", run_id, round(wall / len(affected), 6),
-                       now, n_buckets, input_id) for p in emptied]
-    (local_frame(spark, manifest_rows, MANIFEST_SCHEMA)
-     .coalesce(1).write.mode("append").parquet(_manifest_path(out_dir)))
-    for p in emptied:  # dynamic overwrite can't write an empty bucket
-        _delete_path(spark, f"{_data_path(out_dir)}/part={p}")
-        _delete_path(spark, f"{_index_path(out_dir)}/part={p}")
-    n_rows = sum(int(r["n_rows"]) for r in stats)
+    replacement = cut_lineage(keep.unionByName(new_parted))
+    stats, emptied = _commit(spark, out_dir, replacement, t0, run_id,
+                             n_buckets, input_id, affected)
     return {"affected": len(affected), "docs_changed": int(n_changed),
-            "rows": int(n_rows), "deleted_buckets": len(emptied),
-            "wall_s": round(wall, 3)}
+            "rows": sum(int(r["n_rows"]) for r in stats),
+            "deleted_buckets": len(emptied),
+            "wall_s": round(time.time() - t0, 3)}
 
 
 def verify_manifests(spark: SparkSession, out_dir: str) -> DataFrame:

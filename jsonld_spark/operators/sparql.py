@@ -133,10 +133,12 @@ are not supported. ASK probes the group's solutions under
 ``limit(1)``; an all-constant pattern is an existence gate there, so
 ASK answers an all-constant group, which the other forms refuse (they
 need a variable). Expression
-translation casts a variable compared against a numeric literal to
-``double``, and ``xsd:integer(?v)``-style constructors cast
-explicitly (SPARQL compares typed values; the triples frame stores
-lexical forms — a bare var-to-var comparison is lexicographic).
+translation casts a variable compared against a numeric literal or a
+COUNT/SUM/AVG result to ``double``, and ``xsd:integer(?v)``-style
+constructors cast explicitly (SPARQL compares typed values; the
+triples frame stores lexical forms — a bare var-to-var comparison is
+lexicographic). A number compared with a string literal is a type
+error: the solution drops.
 GROUP BY and projected DISTINCT likewise group/dedup on the LEXICAL
 value: with ``meta_vars`` the solution set keeps literals differing
 only in language/datatype as distinct TERMS, but a subsequent
@@ -144,7 +146,9 @@ only in language/datatype as distinct TERMS, but a subsequent
 ``(LANG(?o) AS ?l)`` and group by both to group by term).
 Plain SELECT defaults to set semantics (the engine-wide documented
 deviation; pass ``distinct_solutions=False`` for bag semantics on
-pre-deduplicated warehouse tables).
+pre-deduplicated warehouse tables). An explicit DISTINCT deduplicates
+under bag semantics too, and it is the only modifier that deduplicates
+a grouped SELECT's projected rows.
 
 Reference for the algebra mapping: SPARQL 1.1 Query, §18 (algebra),
 §8 (negation), §10.2 (VALUES). Reference parity anchor: the triples
@@ -286,7 +290,7 @@ class _Query:
     where: Group | None = None
     select: list[tuple[str | None, str]] | None = None  # (sql_expr|None=var, name)
     select_star: bool = False
-    distinct: bool = True
+    distinct: bool | None = None    # DISTINCT | REDUCED | neither
     group_by: list[str] = field(default_factory=list)
     having: list[str] = field(default_factory=list)
     having_aggs: list[tuple] = field(default_factory=list)  # (alias, spec)
@@ -296,7 +300,7 @@ class _Query:
     template: list[tuple] | None = None
     describe_nodes: list[str] | None = None
     describe_var: str | None = None
-    post_values: list[dict] = field(default_factory=list)
+    post_values: list[dict] | None = None   # [] is an empty table
     # dataset clauses: FROM <g> (default-graph merge) / FROM NAMED <g>
     from_graphs: list[str] = field(default_factory=list)
     from_named: list[str] = field(default_factory=list)
@@ -351,6 +355,7 @@ _GROUP_CONTEXTS = {
 
 _AGG_FUNCS = {"count", "sum", "avg", "min", "max", "sample",
               "group_concat"}
+_NUMERIC_AGGS = ("count", "sum", "avg")
 
 
 class _Parser(_PathGrammar):
@@ -366,6 +371,9 @@ class _Parser(_PathGrammar):
         # inside a HAVING constraint, aggregate calls are legal: they
         # compile to hidden aggregate columns on the current query
         self._having_q = None
+        # SELECT aliases of COUNT/SUM/AVG results: numeric operands in
+        # the query's HAVING, ORDER BY and later SELECT expressions
+        self._agg_aliases: set[str] = set()
         # variables whose term metadata (kind/lang/datatype columns)
         # the compiled expressions reference — LANG(?x) etc.; the
         # evaluator's metadata requests at compile time
@@ -885,6 +893,10 @@ class _Parser(_PathGrammar):
         return s
 
     _REL_OPS = {"=", "!=", "<", ">", "<=", ">="}
+    # (kind cast to double, kind of the other operand): "num" is a
+    # numeric literal or an inline aggregate, "agg" a variable that
+    # aliases a COUNT/SUM/AVG result
+    _CAST_LEFT = {("var", "num"), ("agg", "num"), ("var", "agg")}
 
     def _expr_rel(self) -> str:
         left, lkind = self._expr_add()
@@ -892,15 +904,26 @@ class _Parser(_PathGrammar):
         if t.kind == "OP" and t.value in self._REL_OPS:
             op = self._next().value
             right, rkind = self._expr_add()
+            kinds = {lkind, rkind}
             # SPARQL compares typed values; the frame stores lexical
-            # strings — cast the var side when the other side is
-            # numeric. try_cast, not cast: the session runs ANSI
-            # mode, where a malformed lexical value would THROW and
-            # fail the whole (retried) task; SPARQL calls it a type
-            # error and drops the solution (NULL comparison → false)
-            if lkind == "var" and rkind == "num":
+            # strings. A numeric operand (a literal, a COUNT/SUM/AVG
+            # result or its alias) against a string literal or an IRI
+            # has no typed comparison: a type error, so NULL drops the
+            # solution where Spark's implicit cast of the string would
+            # fail the job — except that RDFterm-equal calls an IRI
+            # unequal to any literal (§17.4.1.7)
+            if kinds & {"num", "agg"} and kinds & {"str", "iri"}:
+                if "iri" in kinds and op in ("=", "!="):
+                    return "false" if op == "=" else "true"
+                return "CAST(NULL AS BOOLEAN)"
+            # against a number, cast the variable side. try_cast, not
+            # cast: the session runs ANSI mode, where a malformed
+            # lexical value would THROW and fail the whole (retried)
+            # task; SPARQL calls it a type error and drops the
+            # solution (NULL comparison → false)
+            if (lkind, rkind) in self._CAST_LEFT:
                 left = f"try_cast({left} as double)"
-            elif rkind == "var" and lkind == "num":
+            elif (rkind, lkind) in self._CAST_LEFT:
                 right = f"try_cast({right} as double)"
             return f"({left} {op} {right})"
         if self._at_kw("in") or (self._at_kw("not")
@@ -1058,16 +1081,19 @@ class _Parser(_PathGrammar):
     def _expr_primary(self) -> tuple[str, str]:
         t = self._next()
         if t.kind == "VAR":
-            return f"`{t.value[1:]}`", "var"
+            v = t.value[1:]
+            return f"`{v}`", "agg" if v in self._agg_aliases else "var"
         if t.kind == "NUMBER":
             return t.value, "num"
         if t.kind == "STRING":
             lit = _unquote(t.value).replace("\\", "\\\\").replace("'", "\\'")
-            if self._peek().kind == "LANGTAG":
-                self._next()
-            elif self._peek().kind == "OP" and self._peek().value == "^^":
+            if self._peek().kind == "OP" and self._peek().value == "^^":
+                # a typed literal may be numeric: no string kind
                 self._next()
                 self._iri(self._next())
+                return f"'{lit}'", "expr"
+            if self._peek().kind == "LANGTAG":
+                self._next()
             return f"'{lit}'", "str"
         if t.kind in ("IRIREF", "PNAME"):
             iri = self._iri(t)
@@ -1085,7 +1111,7 @@ class _Parser(_PathGrammar):
                 # error (solution drops) — under ANSI a plain cast
                 # would throw and fail the task
                 return f"try_cast({arg} as {sqlt})", "expr"
-            return "'" + iri.replace("'", "\\'") + "'", "str"
+            return "'" + iri.replace("'", "\\'") + "'", "iri"
         if t.kind == "KW" and t.value in ("true", "false"):
             return t.value, "expr"
         if t.kind == "OP" and t.value == "(":
@@ -1100,12 +1126,13 @@ class _Parser(_PathGrammar):
             # hidden aggregate column (dropped after the filter)
             spec = self._agg_spec_after_name(t.value.lower())
             hq = self._having_q
+            kind = "num" if spec[0] in _NUMERIC_AGGS else "expr"
             for alias, sp in hq.having_aggs:
                 if sp == spec:
-                    return f"`{alias}`", "expr"
+                    return f"`{alias}`", kind
             alias = f"_h_agg_{len(hq.having_aggs)}"
             hq.having_aggs.append((alias, spec))
-            return f"`{alias}`", "expr"
+            return f"`{alias}`", kind
         if t.kind == "NAME" or (t.kind == "KW" and t.value == "bound"):
             return self._builtin_call(t)
         raise SparqlSyntaxError(
@@ -1390,6 +1417,7 @@ class _Parser(_PathGrammar):
 
     def _parse_select(self, sub: bool = False) -> _Query:
         q = _Query(form="select")
+        outer_aliases, self._agg_aliases = self._agg_aliases, set()
         if self._eat_kw("distinct"):
             q.distinct = True
         elif self._eat_kw("reduced"):
@@ -1402,7 +1430,10 @@ class _Parser(_PathGrammar):
             while self._peek().kind == "VAR" or (
                     self._peek().kind == "OP"
                     and self._peek().value == "("):
-                items.append(self._select_item())
+                item = self._select_item()
+                items.append(item)
+                if item[0] == "agg" and item[1][0] in _NUMERIC_AGGS:
+                    self._agg_aliases.add(item[2])
             if not items:
                 raise SparqlSyntaxError("empty SELECT list")
             q.select = items
@@ -1413,6 +1444,8 @@ class _Parser(_PathGrammar):
                     "(SPARQL SubSelect has no dataset clause)")
             self._dataset_clause(q)
         self._eat_kw("where")
+        # the aliases bind after grouping, not in the WHERE group
+        aliases, self._agg_aliases = self._agg_aliases, set()
         q.where = self._group()
         if self._eat_kw("group"):
             self._expect("KW", "by")
@@ -1456,6 +1489,7 @@ class _Parser(_PathGrammar):
                     break
             if not q.group_by:
                 raise SparqlSyntaxError("empty GROUP BY")
+        self._agg_aliases = aliases
         if self._eat_kw("having"):
             self._having_q = q
             q.having.append(self._expression())
@@ -1501,6 +1535,7 @@ class _Parser(_PathGrammar):
             # trailing ValuesClause (SPARQL grammar rule [28]):
             # joined to the FINAL results, after solution modifiers
             q.post_values = self._values_clause()
+        self._agg_aliases = outer_aliases
         return q
 
     def _nonneg_int(self, what: str) -> int:
@@ -1733,11 +1768,12 @@ def _compile_select(triples: DataFrame, q: _Query, cols: dict,
                          if c not in q.group_by or c in reads])
     for h in q.having:
         df = df.where(F.expr(h))
-    if q.post_values:
-        # the trailing ValuesClause; an UNDEF cell leaves a new
-        # variable unbound
+    if q.post_values is not None:
+        # the trailing ValuesClause: an empty table admits no solution,
+        # an UNDEF cell leaves a new variable unbound
         before = set(df.columns)
-        df = _values_join(df, q.post_values, nullable)
+        df = (_values_join(df, q.post_values, nullable) if q.post_values
+              else df.where(F.lit(False)))
         nullable |= {v for row in q.post_values for v, val in row.items()
                      if val is None and v not in before}
     if q.select_star:
@@ -1755,9 +1791,13 @@ def _compile_select(triples: DataFrame, q: _Query, cols: dict,
         # conservative: an expression may evaluate to null even over
         # bound inputs
         nullable |= {item[2] for item in items if item[0] == "expr"}
-        dedup = q.distinct and not grouped
+        dedup = q.distinct is not False
     df = df.select(*proj)
-    if dedup and distinct_solutions:
+    # set-semantics solutions collapse only under a projection that
+    # drops variables; grouped rows are distinct per key and bag
+    # semantics keep duplicates, so there only an explicit DISTINCT
+    # deduplicates, after Project (§18.2.5)
+    if q.distinct if grouped or not distinct_solutions else dedup:
         df = df.distinct()
     if q.order_by:
         df = df.orderBy(*[F.expr(e).desc() if d else F.expr(e).asc()

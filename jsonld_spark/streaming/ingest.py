@@ -5,14 +5,15 @@ streaming anywhere in jsonld-java), so these operators have no parity
 fixture; semantics are defined by our tests: a stream run over the same
 files must equal the batch pipeline's output.
 
-Design: the SAME transformation functions as the batch path
-(``assemble_documents`` → ``extract_quads`` with fused media
-emission) applied to
-a ``readStream`` source — Structured Streaming's incremental planner
-handles the rest. Exactly-once lands on the file sink's commit log plus
-the checkpoint directory: restarting a killed stream resumes from the
-last committed micro-batch, the streaming analogue of the batch layer's
-per-partition lineage manifests (operators/materialize.py).
+Design: the batch stage itself (``docs_to_triples``: span assembly,
+then ``extract_quads`` with fused media emission) applied to a
+``readStream`` source — Structured Streaming's incremental planner
+handles the rest; a graph-upsert micro-batch is a bounded batch and
+runs the whole stage, dedup included. Exactly-once lands on the file
+sink's commit log plus the checkpoint directory: restarting a killed
+stream resumes from the last committed micro-batch, the streaming
+analogue of the batch layer's per-partition lineage manifests
+(operators/materialize.py).
 
 Global ``dropDuplicates`` is deliberately NOT applied in-stream (the
 reference's quad dedup is a whole-dataset property; unbounded state in
@@ -27,8 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.pipeline import QUAD_COLS, extract_quads
-from ..sources.interleaved import assemble_documents
+from ..operators.pipeline import QUAD_COLS, docs_to_triples
 
 # file streams need an explicit schema (no inference at stream start)
 INTERLEAVED_SCHEMA = T.StructType([
@@ -54,20 +54,13 @@ def stream_interleaved(spark: SparkSession, input_dir: str,
     return reader.parquet(input_dir)
 
 
-def stream_triples(interleaved: DataFrame,
-                   include_media: bool = True) -> DataFrame:
-    """Streaming variant of ``docs_to_triples`` (same stage functions,
-    no global dedup — see module docstring)."""
-    assembled = assemble_documents(interleaved)
-    quads = extract_quads(assembled, include_media=include_media)
-    return quads.where(F.col("error").isNull()).drop("error")
-
-
 def start_triple_ingest(spark: SparkSession, input_dir: str, out_dir: str,
                         checkpoint_dir: str, available_now: bool = True):
     """Start (or resume, if the checkpoint exists) the ingest stream:
     parquet-in → triples → parquet-out with exactly-once file commits."""
-    triples = stream_triples(stream_interleaved(spark, input_dir))
+    # the batch stage without its global dedup (module docstring)
+    triples = docs_to_triples(stream_interleaved(spark, input_dir),
+                              dedupe=False)
     writer = (triples.select(*QUAD_COLS).writeStream
               .format("parquet")
               .option("path", out_dir)
@@ -96,11 +89,8 @@ def start_graph_upsert_stream(spark: SparkSession, input_dir: str,
     from ..operators.materialize import upsert_documents
 
     def _upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        triples = (extract_quads(assemble_documents(batch_df),
-                                 include_media=True)
-                   .where(F.col("error").isNull()).drop("error")
-                   .dropDuplicates())
-        upsert_documents(triples, out_dir, run_id=f"stream-{batch_id}")
+        upsert_documents(docs_to_triples(batch_df), out_dir,
+                         run_id=f"stream-{batch_id}")
 
     writer = (stream_interleaved(spark, input_dir).writeStream
               .foreachBatch(_upsert_batch)

@@ -269,6 +269,61 @@ def test_upsert_leaves_unaffected_bucket_files_untouched(spark, tmp_path):
     assert snapshot(untouched) == before
 
 
+@pytest.mark.parametrize("crash_at", ["local_frame", "_delete_path"],
+                         ids=["before_manifests", "before_deletes"])
+def test_upsert_crash_point_replays_to_same_graph(spark, tmp_path,
+                                                  monkeypatch, crash_at):
+    """A crash inside the commit leaves one bucket the audit reports as
+    `mismatch`; replaying the same upsert repairs it and gives the rows
+    of an uninterrupted run. before_manifests: data and doc index are
+    written, the manifest append fails, so the changed document's
+    bucket holds new rows under its old manifest. before_deletes: the
+    manifests are appended, the empty-bucket delete fails, so the
+    emptied bucket's 0-row manifest sits over its stale data."""
+    from jsonld_spark.operators import materialize
+    base = _mk_triples(spark, [
+        _trip("d%d" % i, "http://s%d" % i, "v%d" % i) for i in range(8)])
+    parts = {r.doc_id: r.part for r in with_partition(base, 4).collect()}
+    emptied = parts["d0"]
+    changed = min(d for d, p in parts.items() if p != emptied)
+    new = _mk_triples(spark, [_trip(changed, "http://s" + changed[1:],
+                                    "new")])
+    gone = spark.createDataFrame(
+        [(d,) for d, p in parts.items() if p == emptied], "doc_id: string")
+
+    def upsert(out, run_id):
+        return materialize.upsert_documents(new, out, deleted_doc_ids=gone,
+                                            run_id=run_id)
+
+    ref, out = str(tmp_path / "ref"), str(tmp_path / "graph")
+    for d in (ref, out):
+        materialize_graph(base, d, n_buckets=4, run_id="r1")
+    upsert(ref, "u1")
+
+    real, calls = getattr(materialize, crash_at), []
+
+    def crash_once(*args, **kwargs):
+        if not calls:
+            calls.append(args)
+            raise RuntimeError("injected crash")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(materialize, crash_at, crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        upsert(out, "u1")
+    status = {r.part: r.status
+              for r in verify_manifests(spark, out).collect()}
+    stale = parts[changed] if crash_at == "local_frame" else emptied
+    assert status[stale] == "mismatch"
+
+    m = upsert(out, "u2")
+    assert m["deleted_buckets"] == 1
+    statuses = {r["status"] for r in verify_manifests(spark, out).collect()}
+    assert statuses == {"ok"}
+    assert _sorted_rows(read_graph(spark, out)) == \
+        _sorted_rows(read_graph(spark, ref))
+
+
 def test_is_missing_table_classification():
     """Advice fix: only the two missing-table analysis conditions are
     swallowed by the read paths; anything else must propagate."""

@@ -2008,6 +2008,94 @@ def test_having_with_direct_aggregates(triples):
     assert _rows(got) == [("alice", "d1")]
 
 
+def test_trailing_empty_values_has_no_solutions(triples):
+    # an empty table joins to nothing, as the same table inside the
+    # group does; no clause at all leaves the solutions alone
+    assert _parse(PFX + "SELECT ?d WHERE { ?d ex:author ?a }") \
+        .post_values is None
+    q = PFX + "SELECT ?d WHERE { ?d ex:author ?a } VALUES ?a { }"
+    assert _parse(q).post_values == []
+    assert _rows(sparql_query(triples, q)) == []
+    assert _rows(sparql_query(triples, PFX + """
+        SELECT ?a (COUNT(?d) AS ?n) WHERE { ?d ex:author ?a }
+        GROUP BY ?a VALUES ?a { }""")) == []
+
+
+def test_grouped_explicit_distinct_dedups_after_project(triples):
+    # one row per ?d, each counting 1: DISTINCT after Project (§18.2.5)
+    # collapses them; without DISTINCT both rows stay
+    body = " WHERE { ?d ex:author ?a } GROUP BY ?d"
+    got = sparql_query(triples, PFX + "SELECT DISTINCT (COUNT(*) AS ?n)"
+                       + body)
+    assert _rows(got) == [(1,)]
+    plain = sparql_query(triples, PFX + "SELECT (COUNT(*) AS ?n)" + body)
+    assert _rows(plain) == [(1,), (1,), (1,)]
+    # bag semantics keep duplicates unless DISTINCT is written
+    dup = triples.unionByName(triples)
+    q = " ?a WHERE { ?d ex:author ?a }"
+    assert len(_rows(sparql_query(dup, PFX + "SELECT" + q,
+                                  distinct_solutions=False))) == 6
+    assert _rows(sparql_query(dup, PFX + "SELECT DISTINCT" + q,
+                              distinct_solutions=False)) == \
+        [("alice",), ("bob",)]
+
+
+@pytest.mark.parametrize("cond,n_rows", [
+    ("FILTER (1 = 'zzz')", 0),
+    ("FILTER (1 != 'zzz')", 0),
+    ("FILTER ('zzz' < 1)", 0),
+    ("FILTER (!(1 = 'zzz'))", 0),
+    ("FILTER ((1 = 'zzz') || true)", 3),
+    ("FILTER (<http://x> = 1)", 0),
+    ("FILTER (<http://x> != 1)", 3),
+    ("GROUP BY ?d ?a HAVING (COUNT(?a) != 'zzz')", 0),
+    ("GROUP BY ?d ?a HAVING (SUM(?a) < 'zzz')", 0),
+    # a typed literal may be numeric: compared as before
+    ("FILTER (1 = '1'^^<http://www.w3.org/2001/XMLSchema#integer>)", 3),
+], ids=["eq", "ne", "lt", "not", "or_true", "iri_eq", "iri_ne",
+        "having_count", "having_sum", "typed_literal"])
+def test_numeric_vs_string_literal_is_a_type_error(triples, cond, n_rows):
+    """No typed comparison exists between a number and a string
+    literal: the solution drops (SPARQL's type error) where Spark's
+    implicit cast of 'zzz' failed the job."""
+    got = sparql_query(triples, PFX + "SELECT ?d ?a WHERE { ?d ex:author ?a "
+                       + (cond + " }" if cond.startswith("F")
+                          else "} " + cond))
+    assert len(_rows(got)) == n_rows
+
+
+def test_aggregate_comparisons_cast_the_variable_side(spark):
+    rows = [("d1", EX + "score", "2"), ("d2", EX + "score", "2"),
+            ("d3", EX + "score", "5"), ("d4", EX + "score", "x")]
+    t = spark.createDataFrame(rows, "subj string, pred string, "
+                              "obj_value string")
+    # an aggregate against a group key: the key side is try_cast, so
+    # the non-numeric 'x' drops instead of failing the job
+    q = PFX + """SELECT ?s WHERE { ?d ex:score ?s } GROUP BY ?s
+                 HAVING (COUNT(?d) = ?s)"""
+    assert _parse(q).having == ["(`_h_agg_0` = try_cast(`s` as double))"]
+    assert _rows(sparql_query(t, q)) == [("2",)]
+    # a SELECT alias of an aggregate is numeric too
+    q = PFX + """SELECT ?s (COUNT(?d) AS ?n) WHERE { ?d ex:score ?s }
+                 GROUP BY ?s HAVING (?n = ?s && ?n != 'zzz')"""
+    assert _parse(q).having == [
+        "((`n` = try_cast(`s` as double)) AND CAST(NULL AS BOOLEAN))"]
+    assert _rows(sparql_query(t, q)) == []
+    q = PFX + """SELECT ?s (COUNT(?d) AS ?n) WHERE { ?d ex:score ?s }
+                 GROUP BY ?s HAVING (?n = ?s)"""
+    assert _rows(sparql_query(t, q)) == [("2", 2)]
+    # ... in a later SELECT expression too
+    q = PFX + """SELECT ?s (COUNT(?d) AS ?n) ((?n != 'zzz') AS ?c)
+                 WHERE { ?d ex:score ?s } GROUP BY ?s"""
+    assert _parse(q).select[2][1] == "CAST(NULL AS BOOLEAN)"
+    assert _rows(sparql_query(t, q)) == [("2", 2, None), ("5", 1, None),
+                                         ("x", 1, None)]
+    # but the WHERE group runs before grouping: there ?n is a variable
+    q = PFX + """SELECT ?s (COUNT(?d) AS ?n) WHERE { ?d ex:score ?s
+                 OPTIONAL { ?d ex:n ?n FILTER (?n != 'zzz') } } GROUP BY ?s"""
+    assert _parse(q).where.optional[0].filters == ["(`n` != 'zzz')"]
+
+
 # ---------------------------------------------------------------------------
 # dateTime accessors (§17.4.5)
 # ---------------------------------------------------------------------------
