@@ -1350,6 +1350,19 @@ def _driver_closure(edges: list[tuple[str, str]]) -> set[tuple[str, str]]:
     return out
 
 
+def _schema_rows(schema: DataFrame, cols: tuple[str, str, str],
+                 max_rows: int, op: str) -> list[tuple]:
+    """The schema's (s, p, o) rows, read by one job; more than
+    ``max_rows`` is a typed error (``op`` closes the schema on the
+    driver and broadcasts it)."""
+    rows = schema.select(*cols).limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"schema has >{max_rows} rows — not an ontology; "
+            f"{op} broadcasts the schema by design")
+    return [tuple(r) for r in rows]
+
+
 def rdfs_closure(triples: DataFrame, schema: DataFrame,
                  s_col: str = "subj", p_col: str = "pred",
                  o_col: str = "obj_value", kind_col: str | None = "obj_kind",
@@ -1382,13 +1395,8 @@ def rdfs_closure(triples: DataFrame, schema: DataFrame,
     if the triples frame has no kind column (every object treated as
     a node).
     """
-    n = schema.limit(max_schema_rows + 1).count()
-    if n > max_schema_rows:
-        raise ValueError(
-            f"schema has >{max_schema_rows} rows — not an ontology; "
-            "rdfs_closure broadcasts the closed schema by design")
-    rows = [(r[0], r[1], r[2])
-            for r in schema.select(s_col, p_col, o_col).collect()]
+    rows = _schema_rows(schema, (s_col, p_col, o_col), max_schema_rows,
+                        "rdfs_closure")
     sub_prop = [(s, o) for s, p, o in rows if p == SUB_PROP]
     sub_cls = [(s, o) for s, p, o in rows if p == SUB_CLASS]
     prop_clo = {(a, b) for a, b in sub_prop} | _driver_closure(sub_prop)
@@ -1964,13 +1972,8 @@ def owl_closure(triples: DataFrame, schema: DataFrame,
     inverting (s, p, "literal") would put a literal in subject
     position, which RDF forbids.
     """
-    n = schema.limit(max_schema_rows + 1).count()
-    if n > max_schema_rows:
-        raise ValueError(
-            f"schema has >{max_schema_rows} rows — not an ontology; "
-            "owl_closure broadcasts the schema by design")
-    rows = [(r[0], r[1], r[2])
-            for r in schema.select(s_col, p_col, o_col).collect()]
+    rows = _schema_rows(schema, (s_col, p_col, o_col), max_schema_rows,
+                        "owl_closure")
     inv = {(s, o) for s, p, o in rows if p == INVERSE_OF}
     inv |= {(b, a) for a, b in inv}                     # symmetric pairs
     sym = sorted({s for s, p, o in rows

@@ -294,8 +294,10 @@ def materialize_graph(triples: DataFrame, out_dir: str,
     parted = with_partition(triples, n_buckets)
 
     if resume:
-        manifests = read_manifests(spark, out_dir)
-        cfgs = (manifests.select("n_buckets", "input_id").distinct()
+        # one read of the manifests answers both the config check and
+        # the set of completed buckets
+        cfgs = (read_manifests(spark, out_dir)
+                .select("part", "n_buckets", "input_id").distinct()
                 .collect())
         for r in cfgs:
             if r["n_buckets"] is not None and r["n_buckets"] != n_buckets:
@@ -309,8 +311,8 @@ def materialize_graph(triples: DataFrame, out_dir: str,
                     f"cannot resume {out_dir!r}: manifests record "
                     f"input_id={r['input_id']!r}, current run reads "
                     f"{input_id!r}; pass resume=False to rebuild")
-        done = manifests.select("part").distinct()
-        n_done = done.count()
+        done = sorted({r["part"] for r in cfgs})
+        n_done = len(done)
         if n_done and input_id is None:
             # without an input identity the resume CANNOT tell a crash
             # re-run (same input — skip completed buckets, the intended
@@ -327,7 +329,7 @@ def materialize_graph(triples: DataFrame, out_dir: str,
                 "buckets are SKIPPED; pass input_id to pin the input, "
                 "resume=False to rebuild, or upsert_documents for "
                 "incremental updates", stacklevel=2)
-        pending = parted.join(F.broadcast(done), "part", "left_anti")
+        pending = parted.where(~F.col("part").isin(done))
     else:
         # rebuild from scratch: stale part directories under a different
         # bucketing would leak into read_graph (dynamic overwrite only

@@ -132,13 +132,22 @@ STRDT, and FROM combined with FROM NAMED or GRAPH
 are not supported. ASK probes the group's solutions under
 ``limit(1)``; an all-constant pattern is an existence gate there, so
 ASK answers an all-constant group, which the other forms refuse (they
-need a variable). Expression
-translation casts a variable compared against a numeric literal or a
-COUNT/SUM/AVG result to ``double``, and ``xsd:integer(?v)``-style
-constructors cast explicitly (SPARQL compares typed values; the
-triples frame stores lexical forms — a bare var-to-var comparison is
-lexicographic). A number compared with a string literal is a type
-error: the solution drops.
+need a variable).
+Expressions are typed: SPARQL compares typed values, while the triples
+frame stores lexical forms. Each expression node has one kind, inferred
+bottom-up: number, plain string, language-tagged string, IRI, boolean,
+aggregate alias (of COUNT / SUM / AVG) or unknown (a variable, a typed
+literal). Every comparison, IN, arithmetic and unary-minus operator
+compiles through one typed operator, ``_Parser._typed``: an unknown
+operand that meets a number or a boolean is ``try_cast`` to it (and
+arithmetic, over doubles, try_casts every unknown operand); two
+different definite kinds are a type error, NULL, so FILTER and HAVING
+drop the solution and BIND, SELECT and ORDER BY see an unbound value,
+except that an IRI is ``=``-false and ``!=``-true against any literal
+(§17.4.1.7). IN is the OR of the ``=`` of each item, NOT IN the AND of
+the ``!=``; division by zero is a type error too. Two unknown operands
+(var-to-var) compare lexicographically, and ``xsd:integer(?v)``-style
+constructors cast explicitly.
 GROUP BY and projected DISTINCT likewise group/dedup on the LEXICAL
 value: with ``meta_vars`` the solution set keeps literals differing
 only in language/datatype as distinct TERMS, but a subsequent
@@ -355,7 +364,21 @@ _GROUP_CONTEXTS = {
 
 _AGG_FUNCS = {"count", "sum", "avg", "min", "max", "sample",
               "group_concat"}
-_NUMERIC_AGGS = ("count", "sum", "avg")
+# the kind of an aggregate's result; MIN / MAX / SAMPLE are unknown
+_AGG_KINDS = {"count": "num", "sum": "num", "avg": "num",
+              "group_concat": "str"}
+#: expression kinds, by how definite their type is: an unknown
+#: (``unk``: a variable's lexical value, or a typed literal) takes
+#: the other operand's kind, an aggregate alias (``agg``: a SELECT
+#: alias of COUNT / SUM / AVG) meets a number as a number, and two
+#: different definite kinds (number, plain or language-tagged string,
+#: IRI, boolean) have no typed comparison
+_KIND_RANK = {"unk": 0, "agg": 1, "num": 2, "str": 2, "lang": 2,
+              "iri": 2, "bool": 2}
+
+
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 class _Parser(_PathGrammar):
@@ -406,12 +429,22 @@ class _Parser(_PathGrammar):
                 f"expected {want!r}, got {t.value!r} at offset {t.pos}")
         return t
 
-    def _at_kw(self, *words: str) -> bool:
-        t = self._peek()
+    def _at_kw(self, *words: str, ahead: int = 0) -> bool:
+        t = self._peek(ahead)
         return t.kind == "KW" and t.value in words
 
     def _eat_kw(self, *words: str) -> bool:
         if self._at_kw(*words):
+            self._next()
+            return True
+        return False
+
+    def _at_op(self, *ops: str, ahead: int = 0) -> bool:
+        t = self._peek(ahead)
+        return t.kind == "OP" and t.value in ops
+
+    def _eat_op(self, op: str) -> bool:
+        if self._at_op(op):
             self._next()
             return True
         return False
@@ -455,29 +488,13 @@ class _Parser(_PathGrammar):
             return "?" + _BNODE_VAR_PREFIX + t.value[2:]
         if t.kind in ("IRIREF", "PNAME"):
             return self._iri(t)
-        if t.kind == "STRING":
-            val = _unquote(t.value)
-            # @lang / ^^datatype tags don't change the stored lexical
-            # form in the single obj_value column — consume and drop
-            if self._peek().kind == "LANGTAG":
-                self._next()
-            elif self._peek().kind == "OP" and self._peek().value == "^^":
-                self._next()
-                self._iri(self._next())
-            return val
-        if t.kind == "NUMBER":
-            return t.value
-        if t.kind == "OP" and t.value in ("-", "+") \
-                and self._peek().kind == "NUMBER":
-            num = self._next().value
-            return num if t.value == "+" else "-" + num
-        if t.kind == "KW" and t.value in ("true", "false"):
-            return t.value
+        lit = self._literal(t)
+        if lit is not None:
+            return lit[0]
         if t.kind == "OP" and t.value == "[":
-            if self._peek().kind == "OP" and self._peek().value == "]":
+            if self._eat_op("]"):
                 # anonymous blank node []: a fresh non-distinguished
                 # variable
-                self._next()
                 self._anon_bn += 1
                 return f"?{_BNODE_VAR_PREFIX}anon{self._anon_bn}"
             # [ p o ; ... ] blank-node property list: desugars to a
@@ -485,6 +502,32 @@ class _Parser(_PathGrammar):
             return self._bnode_property_list()
         raise SparqlSyntaxError(
             f"bad {position} term {t.value!r} at offset {t.pos}")
+
+    def _literal(self, t: _Tok) -> tuple[str, str] | None:
+        """The literal that the consumed token ``t`` starts → (lexical
+        value, kind), or None: a string with its ``@lang`` /
+        ``^^datatype`` tail, a number with its sign, ``true`` /
+        ``false``. A tail does not change the lexical form the single
+        ``obj_value`` column stores; it only decides the kind."""
+        if t.kind == "STRING":
+            val = _unquote(t.value)
+            if self._peek().kind == "LANGTAG":
+                self._next()
+                return val, "lang"
+            if self._eat_op("^^"):
+                dt = self._iri(self._next())
+                # a typed literal may be numeric: its kind is unknown
+                return val, "str" if dt == self._XSD + "string" else "unk"
+            return val, "str"
+        if t.kind == "OP" and t.value in ("-", "+") \
+                and self._peek().kind == "NUMBER":
+            num = self._next().value
+            return (num if t.value == "+" else "-" + num), "num"
+        if t.kind == "NUMBER":
+            return t.value, "num"
+        if t.kind == "KW" and t.value in ("true", "false"):
+            return t.value, "bool"
+        return None
 
     # -- property paths ---------------------------------------------------
     def _predicate(self) -> str:
@@ -522,49 +565,21 @@ class _Parser(_PathGrammar):
         return SparqlSyntaxError(f"{msg} at offset {self._peek().pos}")
 
     # -- triples block ----------------------------------------------------
-    def _triples_block(self, graph: str | None) -> list[tuple]:
-        """Subject (predicate object (, object)*)(; ...)* with optional
-        trailing '.'; returns 3- or 4-tuples (graph term appended)."""
+    def _triples_block(self) -> list[tuple]:
+        """Subject and its predicate-object list, with an optional
+        trailing '.'; returns (s, p, o) tuples."""
         pats: list[tuple] = []
         subj = self._term("subject")
-        if self._bn_buf and subj.startswith("?" + _BNODE_VAR_PREFIX) \
-                and self._peek().kind == "OP" \
-                and self._peek().value in (".", "}"):
-            # TriplesSameSubject = blankNodePropertyList with an empty
-            # outer property list: { [ p o ] . } — the desugared
-            # patterns ARE the block
-            if self._peek().value == ".":
-                self._next()
-            for bp in self._bn_buf:
-                pats.append(bp + (graph,) if graph is not None else bp)
-            self._bn_buf.clear()
-            return pats
-        while True:
-            pred = self._predicate()
-            while True:
-                obj = self._term("object")
-                if graph is not None:
-                    pats.append((subj, pred, obj, graph))
-                else:
-                    pats.append((subj, pred, obj))
-                if self._peek().kind == "OP" and self._peek().value == ",":
-                    self._next()
-                    continue
-                break
-            if self._peek().kind == "OP" and self._peek().value == ";":
-                self._next()
-                # a ';' directly before '.' or '}' is legal trailing
-                if (self._peek().kind == "OP"
-                        and self._peek().value in (".", "}")):
-                    break
-                continue
-            break
-        if self._peek().kind == "OP" and self._peek().value == ".":
-            self._next()
+        # TriplesSameSubject = blankNodePropertyList with an empty
+        # outer property list: { [ p o ] . } — the desugared patterns
+        # ARE the block
+        if not (self._bn_buf and subj.startswith("?" + _BNODE_VAR_PREFIX)
+                and self._at_op(".", "}")):
+            self._predicate_objects(subj, pats)
+        self._eat_op(".")
         # drain patterns desugared from [ p o ] property lists parsed
-        # inside this block (they scope to the same graph)
-        for bp in self._bn_buf:
-            pats.append(bp + (graph,) if graph is not None else bp)
+        # inside this block
+        pats += self._bn_buf
         self._bn_buf.clear()
         return pats
 
@@ -576,25 +591,22 @@ class _Parser(_PathGrammar):
         Nests (an object may itself be a property list)."""
         self._anon_bn += 1
         var = f"?{_BNODE_VAR_PREFIX}anon{self._anon_bn}"
-        while True:
-            pred = self._predicate()
-            while True:
-                obj = self._term("object")
-                self._bn_buf.append((var, pred, obj))
-                if self._peek().kind == "OP" \
-                        and self._peek().value == ",":
-                    self._next()
-                    continue
-                break
-            if self._peek().kind == "OP" and self._peek().value == ";":
-                self._next()
-                if self._peek().kind == "OP" \
-                        and self._peek().value == "]":
-                    break
-                continue
-            break
+        self._predicate_objects(var, self._bn_buf)
         self._expect("OP", "]")
         return var
+
+    def _predicate_objects(self, subj: str, out: list[tuple]) -> None:
+        """``predicate object (, object)* (; ...)*`` after ``subj``:
+        appends each (subj, p, o) to ``out`` once its object is read,
+        so a nested property list's patterns come first. A ';' before
+        the list's end ('.', '}' or ']') is a legal trailing one."""
+        while True:
+            pred = self._predicate()
+            out.append((subj, pred, self._term("object")))
+            while self._eat_op(","):
+                out.append((subj, pred, self._term("object")))
+            if not self._eat_op(";") or self._at_op(".", "}", "]"):
+                return
 
     def _graphify(self, pats: list[tuple], gterm: str) -> list[tuple]:
         """Home a GRAPH body's patterns into the graph term. Path
@@ -619,9 +631,8 @@ class _Parser(_PathGrammar):
         if t.kind == "EOF":
             return "eof"
         if t.kind == "OP" and t.value == "{":
-            nxt = self._peek(1)
-            return "subquery" if nxt.kind == "KW" \
-                and nxt.value == "select" else "block"
+            return "subquery" if self._at_kw("select", ahead=1) \
+                else "block"
         if t.kind == "OP" and t.value in ("}", "."):
             return "end" if t.value == "}" else "dot"
         if t.kind == "KW" and t.value in _MEMBER_KEYWORDS:
@@ -643,7 +654,7 @@ class _Parser(_PathGrammar):
                 raise SparqlUnsupportedError(refusal.format(
                     kw=self._peek().value.upper(), ctx=ctx))
             if kind not in admitted:
-                g.patterns += self._triples_block(None)
+                g.patterns += self._triples_block()
                 continue
             if kind == "subquery":
                 # SPARQL 1.1 subquery: evaluated independently
@@ -694,8 +705,7 @@ class _Parser(_PathGrammar):
         may also EMBED [NOT] EXISTS tests (markers compiled to boolean
         columns)."""
         negated = self._at_kw("not") and (
-            ctx != "WHERE" or (self._peek(1).kind == "KW"
-                               and self._peek(1).value == "exists"))
+            ctx != "WHERE" or self._at_kw("exists", ahead=1))
         if self._at_kw("exists") or negated:
             if ctx == "UNION":
                 raise SparqlUnsupportedError(
@@ -739,8 +749,7 @@ class _Parser(_PathGrammar):
             g.patterns += block[0].patterns
             g.filters += block[0].filters
         elif ctx == "WHERE":
-            if not (leading and self._peek().kind == "OP"
-                    and self._peek().value == "}"):
+            if not (leading and self._at_op("}")):
                 self._reject_branch_meta(block)
             g.unions.append(block)
         elif g.unions:
@@ -826,10 +835,8 @@ class _Parser(_PathGrammar):
             var = self._next().value[1:]
             self._expect("OP", "{")
             rows = []
-            while not (self._peek().kind == "OP"
-                       and self._peek().value == "}"):
+            while not self._eat_op("}"):
                 rows.append({var: self._values_cell()})
-            self._next()
             return rows
         self._expect("OP", "(")
         vars_: list[str] = []
@@ -838,131 +845,137 @@ class _Parser(_PathGrammar):
         self._expect("OP", ")")
         self._expect("OP", "{")
         rows = []
-        while not (self._peek().kind == "OP" and self._peek().value == "}"):
+        while not self._eat_op("}"):
             self._expect("OP", "(")
-            row = {}
-            for v in vars_:
-                row[v] = self._values_cell()
+            rows.append({v: self._values_cell() for v in vars_})
             self._expect("OP", ")")
-            rows.append(row)
-        self._next()
         return rows
 
     def _values_cell(self) -> str | None:
         if self._eat_kw("undef"):
             return None
         t = self._next()
-        if t.kind == "OP" and t.value in ("-", "+") \
-                and self._peek().kind == "NUMBER":
-            num = self._next().value
-            return num if t.value == "+" else "-" + num
-        if t.kind == "STRING":
-            val = _unquote(t.value)
-            if self._peek().kind == "LANGTAG":
-                self._next()
-            elif self._peek().kind == "OP" and self._peek().value == "^^":
-                self._next()
-                self._iri(self._next())
-            return val
         if t.kind in ("IRIREF", "PNAME"):
             return self._iri(t)
-        if t.kind == "NUMBER":
-            return t.value
-        if t.kind == "KW" and t.value in ("true", "false"):
-            return t.value
-        raise SparqlSyntaxError(
-            f"bad VALUES cell {t.value!r} at offset {t.pos}")
+        lit = self._literal(t)
+        if lit is None:
+            raise SparqlSyntaxError(
+                f"bad VALUES cell {t.value!r} at offset {t.pos}")
+        return lit[0]
 
     # -- expressions → Spark SQL ------------------------------------------
-    # Precedence: || < && < (=,!=,<,>,<=,>=,IN) < (+,-) < (*,/) < unary
+    # Precedence: || < && < (=,!=,<,>,<=,>=,IN) < (+,-) < (*,/) < unary.
+    # Every level returns (sql, kind), the kind one of _KIND_RANK's.
     def _expression(self) -> str:
-        return self._expr_or()
+        return self._expr()[0]
 
-    def _expr_or(self) -> str:
-        s = self._expr_and()
-        while self._peek().kind == "OP" and self._peek().value == "||":
-            self._next()
-            s = f"({s} OR {self._expr_and()})"
-        return s
+    def _expr(self) -> tuple[str, str]:
+        x = self._expr_and()
+        while self._eat_op("||"):
+            x = f"({x[0]} OR {self._expr_and()[0]})", "bool"
+        return x
 
-    def _expr_and(self) -> str:
-        s = self._expr_rel()
-        while self._peek().kind == "OP" and self._peek().value == "&&":
-            self._next()
-            s = f"({s} AND {self._expr_rel()})"
-        return s
+    def _expr_and(self) -> tuple[str, str]:
+        x = self._expr_rel()
+        while self._eat_op("&&"):
+            x = f"({x[0]} AND {self._expr_rel()[0]})", "bool"
+        return x
 
-    _REL_OPS = {"=", "!=", "<", ">", "<=", ">="}
-    # (kind cast to double, kind of the other operand): "num" is a
-    # numeric literal or an inline aggregate, "agg" a variable that
-    # aliases a COUNT/SUM/AVG result
-    _CAST_LEFT = {("var", "num"), ("agg", "num"), ("var", "agg")}
+    _REL_OPS = ("=", "!=", "<", ">", "<=", ">=")
+    #: the SQL type a lexical operand is try_cast to when it meets a kind
+    _CAST = {"num": "double", "agg": "double", "bool": "boolean"}
 
-    def _expr_rel(self) -> str:
-        left, lkind = self._expr_add()
-        t = self._peek()
-        if t.kind == "OP" and t.value in self._REL_OPS:
+    def _expr_rel(self) -> tuple[str, str]:
+        left = self._expr_add()
+        if self._at_op(*self._REL_OPS):
             op = self._next().value
-            right, rkind = self._expr_add()
-            kinds = {lkind, rkind}
-            # SPARQL compares typed values; the frame stores lexical
-            # strings. A numeric operand (a literal, a COUNT/SUM/AVG
-            # result or its alias) against a string literal or an IRI
-            # has no typed comparison: a type error, so NULL drops the
-            # solution where Spark's implicit cast of the string would
-            # fail the job — except that RDFterm-equal calls an IRI
-            # unequal to any literal (§17.4.1.7)
-            if kinds & {"num", "agg"} and kinds & {"str", "iri"}:
-                if "iri" in kinds and op in ("=", "!="):
-                    return "false" if op == "=" else "true"
-                return "CAST(NULL AS BOOLEAN)"
-            # against a number, cast the variable side. try_cast, not
-            # cast: the session runs ANSI mode, where a malformed
-            # lexical value would THROW and fail the whole (retried)
-            # task; SPARQL calls it a type error and drops the
-            # solution (NULL comparison → false)
-            if (lkind, rkind) in self._CAST_LEFT:
-                left = f"try_cast({left} as double)"
-            elif (rkind, lkind) in self._CAST_LEFT:
-                right = f"try_cast({right} as double)"
-            return f"({left} {op} {right})"
-        if self._at_kw("in") or (self._at_kw("not")
-                                 and self._peek(1).kind == "KW"
-                                 and self._peek(1).value == "in"):
-            neg = self._eat_kw("not")
-            self._expect("KW", "in")
-            self._expect("OP", "(")
-            items = []
-            while not (self._peek().kind == "OP"
-                       and self._peek().value == ")"):
-                if items:
-                    self._expect("OP", ",")
-                items.append(self._expr_add()[0])
-            self._next()
-            if not items:
-                # legal SPARQL: IN with an empty ExpressionList is
-                # false (NOT IN true) — Spark SQL's `IN ()` is a
-                # parse error, so emit the constant directly
-                return "true" if neg else "false"
+            return self._typed(op, left, self._expr_add())
+        if not (self._at_kw("in")
+                or self._at_kw("not") and self._at_kw("in", ahead=1)):
+            return left
+        neg = self._eat_kw("not")
+        self._expect("KW", "in")
+        self._expect("OP", "(")
+        items: list[tuple[str, str]] = []
+        while not self._eat_op(")"):
+            if items:
+                self._expect("OP", ",")
+            items.append(self._expr_add())
+        if not items:
+            # legal SPARQL: IN with an empty ExpressionList is false
+            # (NOT IN true) — Spark SQL's `IN ()` is a parse error
+            return ("true" if neg else "false"), "bool"
+        # IN is the OR of the `=` of each item, NOT IN the AND of the
+        # `!=` (§17.4.1.9); when every item meets the same left operand
+        # that is Spark's own IN
+        pairs = [self._operands(left, it) for it in items]
+        if None not in pairs and len({l for l, _ in pairs}) == 1:
             kw = "NOT IN" if neg else "IN"
-            return f"({left} {kw} ({', '.join(items)}))"
-        return left
+            return (f"({pairs[0][0]} {kw} "
+                    f"({', '.join(r for _, r in pairs)}))"), "bool"
+        op, conj = ("!=", " AND ") if neg else ("=", " OR ")
+        tests = [self._typed(op, left, it)[0] for it in items]
+        return f"({conj.join(tests)})", "bool"
 
     def _expr_add(self) -> tuple[str, str]:
-        s, k = self._expr_mul()
-        while self._peek().kind == "OP" and self._peek().value in ("+", "-"):
+        x = self._expr_mul()
+        while self._at_op("+", "-"):
             op = self._next().value
-            s2, _ = self._expr_mul()
-            s, k = f"({s} {op} {s2})", "expr"
-        return s, k
+            x = self._typed(op, x, self._expr_mul())
+        return x
 
     def _expr_mul(self) -> tuple[str, str]:
-        s, k = self._expr_unary()
-        while self._peek().kind == "OP" and self._peek().value in ("*", "/"):
+        x = self._expr_unary()
+        while self._at_op("*", "/"):
             op = self._next().value
-            s2, _ = self._expr_unary()
-            s, k = f"({s} {op} {s2})", "expr"
-        return s, k
+            x = self._typed(op, x, self._expr_unary())
+        return x
+
+    def _coerce(self, x: tuple[str, str], kind: str) -> str | None:
+        """Operand ``x`` as a value of ``kind``, or None: a type error.
+        A lexical operand (a variable, or an aggregate alias meeting a
+        number) is try_cast, not cast: the session runs ANSI mode, where
+        one malformed value would fail the whole (retried) task, while
+        SPARQL calls it a type error."""
+        sql, k = x
+        if k == kind:
+            return sql
+        if k == "unk" or (k == "agg" and kind == "num"):
+            return (f"try_cast({sql} as {self._CAST[kind]})"
+                    if kind in self._CAST else sql)
+        return None
+
+    def _operands(self, a: tuple[str, str],
+                  b: tuple[str, str]) -> tuple[str, str] | None:
+        """Both operands of a comparison as the more definite of their
+        two kinds, or None when the kinds differ: a type error."""
+        kind = max(a[1], b[1], key=_KIND_RANK.__getitem__)
+        left, right = self._coerce(a, kind), self._coerce(b, kind)
+        return None if left is None or right is None else (left, right)
+
+    def _typed(self, op: str, a: tuple[str, str],
+               b: tuple[str, str] | None = None) -> tuple[str, str]:
+        """The one typed operator: a comparison, arithmetic, or (no
+        ``b``) unary minus. A kind mismatch is a type error — NULL,
+        which drops the solution under FILTER and HAVING (§17.2–17.3)
+        — except that RDFterm-equal calls an IRI unequal to any
+        literal (§17.4.1.7). Arithmetic is over doubles, and division
+        by zero is a type error too."""
+        if op in self._REL_OPS:
+            pair = self._operands(a, b)
+            if pair is not None:
+                return f"({pair[0]} {op} {pair[1]})", "bool"
+            if "iri" in (a[1], b[1]) and op in ("=", "!="):
+                return ("false" if op == "=" else "true"), "bool"
+            return "CAST(NULL AS BOOLEAN)", "bool"
+        args = [self._coerce(x, "num") for x in (a, b) if x is not None]
+        if None in args:
+            return "CAST(NULL AS DOUBLE)", "num"
+        if b is None:
+            return f"(- {args[0]})", "num"
+        if op == "/":
+            return f"try_divide({args[0]}, {args[1]})", "num"
+        return f"({args[0]} {op} {args[1]})", "num"
 
     def _exists_marker(self, negated: bool) -> tuple[str, str]:
         """One [NOT] EXISTS { ... } occurrence inside a FILTER
@@ -990,31 +1003,21 @@ class _Parser(_PathGrammar):
         name = f"_fx{self._fx_n}"
         self._fx_n += 1
         self._exists_markers.append((name, entry, negated))
-        return f"`{name}`", "expr"
+        return f"`{name}`", "bool"
 
     def _expr_unary(self) -> tuple[str, str]:
-        t = self._peek()
-        if t.kind == "KW" and t.value == "exists":
-            self._next()
+        if self._eat_kw("exists"):
             return self._exists_marker(False)
-        if t.kind == "KW" and t.value == "not" \
-                and self._peek(1).kind == "KW" \
-                and self._peek(1).value == "exists":
+        if self._at_kw("not") and self._at_kw("exists", ahead=1):
             self._next()
             self._next()
             return self._exists_marker(True)
-        if t.kind == "OP" and t.value == "!":
-            self._next()
-            s, _ = self._expr_unary()
-            return f"(NOT {s})", "expr"
-        if t.kind == "OP" and t.value == "-":
-            self._next()
-            s, k = self._expr_unary()
-            # a negated numeric literal stays "num" so the var-side
-            # cast heuristic still fires for ?x > -5
-            return (f"-{s}", "num") if k == "num" else (f"(- {s})", "expr")
-        if t.kind == "OP" and t.value == "+":
-            self._next()
+        if self._eat_op("!"):
+            return f"(NOT {self._expr_unary()[0]})", "bool"
+        # a sign before a number is the literal's (_literal)
+        if self._at_op("-", "+") and self._peek(1).kind != "NUMBER":
+            if self._next().value == "-":
+                return self._typed("-", self._expr_unary())
             return self._expr_unary()
         return self._expr_primary()
 
@@ -1071,6 +1074,13 @@ class _Parser(_PathGrammar):
         "minutes": "minute(try_cast({0} as timestamp))",
         "seconds": "second(try_cast({0} as timestamp))",
     }
+    # the kind of a _FUNC_MAP builtin's result; the rest are strings
+    _FUNC_KINDS = {
+        **dict.fromkeys(("strlen", "abs", "ceil", "floor", "round", "year",
+                         "month", "day", "hours", "minutes", "seconds"),
+                        "num"),
+        "contains": "bool", "strstarts": "bool", "strends": "bool",
+        "coalesce": "unk", "if": "unk", "iri": "iri", "uri": "iri"}
 
     # refused with a reason, never mis-executed: a retried Spark task
     # re-evaluates its expressions, so a nondeterministic builtin would
@@ -1082,51 +1092,39 @@ class _Parser(_PathGrammar):
         t = self._next()
         if t.kind == "VAR":
             v = t.value[1:]
-            return f"`{v}`", "agg" if v in self._agg_aliases else "var"
-        if t.kind == "NUMBER":
-            return t.value, "num"
-        if t.kind == "STRING":
-            lit = _unquote(t.value).replace("\\", "\\\\").replace("'", "\\'")
-            if self._peek().kind == "OP" and self._peek().value == "^^":
-                # a typed literal may be numeric: no string kind
-                self._next()
-                self._iri(self._next())
-                return f"'{lit}'", "expr"
-            if self._peek().kind == "LANGTAG":
-                self._next()
-            return f"'{lit}'", "str"
+            return f"`{v}`", "agg" if v in self._agg_aliases else "unk"
+        lit = self._literal(t)
+        if lit is not None:
+            return (_sql_str(lit[0]) if t.kind == "STRING"
+                    else lit[0]), lit[1]
         if t.kind in ("IRIREF", "PNAME"):
             iri = self._iri(t)
-            if self._peek().kind == "OP" and self._peek().value == "(":
-                # XSD cast constructor, e.g. xsd:integer(?n)
-                sqlt = self._XSD_CASTS.get(iri)
-                if sqlt is None:
-                    raise SparqlUnsupportedError(
-                        f"constructor <{iri}>() is not a supported "
-                        "XSD cast")
-                self._next()
-                arg = self._expression()
-                self._expect("OP", ")")
-                # a failed constructor cast is a SPARQL type
-                # error (solution drops) — under ANSI a plain cast
-                # would throw and fail the task
-                return f"try_cast({arg} as {sqlt})", "expr"
-            return "'" + iri.replace("'", "\\'") + "'", "iri"
-        if t.kind == "KW" and t.value in ("true", "false"):
-            return t.value, "expr"
+            if not self._eat_op("("):
+                return _sql_str(iri), "iri"
+            # XSD cast constructor, e.g. xsd:integer(?n)
+            sqlt = self._XSD_CASTS.get(iri)
+            if sqlt is None:
+                raise SparqlUnsupportedError(
+                    f"constructor <{iri}>() is not a supported XSD cast")
+            arg = self._expression()
+            self._expect("OP", ")")
+            # a failed constructor cast is a SPARQL type error (the
+            # solution drops) — under ANSI a plain cast would throw
+            return f"try_cast({arg} as {sqlt})", self._SQL_KINDS.get(
+                sqlt, "num")
         if t.kind == "OP" and t.value == "(":
             # no re-wrap: every binary combinator parenthesizes its
             # own result, so source parens add nothing but noise
-            s = self._expression()
+            x = self._expr()
             self._expect("OP", ")")
-            return s, "expr"
+            return x
         if t.kind == "NAME" and t.value.lower() in _AGG_FUNCS \
                 and self._having_q is not None:
             # aggregate inside a HAVING constraint: compile to a
             # hidden aggregate column (dropped after the filter)
             spec = self._agg_spec_after_name(t.value.lower())
             hq = self._having_q
-            kind = "num" if spec[0] in _NUMERIC_AGGS else "expr"
+            kind = _AGG_KINDS.get(spec[0], "unk")
             for alias, sp in hq.having_aggs:
                 if sp == spec:
                     return f"`{alias}`", kind
@@ -1146,6 +1144,9 @@ class _Parser(_PathGrammar):
         _XSD + "string": "string", _XSD + "boolean": "boolean",
         _XSD + "date": "date", _XSD + "dateTime": "timestamp",
     }
+    # the kind of a cast's result; the other XSD casts are numeric
+    _SQL_KINDS = {"string": "str", "boolean": "bool", "date": "unk",
+                  "timestamp": "unk"}
 
     def _regex_flags(self, arg: str, label: str) -> str:
         """Validate a REGEX()/REPLACE() flags argument (XPath
@@ -1174,20 +1175,24 @@ class _Parser(_PathGrammar):
         if name == "bound":
             var = self._expect("VAR").value[1:]
             self._expect("OP", ")")
-            return f"(`{var}` IS NOT NULL)", "expr"
-        args = []
-        while not (self._peek().kind == "OP" and self._peek().value == ")"):
-            args.append(self._expression())
-            if self._peek().kind == "OP" and self._peek().value == ",":
-                self._next()
-        self._next()
+            return f"(`{var}` IS NOT NULL)", "bool"
+        typed = []
+        while not self._eat_op(")"):
+            typed.append(self._expr())
+            self._eat_op(",")
+        if name in ("abs", "ceil", "floor", "round"):
+            # numeric arguments: a lexical one is try_cast, any other
+            # kind is a type error
+            typed = [(self._coerce(x, "num") or "CAST(NULL AS DOUBLE)",
+                      "num") for x in typed]
+        args = [sql for sql, _ in typed]
         if name == "regex":
             if len(args) not in (2, 3):
                 raise SparqlSyntaxError("REGEX() takes 2 or 3 arguments")
             if len(args) == 3:
                 flags = self._regex_flags(args[2], "REGEX")
                 if not flags:
-                    return f"({args[0]} RLIKE {args[1]})", "expr"
+                    return f"({args[0]} RLIKE {args[1]})", "bool"
                 if "q" in flags:
                     # 'q' (XPath fn:matches): the pattern is a literal
                     # string, so the match is substring containment;
@@ -1195,10 +1200,10 @@ class _Parser(_PathGrammar):
                     s, p = args[0], args[1]
                     if "i" in flags:
                         s, p = f"lower({s})", f"lower({p})"
-                    return f"(instr({s}, {p}) > 0)", "expr"
+                    return f"(instr({s}, {p}) > 0)", "bool"
                 return (f"({args[0]} RLIKE concat('(?{flags})', "
-                        f"{args[1]}))", "expr")
-            return f"({args[0]} RLIKE {args[1]})", "expr"
+                        f"{args[1]}))", "bool")
+            return f"({args[0]} RLIKE {args[1]})", "bool"
         if name in ("datatype", "lang", "isiri", "isuri", "isliteral",
                     "isblank"):
             # term-metadata builtins: compile onto the
@@ -1217,7 +1222,7 @@ class _Parser(_PathGrammar):
                 # (mirrors the DATATYPE branch below)
                 return (f"(CASE WHEN `{v}__kind` = 'literal' THEN "
                         f"coalesce(`{v}__lang`, '') ELSE NULL END)",
-                        "expr")
+                        "str")
             if name == "datatype":
                 # lang-tagged → rdf:langString; plain literal →
                 # declared datatype or xsd:string; IRI/bnode → null
@@ -1226,10 +1231,10 @@ class _Parser(_PathGrammar):
                     f"(CASE WHEN `{v}__lang` IS NOT NULL THEN "
                     f"'{_RDF_NS}langString' WHEN `{v}__kind` = "
                     f"'literal' THEN coalesce(`{v}__datatype`, "
-                    f"'{self._XSD}string') ELSE NULL END)", "expr")
+                    f"'{self._XSD}string') ELSE NULL END)", "iri")
             kind = {"isiri": "iri", "isuri": "iri",
                     "isliteral": "literal", "isblank": "bnode"}[name]
-            return f"(`{v}__kind` = '{kind}')", "expr"
+            return f"(`{v}__kind` = '{kind}')", "bool"
         if name == "sameterm":
             # sameTerm(A, B): identical RDF terms — lexical value plus
             # kind/lang/datatype metadata all equal (null-safe on the
@@ -1248,7 +1253,7 @@ class _Parser(_PathGrammar):
             self.meta_vars.add(b)
             return (f"(`{a}` = `{b}` AND `{a}__kind` <=> `{b}__kind` "
                     f"AND `{a}__lang` <=> `{b}__lang` AND "
-                    f"`{a}__datatype` <=> `{b}__datatype`)", "expr")
+                    f"`{a}__datatype` <=> `{b}__datatype`)", "bool")
         if name == "langmatches":
             if len(args) != 2:
                 raise SparqlSyntaxError("LANGMATCHES takes 2 arguments")
@@ -1257,14 +1262,14 @@ class _Parser(_PathGrammar):
                 f"(CASE WHEN {b} = '*' THEN {a} <> '' ELSE "
                 f"(lower({a}) = lower({b}) OR "
                 f"startswith(lower({a}), lower({b}) || '-')) END)",
-                "expr")
+                "bool")
         if name == "replace" and len(args) > 4:
             raise SparqlSyntaxError("REPLACE() takes at most 4 arguments")
         if name == "replace" and len(args) == 4:
             flags = self._regex_flags(args[3], "REPLACE")
             if not flags:
                 return (f"regexp_replace({args[0]}, {args[1]}, "
-                        f"{args[2]})", "expr")
+                        f"{args[2]})", "str")
             if "q" in flags:
                 # 'q': pattern AND replacement are literal strings
                 # (XPath fn:replace with q) — plain substring replace
@@ -1273,14 +1278,14 @@ class _Parser(_PathGrammar):
                         "REPLACE() flag 'q' cannot combine with "
                         "regex flags")
                 return (f"replace({args[0]}, {args[1]}, {args[2]})",
-                        "expr")
+                        "str")
             return (f"regexp_replace({args[0]}, concat('(?{flags})', "
-                    f"{args[1]}), {args[2]})", "expr")
-        tmpl = self._FUNC_MAP.get(name)
+                    f"{args[1]}), {args[2]})", "str")
         if name in self._FUNC_MAP:
-            if tmpl is None:
-                return f"{name}({', '.join(args)})", "expr"
-            return tmpl.format(*args), "expr"
+            tmpl = self._FUNC_MAP[name]
+            sql = tmpl.format(*args) if tmpl else \
+                f"{name}({', '.join(args)})"
+            return sql, self._FUNC_KINDS.get(name, "str")
         if name in self._NONDETERMINISTIC:
             raise SparqlUnsupportedError(
                 f"{name.upper()}() is nondeterministic — a retried "
@@ -1326,14 +1331,8 @@ class _Parser(_PathGrammar):
         self._expect("OP", "(")
         distinct = self._eat_kw("distinct")
         sep = " "   # SPARQL 1.1 §18.5.1.7: default separator is a space
-        if self._peek().kind == "OP" and self._peek().value == "*":
-            self._next()
-            arg = None
-        else:
-            arg = self._expression()
-        if name == "group_concat" and self._peek().kind == "OP" \
-                and self._peek().value == ";":
-            self._next()
+        arg = None if self._eat_op("*") else self._expression()
+        if name == "group_concat" and self._eat_op(";"):
             w = self._next()       # SEPARATOR keyword (as NAME)
             if w.kind != "NAME" or w.value.lower() != "separator":
                 raise SparqlSyntaxError(
@@ -1422,17 +1421,14 @@ class _Parser(_PathGrammar):
             q.distinct = True
         elif self._eat_kw("reduced"):
             q.distinct = False
-        if self._peek().kind == "OP" and self._peek().value == "*":
-            self._next()
+        if self._eat_op("*"):
             q.select_star = True
         else:
             items = []
-            while self._peek().kind == "VAR" or (
-                    self._peek().kind == "OP"
-                    and self._peek().value == "("):
+            while self._peek().kind == "VAR" or self._at_op("("):
                 item = self._select_item()
                 items.append(item)
-                if item[0] == "agg" and item[1][0] in _NUMERIC_AGGS:
+                if item[0] == "agg" and _AGG_KINDS.get(item[1][0]) == "num":
                     self._agg_aliases.add(item[2])
             if not items:
                 raise SparqlSyntaxError("empty SELECT list")
@@ -1452,12 +1448,10 @@ class _Parser(_PathGrammar):
             while True:
                 if self._peek().kind == "VAR":
                     q.group_by.append(self._next().value[1:])
-                elif self._peek().kind == "OP" \
-                        and self._peek().value == "(":
+                elif self._eat_op("("):
                     # GROUP BY (expr AS ?v): per SPARQL §18.2.4.1 the
                     # key expression binds ?v — desugared to a BIND
                     # (Extend happens before Group in the algebra)
-                    self._next()
                     gexpr = self._expression()
                     self._expect("KW", "as")
                     gvar = self._expect("VAR").value[1:]
@@ -1480,8 +1474,7 @@ class _Parser(_PathGrammar):
                     q.where.binds.append((gvar, gexpr))
                     q.group_by.append(gvar)
                 elif (self._peek().kind == "NAME"
-                        and self._peek(1).kind == "OP"
-                        and self._peek(1).value == "("):
+                        and self._at_op("(", ahead=1)):
                     raise SparqlUnsupportedError(
                         "a bare expression GROUP BY key is not "
                         "supported — name it: GROUP BY (expr AS ?k)")
@@ -1493,7 +1486,7 @@ class _Parser(_PathGrammar):
         if self._eat_kw("having"):
             self._having_q = q
             q.having.append(self._expression())
-            while self._peek().kind == "OP" and self._peek().value == "(":
+            while self._at_op("("):
                 q.having.append(self._expression())
             self._having_q = None
         if self._eat_kw("order"):
@@ -1515,8 +1508,7 @@ class _Parser(_PathGrammar):
                     expr = self._expression()
                     self._expect("OP", ")")
                     q.order_by.append((expr, False))
-                elif t.kind == "NAME" and self._peek(1).kind == "OP" \
-                        and self._peek(1).value == "(":
+                elif t.kind == "NAME" and self._at_op("(", ahead=1):
                     # bare BuiltInCall order condition,
                     # e.g. ORDER BY STRLEN(?a)
                     q.order_by.append((self._expression(), False))

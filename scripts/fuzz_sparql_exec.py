@@ -1,7 +1,11 @@
 """Execution-level SPARQL fuzz: whole-grammar member soup (patterns,
 property paths, OPTIONAL, [NOT] EXISTS, MINUS, UNION, VALUES, GRAPH,
 subqueries, BIND, FILTER builtins) over all four query forms, each
-case EXECUTED against a small in-memory graph. The forms cover every
+case EXECUTED against a small in-memory graph, one of whose ``ex:score``
+values is not numeric. Expressions mix kinds (numbers, strings,
+language-tagged strings, IRIs, booleans, variables, aggregates) in
+comparisons, IN / NOT IN lists, ``+ - * /``, unary minus and ABS, in
+FILTER, BIND, HAVING and ORDER BY. The forms cover every
 solution modifier (GROUP BY with COUNT / SUM / MIN / MAX / AVG /
 SAMPLE / GROUP_CONCAT, HAVING-only aggregates, ``(expr AS ?x)``,
 ORDER BY ASC / DESC, LIMIT, OFFSET, a trailing VALUES, DISTINCT and
@@ -38,6 +42,7 @@ FACTS = [
     ("d2", "author", "alice", "g2"), ("d3", "author", "bob", "g1"),
     ("d1", "cites", "d2", "g1"), ("d2", "cites", "d3", "g2"),
     ("d1", "score", "3", "g1"), ("d2", "score", "9", "g2"),
+    ("d3", "score", "n/a", "g1"),
     ("alice", "level", "senior", "g1"), ("bob", "level", "junior", "g1")]
 rows = [(s, EX + p, o, g) for s, p, o, g in FACTS]
 t = spark.createDataFrame(
@@ -50,10 +55,29 @@ PREDS = ["ex:lang", "ex:author", "ex:cites", "ex:score", "ex:level"]
 PATHS = ["ex:cites+", "ex:cites*", "(ex:cites/ex:lang)", "^ex:author",
          "(ex:lang|ex:author)", "!(ex:lang)", "ex:cites?"]
 CONSTS = ["'en'", "'alice'", "'3'", "'senior'", "42"]
+LITS = CONSTS + ["-2", "2.5", "0", "true", "<d1>", "'en'@en",
+                 "'7'^^xsd:integer"]
 NODES = ["<d1>", "<d2>", "<d3>", "<alice>", "<bob>"]
 AGGS = ["COUNT(*)", "COUNT(DISTINCT %s)", "SUM(%s)", "MIN(%s)", "MAX(%s)",
         "AVG(%s)", "SAMPLE(%s)", "GROUP_CONCAT(%s)",
         "GROUP_CONCAT(DISTINCT %s; SEPARATOR='|')"]
+
+def arith(pool):
+    r = rng.random()
+    if r < 0.2:
+        return "-" + rng.choice(pool)
+    if r < 0.35:
+        return "ABS(%s)" % rng.choice(pool)
+    return "(%s %s %s)" % (rng.choice(pool), rng.choice("+-*/"),
+                           rng.choice(pool))
+
+def expr(pool):
+    def side():
+        return rng.choice([arith(pool), rng.choice(pool)])
+    if rng.random() < 0.4:
+        items = ", ".join(rng.choice(pool) for _ in range(rng.randrange(4)))
+        return "%s %sIN (%s)" % (side(), rng.choice(["", "NOT "]), items)
+    return "%s %s %s" % (side(), rng.choice(["=", "!=", "<", ">="]), side())
 
 def term():
     return rng.choice(VARS + VARS + CONSTS)
@@ -83,10 +107,14 @@ def member(depth):
         return "GRAPH %s { %s }" % (gterm, " ".join(pat() for _ in range(rng.randrange(1,3))))
     if r < 0.78:
         return "{ SELECT %s WHERE { %s } }" % (rng.choice(VARS), pat())
-    if r < 0.86:
+    if r < 0.83:
         fn = rng.choice(["UCASE(%s)", "STRLEN(%s)", "LANG(%s)",
                          "DATATYPE(%s)", "MD5(%s)", "xsd:integer(%s)"])
         return "BIND(%s AS ?b%d)" % (fn % rng.choice(VARS), rng.randrange(9))
+    if r < 0.86:
+        return "BIND(%s AS ?b%d)" % (arith(VARS + LITS), rng.randrange(9))
+    if r < 0.90:
+        return "FILTER (%s)" % expr(VARS + LITS)
     if r < 0.94:
         e = rng.choice(["%s != %s", "%s = %s", "STRSTARTS(%s, %s)",
                         "REGEX(%s, %s)", "isIRI(%s) || %s = 'en'"])
@@ -130,9 +158,13 @@ def select(w):
             mods += " HAVING (%s != 'zzz')" % agg()
         elif h < 0.6:
             mods += " HAVING (?n != '0')"
+        elif h < 0.8:
+            mods += " HAVING (%s)" % expr(
+                ["?n", v, "COUNT(*)", "SUM(?s)"] + LITS)
     if rng.random() < 0.3:
         mods += " ORDER BY %s" % rng.choice(
-            VARS + ["DESC(%s)" % rng.choice(VARS), "ASC(%s)" % v])
+            VARS + ["DESC(%s)" % rng.choice(VARS), "ASC(%s)" % v,
+                    "DESC(%s)" % arith([v] + LITS)])
     if rng.random() < 0.3:
         mods += " LIMIT %d" % rng.randrange(1, 5)
     if rng.random() < 0.15:

@@ -18,8 +18,11 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 def pytest_terminal_summary(terminalreporter):
     # the W3C conformance suites skip silently without their fixtures;
-    # say so in the summary so a green run is not mistaken for a checked one
+    # say so in the summary, with the number of skipped tests, so a
+    # green run is not mistaken for a checked one
     from .fixture_utils import fixtures_available
-    if not fixtures_available():
-        terminalreporter.write_line(
-            "W3C fixtures: absent — conformance suites skipped")
+    skipped = len(terminalreporter.stats.get("skipped", []))
+    state = "present" if fixtures_available() \
+        else "absent — conformance suites skipped"
+    terminalreporter.write_line(
+        f"W3C fixtures: {state}; {skipped} tests skipped in this run")

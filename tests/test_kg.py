@@ -335,11 +335,15 @@ def test_rdfs_cycle_terminates(spark, triples):
     assert ("d1", RDF_TYPE, EX + "B") in got
 
 
-def test_rdfs_schema_size_guard(spark, triples):
+@pytest.mark.parametrize("closure", ["rdfs_closure", "owl_closure"])
+def test_schema_size_guard(spark, triples, closure):
+    from jsonld_spark.operators import kg
     schema = _schema(spark, [(f"c{i}", SUB_CLASS, f"c{i+1}")
                              for i in range(10)])
-    with pytest.raises(ValueError, match="ontology"):
-        rdfs_closure(triples, schema, max_schema_rows=5)
+    with pytest.raises(ValueError, match=f"ontology; {closure}"):
+        getattr(kg, closure)(triples, schema, max_schema_rows=5)
+    # at the bound the schema is read, not refused
+    getattr(kg, closure)(triples, schema, max_schema_rows=10)
 
 
 def test_mixture_weights_alpha(spark):

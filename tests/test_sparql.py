@@ -54,6 +54,62 @@ def test_parse_a_is_rdf_type_and_literals():
     ]
 
 
+_P, _Q, _R, _T = EX + "p", EX + "q", EX + "r", EX + "t"
+
+
+@pytest.mark.parametrize("block, want", [
+    ("?s ex:p ?a ; ex:q ?b , ?c .",
+     [("?s", _P, "?a"), ("?s", _Q, "?b"), ("?s", _Q, "?c")]),
+    ("?s ex:p ?a ; . ?t ex:q ?b", [("?s", _P, "?a"), ("?t", _Q, "?b")]),
+    ("?s ex:p ?a , ?b ;", [("?s", _P, "?a"), ("?s", _P, "?b")]),
+    ("[] ex:p ?a", [("?_bn_anon1", _P, "?a")]),
+    ("[ ex:p ?a ] .", [("?_bn_anon1", _P, "?a")]),
+    ("[ ex:p ?a ; ex:q ?b , ?c ; ] .",
+     [("?_bn_anon1", _P, "?a"), ("?_bn_anon1", _Q, "?b"),
+      ("?_bn_anon1", _Q, "?c")]),
+    ("?s ex:p [ ex:q [ ex:r ?o ] ] ; ex:t ?u",
+     [("?s", _P, "?_bn_anon1"), ("?s", _T, "?u"),
+      ("?_bn_anon2", _R, "?o"), ("?_bn_anon1", _Q, "?_bn_anon2")]),
+    ("[ ex:p [] ] ex:q ?o",
+     [("?_bn_anon1", _Q, "?o"), ("?_bn_anon1", _P, "?_bn_anon2")]),
+    ("[ ex:q ?b ; ex:p [ ex:r ?o ] , ?c ] .",
+     [("?_bn_anon1", _Q, "?b"), ("?_bn_anon2", _R, "?o"),
+      ("?_bn_anon1", _P, "?_bn_anon2"), ("?_bn_anon1", _P, "?c")]),
+], ids=["semicolon_comma", "semicolon_dot", "semicolon_brace", "anon",
+        "bnode_list_dot", "bnode_list_trailing", "nested", "anon_in_list",
+        "nested_in_list"])
+def test_parse_predicate_object_list_order(block, want):
+    q = _parse(PFX + "SELECT * WHERE { " + block + " }")
+    assert q.where.patterns == want
+
+
+_XSD_PFX = "PREFIX xsd: <http://www.w3.org/2001/XMLSchema#> "
+_TAGGED = "'a'@en, '1'^^xsd:integer, -1, +1, true, false, 2.5e1"
+
+
+def test_parse_tagged_and_signed_literals_in_each_position():
+    q = _parse(PFX + _XSD_PFX + "SELECT * WHERE { ?s ex:p "
+               + _TAGGED.replace(",", " ,") + " }")
+    assert [p[2] for p in q.where.patterns] == [
+        "a", "1", "-1", "1", "true", "false", "2.5e1"]
+    q = _parse(PFX + _XSD_PFX + "SELECT * WHERE { ?s ex:p ?o "
+               "VALUES (?o ?x) { ('a'@en -1) ('1'^^xsd:integer +1) "
+               "(true UNDEF) (ex:z 2.5) } } VALUES ?o { 'a'@en -1 +1 false }")
+    assert q.where.values == [{"o": "a", "x": "-1"}, {"o": "1", "x": "1"},
+                              {"o": "true", "x": None},
+                              {"o": EX + "z", "x": "2.5"}]
+    assert q.post_values == [{"o": "a"}, {"o": "-1"}, {"o": "1"},
+                             {"o": "false"}]
+    q = _parse(PFX + _XSD_PFX + "SELECT * WHERE { ?s ex:p ?o "
+               "FILTER (?o = 'a'@en) FILTER (?o = '1'^^xsd:integer) "
+               "FILTER (?o = -1) FILTER (?o = +1) FILTER (?o > -1.5) "
+               "BIND ('a'@en AS ?b) BIND (true AS ?c) BIND (-1 AS ?d) }")
+    assert q.where.filters == [
+        "(`o` = 'a')", "(`o` = '1')", "(try_cast(`o` as double) = -1)",
+        "(try_cast(`o` as double) = 1)", "(try_cast(`o` as double) > -1.5)"]
+    assert q.where.binds == [("b", "'a'"), ("c", "true"), ("d", "-1")]
+
+
 def test_parse_property_path_rendering():
     q = _parse(PFX + "SELECT * WHERE { ?x (ex:p/^ex:q)+ ?y . "
                "?x !(ex:a|^ex:b) ?z . }")
@@ -2096,6 +2152,38 @@ def test_aggregate_comparisons_cast_the_variable_side(spark):
     assert _parse(q).where.optional[0].filters == ["(`n` != 'zzz')"]
 
 
+@pytest.mark.parametrize("query, want", [
+    ("SELECT ?d WHERE { ?d ex:p ?o FILTER (1 IN ('zzz')) }", []),
+    ("SELECT ?d WHERE { ?d ex:p ?o } GROUP BY ?d "
+     "HAVING (COUNT(?o) IN ('zzz'))", []),
+    ("SELECT ?d WHERE { ?d ex:p ?o FILTER (?o + 1 = 'zzz') }", []),
+    ("SELECT ?d WHERE { ?d ex:p ?o FILTER (?o + 1 = 2) }", [("d1",)]),
+    ("SELECT ?d WHERE { ?d ex:p ?o FILTER (?o IN (1, 2)) }", [("d1",)]),
+    ("SELECT ?d WHERE { ?d ex:p ?o FILTER (?o NOT IN (2, 'y')) }",
+     [("d1",)]),
+    ("SELECT ?d WHERE { ?d ex:p ?o FILTER (-?o < 0) }", [("d1",)]),
+    ("SELECT ?d WHERE { ?d ex:p ?o FILTER (ABS(?o) > 0) }", [("d1",)]),
+    ("SELECT ?d WHERE { ?d ex:p ?o FILTER (true = 1) }", []),
+    ("SELECT ?d ?y WHERE { ?d ex:p ?o BIND (?o * 2 AS ?y) }",
+     [("d1", 2), ("d2", None)]),
+    ("SELECT ?d WHERE { ?d ex:p ?o } ORDER BY DESC(?o + 1)",
+     [("d1",), ("d2",)]),
+    ("SELECT ?d ((?o + 1) AS ?z) WHERE { ?d ex:p ?o }",
+     [("d1", 2), ("d2", None)]),
+], ids=["in_const", "having_in", "add_eq_str", "add_eq_num", "in_nums",
+        "not_in_mixed", "neg", "abs", "bool_eq_num", "bind_mul",
+        "order_add", "select_add"])
+def test_typed_operators_over_lexical_values(spark, query, want):
+    """Comparisons, IN and arithmetic over a frame that stores one
+    numeric and one non-numeric lexical value: a kind mismatch drops
+    the solution (or binds NULL), an unknown operand in a numeric
+    position is try_cast, and no query fails the job."""
+    t = spark.createDataFrame([("d1", EX + "p", "1"), ("d2", EX + "p", "x")],
+                              "subj string, pred string, obj_value string")
+    got = [tuple(r) for r in sparql_query(t, PFX + query).collect()]
+    assert (got if "ORDER BY" in query else sorted(got, key=str)) == want
+
+
 # ---------------------------------------------------------------------------
 # dateTime accessors (§17.4.5)
 # ---------------------------------------------------------------------------
@@ -2326,10 +2414,13 @@ def test_never_bound_variable_refuses_typed(spark):
 
 def test_compile_fuzz_typed_or_runs(spark):
     """Bounded execution-level fuzz: random member soup (patterns,
-    OPTIONAL, [NOT] EXISTS, MINUS, subqueries, FILTER, BIND) either
-    executes or raises a typed error — no raw Py4J/AnalysisException
-    escapes sparql_query. (A 1500-case one-off run of this generator
-    passed clean; this keeps a fast sentinel in the suite.)"""
+    OPTIONAL, [NOT] EXISTS, MINUS, subqueries, FILTER, BIND) and
+    grouped queries with HAVING and ORDER BY, whose expressions mix
+    kinds in comparisons, IN / NOT IN lists, arithmetic, unary minus
+    and ABS over a graph with a non-numeric score, either execute or
+    raise a typed error — no raw Py4J/AnalysisException or ANSI cast
+    failure escapes sparql_query. (A 1500-case one-off run of this
+    generator passed clean; this keeps a fast sentinel in the suite.)"""
     import random
     from jsonld_spark.operators.sparql import (SparqlSyntaxError,
                                                SparqlUnsupportedError)
@@ -2337,11 +2428,33 @@ def test_compile_fuzz_typed_or_runs(spark):
     t = spark.createDataFrame(
         [("d1", EX + "lang", "en"), ("d2", EX + "lang", "de"),
          ("d1", EX + "author", "alice"), ("d2", EX + "author", "bob"),
-         ("d1", EX + "cites", "d2"), ("alice", EX + "level", "senior")],
+         ("d1", EX + "cites", "d2"), ("alice", EX + "level", "senior"),
+         ("d1", EX + "score", "3"), ("d2", EX + "score", "high")],
         "subj string, pred string, obj_value string")
     VARS = ["?d", "?a", "?l", "?x"]
-    PREDS = ["ex:lang", "ex:author", "ex:cites", "ex:level"]
+    PREDS = ["ex:lang", "ex:author", "ex:cites", "ex:level", "ex:score"]
     CONSTS = ["'en'", "'alice'"]
+    LITS = CONSTS + ["1", "-2", "2.5", "true", "<d1>", "'en'@en"]
+
+    def arith(pool):
+        r = rng.random()
+        if r < 0.2:
+            return "-" + rng.choice(pool)
+        if r < 0.4:
+            return "ABS(%s)" % rng.choice(pool)
+        return "(%s %s %s)" % (rng.choice(pool), rng.choice("+-*/"),
+                               rng.choice(pool))
+
+    def expr(pool):
+        def side():
+            return rng.choice([arith(pool), rng.choice(pool)])
+        if rng.random() < 0.4:
+            items = ", ".join(rng.choice(pool)
+                              for _ in range(rng.randrange(4)))
+            return "%s %sIN (%s)" % (side(), rng.choice(["", "NOT "]),
+                                     items)
+        return "%s %s %s" % (side(), rng.choice(["=", "!=", "<", ">="]),
+                             side())
 
     def pat():
         return (f"{rng.choice(VARS)} {rng.choice(PREDS)} "
@@ -2358,18 +2471,29 @@ def test_compile_fuzz_typed_or_runs(spark):
                 rng.choice(["", "NOT "]), body(depth + 1))
         if r < 0.75:
             return "MINUS { %s }" % body(depth + 1)
-        if r < 0.85:
+        if r < 0.82:
             return "{ SELECT %s WHERE { %s } }" % (
                 rng.choice(VARS), pat())
-        return "FILTER (%s != %s)" % (
-            rng.choice(VARS), rng.choice(VARS + CONSTS))
+        if r < 0.88:
+            return "FILTER (%s != %s)" % (
+                rng.choice(VARS), rng.choice(VARS + CONSTS))
+        if r < 0.95:
+            return "FILTER (%s)" % expr(VARS + LITS)
+        return "BIND (%s AS ?b)" % arith(VARS + LITS)
 
     def body(depth):
         return " ".join(member(depth)
                         for _ in range(rng.randrange(1, 4)))
 
-    for _ in range(60):
+    for i in range(60):
         q = PFX + "SELECT * WHERE { %s }" % body(0)
+        if i % 3 == 2:
+            v = rng.choice(VARS)
+            q = PFX + ("SELECT %s (SUM(%s) AS ?n) WHERE { %s } GROUP BY %s "
+                       "HAVING (%s) ORDER BY DESC(%s)") % (
+                v, rng.choice(VARS), body(0), v,
+                expr([v, "?n", "COUNT(*)", "SUM(?x)"] + LITS),
+                arith([v, "?n"] + LITS))
         try:
             res = sparql_query(t, q)
             if not isinstance(res, bool):
